@@ -426,7 +426,7 @@ def main() -> None:
     # pointer made the driver's round-over-round comparator come up empty —
     # PERF n_common=0), so the summary carries every headline query at
     # centisecond precision with compact separators, and the per-section
-    # rollups shrink to [spark_total, duckdb_total, ratio] triples. If the
+    # rollups shrink to [spark_total, duckdb_total] pairs. If the
     # registry ever grows the line past the window, optional fields drop in
     # a fixed order (full values always in the detail files).
     def _tri(spark_t, duck_t):
@@ -465,6 +465,9 @@ def main() -> None:
         line = json.dumps(summary, separators=(",", ":"))
     if len(line) > 1950:  # last resort: decisecond precision, never truncate names
         summary["queries"] = {n: round(v, 1) for n, v in timings.items()}
+        line = json.dumps(summary, separators=(",", ":"))
+    if len(line) > 1950:  # still over: per-query timings stay in the detail files
+        summary.pop("queries")
         line = json.dumps(summary, separators=(",", ":"))
     print(line)
 

@@ -15,6 +15,7 @@ registration with the reference's type map.
 
 from __future__ import annotations
 
+import contextlib
 import hashlib
 import json
 import math
@@ -40,7 +41,12 @@ from mindsdb_spark.dialect.mysql_functions import (
     build_rules,
     build_vars,
 )
-from mindsdb_spark.dialect.rewriter import rewrite_sql
+from mindsdb_spark.dialect.rewriter import (
+    _skip_string,
+    rewrite_sql,
+    split_top_level,
+    sub_outside_strings,
+)
 from mindsdb_spark.session import get_spark
 
 # BYOM scalar-UDF type map (reference:
@@ -122,12 +128,15 @@ def _parquet_column_stats(path: str, max_files: int = 32):
             )
         )
     return out
+
+
 _SHOW_TABLES_RE = re.compile(r"SHOW\s+(?:FULL\s+)?TABLES(?:\s+(?:FROM|IN)\s+`?(\w+)`?)?$", re.IGNORECASE)
-_DESCRIBE_RE = re.compile(r"(?:DESCRIBE|DESC)\s+(?:TABLE\s+)?([\w.`]+)$", re.IGNORECASE)
-# MySQL-client alias for DESCRIBE (mysql CLI tab-completion issues these)
-_SHOW_COLUMNS_RE = re.compile(
-    r"SHOW\s+(?:FULL\s+)?COLUMNS\s+(?:FROM|IN)\s+([\w.`]+)"
-    r"(?:\s+(?:FROM|IN)\s+([\w`]+))?$",
+# column introspection: DESCRIBE and its MySQL-client aliases (the mysql CLI
+# tab-completion issues SHOW COLUMNS / EXPLAIN <table>)
+_COLUMNS_RE = re.compile(
+    r"(?:(?:DESCRIBE|DESC|EXPLAIN)\s+(?:TABLE\s+)?([\w.`]+)"
+    r"|SHOW\s+(?:FULL\s+)?(?:COLUMNS|FIELDS)\s+(?:FROM|IN)\s+([\w.`]+)"
+    r"(?:\s+(?:FROM|IN)\s+([\w`]+))?)$",
     re.IGNORECASE,
 )
 # `SELECT <cols> FROM <agent> WHERE question = '...'` — the reference treats
@@ -194,15 +203,6 @@ _INSERT_RE = re.compile(
 )
 _UPDATE_RE = re.compile(
     r"UPDATE\s+([\w.`]+)\s+SET\s+(.+?)\s+WHERE\s+(.+)$", re.IGNORECASE | re.DOTALL
-)
-# `UPDATE t SET col = df.col, ... FROM (select) AS df WHERE t.x = df.x` —
-# update-from-select (reference: update_step.py:16-127 builds per-row keyed
-# UPDATEs; here it lowers onto the MERGE plan — one Catalyst join, no
-# per-row statements)
-_UPDATE_FROM_RE = re.compile(
-    r"UPDATE\s+([\w.`]+)\s+SET\s+(.+?)\s+FROM\s+\((.+)\)\s+(?:AS\s+)?(\w+)"
-    r"\s+WHERE\s+(.+)$",
-    re.IGNORECASE | re.DOTALL,
 )
 _DELETE_RE = re.compile(
     r"DELETE\s+FROM\s+([\w.`]+)\s+WHERE\s+(.+)$", re.IGNORECASE | re.DOTALL
@@ -315,26 +315,9 @@ def _sql_literal_text(raw: str) -> str:
     return "".join(out)
 
 
-_MASK_MEMO: list = [("", "")]  # single-slot (text, masked) — one atomic store
-
-
 def _mask_literals(text: str) -> str:
     """Same-length copy of ``text`` with the INTERIOR of every string
-    literal / backtick identifier replaced by ``x``. Clause-keyword regexes
-    (`ORDER BY`, `LIMIT`, `WHERE`, `JOIN`, …) match against the masked copy
-    so a literal like ``'alpha ORDER BY beta'`` can never supply a clause
-    boundary; group spans are then sliced from the ORIGINAL text
-    (positions are identical by construction). A 1-entry memo keeps the
-    router chain (~9 sequential regex probes per statement) from
-    re-scanning the same statement each time. The memo is a single-slot
-    (text, masked) tuple stored in ONE assignment, so concurrent sessions
-    can never observe a text from one thread paired with another's mask
-    (two separate slots could interleave)."""
-    memo_text, memo_masked = _MASK_MEMO[0]
-    if text == memo_text:
-        return memo_masked
-    from mindsdb_spark.dialect.rewriter import _skip_string
-
+    literal / backtick identifier replaced by ``x``."""
     out = list(text)
     i, n = 0, len(text)
     while i < n:
@@ -346,9 +329,7 @@ def _mask_literals(text: str) -> str:
             i = j
         else:
             i += 1
-    masked = "".join(out)
-    _MASK_MEMO[0] = (text, masked)
-    return masked
+    return "".join(out)
 
 
 class _SpanMatch:
@@ -370,41 +351,49 @@ class _SpanMatch:
     def end(self, idx: "int | str" = 0) -> int:
         return self._m.end(idx)
 
-    # the full re.Match read surface (round-6 advice: downstream signatures
-    # are annotated re.Match, so a routed match must not AttributeError on
-    # the accessors the stdlib type has) — each slices the ORIGINAL text
-    def span(self, idx: "int | str" = 0) -> tuple:
-        return self._m.span(idx)
 
-    def groups(self, default=None) -> tuple:
-        return tuple(
-            self.group(i) if self._m.start(i) != -1 else default
-            for i in range(1, self._m.re.groups + 1)
+class _Stmt:
+    """One whitespace-collapsed statement and its literal-masked copy, made
+    at most once and shared by every entry the command door tries.
+
+    Clause-keyword regexes (`ORDER BY`, `LIMIT`, `WHERE`, `JOIN`, …) of the
+    KB/model/agent routes match the masked copy, so a literal like
+    ``'alpha ORDER BY beta'`` can never supply a clause boundary
+    (``WHERE content = 'alpha ORDER BY beta'`` once broke the KB door);
+    group spans then slice the ORIGINAL text (positions are identical by
+    construction), so extracted literals stay intact."""
+
+    __slots__ = ("text", "_masked")
+
+    def __init__(self, text: str, masked: str | None = None):
+        self.text, self._masked = text, masked
+
+    @property
+    def masked(self) -> str:
+        if self._masked is None:
+            self._masked = _mask_literals(self.text)
+        return self._masked
+
+    def match(self, regex: "re.Pattern") -> "_SpanMatch | None":
+        m = regex.match(self.masked)
+        return _SpanMatch(m, self.text) if m else None
+
+    def search(self, regex: "re.Pattern") -> "_SpanMatch | None":
+        m = regex.search(self.masked)
+        return _SpanMatch(m, self.text) if m else None
+
+    def split_using(self) -> "tuple[_Stmt, dict | None]":
+        """(the statement without its trailing `USING k = v, ...` clause,
+        that clause's parameters — None when there is none)."""
+        u = self.search(_TRAILING_USING_RE)
+        if u is None:
+            return self, None
+        return (
+            _Stmt(self.text[: u.start()].rstrip(), self.masked[: u.start()].rstrip()),
+            _parse_using_params(u.group(1)),
         )
 
-    def groupdict(self, default=None) -> dict:
-        return {
-            name: (self.group(name) if self._m.start(name) != -1 else default)
-            for name in self._m.re.groupindex
-        }
 
-
-def _match_clauses(regex: "re.Pattern", text: str) -> "_SpanMatch | None":
-    """``regex.match`` with clause keywords recognized only OUTSIDE string
-    literals. The KB/model/agent statement routers use lazy ``(.+?)`` groups
-    bounded by keywords (WHERE/ORDER BY/LIMIT/JOIN); on raw text a keyword
-    INSIDE a quoted literal splits the clause mid-literal (found by review:
-    ``WHERE content = 'alpha ORDER BY beta'`` broke the KB door)."""
-    m = regex.match(_mask_literals(text))
-    return _SpanMatch(m, text) if m else None
-
-
-def _search_clauses(regex: "re.Pattern", text: str) -> "_SpanMatch | None":
-    """``regex.search`` over the literal-masked statement — for trailing
-    USING clauses, whose value patterns otherwise match USING-shaped
-    phrases INSIDE a content/question literal and excise them from it."""
-    m = regex.search(_mask_literals(text))
-    return _SpanMatch(m, text) if m else None
 # KB joined to a table: `FROM <kb> k JOIN <tbl> t ON ... WHERE k.content =
 # '...' [AND ...]` — the reference plans the KB search first and joins its
 # result like any table (test_knowledge_base.py:396-423 test_join_kb_table)
@@ -469,8 +458,8 @@ _TRAILING_USING_RE = re.compile(
 )
 
 
-def _split_semicolons(text: str) -> list[str]:
-    """Split a statement list on top-level semicolons (quotes/parens safe)."""
+def _split_top(text: str, sep: str, opens: str = "(", closes: str = ")") -> list[str]:
+    """Split ``text`` on ``sep`` outside quotes and brackets."""
     items, depth, quote, cur = [], 0, None, []
     for ch in text:
         if quote:
@@ -480,11 +469,11 @@ def _split_semicolons(text: str) -> list[str]:
             continue
         if ch in "'\"":
             quote = ch
-        elif ch == "(":
+        elif ch in opens:
             depth += 1
-        elif ch == ")":
+        elif ch in closes:
             depth -= 1
-        elif ch == ";" and depth == 0:
+        elif ch == sep and depth == 0:
             items.append("".join(cur))
             cur = []
             continue
@@ -496,30 +485,12 @@ def _split_semicolons(text: str) -> list[str]:
 def _parse_using_params(text: str) -> dict:
     import ast
 
-    # split on top-level commas, respecting (), {}, [] and quotes —
+    # top-level commas, respecting (), {}, [] and quotes —
     # rewriter.split_top_level only tracks parens/quotes
-    items, depth, quote, cur = [], 0, None, []
-    for ch in text:
-        if quote:
-            cur.append(ch)
-            if ch == quote:
-                quote = None
-            continue
-        if ch in "'\"":
-            quote = ch
-        elif ch in "({[":
-            depth += 1
-        elif ch in ")}]":
-            depth -= 1
-        elif ch == "," and depth == 0:
-            items.append("".join(cur))
-            cur = []
-            continue
-        cur.append(ch)
-    if cur:
-        items.append("".join(cur))
     out = {}
-    for kv in items:
+    for kv in _split_top(text, ",", "({[", ")}]"):
+        if not kv.strip():
+            continue
         k, _, v = kv.partition("=")
         v = v.strip()
         try:
@@ -756,14 +727,164 @@ def _coerce_literal(v: str):
         return v
 
 
-# project virtual tables (reference: project_datanode.py:144-152 routes
-# `<project>.models` etc. to project-filtered information_schema tables)
-# and the `log` system database (interfaces/database/log.py)
-_PROJECT_TABLE_RE = re.compile(
-    r"\bmindsdb_(models|jobs|agents|mdb_triggers|chatbots|skills)\b"
-    r"|\blog_(jobs_history|llm_log)\b",
+def _object_name(ref: str) -> str:
+    """`project`.`name` / project.name / name → name, lowercased."""
+    return ref.lower().replace("`", "").split(".")[-1]
+
+
+def _sql_value(raw: str):
+    """A WHERE-equality right-hand side as a Python value: quoted → str,
+    else float / int when numeric, else the bare text."""
+    v = raw.strip()
+    if v[:1] in "'\"":
+        return v[1:-1]
+    return float(v) if "." in v else int(v) if v.lstrip("-").isdigit() else v
+
+
+def _output_columns(spec) -> list[str]:
+    """A model's declared output column names, lowercased."""
+    return [p.strip().split()[0].strip("`").lower() for p in spec.output_schema.split(",") if p.strip()]
+
+
+def _order_limit(order: str | None, limit: str | None, fmt: Callable = str) -> str:
+    """The ` ORDER BY ... LIMIT n` tail of a rebuilt outer query; ``fmt``
+    maps the ORDER BY list into the outer query's names."""
+    return (f" ORDER BY {fmt(order)}" if order else "") + (f" LIMIT {limit}" if limit else "")
+
+
+def _json_pairs(d: dict) -> list[tuple[str, str]]:
+    return [
+        (k, v if isinstance(v, str) else json.dumps(v)) for k, v in sorted(d.items())
+    ] or [("engine", "registered")]
+
+
+def _index_layout(kb: dict) -> str:
+    """'partitioned' with a live cell-partitioned snapshot, 'inplan' for a
+    centroid-only index, '' when unindexed."""
+    if kb.get("index_path"):
+        return "partitioned"
+    return "inplan" if kb.get("index") is not None else ""
+
+
+def _period_seconds(unit: str) -> int:
+    unit = unit.lower()
+    if unit not in _PERIODS:
+        raise ValueError(f"unknown period {unit!r}")
+    return _PERIODS[unit]
+
+
+_URI_RE = re.compile(r"[A-Za-z][A-Za-z0-9+.\-]*://")
+
+
+def _norm_path(path) -> str:
+    """A URI minus trailing slashes, or an absolute local path."""
+    path = str(path)
+    return (path.rstrip("/") or path) if _URI_RE.match(path) else os.path.abspath(path)
+
+
+# BI-tool multi-model batch predict: `SELECT ... FROM t [a] JOIN m1 [b]
+# JOIN m2 [c] ... [WHERE] [ORDER BY] [LIMIT]`
+_MULTI_MODEL_RE = re.compile(
+    r"SELECT\s+(?P<sel>.+?)\s+FROM\s+(?P<table>[\w.`]+)"
+    r"(?:\s+(?:AS\s+)?(?P<talias>\w+))?"
+    r"(?P<joins>(?:\s+JOIN\s+[\w.`]+(?:\s+(?:AS\s+)?\w+)?){2,})"
+    r"(?:\s+WHERE\s+(?P<where>.+?))?"
+    r"(?:\s+ORDER\s+BY\s+(?P<order>.+?))?(?:\s+LIMIT\s+(?P<limit>\d+))?$",
+    re.IGNORECASE | re.DOTALL,
+)
+
+# SHOW commands answered from one system view (the reference rewrites them
+# into information_schema SELECTs, command_executor.py:283-570) or with a
+# constant (rows, schema)
+_SHOW_DATA: dict = {
+    **{
+        kind.upper(): f"SELECT name AS `{kind.capitalize()}` "
+        f"FROM information_schema_{kind} ORDER BY 1"
+        for kind in ("ml_engines", "handlers", "jobs", "views", "agents", "models",
+                     "knowledge_bases", "triggers", "chatbots")
+    },
+    # reference alias (command_executor.py:532)
+    "PREDICTORS": "SELECT name AS `Models` FROM information_schema_models ORDER BY 1",
+    "SKILLS": "SELECT name AS `Skills` FROM mindsdb_skills ORDER BY 1",
+    "PLUGINS": "SELECT * FROM information_schema_plugins",
+    "DATABASES": "SELECT schema_name AS `Database` FROM information_schema_databases ORDER BY 1",
+    "CHARSET": "SELECT character_set_name AS `Charset`, description AS `Description`, "
+    "default_collate_name AS `Default collation`, maxlen AS `Maxlen` "
+    "FROM information_schema_character_sets ORDER BY 1",
+    "PROCESSLIST": "SELECT id AS Id, 'mindsdb' AS User, 'localhost' AS Host, "
+    "NULL AS db, 'Query' AS Command, 0 AS Time, status AS State, "
+    "query AS Info FROM information_schema_queries ORDER BY id",
+    **{
+        f"{scope}STATUS": ([], "Variable_name string, Value string")
+        for scope in ("", "SESSION ", "GLOBAL ", "FUNCTION ", "PROCEDURE ")
+    },
+    # command_executor.py:1925 answer_show_warnings
+    "WARNINGS": ([], "Level string, Code int, Message string"),
+    "ENGINES": (
+        [("Spark", "DEFAULT", "Apache Spark via mindsdb_spark")],
+        "Engine string, Support string, Comment string",
+    ),
+    # postgres-client handshake constant (command_executor.py:403-409)
+    "SEARCH_PATH": ([('"$user", public',)], "search_path string"),
+    "COLLATION": (
+        [("utf8mb4_general_ci", "utf8mb4", 45, "Yes"), ("binary", "binary", 63, "Yes")],
+        "Collation string, Charset string, Id int, Default string",
+    ),
+}
+_SHOW_DATA.update({
+    "FULL PROCESSLIST": _SHOW_DATA["PROCESSLIST"],
+    "SCHEMAS": _SHOW_DATA["DATABASES"],
+    "CHARACTER SET": _SHOW_DATA["CHARSET"],
+})
+_SHOW_DATA_RE = re.compile(
+    r"SHOW\s+(" + "|".join(k.replace(" ", r"\s+") for k in _SHOW_DATA) + r")$",
     re.IGNORECASE,
 )
+
+# The command door: leading keyword → [(regex, handler, masked)], in the
+# order entries are tried. `_try_command` matches each regex against the
+# statement (its literal-masked copy when ``masked``) and calls
+# ``handler(session, match, stmt)``; a None regex hands every statement to
+# the handler, which matches it itself. A handler returning None passes the
+# statement on.
+_COMMANDS: dict[str, list[tuple["re.Pattern | None", Callable, bool]]] = {}
+_HEAD_RE = re.compile(r"[A-Za-z_]+")
+
+
+def _command(keywords: str, pattern=None, masked: bool = False):
+    """Register the decorated EngineSession method as the `_COMMANDS` entry
+    for statements starting with any of the space-separated ``keywords``.
+
+    Only the clause-splitting KB/model/agent routes set ``masked``: inside
+    a masked backtick name, a name group accepts any character, and other
+    routes pass names on to file paths and built SQL."""
+    regex = pattern if pattern is None or isinstance(pattern, re.Pattern) else re.compile(
+        pattern, re.IGNORECASE | re.DOTALL
+    )
+
+    def register(fn):
+        for kw in keywords.split():
+            _COMMANDS.setdefault(kw, []).append((regex, fn, masked))
+        return fn
+
+    return register
+
+
+# System views: view name → (build, schema). ``build(session)`` returns the
+# view's rows in ``schema``, or its DataFrame when the schema is None. A
+# statement builds only the views it names (`EngineSession._system_sql`).
+_SYSTEM_VIEWS: dict[str, tuple[Callable, str | None]] = {}
+_SYSTEM_VIEW_RE = re.compile(r"\b(?:information_schema|mindsdb|log)_\w+", re.IGNORECASE)
+
+
+def _system_view(name: str, schema: str | None = None):
+    def register(fn):
+        _SYSTEM_VIEWS[name] = (fn, schema)
+        return fn
+
+    return register
+
+
 _CREATE_KB_RE = re.compile(
     r"CREATE\s+KNOWLEDGE[_ ]BASE\s+(?:IF\s+NOT\s+EXISTS\s+)?([\w.`]+)(?:\s+USING\s+(.+))?$",
     re.IGNORECASE | re.DOTALL,
@@ -817,15 +938,13 @@ _LAST_COALESCE_RE = re.compile(
 )
 
 
-def _find_top_keyword(text: str, keyword: str) -> int:
-    """Index of the first bare ``keyword`` at paren depth 0 outside string
-    literals and backtick identifiers; -1 if absent. The statement
-    dispatchers use this instead of lazy regex splits so a literal like
-    ``' WHERE x'`` can never provide the clause boundary (round-3 advice:
+def _top_words(text: str):
+    """(start, end) of every bare word at paren depth 0 outside string
+    literals and backtick identifiers. The statement dispatchers split
+    clauses on these instead of lazy regex splits, so a literal like
+    ``' WHERE x'`` can never provide a clause boundary (round-3 advice:
     literal-robustness of the regex command layer)."""
-    from mindsdb_spark.dialect.rewriter import _skip_string
-
-    depth, i, n, kw = 0, 0, len(text), keyword.upper()
+    depth, i, n = 0, 0, len(text)
     while i < n:
         c = text[i]
         if c in ("'", '"', "`"):
@@ -839,20 +958,41 @@ def _find_top_keyword(text: str, keyword: str) -> int:
             j = i
             while j < n and (text[j].isalnum() or text[j] == "_"):
                 j += 1
-            if text[i:j].upper() == kw:
-                return i
+            yield i, j
             i = j
             continue
         i += 1
-    return -1
+
+
+def _find_top_keyword(text: str, keyword: str) -> int:
+    """Index of the first top-level bare ``keyword``; -1 if absent."""
+    kw = keyword.upper()
+    return next((i for i, j in _top_words(text) if text[i:j].upper() == kw), -1)
+
+
+def _matching_paren(text: str, i: int) -> int:
+    """Index of the ``)`` closing the ``(`` at ``text[i]`` (``len(text)``
+    when unclosed); string literals are skipped."""
+    depth, n = 0, len(text)
+    while i < n:
+        c = text[i]
+        if c in ("'", '"'):
+            i = _skip_string(text, i, c)
+            continue
+        if c == "(":
+            depth += 1
+        elif c == ")":
+            depth -= 1
+            if depth == 0:
+                return i
+        i += 1
+    return i
 
 
 def _collapse_ws(text: str) -> str:
     """Collapse whitespace runs to single spaces OUTSIDE string literals and
     backtick identifiers — the command layer's normalization must not edit
     literal content (literal-fuzz finding: `'a  b'` became `'a b'`)."""
-    from mindsdb_spark.dialect.rewriter import _skip_string
-
     out, i, n = [], 0, len(text)
     while i < n:
         c = text[i]
@@ -872,29 +1012,12 @@ def _collapse_ws(text: str) -> str:
 
 
 def _split_and(text: str) -> list[str]:
-    """Split a WHERE body on top-level ANDs (strings and parens respected)."""
-    from mindsdb_spark.dialect.rewriter import _skip_string
-
-    parts, depth, start, i, n = [], 0, 0, 0, len(text)
-    while i < n:
-        c = text[i]
-        if c in ("'", '"'):
-            i = _skip_string(text, i, c)
-            continue
-        if c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-        elif c.isalpha() or c == "_":
-            j = i
-            while j < n and (text[j].isalnum() or text[j] == "_"):
-                j += 1
-            if depth == 0 and text[i:j].upper() == "AND":
-                parts.append(text[start:i])
-                start = j
-            i = j
-            continue
-        i += 1
+    """Split a WHERE body on top-level ANDs."""
+    parts, start = [], 0
+    for i, j in _top_words(text):
+        if text[i:j].upper() == "AND":
+            parts.append(text[start:i])
+            start = j
     parts.append(text[start:])
     return [p.strip() for p in parts if p.strip()]
 
@@ -905,8 +1028,6 @@ def _table_refs(sql: str) -> list[str]:
     no special casing (their own FROM/JOIN tokens are found by the same
     scan). CTE names and typos surface as unknown refs — the pushdown gate
     treats unknowns as 'let the source or Spark decide'."""
-    from mindsdb_spark.dialect.rewriter import _skip_string
-
     _enders = {"WHERE", "GROUP", "ORDER", "HAVING", "LIMIT", "ON", "SELECT",
                "JOIN", "INNER", "LEFT", "RIGHT", "FULL", "CROSS", "UNION",
                "INTERSECT", "EXCEPT", "WINDOW", "QUALIFY", "USING"}
@@ -1111,7 +1232,7 @@ class EngineSession:
             [], _LLMLogAccum()
         )
         self._user_functions: set[str] = set()
-        self._query_log: list[tuple[str, str]] = []
+        self._query_log: list[list[str]] = []  # [text, state] per statement
         # interrupted resumable statements by id (reference: RunningQuery +
         # query_resume/query_cancel, context_controller.py:51-120)
         self._resumable: dict[str, str] = {}
@@ -1170,28 +1291,13 @@ class EngineSession:
             df.createOrReplaceTempView(t)
             df.createOrReplaceTempView(f"{source}_{t}")
 
-    def _resolve_native_writable(self, name: str):
+    def _resolve_native(self, name: str, capability: str):
         """``source.table`` / ``source_table`` → (source, table) for native
-        integrations that support writeback (an ``insert`` method)."""
+        integrations offering ``capability``: ``insert`` (writeback) or
+        ``execute`` (DML the source runs itself — JDBCSource)."""
         n = name.lower().strip("`")
         for srcname, src in self._native.items():
-            if not hasattr(src, "insert"):
-                continue
-            tables = {t.lower() for t in src.tables()}
-            if "." in n:
-                pre, _, t = n.partition(".")
-                if pre == srcname and t in tables:
-                    return srcname, t
-            if n.startswith(f"{srcname}_") and n[len(srcname) + 1:] in tables:
-                return srcname, n[len(srcname) + 1:]
-        return None, None
-
-    def _resolve_native_dml(self, name: str):
-        """Like ``_resolve_native_writable`` but for sources that can run
-        DML statements themselves (an ``execute`` method — JDBCSource)."""
-        n = name.lower().strip("`")
-        for srcname, src in self._native.items():
-            if not hasattr(src, "execute"):
+            if not hasattr(src, capability):
                 continue
             tables = {t.lower() for t in src.tables()}
             if "." in n:
@@ -1237,6 +1343,8 @@ class EngineSession:
     def _resolve_writable(self, name: str):
         """``source.table`` / ``source_table`` / bare table → (source, table)."""
         n = name.lower().strip("`")
+        if os.sep in n or not n.strip("."):  # a table name, never a file path
+            return None, None
         if "." in n:
             srcname, table = n.rsplit(".", 1)
             if srcname in self._writable:
@@ -1247,6 +1355,12 @@ class EngineSession:
             if ps.exists(n):
                 return srcname, n
         return None, None
+
+    def _writable_table(self, name: str):
+        srcname, table = self._resolve_writable(name)
+        if srcname is None:
+            raise KeyError(f"table {name!r} does not exist in any writable source")
+        return srcname, table
 
     def register_native_source(self, name: str, source) -> None:
         """Register a source whose engine can run SQL itself (DuckDBSource
@@ -1519,25 +1633,18 @@ class EngineSession:
                 F.col("text").alias("chunk_text"),
                 F.md5(F.col("doc_id").cast("string")).alias("chunk_id"),
             )
+        kb = {"dim": dim, "embedder": embedder}
         if embedder == "hash_tfidf":
             from mindsdb_spark.operators.kb import fit_idf_weights, hash_embed_idf
 
             # weights stay None on an EMPTY corpus so the first non-empty
             # insert fits them instead of freezing all-zero idf forever
-            weights = fit_idf_weights(chunks, dim=dim)
-            store = hash_embed_idf(chunks, weights or [0.0] * dim)
-            self._kbs[name.lower()] = {
-                "store": store.select("chunk_id", "doc_id", "chunk_text", "embedding"),
-                "dim": dim,
-                "embedder": embedder,
-                "idf_weights": weights,
-            }
-            return
-        embed = resolve_embedder(embedder)
-        store = embed(chunks, dim=dim).select(
-            "chunk_id", "doc_id", "chunk_text", "embedding"
-        )
-        self._kbs[name.lower()] = {"store": store, "dim": dim, "embedder": embedder}
+            kb["idf_weights"] = fit_idf_weights(chunks, dim=dim)
+            store = hash_embed_idf(chunks, kb["idf_weights"] or [0.0] * dim)
+        else:
+            store = resolve_embedder(embedder)(chunks, dim=dim)
+        kb["store"] = store.select("chunk_id", "doc_id", "chunk_text", "embedding")
+        self._kbs[name.lower()] = kb
 
     def _kb_browse_view(self, name: str) -> None:
         """Register the KB chunk store (minus the embedding column, with
@@ -1622,10 +1729,11 @@ class EngineSession:
         DESCRIBE KNOWLEDGE_BASE index status (round-7 verdict item 5)."""
         s = _collapse_ws(inner_sql)
         name = None
+        st = _Stmt(s)
         for rx in (_KB_RE, _KB_JOIN_RE):
-            mm = _match_clauses(rx, s)
+            mm = st.match(rx)
             if mm:
-                cand = mm.group(2).lower().strip("`").split(".")[-1]
+                cand = _object_name(mm.group(2))
                 if cand in self._kbs:
                     name = cand
                     break
@@ -1742,7 +1850,7 @@ class EngineSession:
                 # the insert itself was empty: nothing to embed or store,
                 # and the KB stays unfitted for the first REAL insert — a
                 # zero-row INSERT must remain a no-op, not an error
-                return self.spark.createDataFrame([(0,)], "inserted_chunks long")
+                return self._row("inserted_chunks long", 0)
         embed = self._kb_embed_fn(kb)
 
         def _write_batch(rows: DataFrame, _i: int) -> None:
@@ -1779,7 +1887,7 @@ class EngineSession:
         cursor = os.path.join(state_dir, "insert_cursor.json")
         if os.path.exists(cursor):
             os.remove(cursor)
-        return self.spark.createDataFrame([(inserted[0],)], "inserted_chunks long")
+        return self._row("inserted_chunks long", inserted[0])
 
     def _kb_delete(self, name: str, condition) -> DataFrame:
         """DELETE FROM <kb> WHERE <cond>: filter the chunk store (reference
@@ -1797,9 +1905,7 @@ class EngineSession:
         # condition fails analysis leaves the index intact (round-7 ADVICE
         # ordering, applied to every KB mutation)
         self._drop_kb_index_snapshot(kb)
-        return self.spark.createDataFrame(
-            [(int(obs.get["n"] or 0),)], "deleted long"
-        )
+        return self._row("deleted long", int(obs.get["n"] or 0))
 
     def _kb_update(self, name: str, set_map: dict, condition) -> DataFrame:
         """UPDATE <kb> SET ... WHERE <cond>: apply the SETs to matching
@@ -1830,9 +1936,7 @@ class EngineSession:
         kb["store"] = store.select(*cols).localCheckpoint(eager=True)
         # as in _kb_delete: snapshot goes stale only once the update lands
         self._drop_kb_index_snapshot(kb)
-        return self.spark.createDataFrame(
-            [(int(obs.get["n"] or 0),)], "updated long"
-        )
+        return self._row("updated long", int(obs.get["n"] or 0))
 
     def _agent_rag_ask(self, agent, question: str) -> DataFrame:
         """Ask a KB-backed agent: retrieve top-k context from the agent's
@@ -1897,32 +2001,11 @@ class EngineSession:
         of the reference's KB evaluation (evaluate.py:82-560): embed the
         queries in-plan, broadcast them against the chunk store, rank by
         cosine, score hit@k / MRR@k / NDCG@k, average over queries."""
-        from pyspark.sql.window import Window
-
         from mindsdb_spark.operators.kb import retrieval_metrics
-        from mindsdb_spark.operators.vector import _dot, _norm
 
-        kb = self._kbs[name]
-        # query embeddings must come from the STORE's embedder or every
-        # similarity is meaningless
-        q = self._kb_embed_fn(kb)(
-            self.spark.table(test_table).withColumnRenamed("query_text", "chunk_text"),
-            dim=kb["dim"],
-        ).select("query_id", "rel_doc_id", F.col("embedding").alias("__qe"))
-        pairs = kb["store"].crossJoin(F.broadcast(q))
-        sim = _dot(F.col("embedding").cast("array<double>"), F.col("__qe").cast("array<double>")) / (
-            _norm(F.col("embedding").cast("array<double>")) * _norm(F.col("__qe").cast("array<double>"))
-        )
-        ranked = (
-            pairs.withColumn("__sim", sim)
-            .withColumn(
-                "rank",
-                F.row_number().over(
-                    Window.partitionBy("query_id").orderBy(F.col("__sim").desc(), F.col("chunk_id"))
-                ),
-            )
-            .filter(F.col("rank") <= k)
-            .withColumn("rel", (F.col("doc_id") == F.col("rel_doc_id")).cast("int"))
+        queries = self.spark.table(test_table).withColumnRenamed("query_text", "chunk_text")
+        ranked = self._kb_rank(self._kbs[name], queries, "query_id", k).withColumn(
+            "rel", (F.col("doc_id") == F.col("rel_doc_id")).cast("int")
         )
         per_q = retrieval_metrics(ranked, k=k)
         return per_q.agg(
@@ -1930,6 +2013,29 @@ class EngineSession:
             F.avg("hit").alias("hit_at_k"),
             F.avg("mrr").alias("mrr"),
             F.avg("ndcg").alias("ndcg"),
+        )
+
+    def _kb_rank(self, kb: dict, queries: DataFrame, qid: str, k: int) -> DataFrame:
+        """The top-``k`` chunks per query by cosine: ``queries`` (``qid``,
+        rel_doc_id, chunk_text) broadcast against the chunk store. Query
+        embeddings come from the STORE's embedder, or every similarity is
+        meaningless."""
+        from pyspark.sql.window import Window
+
+        from mindsdb_spark.operators.vector import _dot, _norm
+
+        q = self._kb_embed_fn(kb)(queries, dim=kb["dim"]).select(
+            qid, "rel_doc_id", F.col("embedding").alias("__qe")
+        )
+        e, qe = F.col("embedding").cast("array<double>"), F.col("__qe").cast("array<double>")
+        rank = F.row_number().over(
+            Window.partitionBy(qid).orderBy(F.col("__sim").desc(), F.col("chunk_id"))
+        )
+        return (
+            kb["store"].crossJoin(F.broadcast(q))
+            .withColumn("__sim", _dot(e, qe) / (_norm(e) * _norm(qe)))
+            .withColumn("rank", rank)
+            .filter(F.col("rank") <= k)
         )
 
     def _kb_evaluate_generated(self, name: str, params: dict) -> DataFrame:
@@ -1951,10 +2057,6 @@ class EngineSession:
         chunk) without a live model. ``answers_digest`` hashes the mock
         completions so the oracle checks generation, not just retrieval.
         ``id``/``created_at`` columns are omitted (wall-clock values)."""
-        from pyspark.sql.window import Window
-
-        from mindsdb_spark.operators.vector import _dot, _norm
-
         kb = self._kbs[name]
         version = str(params.get("version", "doc_id")).lower()
         if version not in ("doc_id", "llm_relevancy"):
@@ -2015,28 +2117,13 @@ class EngineSession:
         # _kb_eval_eager once the 1-row metrics frame is materialized, so
         # repeated EVALUATE calls don't accumulate cached blocks
         test = test.persist()
-        q = self._kb_embed_fn(kb)(
-            test.select("qid", "rel_doc_id", F.col("question").alias("chunk_text")),
-            dim=kb["dim"],
-        ).select("qid", "rel_doc_id", F.col("embedding").alias("__qe"))
-        sim = _dot(
-            F.col("embedding").cast("array<double>"), F.col("__qe").cast("array<double>")
-        ) / (
-            _norm(F.col("embedding").cast("array<double>"))
-            * _norm(F.col("__qe").cast("array<double>"))
+        ranked = self._kb_rank(
+            kb, test.select("qid", "rel_doc_id", F.col("question").alias("chunk_text")), "qid", k
         )
-        ranked = (
-            store.crossJoin(F.broadcast(q))
-            .withColumn("__sim", sim)
-            .withColumn(
-                "rank",
-                F.row_number().over(
-                    Window.partitionBy("qid").orderBy(
-                        F.col("__sim").desc(), F.col("chunk_id")
-                    )
-                ),
+        digest = test.agg(
+            F.md5(F.concat_ws("|", F.array_sort(F.collect_list("answer")))).alias(
+                "answers_digest"
             )
-            .filter(F.col("rank") <= k)
         )
         if version == "llm_relevancy":
             # EvaluateRerank (evaluate.py:271-466): score each retrieved
@@ -2100,70 +2187,28 @@ class EngineSession:
                 r6(F.avg("entropy")).alias("avg_entropy"),
                 r6(F.avg("ndcg")).alias("avg_ndcg"),
             )
-            digest = test.agg(
-                F.md5(
-                    F.concat_ws("|", F.array_sort(F.collect_list("answer")))
-                ).alias("answers_digest")
+        else:
+            # reference doc_position is 0-based (retrieved_doc_ids.index)
+            per_q = ranked.groupBy("qid").agg(
+                F.min(
+                    F.when(F.col("doc_id") == F.col("rel_doc_id"), F.col("rank") - 1)
+                ).alias("first_pos")
             )
-            return self._kb_eval_save(
-                self._kb_eval_eager(
-                    metrics.crossJoin(digest)
-                    .withColumn("name", F.lit(name))
-                    .select(
-                        "name",
-                        "total_questions",
-                        "avg_relevancy",
-                        "avg_first_relevant_position",
-                        "mean_mrr",
-                        "hit_at_k",
-                        "bin_precision_at_k",
-                        "avg_entropy",
-                        "avg_ndcg",
-                        "answers_digest",
-                    ),
-                    test,
-                ),
-                params,
+            metrics = per_q.agg(
+                F.count("*").alias("total_questions"),
+                F.sum(F.col("first_pos").isNotNull().cast("int")).alias("total_found"),
+                F.sum(
+                    F.when(F.col("first_pos") < 10, 1).otherwise(0)
+                ).alias("accurate_in_top_10"),
+                F.avg("first_pos").alias("avg_first_position"),
+            ).withColumn(
+                "cumulative_recall_at_10",
+                F.col("accurate_in_top_10") / F.col("total_questions"),
             )
-        # reference doc_position is 0-based (retrieved_doc_ids.index)
-        per_q = ranked.groupBy("qid").agg(
-            F.min(
-                F.when(F.col("doc_id") == F.col("rel_doc_id"), F.col("rank") - 1)
-            ).alias("first_pos")
+        scores = metrics.crossJoin(digest).select(
+            F.lit(name).alias("name"), *metrics.columns, "answers_digest"
         )
-        metrics = per_q.agg(
-            F.count("*").alias("total_questions"),
-            F.sum(F.col("first_pos").isNotNull().cast("int")).alias("total_found"),
-            F.sum(
-                F.when(F.col("first_pos") < 10, 1).otherwise(0)
-            ).alias("accurate_in_top_10"),
-            F.avg("first_pos").alias("avg_first_position"),
-        ).withColumn(
-            "cumulative_recall_at_10",
-            F.col("accurate_in_top_10") / F.col("total_questions"),
-        )
-        digest = test.agg(
-            F.md5(F.concat_ws("|", F.array_sort(F.collect_list("answer")))).alias(
-                "answers_digest"
-            )
-        )
-        return self._kb_eval_save(
-            self._kb_eval_eager(
-                metrics.crossJoin(digest)
-                .withColumn("name", F.lit(name))
-                .select(
-                    "name",
-                    "total_questions",
-                    "total_found",
-                    "accurate_in_top_10",
-                    "avg_first_position",
-                    "cumulative_recall_at_10",
-                    "answers_digest",
-                ),
-                test,
-            ),
-            params,
-        )
+        return self._kb_eval_save(self._kb_eval_eager(scores, test), params)
 
     def _kb_eval_eager(self, scores: DataFrame, persisted: DataFrame) -> DataFrame:
         """Materialize the 1-row metrics aggregate eagerly, then release the
@@ -2178,19 +2223,26 @@ class EngineSession:
         """``save_to = <table>`` appends the evaluation scores row
         (reference run_evaluate, evaluate.py:222-228)."""
         if params.get("save_to"):
-            srcname, table = self._resolve_writable(str(params["save_to"]))
-            if srcname is None:
+            if not self._append_writable(str(params["save_to"]), scores):
                 raise ValueError(
                     f"save_to = {params['save_to']!r} does not resolve to a "
                     "writable source — scores would not be persisted"
                 )
-            ps = self._writable[srcname]
-            if ps.exists(table):
-                ps.insert(table, scores)
-            else:
-                ps.create_table(table, scores)
-            self._refresh_writable_views(srcname)
         return scores
+
+    def _append_writable(self, ref: str, rows: DataFrame) -> bool:
+        """Append ``rows`` to a writable-source table, creating it on first
+        use; False when ``ref`` names no writable source."""
+        srcname, table = self._resolve_writable(ref)
+        if srcname is None:
+            return False
+        ps = self._writable[srcname]
+        if ps.exists(table):
+            ps.insert(table, rows)
+        else:
+            ps.create_table(table, rows)
+        self._refresh_writable_views(srcname)
+        return True
 
     def _evaluate_metric(
         self, metric: str, inner_sql: str, n_decimals: int = 3
@@ -2276,7 +2328,7 @@ class EngineSession:
         if value is not None:
             scale = 10 ** n_decimals
             value = math.floor(value * scale + 0.5) / scale
-        return self.spark.createDataFrame([(value,)], f"`{ml}` double")
+        return self._row(f"`{ml}` double", value)
 
     def _kb_search(
         self,
@@ -2320,10 +2372,12 @@ class EngineSession:
         threshold = using.get("relevance_threshold")
         threshold = float(threshold) if threshold is not None else None
         fetch = rerank_candidates(k) if rerank else k
-        if (
-            str(using.get("hybrid_search", "")).lower() == "true"
-            and str(using.get("hybrid_search_fusion", "")).lower() == "rrf"
-        ):
+        meta_cols = [
+            c for c in store.columns
+            if c not in ("chunk_id", "doc_id", "chunk_text", "embedding")
+        ]
+        hybrid = str(using.get("hybrid_search", "")).lower() == "true"
+        if hybrid and str(using.get("hybrid_search_fusion", "")).lower() == "rrf":
             # score-free rank fusion (engine extension beyond the reference's
             # α-blend): Σ 1/(60+rank) over the BM25 and cosine candidate
             # lists — robust when the two score scales aren't calibrated
@@ -2347,23 +2401,12 @@ class EngineSession:
                     / 1e6
                 ).alias("sim"),
             )
-            fused = rrf_fusion(
-                [(kw, "bm25"), (vec, "sim")], k=fetch, id_col="chunk_id"
-            )
-            meta_cols = [
-                c for c in store.columns
-                if c not in ("chunk_id", "doc_id", "chunk_text", "embedding")
-            ]
             # distance = 1 - rrf keeps the "ascending distance" contract of
             # every other search mode (rrf ∈ (0, ~0.033] for two lists)
-            hits = fused.join(
-                store.select("chunk_id", "doc_id", "chunk_text", *meta_cols),
-                "chunk_id",
-            ).select(
-                "chunk_id", "doc_id", F.col("chunk_text").alias("content"),
-                (F.lit(1.0) - F.col("rrf")).alias("distance"), *meta_cols,
-            )
-        elif str(using.get("hybrid_search", "")).lower() == "true":
+            hits = rrf_fusion(
+                [(kw, "bm25"), (vec, "sim")], k=fetch, id_col="chunk_id"
+            ).select("chunk_id", (F.lit(1.0) - F.col("rrf")).alias("distance"))
+        elif hybrid:
             alpha = float(using.get("hybrid_search_alpha", 0.5))
             # keyword side scores bm25 rounded to 6dp BEFORE the blend: the
             # contribution-sum order is engine-dependent in the last ulp
@@ -2382,10 +2425,7 @@ class EngineSession:
                 vec_id="chunk_id",
                 round_keyword=True,
             )
-            meta_cols = [
-                c for c in store.columns
-                if c not in ("chunk_id", "doc_id", "chunk_text", "embedding")
-            ]
+        if hybrid:
             hits = hits.join(
                 store.select("chunk_id", "doc_id", "chunk_text", *meta_cols),
                 "chunk_id",
@@ -2429,10 +2469,6 @@ class EngineSession:
                     )
             else:
                 ranked = cosine_topk(store, "embedding", qvec, k=fetch, id_col="chunk_id")
-            meta_cols = [
-                c for c in store.columns
-                if c not in ("chunk_id", "doc_id", "chunk_text", "embedding")
-            ]
             hits = ranked.select(
                 "chunk_id",
                 "doc_id",
@@ -2513,18 +2549,13 @@ class EngineSession:
         on the FROM-integration's query result (reference:
         command_executor.py:1532-1567). Training stays a distributed
         DataFrame job; the recipe is kept for RETRAIN MODEL."""
-        from mindsdb_spark.dialect.rewriter import split_top_level
-
         replace, name, src, raw, target, ts_order, ts_group, ts_window, ts_horizon, using = (
             m.groups()
         )
-        name = name.lower().strip("`").split(".")[-1]
+        name = _object_name(name)
         if name in self._models and not replace:
             raise ValueError(f"model {name!r} already exists (use CREATE OR REPLACE MODEL)")
-        params = {}
-        for kv in split_top_level(using) if using else []:
-            k, _, v = kv.partition("=")
-            params[k.strip().lower()] = self._param_value(v)
+        params = self._using(using)
         # the reference's TS clauses (`ORDER BY t [GROUP BY g] WINDOW w
         # HORIZON h`, plan_join_ts.py) ride into the engine factory as
         # params — a TS-capable engine builds a forecasting spec from them
@@ -2557,7 +2588,7 @@ class EngineSession:
         self._model_versions[name] = [spec]
         self._model_active[name] = 1
         self._model_recipes[name] = (src, raw, target, engine, dict(params))
-        return self.spark.createDataFrame([(name, engine)], "model string, engine string")
+        return self._row("model string, engine string", name, engine)
 
     def _subselects_to_views(self, cond: str) -> tuple[str, list[str]]:
         """Replace each `(SELECT ...)` inside a DML/KB condition with a
@@ -2574,8 +2605,6 @@ class EngineSession:
         views can be dropped once the consuming statement has executed."""
         import uuid as _uuid
 
-        from mindsdb_spark.dialect.rewriter import _skip_string
-
         out, views, i, n = [], [], 0, len(cond)
         while i < n:
             c = cond[i]
@@ -2589,18 +2618,7 @@ class EngineSession:
                 out.append(c)
                 i += 1
                 continue
-            depth, j = 0, i
-            while j < n:
-                if cond[j] in ("'", '"'):
-                    j = _skip_string(cond, j, cond[j])
-                    continue
-                if cond[j] == "(":
-                    depth += 1
-                elif cond[j] == ")":
-                    depth -= 1
-                    if depth == 0:
-                        break
-                j += 1
+            j = _matching_paren(cond, i)
             inner = cond[i + 1 : j]
             vname = f"__dml_sq_{_uuid.uuid4().hex[:8]}"
             self.sql(inner).createOrReplaceTempView(vname)
@@ -2624,11 +2642,7 @@ class EngineSession:
 
         spec = self._model_of(m.group("model"))
         talias, malias = m.group("talias"), m.group("malias")
-        model_cols = {
-            p.strip().split()[0].strip("`").lower()
-            for p in spec.output_schema.split(",")
-            if p.strip()
-        }
+        model_cols = set(_output_columns(spec))
         # aggregation over predictions runs in the outer query, over the
         # flat joined view — peel `GROUP BY ...` off the WHERE tail
         where_text, group_tail = m.group("where"), ""
@@ -2651,7 +2665,7 @@ class EngineSession:
         latest_eq = False
         for cond in _split_and(where_text) if where_text else []:
             cm = _COND_RE.match(cond)
-            colname = cm.group(1).strip("`").split(".")[-1].lower() if cm else None
+            colname = _object_name(cm.group(1)) if cm else None
             if cm and cm.group(3).strip().strip("`").upper() == "LATEST":
                 # `WHERE t.<order col> > LATEST` — the reference's
                 # forecast-only time filter (plan_join_ts.py:266-276:
@@ -2676,10 +2690,7 @@ class EngineSession:
                 # reference row_dict: model-namespace equality is a model
                 # param (an input the predictor sees), and additionally a
                 # post-filter when it names an output column
-                v = cm.group(3).strip()
-                params[colname] = v[1:-1] if v[:1] in "'\"" else (
-                    float(v) if "." in v else int(v) if v.lstrip("-").isdigit() else v
-                )
+                params[colname] = _sql_value(cm.group(3))
                 if colname in model_cols:
                     post_conds.append(cond)
             elif model_ns:
@@ -2713,7 +2724,7 @@ class EngineSession:
                 raise ValueError(
                     f"model join ON needs the model alias on one side: {cond!r}"
                 )
-            tgt_col = tgt.strip("`").split(".")[-1].lower()
+            tgt_col = _object_name(tgt)
             for a in tprefixes:
                 srcx = re.sub(rf"\b{re.escape(a)}\s*\.\s*", "", srcx, flags=re.IGNORECASE)
             inner = inner.withColumn(tgt_col, F.expr(self.rewrite(srcx)))
@@ -2721,8 +2732,7 @@ class EngineSession:
         # fetch_dataframe_partition.py / test_models.py:153-187) bounds the
         # rows each model call sees
         batch_rows = None
-        for kv in (m.group("musing") or "").split(","):
-            k, _, v = kv.partition("=")
+        for k, _, v in (kv.partition("=") for kv in (m.group("musing") or "").split(",")):
             if k.strip().lower() == "partition_size" and v.strip().isdigit():
                 batch_rows = int(v.strip())
         for k, v in (extra_params or {}).items():
@@ -2749,11 +2759,7 @@ class EngineSession:
             outer += " WHERE " + " AND ".join(_flat(c) for c in post_conds)
         if group_tail:
             outer += " " + _flat(group_tail)
-        if m.group("order"):
-            outer += " ORDER BY " + _flat(m.group("order"))
-        if m.group("limit"):
-            outer += " LIMIT " + m.group("limit")
-        return self.spark.sql(outer)
+        return self.spark.sql(outer + _order_limit(m.group("order"), m.group("limit"), _flat))
 
     # -- SQL entry point -------------------------------------------------------
     def _matview_store(self):
@@ -2812,8 +2818,6 @@ class EngineSession:
         # → Spark's star-EXCEPT; the `* EXCLUDE (` shape can't collide with
         # the set operation. Literal-aware: a string containing the same
         # text must not mutate.
-        from mindsdb_spark.dialect.rewriter import sub_outside_strings
-
         out = sub_outside_strings(
             r"(\*\s+)EXCLUDE(\s*\()", r"\1EXCEPT\2", out, re.IGNORECASE
         )
@@ -2827,8 +2831,6 @@ class EngineSession:
     def _resolve_native_queries(self, s: str) -> str:
         """Replace every ``FROM/JOIN <native_src> ( raw )`` with a temp view
         holding the raw query's result, executed on the source engine."""
-        from mindsdb_spark.dialect.rewriter import _skip_string
-
         while True:
             hit = None
             for m in _NATIVE_FROM_RE.finditer(s):
@@ -2838,19 +2840,7 @@ class EngineSession:
             if hit is None:
                 return s
             src = hit.group(2).strip("`").lower()
-            depth, i, n = 0, hit.end() - 1, len(s)
-            while i < n:
-                c = s[i]
-                if c in ("'", '"'):
-                    i = _skip_string(s, i, c)
-                    continue
-                if c == "(":
-                    depth += 1
-                elif c == ")":
-                    depth -= 1
-                    if depth == 0:
-                        break
-                i += 1
+            i = _matching_paren(s, hit.end() - 1)
             raw = s[hit.end() : i]
             self._native_seq += 1
             view = f"__native_{src}_{self._native_seq}"
@@ -2922,2341 +2912,2018 @@ class EngineSession:
             from mindsdb_spark.dialect.rewriter import strip_mysql_comments
 
             sql = strip_mysql_comments(sql)
-        self._query_log.append((" ".join(sql.split())[:500], "complete"))
-        if sql.lstrip().upper().startswith(("SELECT", "WITH")) and (
-            _LAST_RE.search(sql) or _LAST_COALESCE_RE.search(sql)
-        ):
-            sql = self._apply_last(sql)
-        if (
-            self._native
-            and sql.lstrip().upper().startswith(("SELECT", "WITH", "INSERT"))
-            and _NATIVE_FROM_RE.search(sql)
-        ):
-            # CREATE MODEL handles its own `FROM src (raw)` clause
-            sql = self._resolve_native_queries(sql)
-        cmd = self._try_command(sql)
-        if cmd is not None:
-            return cmd
-        pushed = self._try_whole_query_pushdown(sql)
-        if pushed is not None:
-            return pushed
-        text = self.rewrite(sql)
-        if "information_schema_" in text or _PROJECT_TABLE_RE.search(text):
-            self._refresh_information_schema()
-        self.last_execution = ("spark", None)
-        return self.spark.sql(text)
+        # [text, state]: `running` until the statement returns or raises
+        entry = [" ".join(sql.split())[:500], "running"]
+        self._query_log.append(entry)
+        try:
+            if sql.lstrip().upper().startswith(("SELECT", "WITH")) and (
+                _LAST_RE.search(sql) or _LAST_COALESCE_RE.search(sql)
+            ):
+                sql = self._apply_last(sql)
+            if (
+                self._native
+                and sql.lstrip().upper().startswith(("SELECT", "WITH", "INSERT"))
+                and _NATIVE_FROM_RE.search(sql)
+            ):
+                # CREATE MODEL handles its own `FROM src (raw)` clause
+                sql = self._resolve_native_queries(sql)
+            out = self._try_command(sql)
+            if out is None:
+                out = self._try_whole_query_pushdown(sql)
+            if out is None:
+                text = self.rewrite(sql)
+                self.last_execution = ("spark", None)
+                out = self._system_sql(text)
+        except BaseException:
+            entry[1] = "failed"
+            raise
+        entry[1] = "complete"
+        return out
 
-    # -- SHOW / DESCRIBE command layer ----------------------------------------
-    # Mirrors the reference's SHOW rewrites into information_schema SELECTs
-    # (command_executor.py:283-570), minus the MySQL-wire-only commands.
+    # -- command door ----------------------------------------------------------
+    # Mirrors the reference's single statement-type switch
+    # (command_executor.py:245-697): every command statement is one
+    # `_COMMANDS` entry, registered by `@_command` below.
     def _try_command(self, sql: str) -> DataFrame | None:
-        s = _collapse_ws(sql.strip().rstrip(";"))
-        u = s.upper()
-        if u in ("SHOW PROCESSLIST", "SHOW FULL PROCESSLIST"):
-            self._refresh_information_schema()
-            return self.spark.sql(
-                "SELECT id AS Id, 'mindsdb' AS User, 'localhost' AS Host, "
-                "NULL AS db, 'Query' AS Command, 0 AS Time, status AS State, "
-                "query AS Info FROM information_schema_queries ORDER BY id"
-            )
-        if u in ("SHOW ML_ENGINES", "SHOW HANDLERS"):
-            self._refresh_information_schema()
-            kind = u.split()[1].lower()
-            return self.spark.sql(
-                f"SELECT name AS `{kind.capitalize()}` FROM information_schema_{kind} ORDER BY 1"
-            )
-        if u in ("SHOW JOBS", "SHOW VIEWS", "SHOW AGENTS", "SHOW MODELS",
-                 "SHOW KNOWLEDGE_BASES", "SHOW TRIGGERS", "SHOW CHATBOTS",
-                 "SHOW PREDICTORS", "SHOW SKILLS"):
-            self._refresh_information_schema()
-            kind = u.split()[1].lower()
-            if kind == "predictors":  # reference alias (command_executor.py:532)
-                kind = "models"
-            view = (
-                "mindsdb_skills" if kind == "skills"
-                else f"information_schema_{kind}"
-            )
-            return self.spark.sql(
-                f"SELECT name AS `{kind.capitalize()}` FROM {view} ORDER BY 1"
-            )
-        if u == "SHOW PROJECTS":
-            # reference: project-typed databases (command_executor.py:550-560)
-            # — the default project plus every CREATE PROJECT / engine-less
-            # CREATE DATABASE workspace
-            projects = sorted(
-                {"mindsdb"}
-                | {n for n, (eng, _p) in self._db_params.items() if eng is None}
-            )
-            return self.spark.createDataFrame(
-                [(p,) for p in projects], "project string"
-            )
-        # MySQL-client introspection commands (command_executor.py:283-570
-        # answers these from constants/session state so clients connect)
-        vm = re.match(r"SHOW\s+(?:SESSION\s+|GLOBAL\s+)?VARIABLES(?:\s+LIKE\s+'([^']*)')?$",
-                      s, re.IGNORECASE)
-        if vm:
-            rows = sorted(
-                {**{k: v.strip("'") for k, v in self._vars.items()},
-                 **{k: str(v) for k, v in self.session_vars.items()}}.items()
-            )
-            if vm.group(1):
-                pat = re.compile(vm.group(1).replace("%", ".*").replace("_", ".") + "$",
-                                 re.IGNORECASE)
-                rows = [r for r in rows if pat.match(r[0])]
-            return self.spark.createDataFrame(
-                rows or [("", "")], "Variable_name string, Value string"
-            ).filter("Variable_name != ''")
-        if u in ("SHOW STATUS", "SHOW SESSION STATUS", "SHOW GLOBAL STATUS",
-                 "SHOW FUNCTION STATUS", "SHOW PROCEDURE STATUS"):
-            return self.spark.createDataFrame([], "Variable_name string, Value string")
-        if u == "SHOW WARNINGS":
-            # reference answers the empty warnings shape
-            # (command_executor.py:1925 answer_show_warnings)
-            return self.spark.createDataFrame(
-                [], "Level string, Code int, Message string"
-            )
-        if u == "SHOW ENGINES":
-            return self.spark.createDataFrame(
-                [("Spark", "DEFAULT", "Apache Spark via mindsdb_spark")],
-                "Engine string, Support string, Comment string",
-            )
-        if u == "SHOW PLUGINS":
-            # reference rewrites to SELECT * FROM information_schema.PLUGINS
-            # (command_executor.py:307-314; filters rejected there too)
-            self._refresh_information_schema()
-            return self.spark.sql("SELECT * FROM information_schema_plugins")
-        if u == "SHOW SEARCH_PATH":
-            # postgres-client handshake constant (command_executor.py:403-409)
-            return self.spark.createDataFrame(
-                [('"$user", public',)], "search_path string"
-            )
-        sm = re.match(
-            r"SHOW\s+TABLE\s+STATUS(?:\s+(?:FROM|IN)\s+`?(\w+)`?)?"
-            r"(?:\s+LIKE\s+'([^']*)')?$",
-            s,
-            re.IGNORECASE,
-        )
-        if sm:
-            # reference answers a constant MySQL-compat row per table
-            # (command_executor.py:1751-1923): Engine InnoDB, Version 10,
-            # Row_format Dynamic; Rows is honest NULL here (no stats table)
-            self._refresh_information_schema()
-            conds = []
-            if sm.group(1):
-                conds.append(f"table_schema = '{sm.group(1).lower()}'")
-            if sm.group(2):
-                like = sm.group(2).replace("%", ".*").replace("_", ".")
-                conds.append(f"table_name RLIKE '^{like}$'")
-            where = ("WHERE " + " AND ".join(conds)) if conds else ""
-            return self.spark.sql(
-                "SELECT table_name AS `Name`, 'InnoDB' AS `Engine`, "
-                "10 AS `Version`, 'Dynamic' AS `Row_format`, "
-                "CAST(NULL AS BIGINT) AS `Rows`, "
-                "'utf8mb4_0900_ai_ci' AS `Collation` "
-                f"FROM information_schema_tables {where} ORDER BY `Name`"
-            )
-        if re.match(r"SHOW\s+(?:INDEX|INDEXES|KEYS)\s+(?:FROM|IN)\s+", s, re.IGNORECASE):
-            # federated parquet/API tables carry no indexes; answer the shape
-            # (reference rewrites to information_schema.STATISTICS, :445-448)
-            return self.spark.createDataFrame(
-                [],
-                "Table string, Non_unique int, Key_name string, "
-                "Seq_in_index int, Column_name string",
-            )
-        if u in ("SHOW CHARSET", "SHOW CHARACTER SET"):
-            self._refresh_information_schema()
-            return self.spark.sql(
-                "SELECT character_set_name AS `Charset`, description AS `Description`, "
-                "default_collate_name AS `Default collation`, maxlen AS `Maxlen` "
-                "FROM information_schema_character_sets ORDER BY 1"
-            )
-        if u == "SHOW COLLATION":
-            return self.spark.createDataFrame(
-                [("utf8mb4_general_ci", "utf8mb4", 45, "Yes"), ("binary", "binary", 63, "Yes")],
-                "Collation string, Charset string, Id int, Default string",
-            )
-        cm = re.match(r"SHOW\s+CREATE\s+TABLE\s+([\w.`]+)$", s, re.IGNORECASE)
-        if cm:
-            # reference answers a stub `create table t ()` (command_executor
-            # .py:1634-1645); we synthesize real DDL from the live schema.
-            # Resolve through the session catalog / writable sources first so
-            # tables that only exist as registered sources (not Spark temp
-            # views) still answer; fall back to the plain view rewrite.
-            ref = cm.group(1).strip("`")
-            tbl = ref.split(".")[-1].lower()
-            df = None
-            if self.catalog.has_table(ref) or self.catalog.has_table(tbl):
-                df = self.catalog.table(ref if self.catalog.has_table(ref) else tbl)
-            else:
-                srcname, t = self._resolve_writable(ref)
-                if srcname is not None:
-                    df, tbl = self._writable[srcname].read(t), t
-            fields = (df if df is not None else self.spark.table(self.rewrite(ref))).schema.fields
-            cols = ",\n".join(
-                f"  `{f.name}` {f.dataType.simpleString()}"
-                + ("" if f.nullable else " NOT NULL")
-                for f in fields
-            )
-            ddl = f"CREATE TABLE `{tbl}` (\n{cols}\n)"
-            return self.spark.createDataFrame(
-                [(tbl, ddl)], "Table string, `Create Table` string"
-            )
-        if u == "SHOW DATABASES" or u == "SHOW SCHEMAS":
-            self._refresh_information_schema()
-            return self.spark.sql(
-                "SELECT schema_name AS `Database` FROM information_schema_databases ORDER BY 1"
-            )
-        m = _SHOW_TABLES_RE.match(s)
-        if m:
-            self._refresh_information_schema()
-            db = (m.group(1) or self.session_vars["database"]).lower()
-            return self.spark.sql(
-                f"SELECT table_name AS `Tables_in_{db}` FROM information_schema_tables "
-                f"WHERE table_schema = '{db}' ORDER BY 1"
-            )
-        m = re.match(
-            r"(?:SHOW\s+(?:FULL\s+)?(?:COLUMNS|FIELDS)\s+FROM|EXPLAIN)\s+([\w.`]+)"
-            r"(?:\s+FROM\s+([\w`]+))?$",
-            s,
-            re.IGNORECASE,
-        )
-        if m:
-            # MySQL-client column introspection → information_schema.COLUMNS
-            # rewrite (reference: command_executor.py SHOW COLUMNS branch)
-            self._refresh_information_schema()
-            table = m.group(1).strip("`").split(".")[-1].lower()
-            return self.spark.sql(
-                "SELECT column_name AS Field, data_type AS Type, 'YES' AS `Null`, "
-                "'' AS Key, NULL AS `Default`, '' AS Extra "
-                f"FROM information_schema_columns WHERE table_name = '{table}' "
-                "ORDER BY ordinal_position"
-            )
-        m = _EXPLAIN_RE.match(s)
-        if m:
-            # EXPLAIN is read-only (round-8 ADVICE): planning the inner
-            # query routes through _kb_search, whose snapshot revalidation
-            # pops index_path / sets index_stale on an externally removed
-            # layout. Snapshot the routing keys and restore them after —
-            # the next REAL search re-detects and mutates as before.
-            routing = {
-                n: (kb.get("index_path"), kb.get("index_stale"))
-                for n, kb in self._kbs.items()
-            }
-            try:
-                plan = self.sql(m.group(1))._jdf.queryExecution().explainString(
-                    self.spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-                )
-            finally:
-                for n, (path, stale) in routing.items():
-                    kb = self._kbs.get(n)
-                    if kb is None:
-                        continue
-                    for key, val in (("index_path", path), ("index_stale", stale)):
-                        if val is None:
-                            kb.pop(key, None)
-                        else:
-                            kb[key] = val
-            header = self._kb_explain_header(m.group(1))
-            if header:
-                plan = header + "\n\n" + plan
-            return self.spark.createDataFrame([(plan,)], "plan string")
-        m = re.match(
-            r"EXPLAIN\s+ANALYZE\s+(SELECT\b.+|WITH\b.+)$", s, re.IGNORECASE | re.DOTALL
-        )
-        if m:
-            # EXPLAIN ANALYZE: execute, then return the executed plan with
-            # runtime metrics (AQE final plan + per-node stats)
-            df = self.sql(m.group(1))
-            df.collect()
-            plan = df._jdf.queryExecution().explainString(
-                self.spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("cost")
-            )
-            return self.spark.createDataFrame([(plan,)], "plan string")
-        m = re.match(r"SHOW\s+CREATE\s+VIEW\s+([\w.`]+)$", s, re.IGNORECASE)
-        if m:
-            name = m.group(1).lower().strip("`").split(".")[-1]
-            if name not in self._views:
-                raise KeyError(f"view {name!r} does not exist")
-            return self.spark.createDataFrame(
-                [(name, f"CREATE VIEW {name} AS {self._views[name]}")],
-                "`View` string, `Create View` string",
-            )
-        m = re.match(r"SHOW\s+CREATE\s+MODEL\s+([\w.`]+)$", s, re.IGNORECASE)
-        if m:
-            name = m.group(1).lower().strip("`").split(".")[-1]
-            recipe = self._model_recipes.get(name)
-            if recipe is None:
-                raise KeyError(f"model {name!r} has no stored recipe")
-            src, raw, target, engine, params = recipe
-            using = ", ".join(
-                [f"engine = '{engine}'"]
-                + [f"{k} = {v!r}" for k, v in params.items() if k != "engine"]
-            )
-            frm = f" FROM {src}" if src else ""
-            body = f" ({' '.join(raw.split())})" if raw else ""
-            ddl = f"CREATE MODEL {name}{frm}{body} PREDICT {target} USING {using}"
-            return self.spark.createDataFrame(
-                [(name, ddl)], "`Model` string, `Create Model` string"
-            )
-        m = _USE_RE.match(s)
-        if m:
-            self.session_vars["database"] = m.group(1).lower()
-            self._rebuild_vars()
-            return self.spark.createDataFrame([(m.group(1).lower(),)], "database string")
-        if u.startswith("SET NAMES") or u in ("SET AUTOCOMMIT=0", "SET AUTOCOMMIT=1"):
-            return self.spark.createDataFrame([("ok",)], "status string")
-        if u in ("BEGIN", "COMMIT", "ROLLBACK") or u.startswith("START TRANSACTION"):
-            # accepted no-ops, like the reference's transaction commands
-            # (command_executor.py StartTransaction/Commit/Rollback branches)
-            return self.spark.createDataFrame([("ok",)], "status string")
-        if u.startswith("ALTER TABLE") and ("DISABLE KEYS" in u or "ENABLE KEYS" in u):
-            # mysqldump bracketing — accepted no-op (command_executor.py:648)
-            return self.spark.createDataFrame([("ok",)], "status string")
-        m = re.match(r"ANALYZE\s+(?:TABLE\s+)?([\w.`]+)$", s, re.IGNORECASE)
-        if m:
-            # MySQL clients issue ANALYZE TABLE after bulk loads; answer the
-            # MySQL status shape. Stats here are plan/footer metadata
-            # (meta_tables / meta_column_statistics) — no scan job to run.
-            name = m.group(1).lower().strip("`").replace(".", "_", 1)
-            return self.spark.createDataFrame(
-                [(name, "analyze", "status", "OK")],
-                "`Table` string, `Op` string, `Msg_type` string, `Msg_text` string",
-            )
-        m = _SET_RE.match(s)
-        if m and not u.startswith("SET TRANSACTION"):
-            name = m.group(1).lower().split(".")[-1]
-            v = m.group(2).strip()
-            if _FROM_ENV_RE.match(v):
-                # `SET @key = from_env("MDB_X")` resolves at set time, like
-                # the reference's set_variable on a Function value
-                # (variables_controller.py:57-73)
-                self.session_vars[name] = self._param_value(v)
-            else:
-                self.session_vars[name] = v[1:-1] if v[:1] in "'\"" else v
-            self._rebuild_vars()
-            # MySQL accepts unknown session vars silently; so do we
-            return self.spark.createDataFrame([(name,)], "variable string")
-        m = _CREATE_DB_RE.match(s)
-        if m:
-            name = m.group(1).lower()
-            params = json.loads(m.group(3)) if m.group(3) else {}
-            self.create_database(name, m.group(2), params)
-            return self.spark.createDataFrame([(name,)], "database string")
-        m = _DROP_DB_RE.match(s)
-        if m:
-            self.drop_database(m.group(1))
-            return self.spark.createDataFrame([(m.group(1).lower(),)], "database string")
-        m = _ALTER_DB_RE.match(s)
-        if m:
-            # merge new parameters over the recorded registration and
-            # re-attach; a bad parameter set raises before the old source is
-            # detached (reference checks the connection on update)
-            name = m.group(1).lower().strip("`")
-            if name not in self._db_params:
-                raise KeyError(f"database {name!r} does not exist")
-            eng, params = self._db_params[name]
-            merged = {**params, **json.loads(m.group(2))}
-            self.drop_database(name)
-            self.create_database(name, eng, merged)
-            return self.spark.createDataFrame([(name,)], "database string")
-        m = _CREATE_MLE_RE.match(s)
-        if m:
-            name, handler = m.group(1).lower(), m.group(2).lower()
-            from mindsdb_spark.operators.ml_engines import BUILTIN_ML_ENGINES
-
-            if handler not in BUILTIN_ML_ENGINES and handler not in self._ml_engines:
-                raise ValueError(
-                    f"unknown handler {handler!r}; available: "
-                    f"{sorted(set(BUILTIN_ML_ENGINES) | set(self._ml_engines))}"
-                )
-            self._ml_engines[name] = BUILTIN_ML_ENGINES.get(handler) or self._ml_engines[handler]
-            return self.spark.createDataFrame([(name,)], "ml_engine string")
-        m = _DROP_MLE_RE.match(s)
-        if m:
-            self._ml_engines.pop(m.group(1).lower(), None)
-            return self.spark.createDataFrame([(m.group(1).lower(),)], "ml_engine string")
-        m = _CREATE_EMPTY_RE.match(s)
-        if m and " AS " not in s.upper():
-            srcname, table = self._resolve_writable(m.group(2))
-            if srcname is None and "." in m.group(2):
-                cand = m.group(2).lower().strip("`").split(".")[0]
-                srcname = cand if cand in self._writable else None
-                table = m.group(2).lower().strip("`").split(".")[-1]
-            if srcname is not None:
-                from mindsdb_spark.dialect.rewriter import split_top_level
-
-                fields = []
-                for item in split_top_level(m.group(3)):
-                    toks = item.strip().split(None, 1)
-                    if not toks or toks[0].lower() in ("primary", "unique", "key", "index", "constraint"):
-                        continue  # table-level constraints: no-op on parquet
-                    typ = toks[1] if len(toks) > 1 else "string"
-                    fields.append(f"{toks[0].strip('`')} {_sql_type_to_spark(typ)}")
-                df = self.spark.createDataFrame([], ", ".join(fields))
-                self._writable[srcname].create_table(table, df, replace=bool(m.group(1)))
-                self._refresh_writable_views(srcname)
-                return self.spark.createDataFrame([(table,)], "created string")
-        m = _TRUNCATE_RE.match(s)
-        if m:
-            srcname, table = self._resolve_writable(m.group(1))
-            if srcname is None:
-                raise KeyError(f"table {m.group(1)!r} does not exist in any writable source")
-            ps = self._writable[srcname]
-            ps.overwrite(table, ps.read(table).limit(0))
-            self._refresh_writable_views(srcname)
-            return self.spark.createDataFrame([(table,)], "truncated string")
-        m = _MERGE_RE.match(s)
-        if m:
-            # upsert as one Catalyst plan: LEFT JOIN applies the matched
-            # updates (CASE on a source marker), anti-join appends the
-            # not-matched source rows; the result replaces the table via
-            # the copy-on-write swap. The reference has no MERGE; its KB
-            # upsert (kb.kb_upsert here) is the nearest shape.
-            from mindsdb_spark.dialect.rewriter import split_top_level
-
-            srcname, table = self._resolve_writable(m.group(1))
-            if srcname is None:
-                raise KeyError(f"table {m.group(1)!r} does not exist in any writable source")
-            ps = self._writable[srcname]
-            t_alias = (m.group(2) or "t").lower()
-            s_alias = (m.group(4) or "s").lower()
-            src_ref = m.group(3).strip()
-            src_sql = (
-                src_ref[1:-1]
-                if src_ref.startswith("(")
-                else f"SELECT * FROM {src_ref.lower().strip('`')}"
-            )
-            sdf = self.spark.sql(self.rewrite(src_sql))
-            tdf = ps.read(table)
-            tdf.createOrReplaceTempView("__merge_t")
-            sdf.createOrReplaceTempView("__merge_s")
-            cond = self.rewrite(m.group(5).strip())
-            assigns = {}
-            for item in split_top_level(m.group(6)):
-                cname, _, rhs = item.partition("=")
-                assigns[cname.strip().strip("`").lower()] = self.rewrite(rhs.strip())
-            sel = []
-            for c in tdf.columns:
-                if c.lower() in assigns:
-                    sel.append(
-                        f"CASE WHEN {s_alias}.__m = 1 THEN ({assigns[c.lower()]}) "
-                        f"ELSE {t_alias}.`{c}` END AS `{c}`"
-                    )
-                else:
-                    sel.append(f"{t_alias}.`{c}` AS `{c}`")
-            updated = self.spark.sql(
-                f"SELECT {', '.join(sel)} FROM __merge_t {t_alias} "
-                f"LEFT JOIN (SELECT *, 1 AS __m FROM __merge_s) {s_alias} ON {cond}"
-            )
-            result = updated
-            if m.group(7):
-                proj = ", ".join(
-                    f"{s_alias}.`{c}` AS `{c}`"
-                    if c in sdf.columns
-                    else f"CAST(NULL AS {f.dataType.simpleString()}) AS `{c}`"
-                    for c, f in zip(tdf.columns, tdf.schema.fields)
-                )
-                inserts = self.spark.sql(
-                    f"SELECT {proj} FROM __merge_s {s_alias} WHERE NOT EXISTS "
-                    f"(SELECT 1 FROM __merge_t {t_alias} WHERE {cond})"
-                )
-                result = updated.unionByName(inserts)
-            n = ps.overwrite(table, result)
-            self._refresh_writable_views(srcname)
-            return self.spark.createDataFrame([(table, n)], "merged string, n_rows int")
-        m = _OPTIMIZE_RE.match(s)
-        if m:
-            # small-file compaction: INSERT appends accumulate one file per
-            # write; rewrite to N files (default sized at ~128 MB targets)
-            # through the same atomic swap. With ORDER BY, the rewrite is
-            # sort-CLUSTERED (repartitionByRange + sortWithinPartitions):
-            # parquet footers then carry tight per-file/row-group min-max on
-            # the cluster keys, so later key-filtered scans skip whole files
-            # — the Z-order/liquid-clustering idea at its simplest, and the
-            # layout lever that matters at 100 TB. Lakehouse table
-            # maintenance the reference (pandas-frames-in-memory) never needs.
-            srcname, table = self._resolve_writable(m.group(1))
-            if srcname is None:
-                raise KeyError(f"table {m.group(1)!r} does not exist in any writable source")
-            ps = self._writable[srcname]
-            n_files = int(m.group(2)) if m.group(2) else ps.suggest_file_count(table)
-            df = ps.read(table)
-            if m.group(3):
-                cluster = [c.strip().strip("`") for c in m.group(3).split(",")]
-                cols = [F.col(c) for c in cluster]
-                df = df.repartitionByRange(n_files, *cols).sortWithinPartitions(*cols)
-            else:
-                df = df.repartition(n_files)
-            ps.overwrite(table, df)
-            self._refresh_writable_views(srcname)
-            return self.spark.createDataFrame(
-                [(table, n_files)], "optimized string, n_files int"
-            )
-        m = _ALTER_RE.match(s)
-        if m:
-            srcname, table = self._resolve_writable(m.group(1))
-            if srcname is not None:
-                ps = self._writable[srcname]
-                df = ps.read(table)
-                action, rest = m.group(2).upper(), m.group(3).strip()
-                if action == "ADD":
-                    cname, _, ctype = rest.partition(" ")
-                    df = df.withColumn(
-                        cname.strip("`"), F.lit(None).cast(_sql_type_to_spark(ctype or "string"))
-                    )
-                elif action == "DROP":
-                    target = rest.strip().strip("`")
-                    if target not in df.columns:
-                        raise KeyError(f"column {target!r} not in {table!r}")
-                    df = df.drop(target)
-                else:  # RENAME COLUMN a TO b
-                    parts = re.split(r"\s+TO\s+", rest, flags=re.IGNORECASE)
-                    if len(parts) != 2:
-                        raise ValueError(f"unsupported RENAME syntax: {rest!r}")
-                    df = df.withColumnRenamed(
-                        parts[0].strip().strip("`"), parts[1].strip().strip("`")
-                    )
-                ps.overwrite(table, df)
-                self._refresh_writable_views(srcname)
-                return self.spark.createDataFrame([(table,)], "altered string")
-        m = _CTAS_RE.match(s)
-        if m:
-            srcname, table = self._resolve_writable(m.group(3))
-            if srcname is None and "." in m.group(3):
-                srcname = m.group(3).lower().split(".")[0]
-                table = m.group(3).lower().split(".")[-1]
-                srcname = srcname if srcname in self._writable else None
-            if srcname is not None:
-                if m.group(2) and table in self._writable[srcname].tables():
-                    # IF NOT EXISTS: no-op when the table is already there
-                    return self.spark.createDataFrame([(table,)], "created string")
-                df = self.spark.sql(self.rewrite(m.group(5)))
-                part = (
-                    [c.strip().strip("`").lower() for c in m.group(4).split(",")]
-                    if m.group(4)
-                    else None
-                )
-                self._writable[srcname].create_table(
-                    table, df, replace=bool(m.group(1)), partition_by=part
-                )
-                self._refresh_writable_views(srcname)
-                return self.spark.createDataFrame([(table,)], "created string")
-        m = _INSERT_RE.match(s)
-        if m:
-            srcname, table = self._resolve_writable(m.group(1))
-            if srcname is not None:
-                ps = self._writable[srcname]
-                target = ps.read(table)
-                body = m.group(3)
-                if body.upper().startswith("VALUES"):
-                    rows = self.spark.sql(f"SELECT * FROM {body}")
-                else:
-                    rows = self.spark.sql(self.rewrite(body))
-                aligned = self._align_insert_rows(target, rows, m.group(2))
-                ps.insert(table, aligned)
-                self._refresh_writable_views(srcname)
-                return self.spark.createDataFrame([(table,)], "inserted string")
-            nsrc, ntable = self._resolve_native_writable(m.group(1))
-            if nsrc is not None:
-                # INSERT writeback to a native integration (JDBC exemplar) —
-                # the reference's insert-to-integration path
-                # (insert_step.py:13-124); the append runs distributed, one
-                # connection per partition
-                src = self._native[nsrc]
-                target = src.read(ntable)
-                body = m.group(3)
-                if body.upper().startswith("VALUES"):
-                    rows = self.spark.sql(f"SELECT * FROM {body}")
-                else:
-                    rows = self.sql(body)
-                aligned = self._align_insert_rows(target, rows, m.group(2))
-                src.insert(ntable, aligned)
-                return self.spark.createDataFrame([(ntable,)], "inserted string")
-            kbname = m.group(1).lower().strip("`").split(".")[-1]
-            if kbname in self._kbs:
-                body = m.group(3)
-                # INSERT INTO <kb> <select> USING batch_size = N — the
-                # reference's partitioned-insert parameter surface
-                # (query_planner.py:956-957; controller.py:657-664)
-                batch_size = None
-                mu = re.search(r"\bUSING\s+([\w\s=,'\".]+)$", body, re.IGNORECASE)
-                if mu:
-                    kvs = dict(
-                        (kv.partition("=")[0].strip().lower(),
-                         self._param_value(kv.partition("=")[2]))
-                        for kv in mu.group(1).split(",")
-                        if "=" in kv
-                    )
-                    if "batch_size" in kvs:
-                        batch_size = int(kvs["batch_size"])
-                        body = body[: mu.start()].strip()
-                rows = (
-                    self.spark.sql(f"SELECT * FROM {body}")
-                    if body.upper().startswith("VALUES")
-                    else self.sql(body.strip().strip("()"))
-                )
-                # the statement is re-runnable: record it so a crashed
-                # partitioned insert can resume by id (reference:
-                # query_resume, command_executor.py:720-722; the keyset
-                # cursor under state_dir makes the re-run incremental)
-                qid = f"kb_insert_{kbname}"
-                self._resumable[qid] = s
-                out = self._kb_insert(kbname, rows, batch_size=batch_size)
-                self._resumable.pop(qid, None)
-                return out
-        m = _ASOF_RE.match(s)
-        if m and " ASOF " in u:
-            from mindsdb_spark.operators.temporal import asof_join
-
-            sel, ltab, lali, rtab, rali, conds, order, limit = m.groups()
-            lali = (lali or ltab.split(".")[-1]).lower()
-            rali = (rali or rtab.split(".")[-1]).lower()
-            by, on_col, direction = [], None, None
-            for cond in _split_and(conds):
-                cm = re.match(
-                    r"\s*(\w+)\.([\w`]+)\s*(=|>=|<=)\s*(\w+)\.([\w`]+)\s*$", cond
-                )
-                if cm is None:
-                    raise ValueError(f"unsupported ASOF condition {cond!r}")
-                a_ali, a_col, op, b_ali, b_col = (
-                    cm.group(1).lower(), cm.group(2).strip("`").lower(), cm.group(3),
-                    cm.group(4).lower(), cm.group(5).strip("`").lower(),
-                )
-                if a_col != b_col:
-                    raise ValueError(
-                        "ASOF JOIN door requires matching column names on "
-                        f"both sides, got {a_col!r} vs {b_col!r}"
-                    )
-                if op == "=":
-                    by.append(a_col)
-                else:
-                    # normalize to the LEFT side's perspective
-                    left_first = a_ali == lali
-                    ge = (op == ">=") == left_first
-                    on_col, direction = a_col, "backward" if ge else "forward"
-            if on_col is None:
-                raise ValueError("ASOF JOIN needs one >= or <= time condition")
-            left = self.sql(f"SELECT * FROM {ltab}")
-            right = self.sql(f"SELECT * FROM {rtab}")
-            out = asof_join(left, right, on=on_col, by=by or None, direction=direction)
-            strip = re.compile(rf"\b({lali}|{rali})\.", re.IGNORECASE)
-            if sel.strip() != "*":
-                out = out.selectExpr(
-                    *[strip.sub("", c.strip()) for c in sel.split(",")]
-                )
-            if order:
-                out = out.orderBy(
-                    *[strip.sub("", c.strip(" `")) for c in order.split(",")]
-                )
-            if limit:
-                out = out.limit(int(limit))
-            return out
-        m = _TABLE_FN_RE.match(s)
-        if m and m.group(1).lower() in _pipeline_table_fns():
-            fn = _pipeline_table_fns()[m.group(1).lower()]
-            if fn is None:
-                raise ValueError(
-                    f"{m.group(1)} needs multiple inputs — use the Python API"
-                )
-            from mindsdb_spark.dialect.rewriter import split_top_level
-
-            src = self.sql(f"SELECT * FROM {m.group(2)}")
-            kwargs = {}
-            for kv in split_top_level(m.group(3)) if m.group(3) else []:
-                k, _, v = kv.partition("=")
-                kwargs[k.strip().lower()] = _coerce_literal(v)
-            if getattr(fn, "_needs_session", False):
-                out = fn(self, src, **kwargs)
-            else:
-                out = fn(src, **kwargs)
-            if m.group(4):
-                out = out.orderBy(*[c.strip(" `") for c in m.group(4).split(",")])
-            if m.group(5):
-                out = out.limit(int(m.group(5)))
-            return out
-        m = re.match(
-            r"SELECT\s+QUERY_(RESUME|CANCEL)\(\s*['\"]?([\w.]+)['\"]?\s*\)$",
-            s,
-            re.IGNORECASE,
-        )
-        if m:
-            # service functions (reference: command_executor.py:703-726
-            # exec_service_function): resume re-runs the recorded statement
-            # — the persisted keyset cursor makes it incremental; cancel
-            # forgets the statement and its cursor
-            import shutil
-
-            verb, qid = m.group(1).upper(), m.group(2)
-            if verb == "CANCEL":
-                self._resumable.pop(qid, None)
-                if self._state_dir:
-                    shutil.rmtree(
-                        os.path.join(self._state_dir, qid), ignore_errors=True
-                    )
-                return self.spark.createDataFrame([(qid,)], "cancelled string")
-            sql_text = self._resumable.get(qid)
-            if sql_text is None:
-                raise KeyError(f"no resumable query {qid!r}")
-            return self.sql(sql_text)
-        m = re.match(
-            r"SELECT\s+CHATBOT_RESPOND\(\s*['\"]?([\w.]+)['\"]?\s*\)$", s, re.IGNORECASE
-        )
-        if m:
-            # one poll tick of the reference's chatbot task
-            # (chatbot_task.py): answer every message newer than the bot's
-            # watermark with per-chat memory, append replies, advance the
-            # watermark. The whole tick is one plan over the new slice.
-            from mindsdb_spark.operators.chatbot import chatbot_respond
-
-            name = m.group(1).lower().split(".")[-1]
-            if name not in self._chatbots:
-                raise KeyError(f"chatbot {name!r} does not exist")
-            bot = self._chatbots[name]
-            if not bot.is_running:
-                return self.spark.createDataFrame([], "chat_id long, ts timestamp, question string, answer string")
-            msgs = self.sql(f"SELECT * FROM {bot.messages_table}")
-            replies = chatbot_respond(msgs, self._agents[bot.agent], bot).persist()
-            mx = replies.agg(F.max("ts")).first()[0]
-            if mx is not None:
-                bot.watermark = mx
-                if bot.reply_table:
-                    srcname, table = self._resolve_writable(bot.reply_table)
-                    if srcname is not None:
-                        ps = self._writable[srcname]
-                        if ps.exists(table):
-                            ps.insert(table, replies)
-                        else:
-                            ps.create_table(table, replies)
-                        self._refresh_writable_views(srcname)
-            return replies
-        m = _UPDATE_AGENT_RE.match(s)
-        if m:
-            import dataclasses
-
-            from mindsdb_spark.dialect.rewriter import split_top_level
-
-            name = m.group(1).lower().strip("`").split(".")[-1]
-            if name not in self._agents:
-                raise KeyError(f"agent {name!r} does not exist")
-            params = {}
-            for kv in split_top_level(m.group(2)):
-                k, _, v = kv.partition("=")
-                params[k.strip().lower()] = self._param_value(v)
-            spec = self._agents[name]
-            changes: dict = {}
-            if "model" in params:
-                changes["model_name"] = params["model"]
-            if "output_col" in params:
-                changes["output_col"] = params["output_col"]
-            if "retrieval_k" in params:
-                changes["retrieval_k"] = int(params["retrieval_k"])
-            if "knowledge_bases" in params:
-                kbs = tuple(
-                    kb.strip().lower()
-                    for kb in params["knowledge_bases"].split(",")
-                    if kb.strip()
-                )
-                for kb in kbs:
-                    if kb not in self._kbs:
-                        raise KeyError(f"knowledge base {kb!r} does not exist")
-                changes["knowledge_bases"] = kbs
-            self._agents[name] = dataclasses.replace(spec, **changes)
-            return self.spark.createDataFrame([(name,)], "agent string")
-        # UPDATE clause boundaries come from top-level keyword scanning, not
-        # lazy regex splits — `SET note = ' WHERE x'` must not end the SET
-        # clause at the literal's WHERE (literal-fuzz finding, round 4)
-        m = _UPDATE_RE.match(s)
-        u_set = u_cond = None
-        if m:
-            rest = s[m.start(2):]
-            wi = _find_top_keyword(rest, "WHERE")
-            if wi < 0:
+        """Try the entries registered for the statement's leading keyword, in
+        registration order. A handler returning None passes the statement
+        on; None overall means a plain query (pushdown or Spark)."""
+        st = _Stmt(_collapse_ws(sql.strip().rstrip(";")))
+        head = _HEAD_RE.match(st.text)
+        for regex, handler, masked in _COMMANDS.get(head.group(0).upper() if head else "", ()):
+            if regex is None:
                 m = None
             else:
-                u_set, u_cond = rest[:wi].strip(), rest[wi + len("WHERE"):].strip()
-                fi = _find_top_keyword(u_set, "FROM")
-                if fi >= 0:
-                    fm = re.match(
-                        r"\((.+)\)\s*(?:AS\s+)?(\w+)\s*$",
-                        u_set[fi + len("FROM"):].strip(),
-                        re.IGNORECASE | re.DOTALL,
-                    )
-                    if fm:
-                        tname = m.group(1).strip("`").split(".")[-1]
-                        return self.sql(
-                            f"MERGE INTO {m.group(1)} AS {tname} "
-                            f"USING ({fm.group(1)}) AS {fm.group(2)} ON {u_cond} "
-                            f"WHEN MATCHED THEN UPDATE SET {u_set[:fi].strip()}"
-                        )
-        if m:
-            srcname, table = self._resolve_writable(m.group(1))
-            if srcname is not None:
-                from mindsdb_spark.dialect.rewriter import split_top_level
-
-                set_map = {}
-                for assign in split_top_level(u_set):
-                    colname, _, rhs = assign.partition("=")
-                    set_map[colname.strip().strip("`")] = F.expr(self.rewrite(rhs.strip()))
-                cond = self.rewrite(u_cond)
-                sq_views = []
-                if re.search(r"\(\s*SELECT\b", cond, re.IGNORECASE):
-                    cond, sq_views = self._subselects_to_views(cond)
-                n = self._writable[srcname].update(table, set_map, F.expr(cond))
-                for v in sq_views:
-                    self.spark.catalog.dropTempView(v)
-                self._refresh_writable_views(srcname)
-                return self.spark.createDataFrame([(n,)], "updated int")
-            kbname = m.group(1).lower().strip("`").split(".")[-1]
-            if kbname in self._kbs:
-                from mindsdb_spark.dialect.rewriter import split_top_level
-
-                set_map = {}
-                for assign in split_top_level(u_set):
-                    colname, _, rhs = assign.partition("=")
-                    set_map[colname.strip().strip("`").lower()] = F.expr(
-                        self.rewrite(rhs.strip())
-                    )
-                return self._kb_update(
-                    kbname, set_map, F.expr(self.rewrite(u_cond))
-                )
-            nsrc, ntable = self._resolve_native_dml(m.group(1))
-            if nsrc is not None:
-                # the reference renders UPDATE into the source dialect and
-                # runs it there (update_step.py:16-127); the exemplar ships
-                # the ANSI statement with the bare table name
-                n = self._native[nsrc].execute(
-                    f"UPDATE {ntable} SET {u_set} WHERE {u_cond}"
-                )
-                return self.spark.createDataFrame([(n,)], "updated int")
-        m = _DELETE_RE.match(s)
-        if m:
-            srcname, table = self._resolve_writable(m.group(1))
-            if srcname is not None:
-                cond = self.rewrite(m.group(2))
-                sq_views: list[str] = []
-                if re.search(r"\(\s*SELECT\b", cond, re.IGNORECASE):
-                    cond, sq_views = self._subselects_to_views(cond)
-                n = self._writable[srcname].delete(table, F.expr(cond))
-                for v in sq_views:  # delete() ran eagerly — views done
-                    self.spark.catalog.dropTempView(v)
-                self._refresh_writable_views(srcname)
-                return self.spark.createDataFrame([(n,)], "deleted int")
-            kbname = m.group(1).lower().strip("`").split(".")[-1]
-            if kbname in self._kbs:
-                cond = self.rewrite(m.group(2))
-                sq_views = []
-                if re.search(r"\(\s*SELECT\b", cond, re.IGNORECASE):
-                    cond, sq_views = self._subselects_to_views(cond)
-                try:
-                    return self._kb_delete(kbname, F.expr(cond))
-                finally:
-                    for v in sq_views:  # _kb_delete ran eagerly — views done
-                        self.spark.catalog.dropTempView(v)
-            nsrc, ntable = self._resolve_native_dml(m.group(1))
-            if nsrc is not None:
-                n = self._native[nsrc].execute(
-                    f"DELETE FROM {ntable} WHERE {m.group(2)}"
-                )
-                return self.spark.createDataFrame([(n,)], "deleted int")
-        m = _DROP_TABLE_RE.match(s)
-        if m:
-            # reference: command_executor.py DropTables branch — drop against
-            # the owning integration; views are dropped from both namespaces
-            if_exists = bool(m.group(1))
-            srcname, table = self._resolve_writable(m.group(2))
-            if srcname is None:
-                if if_exists:
-                    return self.spark.createDataFrame([(m.group(2).lower(),)], "dropped string")
-                raise KeyError(f"table {m.group(2)!r} does not exist in any writable source")
-            self._writable[srcname].drop_table(table, if_exists=if_exists)
-            for v in (table, f"{srcname}_{table}"):
-                self.spark.catalog.dropTempView(v)
-            return self.spark.createDataFrame([(table,)], "dropped string")
-        m = _CREATE_VIEW_RE.match(s)
-        if m:
-            # Views are stored SQL expanded per query, like the reference's
-            # project views (mindsdb/interfaces/database/views.py:9-40);
-            # registering a Spark temp view keeps expansion inside Catalyst.
-            name = m.group(2).lower().strip("`").split(".")[-1]
-            if m.group(1) and name in self._views:
-                # IF NOT EXISTS: an existing view stays untouched
-                # (create/view.mdx:15)
-                return self.spark.createDataFrame([(name,)], "view string")
-            body = self.rewrite(m.group(3))
-            self._views[name] = body
-            self.spark.sql(body).createOrReplaceTempView(name)
-            return self.spark.createDataFrame([(name,)], "view string")
-        m = _DROP_VIEW_RE.match(s)
-        if m:
-            name = m.group(1).lower().strip("`").split(".")[-1]
-            self._views.pop(name, None)
-            self.spark.catalog.dropTempView(name)
-            return self.spark.createDataFrame([(name,)], "view string")
-        m = _ALTER_VIEW_RE.match(s)
-        if m:
-            # reference: AlterView branch — replace the stored body; the next
-            # expansion sees the new SQL
-            name = m.group(1).lower().strip("`").split(".")[-1]
-            if name not in self._views:
-                raise KeyError(f"view {name!r} does not exist")
-            body = self.rewrite(m.group(2))
-            self._views[name] = body
-            self.spark.sql(body).createOrReplaceTempView(name)
-            return self.spark.createDataFrame([(name,)], "view string")
-        m = _CREATE_MATVIEW_RE.match(s)
-        if m:
-            name = m.group(1).lower().strip("`").split(".")[-1]
-            body = m.group(2)
-            self._matview_store().create_table(name, self.sql(body), replace=True)
-            self._matviews[name] = body
-            self._refresh_matview_view(name)
-            if m.group(3):
-                n, unit = int(m.group(3)), m.group(4).lower()
-                if unit not in _PERIODS:
-                    raise ValueError(f"unknown period {unit!r}")
-                self.jobs.create_job(
-                    f"__matview_{name}",
-                    lambda nm=name: self._refresh_matview(nm),
-                    every_seconds=n * _PERIODS[unit],
-                    sql=f"REFRESH MATERIALIZED VIEW {name}",
-                )
-            return self.spark.createDataFrame([(name,)], "materialized_view string")
-        m = _REFRESH_MATVIEW_RE.match(s)
-        if m:
-            name = m.group(1).lower().strip("`").split(".")[-1]
-            if name not in self._matviews:
-                raise KeyError(f"materialized view {name!r} does not exist")
-            self._refresh_matview(name)
-            return self.spark.createDataFrame([(name,)], "materialized_view string")
-        m = _DROP_MATVIEW_RE.match(s)
-        if m:
-            name = m.group(1).lower().strip("`").split(".")[-1]
-            self._matviews.pop(name, None)
-            self.jobs.drop_job(f"__matview_{name}")
-            if self._matview_src is not None and self._matview_src.exists(name):
-                self._matview_src.drop_table(name)
-            self.spark.catalog.dropTempView(name)
-            return self.spark.createDataFrame([(name,)], "materialized_view string")
-        m = _CREATE_JOB_RE.match(s)
-        if m:
-            # START/END bound the schedule window; IF (query) gates each run
-            # on the query returning rows (jobs/README.md:9-17 semantics)
-            from datetime import datetime
-
-            name, body = m.group(1).lower(), m.group(2)
-            cond = m.group(7)
-            if m.group(6) is not None:
-                # `EVERY [number] period` — number defaults to 1
-                # (create/jobs.mdx:40)
-                n, unit = int(m.group(5) or 1), m.group(6).lower()
-                if unit not in _PERIODS:
-                    raise ValueError(f"unknown period {unit!r}")
-                every = n * _PERIODS[unit]
-            else:
-                every = None  # no EVERY: one-time job (reference semantics)
-
-            def _epoch(txt):
-                return datetime.fromisoformat(txt).timestamp() if txt else None
-
-            # reference job bodies are statement LISTS — `(sql; sql)`
-            # (jobs/README.md:1-60); each statement runs in order
-            stmts = [t.strip() for t in _split_semicolons(body) if t.strip()]
-
-            def _run(stmts=stmts, cond=cond):
-                if cond is not None and not self.sql(cond).take(1):
-                    return "skipped"
-                res = None
-                for stmt in stmts:
-                    res = self.sql(stmt).collect()
-                return res
-
-            self.jobs.create_job(
-                name,
-                _run,
-                every_seconds=every,
-                start_at=_epoch(m.group(3)),
-                end_at=_epoch(m.group(4)),
-                sql=" ".join(body.split()),
-            )
-            return self.spark.createDataFrame([(name,)], "job string")
-        m = _DROP_JOB_RE.match(s)
-        if m:
-            self.jobs.drop_job(m.group(1).lower())
-            return self.spark.createDataFrame([(m.group(1).lower(),)], "job string")
-        m = _CREATE_TRIGGER_RE.match(s)
-        if m:
-            from mindsdb_spark.streaming.incremental import TableChangeTrigger
-
-            name, table, column, body = (
-                m.group(1).lower(),
-                m.group(2).lower().strip("`"),
-                (m.group(3) or "").strip("`"),
-                m.group(4),
-            )
-            factory = lambda t=table: self.sql(f"SELECT * FROM {t}")  # noqa: E731
-            watch = column or factory().columns[0]
-            self._triggers[name] = TableChangeTrigger(
-                factory, watch, lambda _old, _new, b=body: self.sql(b).collect()
-            )
-            return self.spark.createDataFrame([(name,)], "trigger string")
-        m = _DROP_TRIGGER_RE.match(s)
-        if m:
-            self._triggers.pop(m.group(1).lower(), None)
-            return self.spark.createDataFrame([(m.group(1).lower(),)], "trigger string")
-        m = _CREATE_KB_RE.match(s)
-        if m:
-            # CREATE KNOWLEDGE_BASE name [USING dim = N, ...] — an empty
-            # chunk store; INSERT INTO <kb> <select> fills it through the
-            # chunk → embed → content-hash-upsert pipeline
-            # (controller.py:647-983)
-            from mindsdb_spark.dialect.rewriter import split_top_level
-
-            name = m.group(1).lower().strip("`").split(".")[-1]
-            # brace/bracket-aware split: the documented create.mdx syntax
-            # passes embedding_model/reranking_model as JSON objects and
-            # metadata/content_columns as arrays — naive comma split breaks
-            using = dict(
-                (kv.partition("=")[0].strip().lower(), self._param_value(kv.partition("=")[2]))
-                for kv in split_top_level(m.group(2) or "")
-                if "=" in kv
-            )
-
-            def _jsonish(v):
-                if isinstance(v, str) and v.lstrip()[:1] in "[{":
-                    try:
-                        return json.loads(v)
-                    except ValueError:
-                        return json.loads(v.replace("'", '"'))
-                return v
-
-            store = self.spark.createDataFrame(
-                [], "chunk_id string, doc_id long, chunk_text string, embedding array<float>"
-            )
-            emb = _jsonish(using.get("embedding_model"))
-            self._kbs[name] = {
-                "store": store,
-                "dim": int(using.get("dim", 16)),
-                # flat `embedder = 'md5'` names a registry embedder; the
-                # documented embedding_model JSON rides along as metadata
-                # (its provider models need network; the mock registry is
-                # the container-honest transport)
-                "embedder": using.get("embedder"),
-            }
-            for key in ("storage", "id_column"):
-                if key in using:
-                    self._kbs[name][key] = using[key]
-            if emb is not None:
-                self._kbs[name]["embedding_model"] = emb
-            if "reranking_model" in using:
-                self._kbs[name]["reranking_model"] = _jsonish(using["reranking_model"])
-            for key in ("metadata_columns", "content_columns"):
-                if key in using:
-                    cols = _jsonish(using[key])
-                    self._kbs[name][key] = (
-                        [str(c) for c in cols] if isinstance(cols, list) else cols
-                    )
-            # chunking config rides on the KB and applies at every insert
-            # (reference: preprocessing text_chunking_config —
-            # controller.py create params)
-            if "chunk_size" in using:
-                self._kbs[name]["chunk_size"] = int(using["chunk_size"])
-            if "chunk_overlap" in using:
-                self._kbs[name]["chunk_overlap"] = int(using["chunk_overlap"])
-            return self.spark.createDataFrame([(name,)], "knowledge_base string")
-        m = _DROP_KB_RE.match(s)
-        if m:
-            name = m.group(1).lower().strip("`").split(".")[-1]
-            kb = self._kbs.pop(name, None)
-            if kb is not None:
-                # reclaim a session-owned partitioned index layout (only
-                # paths under state_dir — os.sep-anchored so a sibling dir
-                # that merely string-prefixes state_dir is never touched)
-                self._drop_kb_index_snapshot(kb)
-            return self.spark.createDataFrame([(name,)], "knowledge_base string")
-        m = _ALTER_KB_RE.match(s)
-        if m:
-            from mindsdb_spark.dialect.rewriter import split_top_level
-
-            name = m.group(1).lower().strip("`").split(".")[-1]
-            if name not in self._kbs:
-                raise KeyError(f"knowledge base {name!r} does not exist")
-            using = {}
-            for kv in split_top_level(m.group(2)):
-                k, _, v = kv.partition("=")
-                using[k.strip().lower()] = self._param_value(v)
-            # the embedding model/dim cannot change post-hoc — new vectors
-            # would be incompatible with the stored ones (alter.mdx; the
-            # reference only lets the provider api_key rotate)
-            if "embedder" in using or "dim" in using or "embedding_model" in using:
-                raise ValueError(
-                    "the embedding model of a knowledge base cannot be altered; "
-                    "recreate the knowledge base instead"
-                )
-            kb = self._kbs[name]
-            kb.setdefault("params", {}).update(using)
-            return self.spark.createDataFrame([(name,)], "knowledge_base string")
-        m = _KB_INDEX_RE.match(s)
-        if m:
-            # reference: CREATE INDEX ON KNOWLEDGE_BASE kb delegates the
-            # index build to the vector store (command_executor.py
-            # answer_create_kb_index, controller.py:985-992). Spark analog:
-            # fit IVF coarse-quantizer centroids over the chunk store; KB
-            # selects then probe cells instead of scanning the corpus.
-            from mindsdb_spark.dialect.rewriter import split_top_level
-            from mindsdb_spark.operators.vector import (
-                _estimate_rows,
-                ivf_write_partitioned,
-                kmeans_centroids,
-            )
-
-            name = m.group(1).lower().strip("`").split(".")[-1]
-            if name not in self._kbs:
-                raise KeyError(f"knowledge base {name!r} does not exist")
-            kb = self._kbs[name]
-            using = {}
-            for kv in split_top_level(m.group(2)) if m.group(2) else []:
-                k_, _, v_ = kv.partition("=")
-                using[k_.strip().lower()] = self._param_value(v_)
-            # plan-stats estimate, not a full count() scan — centroid count
-            # only needs order-of-magnitude accuracy (vector.py:_estimate_rows)
-            n_rows = _estimate_rows(kb["store"], "embedding")
-            if n_rows == 0:
-                # KMeans on zero vectors dies with a raw executor error;
-                # fail at the door with the actionable message instead
-                raise ValueError(
-                    f"knowledge base {name!r} is empty; insert documents "
-                    "before CREATE INDEX"
-                )
-            n_centroids = int(
-                using.get("n_centroids", max(1, min(16, n_rows)))
-            )
-            # validate the layout BEFORE any mutation: refitting centroids
-            # first and then raising on a bad layout would pair NEW
-            # centroids with a stale partitioned snapshot — probe cells
-            # picked from one assignment, directories written by another
-            # (silently wrong recall, review finding)
-            layout = str(using.get("layout", "")).lower()
-            if layout and layout not in ("partitioned", "inplan"):
-                raise ValueError(
-                    f"unknown KB index layout {layout!r}; "
-                    "use 'partitioned' or 'inplan'"
-                )
-            # any reindex invalidates (and reclaims) the previous snapshot
-            # up front, so a failure mid-build leaves a consistent
-            # centroid-only state, never a mismatched layout. Remember the
-            # path first: the clobber-guard below accepts the kb's OWN
-            # previous snapshot even if its sentinel write never landed
-            # (crash between parquet write and marker).
-            prev_index_path = kb.get("index_path")
-            self._drop_kb_index_snapshot(kb)
-            kb["index"] = kmeans_centroids(
-                kb["store"], vec_col="embedding", n_centroids=n_centroids
-            )
-            kb.pop("index_stale", None)  # a fresh index clears the flag
-            if layout == "partitioned":
-                # the 100 TB layout (round-6 verdict item 3): persist the
-                # chunk store PARTITIONED BY nearest-cell id so a search
-                # probe is directory-level partition PRUNING, not an in-plan
-                # assignment pass over the corpus (vector.py:
-                # ivf_write_partitioned — the variant that won the sf100 ANN
-                # decade, BENCH_sf100_ann.json 0.51 s probe over 2M×64-dim)
-                self.last_state  # materializes self._state_dir
-                user_path = using.get("path")
-                path = str(
-                    user_path or os.path.join(self._state_dir, f"kb_index_{name}")
-                )
-                if user_path:
-                    # a USER-supplied target is written with overwrite
-                    # semantics — refuse to clobber an existing non-empty
-                    # directory that isn't ours (engine-managed state_dir
-                    # targets are fair game); round-7/8 ADVICE: a SQL
-                    # statement must not silently destroy arbitrary
-                    # writable directories. Ownership is proven by the
-                    # engine-written sentinel ivf_write_partitioned drops
-                    # in every snapshot — NOT by _SUCCESS, which every
-                    # Spark-written dataset contains.
-                    from mindsdb_spark.operators.vector import (
-                        hadoop_dir_nonempty,
-                        read_index_sentinel_owner,
-                    )
-
-                    has_scheme = re.match(r"[A-Za-z][A-Za-z0-9+.\-]*://", path)
-                    if has_scheme:
-                        # non-local URI (hdfs://, s3a://): no local abspath
-                        # semantics, and the local state dir can't contain
-                        # it; existence/sentinel checks go through the
-                        # Hadoop FS API instead of os.*
-                        # trailing-slash-normalized so the index_path
-                        # comparison below can't miss a same-path respelling
-                        # (Hadoop Path normalizes on its own for FS calls)
-                        p = path.rstrip("/") or path
-                        inside_state = False
-                        listing = hadoop_dir_nonempty(self.spark, path)
-                    else:
-                        p = os.path.abspath(path)
-                        state = os.path.abspath(self._state_dir)
-                        inside_state = p == state or p.startswith(state + os.sep)
-                        listing = os.listdir(p) if os.path.isdir(p) else []
-
-                    def _norm(q):
-                        q = str(q)
-                        if re.match(r"[A-Za-z][A-Za-z0-9+.\-]*://", q):
-                            return q.rstrip("/") or q
-                        return os.path.abspath(q)
-
-                    # cross-KB guard (round-9 ADVICE): a path that is ANOTHER
-                    # live kb's index snapshot must never be overwritten —
-                    # the other kb's index_path would keep pointing there and
-                    # its probes would silently read THIS kb's chunks. Checked
-                    # before the ours/inside_state logic: being engine-written
-                    # (sentinel) or engine-managed (state dir) is exactly the
-                    # dangerous case here, not an exemption.
-                    sowner = read_index_sentinel_owner(self.spark, p)
-                    other = next(
-                        (
-                            n2 for n2, kb2 in self._kbs.items()
-                            if n2 != name and kb2.get("index_path")
-                            and _norm(kb2["index_path"]) == p
-                        ),
-                        None,
-                    )
-                    if other is None and sowner and sowner != name \
-                            and sowner in self._kbs:
-                        # the sentinel records its owner: a LIVE other kb
-                        # named there is refused even if its index_path was
-                        # recorded under a differently-normalized spelling
-                        other = sowner
-                    if other is not None:
-                        raise ValueError(
-                            f"CREATE INDEX path {path!r} is the live index "
-                            f"snapshot of knowledge base {other!r}; "
-                            "refusing to overwrite it"
-                        )
-                    # ownership = the engine sentinel, or the kb's OWN
-                    # previous snapshot path (covers the crash window where
-                    # the parquet landed but the sentinel write didn't —
-                    # session-scoped: prev_index_path is in-memory state, a
-                    # restarted session refuses the half-written dir, safe
-                    # side). A bare __cell= layout is NOT enough — a user's
-                    # own ivf_assign output is partitioned by the same
-                    # column and must not be silently overwritten
-                    ours = sowner is not None or (
-                        prev_index_path is not None
-                        and p == _norm(prev_index_path)
-                    )
-                    if not inside_state and listing and not ours:
-                        raise ValueError(
-                            f"CREATE INDEX path {path!r} exists and is not "
-                            "empty (and is not an engine-written index "
-                            "snapshot); choose an empty/new directory or an "
-                            "engine-managed path"
-                        )
-                ivf_write_partitioned(
-                    kb["store"], path, "embedding", kb["index"],
-                    cell_col="__cell", owner=name,
-                )
-                kb["index_path"] = path
-            return self.spark.createDataFrame(
-                [(name, n_centroids, layout or "inplan")],
-                "knowledge_base string, n_centroids int, layout string",
-            )
-        m = _CREATE_AGENT_RE.match(s)
-        if m:
-            from mindsdb_spark.dialect.rewriter import split_top_level
-            from mindsdb_spark.operators.agent import AgentSpec
-
-            name = m.group(1).lower().strip("`").split(".")[-1]
-            params = {}
-            for kv in split_top_level(m.group(2)) if m.group(2) else []:
-                k, _, v = kv.partition("=")
-                params[k.strip().lower()] = self._param_value(v)
-            transport = self._agent_transport
-            # the documented JSON forms (docs/mindsdb_sql/agents/
-            # agent_syntax.mdx): model = {"provider":.., "model_name":..}
-            # and data = {"knowledge_bases": [...], "tables": [...]} —
-            # accepted alongside the flat model='x', knowledge_bases='a,b'
-            model = params.get("model", "mock-llm")
-            if isinstance(model, str) and model.lstrip().startswith("{"):
-                mj = json.loads(model)
-                model = mj.get("model_name") or mj.get("provider") or "mock-llm"
-            kb_list: list[str] = []
-            data = params.get("data")
-            if isinstance(data, str) and data.lstrip().startswith("{"):
-                dj = json.loads(data)
-                # project prefixes resolve to the single default project
-                kb_list = [
-                    str(kb).lower().split(".")[-1]
-                    for kb in dj.get("knowledge_bases", [])
-                ]
-            # data sources: USING knowledge_bases = 'kb1, kb2' attaches KB
-            # retrieval before completion (reference: agents_controller.py
-            # params.data.knowledge_bases)
-            kb_list += [
-                kb.strip().lower()
-                for kb in str(params.get("knowledge_bases", "")).split(",")
-                if kb.strip()
-            ]
-            kbs = tuple(dict.fromkeys(kb_list))
-            for kb in kbs:
-                if kb not in self._kbs:
-                    raise KeyError(f"knowledge base {kb!r} does not exist")
-            self._agents[name] = AgentSpec(
-                name=name,
-                complete=_wrap_llm_transport(
-                    transport, str(model), self._llm_log_accum
-                ),
-                output_col=params.get("output_col", "answer"),
-                model_name=model,
-                knowledge_bases=kbs,
-                retrieval_k=int(params.get("retrieval_k", 3)),
-            )
-            return self.spark.createDataFrame([(name,)], "agent string")
-        m = _DROP_AGENT_RE.match(s)
-        if m:
-            self._agents.pop(m.group(1).lower().strip("`").split(".")[-1], None)
-            return self.spark.createDataFrame([(m.group(1).lower(),)], "agent string")
-        m = _CREATE_CHATBOT_RE.match(s)
-        if m:
-            from mindsdb_spark.dialect.rewriter import split_top_level
-            from mindsdb_spark.operators.chatbot import ChatbotSpec
-
-            name = m.group(1).lower().strip("`").split(".")[-1]
-            params = {}
-            for kv in split_top_level(m.group(2)):
-                k, _, v = kv.partition("=")
-                params[k.strip().lower()] = self._param_value(v)
-            agent = str(params.get("agent", "")).lower()
-            if agent not in self._agents:
-                raise KeyError(f"agent {agent!r} does not exist")
-            if "messages_table" not in params:
-                raise ValueError("CREATE CHATBOT requires messages_table = '...'")
-            self._chatbots[name] = ChatbotSpec(
-                name=name,
-                agent=agent,
-                messages_table=str(params["messages_table"]),
-                text_col=str(params.get("text_col", "text")),
-                chat_id_col=str(params.get("chat_id_col", "chat_id")),
-                ts_col=str(params.get("ts_col", "ts")),
-                reply_table=params.get("reply_table"),
-                memory_k=int(params.get("memory_k", 5)),
-                params={k: v for k, v in params.items()},
-            )
-            self._refresh_information_schema()
-            return self.spark.createDataFrame([(name,)], "chatbot string")
-        m = _UPDATE_CHATBOT_RE.match(s)
-        if m and m.group(1).lower().strip("`").split(".")[-1] in self._chatbots:
-            import dataclasses
-
-            from mindsdb_spark.dialect.rewriter import split_top_level
-
-            name = m.group(1).lower().strip("`").split(".")[-1]
-            spec = self._chatbots[name]
-            changes = {}
-            for kv in split_top_level(m.group(2)):
-                k, _, v = kv.partition("=")
-                k = k.strip().lower()
-                val = self._param_value(v)
-                if k == "agent":
-                    if str(val).lower() not in self._agents:
-                        raise KeyError(f"agent {val!r} does not exist")
-                    changes["agent"] = str(val).lower()
-                elif k == "memory_k":
-                    changes["memory_k"] = int(val)
-                elif k in ("messages_table", "text_col", "chat_id_col", "ts_col", "reply_table"):
-                    changes[k] = str(val)
-                elif k == "is_running":
-                    changes["is_running"] = str(val).lower() in ("true", "1")
-            self._chatbots[name] = dataclasses.replace(spec, **changes)
-            self._refresh_information_schema()
-            return self.spark.createDataFrame([(name,)], "chatbot string")
-        m = _DROP_CHATBOT_RE.match(s)
-        if m:
-            self._chatbots.pop(m.group(1).lower().strip("`").split(".")[-1], None)
-            self._refresh_information_schema()
-            return self.spark.createDataFrame([(m.group(1).lower(),)], "chatbot string")
-        m = _EVAL_KB_RE.match(s)
-        if m and m.group(1).lower().strip("`").split(".")[-1] in self._kbs:
-            from mindsdb_spark.dialect.rewriter import split_top_level
-
-            params = {}
-            for kv in split_top_level(m.group(2)):
-                k, _, v = kv.partition("=")
-                params[k.strip().lower()] = self._param_value(v)
-            kbn = m.group(1).lower().strip("`").split(".")[-1]
-            gen = params.get("generate", params.get("generate_data"))
-            if gen is not None and str(gen).lower() not in ("false", "0"):
-                return self._kb_evaluate_generated(kbn, params)
-            return self._kb_evaluate(
-                kbn,
-                params["test_table"],
-                int(params.get("k", 10)),
-            )
-        m = _EVALUATE_DRIFT_RE.match(s)
-        if m:
-            from mindsdb_spark.dialect.rewriter import split_top_level
-            from mindsdb_spark.operators.monitoring import (
-                categorical_drift,
-                psi_drift,
-            )
-
-            using = {}
-            for kv in split_top_level(m.group(4)) if m.group(4) else []:
-                k, _, v = kv.partition("=")
-                using[k.strip().lower()] = self._param_value(v)
-            value_col = m.group(1).strip("`")
-            base, cur = self.sql(m.group(2)), self.sql(m.group(3))
-            if str(using.get("categorical", "")).lower() == "true":
-                return categorical_drift(base, cur, value_col).orderBy("category")
-            return psi_drift(
-                base, cur, value_col, n_bins=int(using.get("bins", 10))
-            ).orderBy("bin")
-        m = _EVALUATE_RE.match(s)
-        if m:
-            from mindsdb_spark.dialect.rewriter import split_top_level
-
-            using = {}
-            for kv in split_top_level(m.group(3)) if m.group(3) else []:
-                k, _, v = kv.partition("=")
-                using[k.strip().lower()] = self._param_value(v)
-            return self._evaluate_metric(
-                m.group(1), m.group(2), n_decimals=int(using.get("n_decimals", 3))
-            )
-        m = _CREATE_MODEL_RE.match(s)
-        if m:
-            return self._create_model(m)
-        m = _SET_ACTIVE_RE.match(s)
-        if m:
-            name = m.group(1).lower().strip("`").split(".")[-1]
-            v = int(m.group(2))
-            specs = self._model_versions.get(name)
-            if not specs or not 1 <= v <= len(specs):
-                raise ValueError(f"model {name!r} has no version {v}")
-            self._model_active[name] = v
-            self._models[name] = specs[v - 1]
-            return self.spark.createDataFrame([(name, v)], "model string, active_version int")
-        m = _RETRAIN_MODEL_RE.match(s)
-        if m and m.group(1).lower().strip("`").split(".")[-1] in self._model_recipes:
-            name = m.group(1).lower().strip("`").split(".")[-1]
-            src, raw, target, engine, params = self._model_recipes[name]
-            train_df = self._native[src].query(raw) if src and src in self._native else self.sql(raw)
-            spec = self._ml_engines[engine.lower()](name, train_df, target, params)
-            v = self._add_model_version(name, spec)
-            return self.spark.createDataFrame([(name, v)], "retrained string, version int")
-        m = _FINETUNE_RE.match(s)
-        if m and m.group(1).lower().strip("`").split(".")[-1] in self._model_recipes:
-            # incremental retrain: base training query ∪ the finetune slice,
-            # through the SAME engine/params → a new ACTIVE version (the
-            # engines are closed-form fits, so "more rows" IS the faithful
-            # finetune; reference answer_finetune_predictor extends the
-            # training data the same way)
-            name = m.group(1).lower().strip("`").split(".")[-1]
-            src0, raw0, target, engine, params = self._model_recipes[name]
-            fsrc, fraw = (m.group(2) or "").lower().strip("`") or None, m.group(3)
-            base = self._native[src0].query(raw0) if src0 and src0 in self._native else self.sql(raw0)
-            new = self._native[fsrc].query(fraw) if fsrc and fsrc in self._native else self.sql(fraw)
-            train_df = base.unionByName(new.select(*base.columns))
-            if m.group(4):
-                from mindsdb_spark.dialect.rewriter import split_top_level
-
-                params = dict(params)
-                for kv in split_top_level(m.group(4)):
-                    uk, _, uv = kv.partition("=")
-                    params[uk.strip().lower()] = self._param_value(uv)
-            spec = self._ml_engines[engine.lower()](name, train_df, target, params)
-            v = self._add_model_version(name, spec)
-            return self.spark.createDataFrame([(name, v)], "finetuned string, version int")
-        m = _DROP_MODEL_RE.match(s)
-        if m:
-            parts = m.group(1).lower().strip("`").split(".")
-            if (
-                len(parts) >= 2
-                and parts[-1].isdigit()
-                and parts[-2] in self._model_versions
-            ):
-                # DROP MODEL name.v removes one version (reference
-                # answer_drop_model); the active version is protected
-                name, v = parts[-2], int(parts[-1])
-                if v == self._model_active.get(name):
-                    raise ValueError(f"cannot drop active version {v} of {name!r}")
-                specs = self._model_versions[name]
-                if 1 <= v <= len(specs):
-                    specs[v - 1] = None  # version numbers stay stable
-                return self.spark.createDataFrame([(name, v)], "model string, version int")
-            name = parts[-1]
-            self._models.pop(name, None)
-            self._model_recipes.pop(name, None)
-            self._model_versions.pop(name, None)
-            self._model_active.pop(name, None)
-            return self.spark.createDataFrame([(name,)], "model string")
-        nm = _match_clauses(_NESTED_MODEL_RE, s)
-        if nm:
-            im = _match_clauses(_MODEL_JOIN_RE, _collapse_ws(nm.group("inner")))
-            if im and self._model_of(im.group("model")) is not None:
-                res = self._model_join(im)
-                res.createOrReplaceTempView("__nested_model")
-                alias = nm.group("qalias") or nm.group("alias")
-                outer, tail = nm.group("outer"), nm.group("tail") or ""
-                for ref in (f"`{alias}`.", f"{alias}."):
-                    outer = outer.replace(ref, "")
-                    tail = tail.replace(ref, "")
-                return self.spark.sql(
-                    f"SELECT {self.rewrite(outer)} FROM __nested_model{self.rewrite(tail)}"
-                )
-        # predict-time params: trailing `USING p1 = 'a', p2 = {...}` on a
-        # model join/select (reference test_predictor_params.py — params
-        # reach predict; here via the row_dict mechanism: constant input
-        # columns on the predict frame)
-        pu = _search_clauses(_TRAILING_USING_RE, s)
-        s_nu = (s[: pu.start()].rstrip() if pu else s)
-        mm = _match_clauses(
-            re.compile(
-                r"SELECT\s+(?P<sel>.+?)\s+FROM\s+(?P<table>[\w.`]+)"
-                r"(?:\s+(?:AS\s+)?(?P<talias>\w+))?"
-                r"(?P<joins>(?:\s+JOIN\s+[\w.`]+(?:\s+(?:AS\s+)?\w+)?){2,})"
-                r"(?:\s+WHERE\s+(?P<where>.+?))?"
-                r"(?:\s+ORDER\s+BY\s+(?P<order>.+?))?(?:\s+LIMIT\s+(?P<limit>\d+))?$",
-                re.IGNORECASE | re.DOTALL,
-            ),
-            s_nu if pu else s,
-        )
-        if mm:
-            joins = re.findall(
-                r"JOIN\s+([\w.`]+)(?:\s+(?:AS\s+)?(\w+))?", mm.group("joins"), re.IGNORECASE
-            )
-            specs = [
-                (self._model_of(jn), (ja or jn.split(".")[-1]).lower())
-                for jn, ja in joins
-            ]
-            if specs and all(sp is not None for sp, _a in specs):
-                # multi-model batch predict (get-batch-predictions.mdx:17-23
-                # `JOIN mindsdb.m1 AS m1 JOIN mindsdb.m2 AS m2 ...`): every
-                # model applies row-wise to the same table fetch; each
-                # model's outputs are alias-scoped by its DECLARED output
-                # schema (a column-set diff would silently skip an output
-                # that shadows an input column — round-3 advice), and the
-                # WHERE's pure-input conditions push into the table fetch
-                # before any model runs. One Arrow stage per model, no join.
-                from mindsdb_spark.operators.model import apply_model
-
-                df = self.sql(f"SELECT * FROM {mm.group('table')}")
-                declared: dict[str, list[str]] = {
-                    alias: [
-                        p.strip().split()[0].strip("`").lower()
-                        for p in spec.output_schema.split(",")
-                        if p.strip()
-                    ]
-                    for spec, alias in specs
-                }
-                out_names = {n for outs in declared.values() for n in outs}
-                clash = out_names & {c.lower() for c in df.columns}
-                if clash:
-                    raise ValueError(
-                        f"model output column(s) {sorted(clash)} collide with "
-                        f"table columns in multi-model join — alias or rename "
-                        "the table columns"
-                    )
-                where_conds = (
-                    _split_and(mm.group("where")) if mm.group("where") else []
-                )
-                aliases = {a for _sp, a in specs}
-                pre, post_where = [], []
-                for cond in where_conds:
-                    model_ref = any(
-                        re.search(rf"\b{re.escape(a)}\s*\.", cond, re.IGNORECASE)
-                        for a in aliases
-                    ) or any(
-                        re.search(rf"\b{re.escape(n)}\b", cond, re.IGNORECASE)
-                        for n in out_names
-                    )
-                    (post_where if model_ref else pre).append(cond)
-                if pre:
-                    stripped = " AND ".join(pre)
-                    if mm.group("talias"):
-                        stripped = re.sub(
-                            rf"\b{re.escape(mm.group('talias'))}\s*\.\s*",
-                            "",
-                            stripped,
-                            flags=re.IGNORECASE,
-                        )
-                    df = df.filter(F.expr(self.rewrite(stripped)))
-                col_map: dict[str, dict[str, str]] = {}
-                for spec, alias in specs:
-                    df = apply_model(df, spec)
-                    renames = {c: f"__{alias}__{c}" for c in declared[alias]}
-                    for old, newc in renames.items():
-                        df = df.withColumnRenamed(old, newc)
-                    col_map[alias] = renames
-
-                def _requal(t: str) -> str:
-                    for alias, renames in col_map.items():
-                        t = re.sub(
-                            rf"\b{re.escape(alias)}\.(\w+)",
-                            lambda g: renames.get(g.group(1), g.group(1)),
-                            t,
-                            flags=re.IGNORECASE,
-                        )
-                    if mm.group("talias"):
-                        t = re.sub(
-                            rf"\b{re.escape(mm.group('talias'))}\.(\w+)",
-                            r"\1",
-                            t,
-                            flags=re.IGNORECASE,
-                        )
-                    return t
-
-                df.createOrReplaceTempView("__multi_model")
-                outer = f"SELECT {self.rewrite(_requal(mm.group('sel')))} FROM __multi_model"
-                if post_where:
-                    outer += " WHERE " + self.rewrite(
-                        _requal(" AND ".join(post_where))
-                    )
-                if mm.group("order"):
-                    outer += " ORDER BY " + self.rewrite(_requal(mm.group("order")))
-                if mm.group("limit"):
-                    outer += " LIMIT " + mm.group("limit")
-                return self.spark.sql(outer)
-        m = _match_clauses(_MODEL_JOIN_RE, s_nu if pu else s)
-        if m and self._model_of(m.group("model")) is not None:
-            return self._model_join(m, extra_params=_parse_using_params(pu.group(1)) if pu else None)
-        m = _match_clauses(_KB_JOIN_RE, s)
-        if m and m.group(2).lower().strip("`").split(".")[-1] in self._kbs:
-            # KB search result joined to a table in one statement
-            # (test_knowledge_base.py:396-423): run the semantic search
-            # first, then let Catalyst plan the join over its result
-            name = m.group(2).lower().strip("`").split(".")[-1]
-            kb_alias = m.group(3)
-            content, residual = None, []
-            for cond in _split_and(m.group(7)):
-                cm = _CONTENT_EQ_ALIAS_RE.match(cond.strip())
-                if cm:
-                    content = _sql_literal_text(cm.group(1))
-                else:
-                    residual.append(cond)
-            if content is not None:
-                res = self._kb_search(name, content, None)
-                res.createOrReplaceTempView("__kb_join_res")
-                sql2 = (
-                    f"SELECT {m.group(1)} FROM __kb_join_res {kb_alias} "
-                    f"JOIN {m.group(4)} {m.group(5)} ON {m.group(6)}"
-                )
-                if residual:
-                    sql2 += " WHERE " + " AND ".join(residual)
-                if m.group(8):
-                    sql2 += " ORDER BY " + m.group(8)
-                if m.group(9):
-                    sql2 += " LIMIT " + m.group(9)
-                return self.sql(sql2)
-        m = _match_clauses(_KB_RE, s)
-        if m:
-            name = m.group(2).lower().strip("`").split(".")[-1]
-            if name in self._kbs:
-                from mindsdb_spark.dialect.rewriter import split_top_level
-
-                kb_using: dict[str, str] = {}
-                um = _search_clauses(_KB_USING_RE, s)
-                if um:
-                    for kv in split_top_level(um.group(1)):
-                        uk, _, uv = kv.partition("=")
-                        kb_using[uk.strip().lower()] = self._param_value(uv)
-                    m = _match_clauses(
-                        _KB_RE,
-                        _collapse_ws(s[: um.start()] + " " + s[um.end():]),
-                    )
+                m = st.match(regex) if masked else regex.match(st.text)
                 if m is None:
-                    raise ValueError("malformed knowledge-base SELECT")
-
-                def _kb_alias(t: str, projection: bool = False) -> str:
-                    # documented schema names (query.mdx): chunk_content is
-                    # the chunk text, bare id is the CHUNK id (the
-                    # reference's TableField.ID is chunk-level); in the
-                    # projection the documented name stays on the output.
-                    # Literal-aware: WHERE content = 'document id 5' must
-                    # keep its literal intact (round-3 advice, medium).
-                    from mindsdb_spark.dialect.rewriter import sub_outside_strings
-
-                    t = sub_outside_strings(
-                        r"\bchunk_content\b", "content", t, re.IGNORECASE
-                    )
-                    repl = "chunk_id AS id" if projection else "chunk_id"
-                    return sub_outside_strings(r"\bid\b", repl, t, re.IGNORECASE)
-
-                conds = _kb_alias(m.group(3))
-                if re.search(r"\(\s*SELECT\b", conds, re.IGNORECASE):
-                    # nested KB subselects (query.mdx: `id NOT IN (SELECT
-                    # DISTINCT id FROM kb WHERE content=..)`) execute first
-                    # and become temp-view subqueries — same semi/anti-join
-                    # treatment as DELETE (views stay registered: the KB
-                    # result df is evaluated lazily downstream)
-                    conds, _ = self._subselects_to_views(conds)
-                content, meta, post = None, [], []
-                for cond in _split_and(conds):
-                    cm = _CONTENT_EQ_RE.match(cond.strip())
-                    if cm:
-                        content = _sql_literal_text(cm.group(1))
-                    elif re.search(r"\brelevance\b", cond, re.IGNORECASE):
-                        # relevance exists on the SEARCH RESULT, not the
-                        # store — it filters after the top-k (query.mdx)
-                        post.append(cond)
-                    else:
-                        meta.append(cond)
-                if content is not None:
-                    res = self._kb_search(
-                        name,
-                        content,
-                        int(m.group(5)) if m.group(5) else None,
-                        prefilter=" AND ".join(meta) if meta else None,
-                        using=kb_using,
-                    )
-                    for cond in post:
-                        res = res.filter(F.expr(self.rewrite(cond)))
-                    res.createOrReplaceTempView("__kb_select")
-                    outer = f"SELECT {self.rewrite(_kb_alias(m.group(1), projection=True))} FROM __kb_select"
-                    if m.group(4):
-                        outer += " ORDER BY " + self.rewrite(_kb_alias(m.group(4)))
-                    return self.spark.sql(outer)
-                # no content condition: metadata/id browse over the chunk
-                # store (reference returns plain filtered rows,
-                # test_knowledge_base.py:424-460)
-                self._kb_browse_view(name)
-                outer = (
-                    f"SELECT {self.rewrite(_kb_alias(m.group(1), projection=True))} FROM __kb_browse "
-                    f"WHERE {self.rewrite(' AND '.join(meta + post))}"
-                )
-                if m.group(4):
-                    outer += " ORDER BY " + self.rewrite(_kb_alias(m.group(4)))
-                if m.group(5):
-                    outer += " LIMIT " + m.group(5)
-                return self.spark.sql(outer)
-        m = _match_clauses(_KB_BROWSE_RE, s)
-        if m and m.group(2).lower().strip("`").split(".")[-1] in self._kbs:
-            # whole-store browse: SELECT ... FROM <kb> [ORDER BY] [LIMIT]
-            self._kb_browse_view(m.group(2).lower().strip("`").split(".")[-1])
-            outer = f"SELECT {self.rewrite(m.group(1))} FROM __kb_browse"
-            if m.group(3):
-                outer += " ORDER BY " + self.rewrite(m.group(3))
-            if m.group(4):
-                outer += " LIMIT " + m.group(4)
-            return self.spark.sql(outer)
-        m = _match_clauses(_AGENT_RE, s)
-        if m:
-            name = m.group(2).lower().strip("`").split(".")[-1]
-            if name in self._agents:
-                from mindsdb_spark.operators.agent import agent_ask
-
-                agent = self._agents[name]
-                # decode the question literal the way Spark's parser would
-                # ('' / backslash escapes) — same contract as the KB door
-                question = _sql_literal_text(m.group(3))
-                if agent.knowledge_bases:
-                    res = self._agent_rag_ask(agent, question)
-                else:
-                    res = agent_ask(self.spark, agent, question)
-                cols = [c.strip(" `") for c in m.group(1).split(",")]
-                if cols == ["*"]:
-                    return res
-                return res.select(*cols)
-        pu2 = _search_clauses(_TRAILING_USING_RE, s)
-        m = _match_clauses(_MODEL_SELECT_RE, s[: pu2.start()].rstrip() if pu2 else s)
-        if m and self._model_of(m.group(2)) is not None:
-            # one-shot predict: the WHERE equality dict IS the input row
-            # (reference: predictor-only FROM applies the model to the
-            # row_dict, sql_query.py:148-161 + query_planner.py:569-648).
-            # TS models need a history window — they stay join-only.
-            from mindsdb_spark.operators.model import apply_model
-
-            spec = self._model_of(m.group(2))
-            if spec.order_by is None:
-                row: dict = {}
-                ok = True
-                for cond in _split_and(m.group(3)):
-                    cm = _COND_RE.match(cond.strip())
-                    if cm is None or cm.group(2) != "=":
-                        ok = False  # non-equality input: not a one-shot form
-                        break
-                    v = cm.group(3).strip()
-                    row[cm.group(1).strip("`").split(".")[-1].lower()] = (
-                        v[1:-1] if v[:1] in "'\"" else (
-                            float(v) if "." in v else int(v) if v.lstrip("-").isdigit() else v
-                        )
-                    )
-                if ok and row:
-                    for k, v in (_parse_using_params(pu2.group(1)) if pu2 else {}).items():
-                        row[k] = v
-                    # one-shot predictions cache on (model, version, input
-                    # row) — the bounded analog of the reference's
-                    # prediction cache (apply_predictor_step.py:177-186,
-                    # keyed name_id_checksum(df)). The reference's
-                    # whole-frame variant is intentionally NOT ported:
-                    # checksumming a distributed frame costs a full pass —
-                    # at scale that is the price of predicting; in-plan
-                    # reuse falls to Catalyst/persist instead.
-                    mname = m.group(2).lower().strip("`").split(".")[-1]
-                    ckey = (mname, self._model_active.get(mname), tuple(sorted(row.items())))
-                    cached = self._predict_cache.get(ckey)
-                    if cached is not None:
-                        res = self.spark.createDataFrame(*cached)
-                    else:
-                        inp = self.spark.createDataFrame([tuple(row.values())], list(row))
-                        res = apply_model(inp, spec)
-                        self._predict_cache[ckey] = (res.collect(), res.schema)
-                        if len(self._predict_cache) > 128:
-                            self._predict_cache.pop(next(iter(self._predict_cache)))
-                        res = self.spark.createDataFrame(*self._predict_cache[ckey])
-                    cols = [c.strip(" `") for c in m.group(1).split(",")]
-                    # documented `<target>_explain` JSON column
-                    # (get-single-prediction.mdx:17,57): predicted_value +
-                    # the reference explain-dict shape; confidence fields
-                    # are honest NULLs for engines that don't estimate them
-                    target = spec.output_schema.split()[0].strip("`")
-                    explain_col = f"{target}_explain"
-                    if any(c.lower() == explain_col for c in cols):
-                        res = res.withColumn(
-                            explain_col,
-                            F.to_json(
-                                F.struct(
-                                    F.col(target).alias("predicted_value"),
-                                    F.lit(None).cast("double").alias("confidence"),
-                                    F.lit(None).cast("boolean").alias("anomaly"),
-                                    F.lit(None).cast("double").alias("truth"),
-                                ),
-                                {"ignoreNullFields": "false"},
-                            ),
-                        )
-                    if cols == ["*"]:
-                        return res
-                    return res.select(*cols)
-        dk = re.match(
-            r"(?:DESCRIBE|DESC)\s+KNOWLEDGE_BASE\s+([\w.`]+)$", s, re.IGNORECASE
-        )
-        if dk:
-            # reference: DESCRIBE surfaces project-object params
-            # (command_executor.py:882-895 answer_describe_object)
-            name = dk.group(1).lower().strip("`").split(".")[-1]
-            if name not in self._kbs:
-                raise KeyError(f"knowledge base {name!r} does not exist")
-            from mindsdb_spark.operators.vector import _estimate_rows
-
-            kb = self._kbs[name]
-            meta = [
-                c for c in kb["store"].columns
-                if c not in ("chunk_id", "doc_id", "chunk_text", "embedding")
-            ]
-            return self.spark.createDataFrame(
-                [(
-                    name,
-                    kb["dim"],
-                    kb.get("embedder") or "default",
-                    _estimate_rows(kb["store"], "embedding"),
-                    kb.get("index") is not None,
-                    ("partitioned" if kb.get("index_path")
-                     else "inplan" if kb.get("index") is not None else ""),
-                    ", ".join(meta),
-                )],
-                "name string, dim int, embedder string, chunks_estimate long, "
-                "has_index boolean, index_layout string, metadata_columns string",
-            )
-        dm = re.match(
-            r"(?:DESCRIBE|DESC)\s+(?:MODEL\s+)?([\w.`]+)\.(features|model|info|args|metadata)$",
-            s,
-            re.IGNORECASE,
-        )
-        if dm and self._model_of(dm.group(1)) is not None:
-            # attribute paths, MODEL keyword optional (reference:
-            # answer_describe_predictor — `DESCRIBE [MODEL] m.features`
-            # etc., command_executor.py:931-960; api/describe.mdx)
-            spec = self._model_of(dm.group(1))
-            attr = dm.group(2).lower()
-            if attr == "features":
-                rows = [(c,) for c in (spec.features or [])] or [("(not recorded)",)]
-                return self.spark.createDataFrame(rows, "feature string")
-            if attr == "args":
-                # the USING arguments the model was created with
-                mname = dm.group(1).lower().strip("`").split(".")[-1]
-                recipe = self._model_recipes.get(mname)
-                params = dict(recipe[4]) if recipe else {}
-                if recipe:
-                    params.setdefault("engine", recipe[3])
-                rows = [(k, json.dumps(v) if not isinstance(v, str) else v)
-                        for k, v in sorted(params.items())] or [("engine", "registered")]
-                return self.spark.createDataFrame(rows, "key string, value string")
-            info = dict(spec.info or {})
-            if attr in ("model", "metadata"):
-                rows = [(k, json.dumps(v) if not isinstance(v, str) else v)
-                        for k, v in sorted(info.items())] or [("engine", "registered")]
-                return self.spark.createDataFrame(rows, "attribute string, value string")
-            return self.spark.createDataFrame(
-                [(spec.name, info.get("engine", "registered"), spec.output_schema,
-                  "ts" if spec.order_by else "row")],
-                "name string, engine string, outputs string, kind string",
-            )
-        dm = re.match(r"(?:DESCRIBE|DESC)\s+(MODEL\s+)?([\w.`]+)$", s, re.IGNORECASE)
-        if dm and dm.group(1) and self._model_of(dm.group(2)) is None:
-            # explicit MODEL keyword names a missing model: the reference
-            # raises a clean not-found (command_executor.py:931
-            # answer_describe_predictor), not a table-resolution error
-            raise KeyError(f"model {dm.group(2).strip('`')!r} does not exist")
-        if dm and self._model_of(dm.group(2)) is not None:
-            # one row per surviving version, newest last; `active` marks the
-            # version bare-name joins resolve to (reference DESCRIBE MODEL
-            # surfaces the versions table, mindsdb/interfaces/model/)
-            name = dm.group(2).lower().strip("`").split(".")[-1]
-            if name.isdigit():
-                name = dm.group(2).lower().strip("`").split(".")[-2]
-            recipe = self._model_recipes.get(name)
-            rows = [
-                (
-                    name,
-                    v + 1,
-                    v + 1 == self._model_active.get(name),
-                    spec.output_schema,
-                    "ts" if spec.order_by else "row",
-                    recipe[3] if recipe else "registered",
-                    recipe[1] if recipe else "",
-                )
-                for v, spec in enumerate(self._model_versions.get(name, []))
-                if spec is not None
-            ]
-            return self.spark.createDataFrame(
-                rows,
-                "name string, version int, active boolean, predict_columns string, "
-                "kind string, engine string, training_query string",
-            )
-        dobj = re.match(
-            r"(?:DESCRIBE|DESC)\s+(AGENT|JOB|VIEW|TRIGGER|ML_ENGINE|DATABASE)\s+([\w.`]+)$",
-            s,
-            re.IGNORECASE,
-        )
-        if dobj:
-            # reference: DESCRIBE works for every project/global object kind
-            # (command_executor.py:882-906 answer_describe_object)
-            kind = dobj.group(1).upper()
-            name = dobj.group(2).lower().strip("`").split(".")[-1]
-            if kind == "AGENT":
-                a = self._agents.get(name)
-                if a is None:
-                    raise KeyError(f"agent {name!r} does not exist")
-                return self.spark.createDataFrame(
-                    [(name, a.model_name, a.output_col,
-                      ", ".join(a.knowledge_bases or ()), a.retrieval_k)],
-                    "name string, model string, output_col string, "
-                    "knowledge_bases string, retrieval_k int",
-                )
-            if kind == "JOB":
-                j = self.jobs.jobs.get(name)
-                if j is None:
-                    raise KeyError(f"job {name!r} does not exist")
-                return self.spark.createDataFrame(
-                    [(name, float(j.every_seconds), j.runs)],
-                    "name string, every_seconds double, runs int",
-                )
-            if kind == "VIEW":
-                if name not in self._views:
-                    raise KeyError(f"view {name!r} does not exist")
-                return self.spark.createDataFrame(
-                    [(name, self._views[name])], "name string, definition string"
-                )
-            if kind == "TRIGGER":
-                tr = self._triggers.get(name)
-                if tr is None:
-                    raise KeyError(f"trigger {name!r} does not exist")
-                return self.spark.createDataFrame(
-                    [(name, tr.column)], "name string, watch_column string"
-                )
-            if kind == "ML_ENGINE":
-                eng = self._ml_engines.get(name)
-                if eng is None:
-                    raise KeyError(f"ml engine {name!r} does not exist")
-                return self.spark.createDataFrame(
-                    [(name, getattr(eng, "__name__", str(eng)))],
-                    "name string, handler string",
-                )
-            if kind == "DATABASE":
-                if name not in self._db_params:
-                    raise KeyError(f"database {name!r} does not exist")
-                eng, params = self._db_params[name]
-                return self.spark.createDataFrame(
-                    [(name, (eng or "project").lower(), json.dumps(params))],
-                    "name string, engine string, parameters string",
-                )
-        m = _DESCRIBE_RE.match(s) or _SHOW_COLUMNS_RE.match(s)
-        if m:
-            self._refresh_information_schema()
-            name = m.group(1).lower().strip("`")
-            if m.re is _SHOW_COLUMNS_RE and m.group(2):
-                name = f"{m.group(2).lower().strip('`')}.{name}"
-            parts = name.split(".")
-            cond = f"table_name = '{parts[-1]}'"
-            if len(parts) > 1:
-                cond += f" AND table_schema = '{parts[-2]}'"
-            return self.spark.sql(
-                "SELECT column_name AS `Field`, data_type AS `Type`, 'YES' AS `Null` "
-                f"FROM information_schema_columns WHERE {cond} ORDER BY ordinal_position"
-            )
+                    continue
+            out = handler(self, m, st)
+            if out is not None:
+                return out
         return None
 
-    def _refresh_information_schema(self) -> None:
+    def _row(self, schema: str, *values) -> DataFrame:
+        """The one-row status frame a command answers with."""
+        return self.spark.createDataFrame([values], schema)
+
+    def _using(self, text: str | None) -> dict:
+        """`k = v, ...` (a USING or SET parameter list) → {key: value}, each
+        value resolved by `_param_value`."""
+        return {
+            k.strip().lower(): self._param_value(v)
+            for k, eq, v in (kv.partition("=") for kv in split_top_level(text or ""))
+            if eq
+        }
+
+    def _assignments(self, text: str) -> dict:
+        """`col = expr, ...` (an UPDATE / MERGE SET list) → {column: rewritten
+        expression}."""
+        return {
+            c.strip().strip("`"): self.rewrite(rhs.strip())
+            for c, _, rhs in (a.partition("=") for a in split_top_level(text))
+        }
+
+    @contextlib.contextmanager
+    def _inlined_subselects(self, cond: str):
+        """Yield ``cond`` with each `(SELECT ...)` run into a temp view
+        (`_subselects_to_views`); the views are dropped once the eager
+        statement that consumed them is done."""
+        views: list[str] = []
+        if re.search(r"\(\s*SELECT\b", cond, re.IGNORECASE):
+            cond, views = self._subselects_to_views(cond)
+        try:
+            yield cond
+        finally:
+            for v in views:
+                self.spark.catalog.dropTempView(v)
+
+    # -- SHOW / DESCRIBE / EXPLAIN ----------------------------------------------
+    @_command("SHOW", _SHOW_DATA_RE)
+    def _show_data(self, m, st):
+        answer = _SHOW_DATA[" ".join(m.group(1).upper().split())]
+        if isinstance(answer, str):
+            return self._system_sql(answer)
+        return self.spark.createDataFrame(*answer)
+
+    @_command("SHOW", r"SHOW\s+PROJECTS$")
+    def _show_projects(self, m, st):
+        # reference: project-typed databases (command_executor.py:550-560)
+        # — the default project plus every CREATE PROJECT / engine-less
+        # CREATE DATABASE workspace
+        projects = sorted(
+            {"mindsdb"} | {n for n, (eng, _p) in self._db_params.items() if eng is None}
+        )
+        return self.spark.createDataFrame([(p,) for p in projects], "project string")
+
+    @_command("SHOW", r"SHOW\s+(?:SESSION\s+|GLOBAL\s+)?VARIABLES(?:\s+LIKE\s+'([^']*)')?$")
+    def _show_variables(self, m, st):
+        # MySQL-client introspection (command_executor.py:283-570 answers
+        # these from constants/session state so clients connect)
+        rows = sorted(
+            {**{k: v.strip("'") for k, v in self._vars.items()},
+             **{k: str(v) for k, v in self.session_vars.items()}}.items()
+        )
+        if m.group(1):
+            pat = re.compile(m.group(1).replace("%", ".*").replace("_", ".") + "$",
+                             re.IGNORECASE)
+            rows = [r for r in rows if pat.match(r[0])]
+        return self.spark.createDataFrame(rows, "Variable_name string, Value string")
+
+    @_command(
+        "SHOW",
+        r"SHOW\s+TABLE\s+STATUS(?:\s+(?:FROM|IN)\s+`?(\w+)`?)?(?:\s+LIKE\s+'([^']*)')?$",
+    )
+    def _show_table_status(self, m, st):
+        # reference answers a constant MySQL-compat row per table
+        # (command_executor.py:1751-1923): Engine InnoDB, Version 10,
+        # Row_format Dynamic; Rows is honest NULL here (no stats table)
+        conds = []
+        if m.group(1):
+            conds.append(f"table_schema = '{m.group(1).lower()}'")
+        if m.group(2):
+            like = m.group(2).replace("%", ".*").replace("_", ".")
+            conds.append(f"table_name RLIKE '^{like}$'")
+        where = ("WHERE " + " AND ".join(conds)) if conds else ""
+        return self._system_sql(
+            "SELECT table_name AS `Name`, 'InnoDB' AS `Engine`, "
+            "10 AS `Version`, 'Dynamic' AS `Row_format`, "
+            "CAST(NULL AS BIGINT) AS `Rows`, "
+            "'utf8mb4_0900_ai_ci' AS `Collation` "
+            f"FROM information_schema_tables {where} ORDER BY `Name`"
+        )
+
+    @_command("SHOW", r"SHOW\s+(?:INDEX|INDEXES|KEYS)\s+(?:FROM|IN)\s+")
+    def _show_index(self, m, st):
+        # federated parquet/API tables carry no indexes; answer the shape
+        # (reference rewrites to information_schema.STATISTICS, :445-448)
+        return self.spark.createDataFrame(
+            [],
+            "Table string, Non_unique int, Key_name string, "
+            "Seq_in_index int, Column_name string",
+        )
+
+    @_command("SHOW", r"SHOW\s+CREATE\s+TABLE\s+([\w.`]+)$")
+    def _show_create_table(self, m, st):
+        # reference answers a stub `create table t ()` (command_executor
+        # .py:1634-1645); we synthesize real DDL from the live schema.
+        # Resolve through the session catalog / writable sources first so
+        # tables that only exist as registered sources (not Spark temp
+        # views) still answer; fall back to the plain view rewrite.
+        ref = m.group(1).strip("`")
+        tbl = _object_name(ref)
+        df = None
+        if self.catalog.has_table(ref) or self.catalog.has_table(tbl):
+            df = self.catalog.table(ref if self.catalog.has_table(ref) else tbl)
+        else:
+            srcname, t = self._resolve_writable(ref)
+            if srcname is not None:
+                df, tbl = self._writable[srcname].read(t), t
+        fields = (df if df is not None else self.spark.table(self.rewrite(ref))).schema.fields
+        cols = ",\n".join(
+            f"  `{f.name}` {f.dataType.simpleString()}"
+            + ("" if f.nullable else " NOT NULL")
+            for f in fields
+        )
+        return self._row(
+            "Table string, `Create Table` string", tbl, f"CREATE TABLE `{tbl}` (\n{cols}\n)"
+        )
+
+    @_command("SHOW", _SHOW_TABLES_RE)
+    def _show_tables(self, m, st):
+        db = (m.group(1) or self.session_vars["database"]).lower()
+        return self._system_sql(
+            f"SELECT table_name AS `Tables_in_{db}` FROM information_schema_tables "
+            f"WHERE table_schema = '{db}' ORDER BY 1"
+        )
+
+    @_command("DESCRIBE DESC", r"(?:DESCRIBE|DESC)\s+KNOWLEDGE_BASE\s+([\w.`]+)$")
+    def _describe_kb(self, m, st):
+        # reference: DESCRIBE surfaces project-object params
+        # (command_executor.py:882-895 answer_describe_object)
+        from mindsdb_spark.operators.vector import _estimate_rows
+
+        name = _object_name(m.group(1))
+        if name not in self._kbs:
+            raise KeyError(f"knowledge base {name!r} does not exist")
+        kb = self._kbs[name]
+        meta = [
+            c for c in kb["store"].columns
+            if c not in ("chunk_id", "doc_id", "chunk_text", "embedding")
+        ]
+        return self._row(
+            "name string, dim int, embedder string, chunks_estimate long, "
+            "has_index boolean, index_layout string, metadata_columns string",
+            name,
+            kb["dim"],
+            kb.get("embedder") or "default",
+            _estimate_rows(kb["store"], "embedding"),
+            kb.get("index") is not None,
+            _index_layout(kb),
+            ", ".join(meta),
+        )
+
+    @_command(
+        "DESCRIBE DESC",
+        r"(?:DESCRIBE|DESC)\s+(?:MODEL\s+)?([\w.`]+)\.(features|model|info|args|metadata)$",
+    )
+    def _describe_model_attr(self, m, st):
+        # attribute paths, MODEL keyword optional (reference:
+        # answer_describe_predictor — `DESCRIBE [MODEL] m.features`
+        # etc., command_executor.py:931-960; api/describe.mdx)
+        spec = self._model_of(m.group(1))
+        if spec is None:
+            return None
+        attr = m.group(2).lower()
+        if attr == "features":
+            rows = [(c,) for c in (spec.features or [])] or [("(not recorded)",)]
+            return self.spark.createDataFrame(rows, "feature string")
+        if attr == "args":
+            # the USING arguments the model was created with
+            recipe = self._model_recipes.get(_object_name(m.group(1)))
+            params = dict(recipe[4]) if recipe else {}
+            if recipe:
+                params.setdefault("engine", recipe[3])
+            return self.spark.createDataFrame(_json_pairs(params), "key string, value string")
+        info = dict(spec.info or {})
+        if attr in ("model", "metadata"):
+            return self.spark.createDataFrame(_json_pairs(info), "attribute string, value string")
+        return self._row(
+            "name string, engine string, outputs string, kind string",
+            spec.name, info.get("engine", "registered"), spec.output_schema,
+            "ts" if spec.order_by else "row",
+        )
+
+    @_command("DESCRIBE DESC", r"(?:DESCRIBE|DESC)\s+(MODEL\s+)?([\w.`]+)$")
+    def _describe_model(self, m, st):
+        if self._model_of(m.group(2)) is None:
+            if m.group(1):
+                # explicit MODEL keyword names a missing model: the reference
+                # raises a clean not-found (command_executor.py:931
+                # answer_describe_predictor), not a table-resolution error
+                raise KeyError(f"model {m.group(2).strip('`')!r} does not exist")
+            return None
+        # one row per surviving version, newest last; `active` marks the
+        # version bare-name joins resolve to (reference DESCRIBE MODEL
+        # surfaces the versions table, mindsdb/interfaces/model/)
+        parts = m.group(2).lower().replace("`", "").split(".")
+        name = parts[-2] if parts[-1].isdigit() else parts[-1]
+        recipe = self._model_recipes.get(name)
+        rows = [
+            (
+                name,
+                v + 1,
+                v + 1 == self._model_active.get(name),
+                spec.output_schema,
+                "ts" if spec.order_by else "row",
+                recipe[3] if recipe else "registered",
+                recipe[1] if recipe else "",
+            )
+            for v, spec in enumerate(self._model_versions.get(name, []))
+            if spec is not None
+        ]
+        return self.spark.createDataFrame(
+            rows,
+            "name string, version int, active boolean, predict_columns string, "
+            "kind string, engine string, training_query string",
+        )
+
+    @_command(
+        "DESCRIBE DESC",
+        r"(?:DESCRIBE|DESC)\s+(AGENT|JOB|VIEW|TRIGGER|ML_ENGINE|DATABASE)\s+([\w.`]+)$",
+    )
+    def _describe_object(self, m, st):
+        # reference: DESCRIBE works for every project/global object kind
+        # (command_executor.py:882-906 answer_describe_object)
+        kind, name = m.group(1).upper(), _object_name(m.group(2))
+        registry, schema, row = {
+            "AGENT": (
+                self._agents,
+                "name string, model string, output_col string, "
+                "knowledge_bases string, retrieval_k int",
+                lambda a: (a.model_name, a.output_col,
+                           ", ".join(a.knowledge_bases or ()), a.retrieval_k),
+            ),
+            "JOB": (
+                self.jobs.jobs,
+                "name string, every_seconds double, runs int",
+                lambda j: (float(j.every_seconds), j.runs),
+            ),
+            "VIEW": (self._views, "name string, definition string", lambda v: (v,)),
+            "TRIGGER": (self._triggers, "name string, watch_column string", lambda tr: (tr.column,)),
+            "ML_ENGINE": (
+                self._ml_engines,
+                "name string, handler string",
+                lambda e: (getattr(e, "__name__", str(e)),),
+            ),
+            "DATABASE": (
+                self._db_params,
+                "name string, engine string, parameters string",
+                lambda d: ((d[0] or "project").lower(), json.dumps(d[1])),
+            ),
+        }[kind]
+        obj = registry.get(name)
+        if obj is None:
+            raise KeyError(f"{kind.lower().replace('_', ' ')} {name!r} does not exist")
+        return self._row(schema, name, *row(obj))
+
+    @_command("SHOW DESCRIBE DESC EXPLAIN", _COLUMNS_RE)
+    def _columns(self, m, st):
+        # MySQL-client column introspection → information_schema.COLUMNS
+        # (reference: command_executor.py SHOW COLUMNS branch), in MySQL's
+        # 6-column shape; a `FROM db` suffix or `db.t` qualifies the table
+        parts = (m.group(1) or m.group(2)).lower().replace("`", "").split(".")
+        if m.group(3):
+            parts = [m.group(3).lower().strip("`"), parts[-1]]
+        cond = f"table_name = '{parts[-1]}'"
+        if len(parts) > 1:
+            cond += f" AND table_schema = '{parts[-2]}'"
+        return self._system_sql(
+            "SELECT column_name AS Field, data_type AS Type, 'YES' AS `Null`, "
+            "'' AS Key, NULL AS `Default`, '' AS Extra "
+            f"FROM information_schema_columns WHERE {cond} ORDER BY ordinal_position"
+        )
+
+    @_command("EXPLAIN", _EXPLAIN_RE)
+    def _explain(self, m, st):
+        # EXPLAIN is read-only (round-8 ADVICE): planning the inner
+        # query routes through _kb_search, whose snapshot revalidation
+        # pops index_path / sets index_stale on an externally removed
+        # layout. Snapshot the routing keys and restore them after —
+        # the next REAL search re-detects and mutates as before.
+        keys = ("index_path", "index_stale")
+        routing = {
+            n: {k: kb[k] for k in keys if kb.get(k) is not None} for n, kb in self._kbs.items()
+        }
+        try:
+            plan = self._explain_string(self.sql(m.group(1)), "formatted")
+        finally:
+            for n, saved in routing.items():
+                kb = self._kbs.get(n)
+                if kb is not None:
+                    for k in keys:
+                        kb.pop(k, None)
+                    kb.update(saved)
+        header = self._kb_explain_header(m.group(1))
+        if header:
+            plan = header + "\n\n" + plan
+        return self._row("plan string", plan)
+
+    @_command("EXPLAIN", r"EXPLAIN\s+ANALYZE\s+(SELECT\b.+|WITH\b.+)$")
+    def _explain_analyze(self, m, st):
+        # execute, then return the executed plan with runtime metrics (AQE
+        # final plan + per-node stats)
+        df = self.sql(m.group(1))
+        df.collect()
+        return self._row("plan string", self._explain_string(df, "cost"))
+
+    def _explain_string(self, df: DataFrame, mode: str) -> str:
+        explain_mode = self.spark._jvm.org.apache.spark.sql.execution.ExplainMode
+        return df._jdf.queryExecution().explainString(explain_mode.fromString(mode))
+
+    @_command("SHOW", r"SHOW\s+CREATE\s+VIEW\s+([\w.`]+)$")
+    def _show_create_view(self, m, st):
+        name = _object_name(m.group(1))
+        if name not in self._views:
+            raise KeyError(f"view {name!r} does not exist")
+        return self._row(
+            "`View` string, `Create View` string",
+            name, f"CREATE VIEW {name} AS {self._views[name]}",
+        )
+
+    @_command("SHOW", r"SHOW\s+CREATE\s+MODEL\s+([\w.`]+)$")
+    def _show_create_model(self, m, st):
+        name = _object_name(m.group(1))
+        recipe = self._model_recipes.get(name)
+        if recipe is None:
+            raise KeyError(f"model {name!r} has no stored recipe")
+        src, raw, target, engine, params = recipe
+        using = ", ".join(
+            [f"engine = '{engine}'"]
+            + [f"{k} = {v!r}" for k, v in params.items() if k != "engine"]
+        )
+        frm = f" FROM {src}" if src else ""
+        body = f" ({' '.join(raw.split())})" if raw else ""
+        ddl = f"CREATE MODEL {name}{frm}{body} PREDICT {target} USING {using}"
+        return self._row("`Model` string, `Create Model` string", name, ddl)
+
+    # -- session state ---------------------------------------------------------
+    @_command("USE", _USE_RE)
+    def _use(self, m, st):
+        self.session_vars["database"] = m.group(1).lower()
+        self._rebuild_vars()
+        return self._row("database string", m.group(1).lower())
+
+    @_command(
+        "SET BEGIN COMMIT ROLLBACK START ALTER",
+        r"SET\s+NAMES\b.*|SET\s+AUTOCOMMIT=[01]$|(?:BEGIN|COMMIT|ROLLBACK)$"
+        r"|START\s+TRANSACTION\b.*|ALTER\s+TABLE\b.*\b(?:DISABLE|ENABLE)\s+KEYS\b.*",
+    )
+    def _accepted_noop(self, m, st):
+        # client handshakes, transaction commands (command_executor.py
+        # StartTransaction/Commit/Rollback) and mysqldump key bracketing
+        # (:648) are accepted no-ops, like the reference's
+        return self._row("status string", "ok")
+
+    @_command("ANALYZE", r"ANALYZE\s+(?:TABLE\s+)?([\w.`]+)$")
+    def _analyze(self, m, st):
+        # MySQL clients issue ANALYZE TABLE after bulk loads; answer the
+        # MySQL status shape. Stats here are plan/footer metadata
+        # (meta_tables / meta_column_statistics) — no scan job to run.
+        name = m.group(1).lower().strip("`").replace(".", "_", 1)
+        return self._row(
+            "`Table` string, `Op` string, `Msg_type` string, `Msg_text` string",
+            name, "analyze", "status", "OK",
+        )
+
+    @_command("SET", _SET_RE)
+    def _set_variable(self, m, st):
+        if st.text.upper().startswith("SET TRANSACTION"):
+            return None
+        name = m.group(1).lower().split(".")[-1]
+        v = m.group(2).strip()
+        if _FROM_ENV_RE.match(v):
+            # `SET @key = from_env("MDB_X")` resolves at set time, like
+            # the reference's set_variable on a Function value
+            # (variables_controller.py:57-73)
+            self.session_vars[name] = self._param_value(v)
+        else:
+            self.session_vars[name] = v[1:-1] if v[:1] in "'\"" else v
+        self._rebuild_vars()
+        # MySQL accepts unknown session vars silently; so do we
+        return self._row("variable string", name)
+
+    # -- databases and ML engines ------------------------------------------------
+    @_command("CREATE", _CREATE_DB_RE)
+    def _create_database(self, m, st):
+        name = m.group(1).lower()
+        self.create_database(name, m.group(2), json.loads(m.group(3)) if m.group(3) else {})
+        return self._row("database string", name)
+
+    @_command("DROP", _DROP_DB_RE)
+    def _drop_database(self, m, st):
+        self.drop_database(m.group(1))
+        return self._row("database string", m.group(1).lower())
+
+    @_command("ALTER", _ALTER_DB_RE)
+    def _alter_database(self, m, st):
+        # merge new parameters over the recorded registration and
+        # re-attach; a bad parameter set raises before the old source is
+        # detached (reference checks the connection on update)
+        name = m.group(1).lower().strip("`")
+        if name not in self._db_params:
+            raise KeyError(f"database {name!r} does not exist")
+        eng, params = self._db_params[name]
+        merged = {**params, **json.loads(m.group(2))}
+        self.drop_database(name)
+        self.create_database(name, eng, merged)
+        return self._row("database string", name)
+
+    @_command("CREATE", _CREATE_MLE_RE)
+    def _create_ml_engine(self, m, st):
+        from mindsdb_spark.operators.ml_engines import BUILTIN_ML_ENGINES
+
+        name, handler = m.group(1).lower(), m.group(2).lower()
+        if handler not in BUILTIN_ML_ENGINES and handler not in self._ml_engines:
+            raise ValueError(
+                f"unknown handler {handler!r}; available: "
+                f"{sorted(set(BUILTIN_ML_ENGINES) | set(self._ml_engines))}"
+            )
+        self._ml_engines[name] = BUILTIN_ML_ENGINES.get(handler) or self._ml_engines[handler]
+        return self._row("ml_engine string", name)
+
+    @_command("DROP", _DROP_MLE_RE)
+    def _drop_ml_engine(self, m, st):
+        self._ml_engines.pop(m.group(1).lower(), None)
+        return self._row("ml_engine string", m.group(1).lower())
+
+    # -- tables in writable sources ------------------------------------------------
+    @_command("CREATE", _CREATE_EMPTY_RE)
+    def _create_empty_table(self, m, st):
+        if " AS " in st.text.upper():
+            return None
+        srcname, table = self._resolve_writable(m.group(2))
+        if srcname is None:
+            return None
+        fields = []
+        for item in split_top_level(m.group(3)):
+            toks = item.strip().split(None, 1)
+            if not toks or toks[0].lower() in ("primary", "unique", "key", "index", "constraint"):
+                continue  # table-level constraints: no-op on parquet
+            typ = toks[1] if len(toks) > 1 else "string"
+            fields.append(f"{toks[0].strip('`')} {_sql_type_to_spark(typ)}")
+        df = self.spark.createDataFrame([], ", ".join(fields))
+        self._writable[srcname].create_table(table, df, replace=bool(m.group(1)))
+        self._refresh_writable_views(srcname)
+        return self._row("created string", table)
+
+    @_command("TRUNCATE", _TRUNCATE_RE)
+    def _truncate(self, m, st):
+        srcname, table = self._writable_table(m.group(1))
+        ps = self._writable[srcname]
+        ps.overwrite(table, ps.read(table).limit(0))
+        self._refresh_writable_views(srcname)
+        return self._row("truncated string", table)
+
+    @_command("MERGE", _MERGE_RE)
+    def _merge(self, m, st):
+        # upsert as one Catalyst plan: LEFT JOIN applies the matched
+        # updates (CASE on a source marker), anti-join appends the
+        # not-matched source rows; the result replaces the table via
+        # the copy-on-write swap. The reference has no MERGE; its KB
+        # upsert (kb.kb_upsert here) is the nearest shape.
+        srcname, table = self._writable_table(m.group(1))
+        ps = self._writable[srcname]
+        t_alias = (m.group(2) or "t").lower()
+        s_alias = (m.group(4) or "s").lower()
+        src_ref = m.group(3).strip()
+        src_sql = (
+            src_ref[1:-1]
+            if src_ref.startswith("(")
+            else f"SELECT * FROM {src_ref.lower().strip('`')}"
+        )
+        sdf = self.spark.sql(self.rewrite(src_sql))
+        tdf = ps.read(table)
+        tdf.createOrReplaceTempView("__merge_t")
+        sdf.createOrReplaceTempView("__merge_s")
+        cond = self.rewrite(m.group(5).strip())
+        assigns = {c.lower(): e for c, e in self._assignments(m.group(6)).items()}
+        sel = []
+        for c in tdf.columns:
+            if c.lower() in assigns:
+                sel.append(
+                    f"CASE WHEN {s_alias}.__m = 1 THEN ({assigns[c.lower()]}) "
+                    f"ELSE {t_alias}.`{c}` END AS `{c}`"
+                )
+            else:
+                sel.append(f"{t_alias}.`{c}` AS `{c}`")
+        result = self.spark.sql(
+            f"SELECT {', '.join(sel)} FROM __merge_t {t_alias} "
+            f"LEFT JOIN (SELECT *, 1 AS __m FROM __merge_s) {s_alias} ON {cond}"
+        )
+        if m.group(7):
+            proj = ", ".join(
+                f"{s_alias}.`{c}` AS `{c}`"
+                if c in sdf.columns
+                else f"CAST(NULL AS {f.dataType.simpleString()}) AS `{c}`"
+                for c, f in zip(tdf.columns, tdf.schema.fields)
+            )
+            inserts = self.spark.sql(
+                f"SELECT {proj} FROM __merge_s {s_alias} WHERE NOT EXISTS "
+                f"(SELECT 1 FROM __merge_t {t_alias} WHERE {cond})"
+            )
+            result = result.unionByName(inserts)
+        n = ps.overwrite(table, result)
+        self._refresh_writable_views(srcname)
+        return self._row("merged string, n_rows int", table, n)
+
+    @_command("OPTIMIZE", _OPTIMIZE_RE)
+    def _optimize(self, m, st):
+        # small-file compaction: INSERT appends accumulate one file per
+        # write; rewrite to N files (default sized at ~128 MB targets)
+        # through the same atomic swap. With ORDER BY, the rewrite is
+        # sort-CLUSTERED (repartitionByRange + sortWithinPartitions):
+        # parquet footers then carry tight per-file/row-group min-max on
+        # the cluster keys, so later key-filtered scans skip whole files
+        # — the Z-order/liquid-clustering idea at its simplest, and the
+        # layout lever that matters at 100 TB. Lakehouse table
+        # maintenance the reference (pandas-frames-in-memory) never needs.
+        srcname, table = self._writable_table(m.group(1))
+        ps = self._writable[srcname]
+        n_files = int(m.group(2)) if m.group(2) else ps.suggest_file_count(table)
+        df = ps.read(table)
+        if m.group(3):
+            cols = [F.col(c.strip().strip("`")) for c in m.group(3).split(",")]
+            df = df.repartitionByRange(n_files, *cols).sortWithinPartitions(*cols)
+        else:
+            df = df.repartition(n_files)
+        ps.overwrite(table, df)
+        self._refresh_writable_views(srcname)
+        return self._row("optimized string, n_files int", table, n_files)
+
+    @_command("ALTER", _ALTER_RE)
+    def _alter_table(self, m, st):
+        srcname, table = self._resolve_writable(m.group(1))
+        if srcname is None:
+            return None
+        ps = self._writable[srcname]
+        df = ps.read(table)
+        action, rest = m.group(2).upper(), m.group(3).strip()
+        if action == "ADD":
+            cname, _, ctype = rest.partition(" ")
+            df = df.withColumn(
+                cname.strip("`"), F.lit(None).cast(_sql_type_to_spark(ctype or "string"))
+            )
+        elif action == "DROP":
+            target = rest.strip().strip("`")
+            if target not in df.columns:
+                raise KeyError(f"column {target!r} not in {table!r}")
+            df = df.drop(target)
+        else:  # RENAME COLUMN a TO b
+            parts = re.split(r"\s+TO\s+", rest, flags=re.IGNORECASE)
+            if len(parts) != 2:
+                raise ValueError(f"unsupported RENAME syntax: {rest!r}")
+            df = df.withColumnRenamed(parts[0].strip().strip("`"), parts[1].strip().strip("`"))
+        ps.overwrite(table, df)
+        self._refresh_writable_views(srcname)
+        return self._row("altered string", table)
+
+    @_command("CREATE", _CTAS_RE)
+    def _create_table_as(self, m, st):
+        srcname, table = self._resolve_writable(m.group(3))
+        if srcname is None:
+            return None
+        if m.group(2) and table in self._writable[srcname].tables():
+            # IF NOT EXISTS: no-op when the table is already there
+            return self._row("created string", table)
+        df = self.spark.sql(self.rewrite(m.group(5)))
+        part = [c.strip().strip("`").lower() for c in m.group(4).split(",")] if m.group(4) else None
+        self._writable[srcname].create_table(
+            table, df, replace=bool(m.group(1)), partition_by=part
+        )
+        self._refresh_writable_views(srcname)
+        return self._row("created string", table)
+
+    def _insert_rows(self, body: str, run_select: Callable) -> DataFrame:
+        """An INSERT body's rows: a VALUES list, or ``run_select(body)``."""
+        if body.upper().startswith("VALUES"):
+            return self.spark.sql(f"SELECT * FROM {body}")
+        return run_select(body)
+
+    @_command("INSERT", _INSERT_RE)
+    def _insert(self, m, st):
+        body = m.group(3)
+        srcname, table = self._resolve_writable(m.group(1))
+        if srcname is not None:
+            ps = self._writable[srcname]
+            rows = self._insert_rows(body, lambda b: self.spark.sql(self.rewrite(b)))
+            ps.insert(table, self._align_insert_rows(ps.read(table), rows, m.group(2)))
+            self._refresh_writable_views(srcname)
+            return self._row("inserted string", table)
+        nsrc, ntable = self._resolve_native(m.group(1), "insert")
+        if nsrc is not None:
+            # INSERT writeback to a native integration (JDBC exemplar) —
+            # the reference's insert-to-integration path
+            # (insert_step.py:13-124); the append runs distributed, one
+            # connection per partition
+            src = self._native[nsrc]
+            rows = self._insert_rows(body, self.sql)
+            src.insert(ntable, self._align_insert_rows(src.read(ntable), rows, m.group(2)))
+            return self._row("inserted string", ntable)
+        kbname = _object_name(m.group(1))
+        if kbname not in self._kbs:
+            return None
+        # INSERT INTO <kb> <select> USING batch_size = N — the
+        # reference's partitioned-insert parameter surface
+        # (query_planner.py:956-957; controller.py:657-664)
+        batch_size = None
+        mu = re.search(r"\bUSING\s+([\w\s=,'\".]+)$", body, re.IGNORECASE)
+        if mu:
+            kvs = self._using(mu.group(1))
+            if "batch_size" in kvs:
+                batch_size = int(kvs["batch_size"])
+                body = body[: mu.start()].strip()
+        rows = self._insert_rows(body, lambda b: self.sql(b.strip().strip("()")))
+        # the statement is re-runnable: record it so a crashed
+        # partitioned insert can resume by id (reference:
+        # query_resume, command_executor.py:720-722; the keyset
+        # cursor under state_dir makes the re-run incremental)
+        qid = f"kb_insert_{kbname}"
+        self._resumable[qid] = st.text
+        out = self._kb_insert(kbname, rows, batch_size=batch_size)
+        self._resumable.pop(qid, None)
+        return out
+
+    # -- SELECT-shaped commands ------------------------------------------------------
+    @_command("SELECT", _ASOF_RE)
+    def _asof_join(self, m, st):
+        from mindsdb_spark.operators.temporal import asof_join
+
+        sel, ltab, lali, rtab, rali, conds, order, limit = m.groups()
+        lali = (lali or ltab.split(".")[-1]).lower()
+        rali = (rali or rtab.split(".")[-1]).lower()
+        by, on_col, direction = [], None, None
+        for cond in _split_and(conds):
+            cm = re.match(
+                r"\s*(\w+)\.([\w`]+)\s*(=|>=|<=)\s*(\w+)\.([\w`]+)\s*$", cond
+            )
+            if cm is None:
+                raise ValueError(f"unsupported ASOF condition {cond!r}")
+            a_ali, a_col, op, b_col = (
+                cm.group(1).lower(), cm.group(2).strip("`").lower(), cm.group(3),
+                cm.group(5).strip("`").lower(),
+            )
+            if a_col != b_col:
+                raise ValueError(
+                    "ASOF JOIN door requires matching column names on "
+                    f"both sides, got {a_col!r} vs {b_col!r}"
+                )
+            if op == "=":
+                by.append(a_col)
+            else:
+                # normalize to the LEFT side's perspective
+                ge = (op == ">=") == (a_ali == lali)
+                on_col, direction = a_col, "backward" if ge else "forward"
+        if on_col is None:
+            raise ValueError("ASOF JOIN needs one >= or <= time condition")
+        left = self.sql(f"SELECT * FROM {ltab}")
+        right = self.sql(f"SELECT * FROM {rtab}")
+        out = asof_join(left, right, on=on_col, by=by or None, direction=direction)
+        strip = re.compile(rf"\b({lali}|{rali})\.", re.IGNORECASE)
+        if sel.strip() != "*":
+            out = out.selectExpr(*[strip.sub("", c.strip()) for c in sel.split(",")])
+        if order:
+            out = out.orderBy(*[strip.sub("", c.strip(" `")) for c in order.split(",")])
+        if limit:
+            out = out.limit(int(limit))
+        return out
+
+    @_command("SELECT", _TABLE_FN_RE)
+    def _table_function(self, m, st):
+        fns = _pipeline_table_fns()
+        if m.group(1).lower() not in fns:
+            return None
+        fn = fns[m.group(1).lower()]
+        if fn is None:
+            raise ValueError(f"{m.group(1)} needs multiple inputs — use the Python API")
+        src = self.sql(f"SELECT * FROM {m.group(2)}")
+        kwargs = {
+            k.strip().lower(): _coerce_literal(v)
+            for k, _, v in (kv.partition("=") for kv in split_top_level(m.group(3) or ""))
+            if k.strip()
+        }
+        out = fn(self, src, **kwargs) if getattr(fn, "_needs_session", False) else fn(src, **kwargs)
+        if m.group(4):
+            out = out.orderBy(*[c.strip(" `") for c in m.group(4).split(",")])
+        if m.group(5):
+            out = out.limit(int(m.group(5)))
+        return out
+
+    @_command("SELECT", r"SELECT\s+QUERY_(RESUME|CANCEL)\(\s*['\"]?([\w.]+)['\"]?\s*\)$")
+    def _query_service(self, m, st):
+        # service functions (reference: command_executor.py:703-726
+        # exec_service_function): resume re-runs the recorded statement
+        # — the persisted keyset cursor makes it incremental; cancel
+        # forgets the statement and its cursor
+        import shutil
+
+        verb, qid = m.group(1).upper(), m.group(2)
+        if verb == "CANCEL":
+            self._resumable.pop(qid, None)
+            if self._state_dir and qid.strip("."):
+                shutil.rmtree(os.path.join(self._state_dir, qid), ignore_errors=True)
+            return self._row("cancelled string", qid)
+        sql_text = self._resumable.get(qid)
+        if sql_text is None:
+            raise KeyError(f"no resumable query {qid!r}")
+        return self.sql(sql_text)
+
+    @_command("SELECT", r"SELECT\s+CHATBOT_RESPOND\(\s*['\"]?([\w.]+)['\"]?\s*\)$")
+    def _chatbot_respond(self, m, st):
+        # one poll tick of the reference's chatbot task
+        # (chatbot_task.py): answer every message newer than the bot's
+        # watermark with per-chat memory, append replies, advance the
+        # watermark. The whole tick is one plan over the new slice.
+        from mindsdb_spark.operators.chatbot import chatbot_respond
+
+        name = _object_name(m.group(1))
+        if name not in self._chatbots:
+            raise KeyError(f"chatbot {name!r} does not exist")
+        bot = self._chatbots[name]
+        if not bot.is_running:
+            return self.spark.createDataFrame(
+                [], "chat_id long, ts timestamp, question string, answer string"
+            )
+        msgs = self.sql(f"SELECT * FROM {bot.messages_table}")
+        replies = chatbot_respond(msgs, self._agents[bot.agent], bot).persist()
+        mx = replies.agg(F.max("ts")).first()[0]
+        if mx is not None:
+            bot.watermark = mx
+            if bot.reply_table:
+                self._append_writable(bot.reply_table, replies)
+        return replies
+
+    @_command("SELECT", _NESTED_MODEL_RE, masked=True)
+    def _nested_model_join(self, nm, st):
+        im = _Stmt(_collapse_ws(nm.group("inner"))).match(_MODEL_JOIN_RE)
+        if im is None or self._model_of(im.group("model")) is None:
+            return None
+        self._model_join(im).createOrReplaceTempView("__nested_model")
+        alias = nm.group("qalias") or nm.group("alias")
+        outer, tail = nm.group("outer"), nm.group("tail") or ""
+        for ref in (f"`{alias}`.", f"{alias}."):
+            outer = outer.replace(ref, "")
+            tail = tail.replace(ref, "")
+        return self.spark.sql(
+            f"SELECT {self.rewrite(outer)} FROM __nested_model{self.rewrite(tail)}"
+        )
+
+    def _multi_model_join(self, mm) -> DataFrame | None:
+        joins = re.findall(
+            r"JOIN\s+([\w.`]+)(?:\s+(?:AS\s+)?(\w+))?", mm.group("joins"), re.IGNORECASE
+        )
+        specs = [(self._model_of(jn), (ja or jn.split(".")[-1]).lower()) for jn, ja in joins]
+        if not specs or any(sp is None for sp, _a in specs):
+            return None
+        # multi-model batch predict (get-batch-predictions.mdx:17-23
+        # `JOIN mindsdb.m1 AS m1 JOIN mindsdb.m2 AS m2 ...`): every
+        # model applies row-wise to the same table fetch; each
+        # model's outputs are alias-scoped by its DECLARED output
+        # schema (a column-set diff would silently skip an output
+        # that shadows an input column — round-3 advice), and the
+        # WHERE's pure-input conditions push into the table fetch
+        # before any model runs. One Arrow stage per model, no join.
+        from mindsdb_spark.operators.model import apply_model
+
+        df = self.sql(f"SELECT * FROM {mm.group('table')}")
+        declared = {alias: _output_columns(spec) for spec, alias in specs}
+        out_names = {n for outs in declared.values() for n in outs}
+        clash = out_names & {c.lower() for c in df.columns}
+        if clash:
+            raise ValueError(
+                f"model output column(s) {sorted(clash)} collide with "
+                f"table columns in multi-model join — alias or rename "
+                "the table columns"
+            )
+        aliases = {a for _sp, a in specs}
+        pre, post_where = [], []
+        for cond in _split_and(mm.group("where")) if mm.group("where") else []:
+            model_ref = any(
+                re.search(rf"\b{re.escape(a)}\s*\.", cond, re.IGNORECASE)
+                for a in aliases
+            ) or any(
+                re.search(rf"\b{re.escape(n)}\b", cond, re.IGNORECASE)
+                for n in out_names
+            )
+            (post_where if model_ref else pre).append(cond)
+        talias = mm.group("talias")
+        if pre:
+            stripped = " AND ".join(pre)
+            if talias:
+                stripped = re.sub(
+                    rf"\b{re.escape(talias)}\s*\.\s*", "", stripped, flags=re.IGNORECASE
+                )
+            df = df.filter(F.expr(self.rewrite(stripped)))
+        col_map: dict[str, dict[str, str]] = {}
+        for spec, alias in specs:
+            df = apply_model(df, spec)
+            renames = {c: f"__{alias}__{c}" for c in declared[alias]}
+            for old, newc in renames.items():
+                df = df.withColumnRenamed(old, newc)
+            col_map[alias] = renames
+
+        def _requal(t: str) -> str:
+            for alias, renames in col_map.items():
+                t = re.sub(
+                    rf"\b{re.escape(alias)}\.(\w+)",
+                    lambda g: renames.get(g.group(1), g.group(1)),
+                    t,
+                    flags=re.IGNORECASE,
+                )
+            if talias:
+                t = re.sub(rf"\b{re.escape(talias)}\.(\w+)", r"\1", t, flags=re.IGNORECASE)
+            return self.rewrite(t)
+
+        df.createOrReplaceTempView("__multi_model")
+        outer = f"SELECT {_requal(mm.group('sel'))} FROM __multi_model"
+        if post_where:
+            outer += " WHERE " + _requal(" AND ".join(post_where))
+        return self.spark.sql(outer + _order_limit(mm.group("order"), mm.group("limit"), _requal))
+
+    @_command("SELECT")
+    def _model_join_select(self, _m, st):
+        # a trailing `USING p1 = 'a', ...` carries predict-time parameters
+        core, params = st.split_using()
+        mm = core.match(_MULTI_MODEL_RE)
+        out = self._multi_model_join(mm) if mm else None
+        if out is None:
+            m = core.match(_MODEL_JOIN_RE)
+            if m is not None and self._model_of(m.group("model")) is not None:
+                out = self._model_join(m, extra_params=params)
+        return out
+
+    @_command("SELECT", _KB_JOIN_RE, masked=True)
+    def _kb_join(self, m, st):
+        # KB search result joined to a table in one statement
+        # (test_knowledge_base.py:396-423): run the semantic search
+        # first, then let Catalyst plan the join over its result
+        name = _object_name(m.group(2))
+        if name not in self._kbs:
+            return None
+        content, residual = None, []
+        for cond in _split_and(m.group(7)):
+            cm = _CONTENT_EQ_ALIAS_RE.match(cond.strip())
+            if cm:
+                content = _sql_literal_text(cm.group(1))
+            else:
+                residual.append(cond)
+        if content is None:
+            return None
+        self._kb_search(name, content, None).createOrReplaceTempView("__kb_join_res")
+        sql2 = (
+            f"SELECT {m.group(1)} FROM __kb_join_res {m.group(3)} "
+            f"JOIN {m.group(4)} {m.group(5)} ON {m.group(6)}"
+        )
+        if residual:
+            sql2 += " WHERE " + " AND ".join(residual)
+        return self.sql(sql2 + _order_limit(m.group(8), m.group(9)))
+
+    @_command("SELECT", _KB_RE, masked=True)
+    def _kb_select(self, m, st):
+        name = _object_name(m.group(2))
+        if name not in self._kbs:
+            return None
+        kb_using: dict[str, str] = {}
+        um = st.search(_KB_USING_RE)
+        if um:
+            kb_using = self._using(um.group(1))
+            m = _Stmt(
+                _collapse_ws(st.text[: um.start()] + " " + st.text[um.end():])
+            ).match(_KB_RE)
+            if m is None:
+                raise ValueError("malformed knowledge-base SELECT")
+
+        def _kb_alias(t: str, projection: bool = False) -> str:
+            # documented schema names (query.mdx): chunk_content is
+            # the chunk text, bare id is the CHUNK id (the
+            # reference's TableField.ID is chunk-level); in the
+            # projection the documented name stays on the output.
+            # Literal-aware: WHERE content = 'document id 5' must
+            # keep its literal intact (round-3 advice, medium).
+            t = sub_outside_strings(r"\bchunk_content\b", "content", t, re.IGNORECASE)
+            repl = "chunk_id AS id" if projection else "chunk_id"
+            return sub_outside_strings(r"\bid\b", repl, t, re.IGNORECASE)
+
+        def _order(t: str) -> str:
+            return self.rewrite(_kb_alias(t))
+
+        conds = _kb_alias(m.group(3))
+        if re.search(r"\(\s*SELECT\b", conds, re.IGNORECASE):
+            # nested KB subselects (query.mdx: `id NOT IN (SELECT
+            # DISTINCT id FROM kb WHERE content=..)`) execute first
+            # and become temp-view subqueries — same semi/anti-join
+            # treatment as DELETE (views stay registered: the KB
+            # result df is evaluated lazily downstream)
+            conds, _ = self._subselects_to_views(conds)
+        content, meta, post = None, [], []
+        for cond in _split_and(conds):
+            cm = _CONTENT_EQ_RE.match(cond.strip())
+            if cm:
+                content = _sql_literal_text(cm.group(1))
+            elif re.search(r"\brelevance\b", cond, re.IGNORECASE):
+                # relevance exists on the SEARCH RESULT, not the
+                # store — it filters after the top-k (query.mdx)
+                post.append(cond)
+            else:
+                meta.append(cond)
+        projection = self.rewrite(_kb_alias(m.group(1), projection=True))
+        if content is not None:
+            res = self._kb_search(
+                name,
+                content,
+                int(m.group(5)) if m.group(5) else None,
+                prefilter=" AND ".join(meta) if meta else None,
+                using=kb_using,
+            )
+            for cond in post:
+                res = res.filter(F.expr(self.rewrite(cond)))
+            res.createOrReplaceTempView("__kb_select")
+            return self.spark.sql(
+                f"SELECT {projection} FROM __kb_select" + _order_limit(m.group(4), None, _order)
+            )
+        # no content condition: metadata/id browse over the chunk
+        # store (reference returns plain filtered rows,
+        # test_knowledge_base.py:424-460)
+        self._kb_browse_view(name)
+        return self.spark.sql(
+            f"SELECT {projection} FROM __kb_browse "
+            f"WHERE {self.rewrite(' AND '.join(meta + post))}"
+            + _order_limit(m.group(4), m.group(5), _order)
+        )
+
+    @_command("SELECT", _KB_BROWSE_RE, masked=True)
+    def _kb_browse(self, m, st):
+        # whole-store browse: SELECT ... FROM <kb> [ORDER BY] [LIMIT]
+        name = _object_name(m.group(2))
+        if name not in self._kbs:
+            return None
+        self._kb_browse_view(name)
+        return self.spark.sql(
+            f"SELECT {self.rewrite(m.group(1))} FROM __kb_browse"
+            + _order_limit(m.group(3), m.group(4), self.rewrite)
+        )
+
+    @_command("SELECT", _AGENT_RE, masked=True)
+    def _agent_select(self, m, st):
+        agent = self._agents.get(_object_name(m.group(2)))
+        if agent is None:
+            return None
+        from mindsdb_spark.operators.agent import agent_ask
+
+        # decode the question literal the way Spark's parser would
+        # ('' / backslash escapes) — same contract as the KB door
+        question = _sql_literal_text(m.group(3))
+        if agent.knowledge_bases:
+            res = self._agent_rag_ask(agent, question)
+        else:
+            res = agent_ask(self.spark, agent, question)
+        cols = [c.strip(" `") for c in m.group(1).split(",")]
+        return res if cols == ["*"] else res.select(*cols)
+
+    @_command("SELECT")
+    def _model_select(self, _m, st):
+        # one-shot predict: the WHERE equality dict IS the input row
+        # (reference: predictor-only FROM applies the model to the
+        # row_dict, sql_query.py:148-161 + query_planner.py:569-648).
+        # TS models need a history window — they stay join-only.
+        from mindsdb_spark.operators.model import apply_model
+
+        core, params = st.split_using()
+        m = core.match(_MODEL_SELECT_RE)
+        spec = self._model_of(m.group(2)) if m else None
+        if spec is None or spec.order_by is not None:
+            return None
+        row: dict = {}
+        for cond in _split_and(m.group(3)):
+            cm = _COND_RE.match(cond.strip())
+            if cm is None or cm.group(2) != "=":
+                return None  # non-equality input: not a one-shot form
+            row[_object_name(cm.group(1))] = _sql_value(cm.group(3))
+        if not row:
+            return None
+        row.update(params or {})
+        # one-shot predictions cache on (model, version, input
+        # row) — the bounded analog of the reference's
+        # prediction cache (apply_predictor_step.py:177-186,
+        # keyed name_id_checksum(df)). The reference's
+        # whole-frame variant is intentionally NOT ported:
+        # checksumming a distributed frame costs a full pass —
+        # at scale that is the price of predicting; in-plan
+        # reuse falls to Catalyst/persist instead.
+        mname = _object_name(m.group(2))
+        ckey = (mname, self._model_active.get(mname), tuple(sorted(row.items())))
+        if ckey not in self._predict_cache:
+            inp = self.spark.createDataFrame([tuple(row.values())], list(row))
+            res = apply_model(inp, spec)
+            self._predict_cache[ckey] = (res.collect(), res.schema)
+            if len(self._predict_cache) > 128:
+                self._predict_cache.pop(next(iter(self._predict_cache)))
+        res = self.spark.createDataFrame(*self._predict_cache[ckey])
+        cols = [c.strip(" `") for c in m.group(1).split(",")]
+        # documented `<target>_explain` JSON column
+        # (get-single-prediction.mdx:17,57): predicted_value +
+        # the reference explain-dict shape; confidence fields
+        # are honest NULLs for engines that don't estimate them
+        target = spec.output_schema.split()[0].strip("`")
+        explain_col = f"{target}_explain"
+        if any(c.lower() == explain_col for c in cols):
+            res = res.withColumn(
+                explain_col,
+                F.to_json(
+                    F.struct(
+                        F.col(target).alias("predicted_value"),
+                        F.lit(None).cast("double").alias("confidence"),
+                        F.lit(None).cast("boolean").alias("anomaly"),
+                        F.lit(None).cast("double").alias("truth"),
+                    ),
+                    {"ignoreNullFields": "false"},
+                ),
+            )
+        return res if cols == ["*"] else res.select(*cols)
+
+    # -- UPDATE / DELETE / DROP TABLE ----------------------------------------------------
+    @_command("UPDATE", _UPDATE_AGENT_RE)
+    def _update_agent(self, m, st):
+        import dataclasses
+
+        name = _object_name(m.group(1))
+        if name not in self._agents:
+            raise KeyError(f"agent {name!r} does not exist")
+        params = self._using(m.group(2))
+        changes: dict = {}
+        if "model" in params:
+            changes["model_name"] = params["model"]
+        if "output_col" in params:
+            changes["output_col"] = params["output_col"]
+        if "retrieval_k" in params:
+            changes["retrieval_k"] = int(params["retrieval_k"])
+        if "knowledge_bases" in params:
+            changes["knowledge_bases"] = self._existing_kbs(params["knowledge_bases"].split(","))
+        self._agents[name] = dataclasses.replace(self._agents[name], **changes)
+        return self._row("agent string", name)
+
+    @_command("UPDATE", _UPDATE_RE)
+    def _update(self, m, st):
+        # clause boundaries come from top-level keyword scanning, not lazy
+        # regex splits — `SET note = ' WHERE x'` must not end the SET
+        # clause at the literal's WHERE (literal-fuzz finding, round 4)
+        rest = st.text[m.start(2):]
+        wi = _find_top_keyword(rest, "WHERE")
+        if wi < 0:
+            return None
+        u_set, u_cond = rest[:wi].strip(), rest[wi + len("WHERE"):].strip()
+        fi = _find_top_keyword(u_set, "FROM")
+        if fi >= 0:
+            # `UPDATE t SET c = df.c FROM (select) AS df WHERE ...` lowers onto
+            # the MERGE plan — one Catalyst join, where the reference builds
+            # per-row keyed UPDATEs (update_step.py:16-127)
+            fm = re.match(
+                r"\((.+)\)\s*(?:AS\s+)?(\w+)\s*$",
+                u_set[fi + len("FROM"):].strip(),
+                re.IGNORECASE | re.DOTALL,
+            )
+            if fm:
+                tname = m.group(1).strip("`").split(".")[-1]
+                return self.sql(
+                    f"MERGE INTO {m.group(1)} AS {tname} "
+                    f"USING ({fm.group(1)}) AS {fm.group(2)} ON {u_cond} "
+                    f"WHEN MATCHED THEN UPDATE SET {u_set[:fi].strip()}"
+                )
+        srcname, table = self._resolve_writable(m.group(1))
+        if srcname is not None:
+            set_map = {c: F.expr(e) for c, e in self._assignments(u_set).items()}
+            with self._inlined_subselects(self.rewrite(u_cond)) as cond:
+                n = self._writable[srcname].update(table, set_map, F.expr(cond))
+            self._refresh_writable_views(srcname)
+            return self._row("updated int", n)
+        kbname = _object_name(m.group(1))
+        if kbname in self._kbs:
+            set_map = {c.lower(): F.expr(e) for c, e in self._assignments(u_set).items()}
+            return self._kb_update(kbname, set_map, F.expr(self.rewrite(u_cond)))
+        nsrc, ntable = self._resolve_native(m.group(1), "execute")
+        if nsrc is None:
+            return None
+        # the reference renders UPDATE into the source dialect and
+        # runs it there (update_step.py:16-127); the exemplar ships
+        # the ANSI statement with the bare table name
+        n = self._native[nsrc].execute(f"UPDATE {ntable} SET {u_set} WHERE {u_cond}")
+        return self._row("updated int", n)
+
+    @_command("DELETE", _DELETE_RE)
+    def _delete(self, m, st):
+        srcname, table = self._resolve_writable(m.group(1))
+        if srcname is not None:
+            with self._inlined_subselects(self.rewrite(m.group(2))) as cond:
+                n = self._writable[srcname].delete(table, F.expr(cond))
+            self._refresh_writable_views(srcname)
+            return self._row("deleted int", n)
+        kbname = _object_name(m.group(1))
+        if kbname in self._kbs:
+            with self._inlined_subselects(self.rewrite(m.group(2))) as cond:
+                return self._kb_delete(kbname, F.expr(cond))
+        nsrc, ntable = self._resolve_native(m.group(1), "execute")
+        if nsrc is None:
+            return None
+        n = self._native[nsrc].execute(f"DELETE FROM {ntable} WHERE {m.group(2)}")
+        return self._row("deleted int", n)
+
+    @_command("DROP", _DROP_TABLE_RE)
+    def _drop_table(self, m, st):
+        # reference: command_executor.py DropTables branch — drop against
+        # the owning integration; views are dropped from both namespaces
+        if_exists = bool(m.group(1))
+        srcname, table = self._resolve_writable(m.group(2))
+        if srcname is None:
+            if if_exists:
+                return self._row("dropped string", m.group(2).lower())
+            raise KeyError(f"table {m.group(2)!r} does not exist in any writable source")
+        self._writable[srcname].drop_table(table, if_exists=if_exists)
+        for v in (table, f"{srcname}_{table}"):
+            self.spark.catalog.dropTempView(v)
+        return self._row("dropped string", table)
+
+    # -- views, materialized views, jobs, triggers ---------------------------------
+    @_command("CREATE", _CREATE_VIEW_RE)
+    def _create_view(self, m, st):
+        # Views are stored SQL expanded per query, like the reference's
+        # project views (mindsdb/interfaces/database/views.py:9-40);
+        # registering a Spark temp view keeps expansion inside Catalyst.
+        name = _object_name(m.group(2))
+        if not (m.group(1) and name in self._views):
+            # (IF NOT EXISTS leaves an existing view untouched, create/view.mdx:15)
+            self._views[name] = self.rewrite(m.group(3))
+            self._system_sql(self._views[name]).createOrReplaceTempView(name)
+        return self._row("view string", name)
+
+    @_command("DROP", _DROP_VIEW_RE)
+    def _drop_view(self, m, st):
+        name = _object_name(m.group(1))
+        self._views.pop(name, None)
+        self.spark.catalog.dropTempView(name)
+        return self._row("view string", name)
+
+    @_command("ALTER", _ALTER_VIEW_RE)
+    def _alter_view(self, m, st):
+        # reference: AlterView branch — replace the stored body; the next
+        # expansion sees the new SQL
+        name = _object_name(m.group(1))
+        if name not in self._views:
+            raise KeyError(f"view {name!r} does not exist")
+        self._views[name] = self.rewrite(m.group(2))
+        self._system_sql(self._views[name]).createOrReplaceTempView(name)
+        return self._row("view string", name)
+
+    @_command("CREATE", _CREATE_MATVIEW_RE)
+    def _create_matview(self, m, st):
+        name, body = _object_name(m.group(1)), m.group(2)
+        self._matview_store().create_table(name, self.sql(body), replace=True)
+        self._matviews[name] = body
+        self._refresh_matview_view(name)
+        if m.group(3):
+            self.jobs.create_job(
+                f"__matview_{name}",
+                lambda nm=name: self._refresh_matview(nm),
+                every_seconds=int(m.group(3)) * _period_seconds(m.group(4)),
+                sql=f"REFRESH MATERIALIZED VIEW {name}",
+            )
+        return self._row("materialized_view string", name)
+
+    @_command("REFRESH", _REFRESH_MATVIEW_RE)
+    def _refresh_matview_cmd(self, m, st):
+        name = _object_name(m.group(1))
+        if name not in self._matviews:
+            raise KeyError(f"materialized view {name!r} does not exist")
+        self._refresh_matview(name)
+        return self._row("materialized_view string", name)
+
+    @_command("DROP", _DROP_MATVIEW_RE)
+    def _drop_matview(self, m, st):
+        name = _object_name(m.group(1))
+        self._matviews.pop(name, None)
+        self.jobs.drop_job(f"__matview_{name}")
+        if self._matview_src is not None and self._matview_src.exists(name):
+            self._matview_src.drop_table(name)
+        self.spark.catalog.dropTempView(name)
+        return self._row("materialized_view string", name)
+
+    @_command("CREATE", _CREATE_JOB_RE)
+    def _create_job(self, m, st):
+        # START/END bound the schedule window; IF (query) gates each run
+        # on the query returning rows (jobs/README.md:9-17 semantics)
+        from datetime import datetime
+
+        name, body, cond = m.group(1).lower(), m.group(2), m.group(7)
+        # `EVERY [number] period` — number defaults to 1 (create/jobs.mdx:40);
+        # no EVERY: one-time job (reference semantics)
+        every = (
+            int(m.group(5) or 1) * _period_seconds(m.group(6))
+            if m.group(6) is not None else None
+        )
+
+        def _epoch(txt):
+            return datetime.fromisoformat(txt).timestamp() if txt else None
+
+        # reference job bodies are statement LISTS — `(sql; sql)`
+        # (jobs/README.md:1-60); each statement runs in order
+        stmts = [t.strip() for t in _split_top(body, ";") if t.strip()]
+
+        def _run(stmts=stmts, cond=cond):
+            if cond is not None and not self.sql(cond).take(1):
+                return "skipped"
+            res = None
+            for stmt in stmts:
+                res = self.sql(stmt).collect()
+            return res
+
+        self.jobs.create_job(
+            name,
+            _run,
+            every_seconds=every,
+            start_at=_epoch(m.group(3)),
+            end_at=_epoch(m.group(4)),
+            sql=" ".join(body.split()),
+        )
+        return self._row("job string", name)
+
+    @_command("DROP", _DROP_JOB_RE)
+    def _drop_job(self, m, st):
+        self.jobs.drop_job(m.group(1).lower())
+        return self._row("job string", m.group(1).lower())
+
+    @_command("CREATE", _CREATE_TRIGGER_RE)
+    def _create_trigger(self, m, st):
+        from mindsdb_spark.streaming.incremental import TableChangeTrigger
+
+        name, table, body = m.group(1).lower(), m.group(2).lower().strip("`"), m.group(4)
+        factory = lambda t=table: self.sql(f"SELECT * FROM {t}")  # noqa: E731
+        watch = (m.group(3) or "").strip("`") or factory().columns[0]
+        self._triggers[name] = TableChangeTrigger(
+            factory, watch, lambda _old, _new, b=body: self.sql(b).collect()
+        )
+        return self._row("trigger string", name)
+
+    @_command("DROP", _DROP_TRIGGER_RE)
+    def _drop_trigger(self, m, st):
+        self._triggers.pop(m.group(1).lower(), None)
+        return self._row("trigger string", m.group(1).lower())
+
+    # -- knowledge bases ------------------------------------------------------------
+    @_command("CREATE", _CREATE_KB_RE)
+    def _create_kb(self, m, st):
+        # CREATE KNOWLEDGE_BASE name [USING dim = N, ...] — an empty
+        # chunk store; INSERT INTO <kb> <select> fills it through the
+        # chunk → embed → content-hash-upsert pipeline
+        # (controller.py:647-983). The splitter is brace/bracket-aware:
+        # the documented create.mdx syntax passes embedding_model/
+        # reranking_model as JSON objects and metadata/content_columns
+        # as arrays.
+        name = _object_name(m.group(1))
+        using = self._using(m.group(2))
+
+        def _jsonish(v):
+            if isinstance(v, str) and v.lstrip()[:1] in "[{":
+                try:
+                    return json.loads(v)
+                except ValueError:
+                    return json.loads(v.replace("'", '"'))
+            return v
+
+        kb = self._kbs[name] = {
+            "store": self.spark.createDataFrame(
+                [], "chunk_id string, doc_id long, chunk_text string, embedding array<float>"
+            ),
+            "dim": int(using.get("dim", 16)),
+            # flat `embedder = 'md5'` names a registry embedder; the
+            # documented embedding_model JSON rides along as metadata
+            # (its provider models need network; the mock registry is
+            # the container-honest transport)
+            "embedder": using.get("embedder"),
+        }
+        for key in ("storage", "id_column"):
+            if key in using:
+                kb[key] = using[key]
+        for key in ("embedding_model", "reranking_model"):
+            if key in using:
+                kb[key] = _jsonish(using[key])
+        for key in ("metadata_columns", "content_columns"):
+            if key in using:
+                cols = _jsonish(using[key])
+                kb[key] = [str(c) for c in cols] if isinstance(cols, list) else cols
+        # chunking config rides on the KB and applies at every insert
+        # (reference: preprocessing text_chunking_config —
+        # controller.py create params)
+        for key in ("chunk_size", "chunk_overlap"):
+            if key in using:
+                kb[key] = int(using[key])
+        return self._row("knowledge_base string", name)
+
+    @_command("DROP", _DROP_KB_RE)
+    def _drop_kb(self, m, st):
+        name = _object_name(m.group(1))
+        kb = self._kbs.pop(name, None)
+        if kb is not None:
+            # reclaim a session-owned partitioned index layout (only
+            # paths under state_dir — os.sep-anchored so a sibling dir
+            # that merely string-prefixes state_dir is never touched)
+            self._drop_kb_index_snapshot(kb)
+        return self._row("knowledge_base string", name)
+
+    @_command("ALTER", _ALTER_KB_RE)
+    def _alter_kb(self, m, st):
+        name = _object_name(m.group(1))
+        if name not in self._kbs:
+            raise KeyError(f"knowledge base {name!r} does not exist")
+        using = self._using(m.group(2))
+        # the embedding model/dim cannot change post-hoc — new vectors
+        # would be incompatible with the stored ones (alter.mdx; the
+        # reference only lets the provider api_key rotate)
+        if "embedder" in using or "dim" in using or "embedding_model" in using:
+            raise ValueError(
+                "the embedding model of a knowledge base cannot be altered; "
+                "recreate the knowledge base instead"
+            )
+        self._kbs[name].setdefault("params", {}).update(using)
+        return self._row("knowledge_base string", name)
+
+    @_command("CREATE", _KB_INDEX_RE)
+    def _create_kb_index(self, m, st):
+        # reference: CREATE INDEX ON KNOWLEDGE_BASE kb delegates the
+        # index build to the vector store (command_executor.py
+        # answer_create_kb_index, controller.py:985-992). Spark analog:
+        # fit IVF coarse-quantizer centroids over the chunk store; KB
+        # selects then probe cells instead of scanning the corpus.
+        from mindsdb_spark.operators.vector import (
+            _estimate_rows,
+            ivf_write_partitioned,
+            kmeans_centroids,
+        )
+
+        name = _object_name(m.group(1))
+        if name not in self._kbs:
+            raise KeyError(f"knowledge base {name!r} does not exist")
+        kb = self._kbs[name]
+        using = self._using(m.group(2))
+        # plan-stats estimate, not a full count() scan — centroid count
+        # only needs order-of-magnitude accuracy (vector.py:_estimate_rows)
+        n_rows = _estimate_rows(kb["store"], "embedding")
+        if n_rows == 0:
+            # KMeans on zero vectors dies with a raw executor error;
+            # fail at the door with the actionable message instead
+            raise ValueError(
+                f"knowledge base {name!r} is empty; insert documents "
+                "before CREATE INDEX"
+            )
+        n_centroids = int(using.get("n_centroids", max(1, min(16, n_rows))))
+        # validate the layout BEFORE any mutation: refitting centroids
+        # first and then raising on a bad layout would pair NEW
+        # centroids with a stale partitioned snapshot — probe cells
+        # picked from one assignment, directories written by another
+        # (silently wrong recall)
+        layout = str(using.get("layout", "")).lower()
+        if layout and layout not in ("partitioned", "inplan"):
+            raise ValueError(
+                f"unknown KB index layout {layout!r}; "
+                "use 'partitioned' or 'inplan'"
+            )
+        # any reindex invalidates (and reclaims) the previous snapshot
+        # up front, so a failure mid-build leaves a consistent
+        # centroid-only state, never a mismatched layout. Remember the
+        # path first: the clobber-guard below accepts the kb's OWN
+        # previous snapshot even if its sentinel write never landed
+        # (crash between parquet write and marker).
+        prev_index_path = kb.get("index_path")
+        self._drop_kb_index_snapshot(kb)
+        kb["index"] = kmeans_centroids(
+            kb["store"], vec_col="embedding", n_centroids=n_centroids
+        )
+        kb.pop("index_stale", None)  # a fresh index clears the flag
+        if layout == "partitioned":
+            # the 100 TB layout: persist the
+            # chunk store PARTITIONED BY nearest-cell id so a search
+            # probe is directory-level partition PRUNING, not an in-plan
+            # assignment pass over the corpus (vector.py:
+            # ivf_write_partitioned — the variant that won the sf100 ANN
+            # decade, BENCH_sf100_ann.json 0.51 s probe over 2M×64-dim)
+            self.last_state  # materializes self._state_dir
+            user_path = using.get("path")
+            path = str(user_path or os.path.join(self._state_dir, f"kb_index_{name}"))
+            if user_path:
+                self._check_index_path(name, path, prev_index_path)
+            ivf_write_partitioned(
+                kb["store"], path, "embedding", kb["index"],
+                cell_col="__cell", owner=name,
+            )
+            kb["index_path"] = path
+        return self._row(
+            "knowledge_base string, n_centroids int, layout string",
+            name, n_centroids, layout or "inplan",
+        )
+
+    def _check_index_path(self, name: str, path: str, prev_index_path) -> None:
+        """A USER-supplied CREATE INDEX target is written with overwrite
+        semantics — refuse to clobber an existing non-empty directory that
+        isn't ours (engine-managed state_dir targets are fair game);
+        round-7/8 ADVICE: a SQL statement must not silently destroy
+        arbitrary writable directories. Ownership is proven by the
+        engine-written sentinel ivf_write_partitioned drops in every
+        snapshot — NOT by _SUCCESS, which every Spark-written dataset
+        contains."""
+        from mindsdb_spark.operators.vector import (
+            hadoop_dir_nonempty,
+            read_index_sentinel_owner,
+        )
+
+        # trailing-slash-normalized so the index_path comparisons below
+        # can't miss a same-path respelling
+        p = _norm_path(path)
+        if _URI_RE.match(path):
+            # non-local URI (hdfs://, s3a://): no local abspath semantics,
+            # and the local state dir can't contain it; existence/sentinel
+            # checks go through the Hadoop FS API instead of os.*
+            inside_state = False
+            listing = hadoop_dir_nonempty(self.spark, path)
+        else:
+            state = os.path.abspath(self._state_dir)
+            inside_state = p == state or p.startswith(state + os.sep)
+            listing = os.listdir(p) if os.path.isdir(p) else []
+        # cross-KB guard (round-9 ADVICE): a path that is ANOTHER live kb's
+        # index snapshot must never be overwritten — the other kb's
+        # index_path would keep pointing there and its probes would
+        # silently read THIS kb's chunks. Checked before the
+        # ours/inside_state logic: being engine-written (sentinel) or
+        # engine-managed (state dir) is exactly the dangerous case here,
+        # not an exemption.
+        sowner = read_index_sentinel_owner(self.spark, p)
+        other = next(
+            (
+                n2 for n2, kb2 in self._kbs.items()
+                if n2 != name and kb2.get("index_path")
+                and _norm_path(kb2["index_path"]) == p
+            ),
+            None,
+        )
+        if other is None and sowner and sowner != name and sowner in self._kbs:
+            # the sentinel records its owner: a LIVE other kb named there
+            # is refused even if its index_path was recorded under a
+            # differently-normalized spelling
+            other = sowner
+        if other is not None:
+            raise ValueError(
+                f"CREATE INDEX path {path!r} is the live index "
+                f"snapshot of knowledge base {other!r}; "
+                "refusing to overwrite it"
+            )
+        # ownership = the engine sentinel, or the kb's OWN previous
+        # snapshot path (covers the crash window where the parquet landed
+        # but the sentinel write didn't — session-scoped: prev_index_path
+        # is in-memory state, a restarted session refuses the half-written
+        # dir, safe side). A bare __cell= layout is NOT enough — a user's
+        # own ivf_assign output is partitioned by the same column and must
+        # not be silently overwritten
+        ours = sowner is not None or (
+            prev_index_path is not None and p == _norm_path(prev_index_path)
+        )
+        if not inside_state and listing and not ours:
+            raise ValueError(
+                f"CREATE INDEX path {path!r} exists and is not "
+                "empty (and is not an engine-written index "
+                "snapshot); choose an empty/new directory or an "
+                "engine-managed path"
+            )
+
+    # -- agents and chatbots --------------------------------------------------------
+    @_command("CREATE", _CREATE_AGENT_RE)
+    def _create_agent(self, m, st):
+        from mindsdb_spark.operators.agent import AgentSpec
+
+        name = _object_name(m.group(1))
+        params = self._using(m.group(2))
+        # the documented JSON forms (docs/mindsdb_sql/agents/
+        # agent_syntax.mdx): model = {"provider":.., "model_name":..}
+        # and data = {"knowledge_bases": [...], "tables": [...]} —
+        # accepted alongside the flat model='x', knowledge_bases='a,b'
+        model = params.get("model", "mock-llm")
+        if isinstance(model, str) and model.lstrip().startswith("{"):
+            mj = json.loads(model)
+            model = mj.get("model_name") or mj.get("provider") or "mock-llm"
+        kb_list: list[str] = []
+        data = params.get("data")
+        if isinstance(data, str) and data.lstrip().startswith("{"):
+            # project prefixes resolve to the single default project
+            kb_list = [_object_name(str(kb)) for kb in json.loads(data).get("knowledge_bases", [])]
+        # data sources: USING knowledge_bases = 'kb1, kb2' attaches KB
+        # retrieval before completion (reference: agents_controller.py
+        # params.data.knowledge_bases)
+        kb_list += str(params.get("knowledge_bases", "")).split(",")
+        self._agents[name] = AgentSpec(
+            name=name,
+            complete=_wrap_llm_transport(
+                self._agent_transport, str(model), self._llm_log_accum
+            ),
+            output_col=params.get("output_col", "answer"),
+            model_name=model,
+            knowledge_bases=self._existing_kbs(kb_list),
+            retrieval_k=int(params.get("retrieval_k", 3)),
+        )
+        return self._row("agent string", name)
+
+    def _existing_kbs(self, names) -> tuple:
+        """Deduplicated knowledge-base names, each required to exist."""
+        kbs = tuple(dict.fromkeys(n.strip().lower() for n in names if n.strip()))
+        for kb in kbs:
+            if kb not in self._kbs:
+                raise KeyError(f"knowledge base {kb!r} does not exist")
+        return kbs
+
+    @_command("DROP", _DROP_AGENT_RE)
+    def _drop_agent(self, m, st):
+        self._agents.pop(_object_name(m.group(1)), None)
+        return self._row("agent string", m.group(1).lower())
+
+    @_command("CREATE", _CREATE_CHATBOT_RE)
+    def _create_chatbot(self, m, st):
+        from mindsdb_spark.operators.chatbot import ChatbotSpec
+
+        name = _object_name(m.group(1))
+        params = self._using(m.group(2))
+        agent = str(params.get("agent", "")).lower()
+        if agent not in self._agents:
+            raise KeyError(f"agent {agent!r} does not exist")
+        if "messages_table" not in params:
+            raise ValueError("CREATE CHATBOT requires messages_table = '...'")
+        self._chatbots[name] = ChatbotSpec(
+            name=name,
+            agent=agent,
+            messages_table=str(params["messages_table"]),
+            text_col=str(params.get("text_col", "text")),
+            chat_id_col=str(params.get("chat_id_col", "chat_id")),
+            ts_col=str(params.get("ts_col", "ts")),
+            reply_table=params.get("reply_table"),
+            memory_k=int(params.get("memory_k", 5)),
+            params=dict(params),
+        )
+        return self._row("chatbot string", name)
+
+    @_command("UPDATE", _UPDATE_CHATBOT_RE)
+    def _update_chatbot(self, m, st):
+        import dataclasses
+
+        name = _object_name(m.group(1))
+        if name not in self._chatbots:
+            return None
+        changes = {}
+        for k, val in self._using(m.group(2)).items():
+            if k == "agent":
+                if str(val).lower() not in self._agents:
+                    raise KeyError(f"agent {val!r} does not exist")
+                changes["agent"] = str(val).lower()
+            elif k == "memory_k":
+                changes["memory_k"] = int(val)
+            elif k in ("messages_table", "text_col", "chat_id_col", "ts_col", "reply_table"):
+                changes[k] = str(val)
+            elif k == "is_running":
+                changes["is_running"] = str(val).lower() in ("true", "1")
+        self._chatbots[name] = dataclasses.replace(self._chatbots[name], **changes)
+        return self._row("chatbot string", name)
+
+    @_command("DROP", _DROP_CHATBOT_RE)
+    def _drop_chatbot(self, m, st):
+        self._chatbots.pop(_object_name(m.group(1)), None)
+        return self._row("chatbot string", m.group(1).lower())
+
+    # -- EVALUATE ---------------------------------------------------------------------
+    @_command("EVALUATE", _EVAL_KB_RE)
+    def _evaluate_kb(self, m, st):
+        kbn = _object_name(m.group(1))
+        if kbn not in self._kbs:
+            return None
+        params = self._using(m.group(2))
+        gen = params.get("generate", params.get("generate_data"))
+        if gen is not None and str(gen).lower() not in ("false", "0"):
+            return self._kb_evaluate_generated(kbn, params)
+        return self._kb_evaluate(kbn, params["test_table"], int(params.get("k", 10)))
+
+    @_command("EVALUATE", _EVALUATE_DRIFT_RE)
+    def _evaluate_drift(self, m, st):
+        from mindsdb_spark.operators.monitoring import categorical_drift, psi_drift
+
+        using = self._using(m.group(4))
+        value_col = m.group(1).strip("`")
+        base, cur = self.sql(m.group(2)), self.sql(m.group(3))
+        if str(using.get("categorical", "")).lower() == "true":
+            return categorical_drift(base, cur, value_col).orderBy("category")
+        return psi_drift(base, cur, value_col, n_bins=int(using.get("bins", 10))).orderBy("bin")
+
+    @_command("EVALUATE", _EVALUATE_RE)
+    def _evaluate(self, m, st):
+        using = self._using(m.group(3))
+        return self._evaluate_metric(
+            m.group(1), m.group(2), n_decimals=int(using.get("n_decimals", 3))
+        )
+
+    # -- models -----------------------------------------------------------------------
+    @_command("CREATE", _CREATE_MODEL_RE)
+    def _create_model_cmd(self, m, st):
+        return self._create_model(m)
+
+    @_command("SET", _SET_ACTIVE_RE)
+    def _set_active(self, m, st):
+        name, v = _object_name(m.group(1)), int(m.group(2))
+        specs = self._model_versions.get(name)
+        if not specs or not 1 <= v <= len(specs):
+            raise ValueError(f"model {name!r} has no version {v}")
+        self._model_active[name] = v
+        self._models[name] = specs[v - 1]
+        return self._row("model string, active_version int", name, v)
+
+    def _training_frame(self, src: str | None, raw: str) -> DataFrame:
+        """A training query's rows: run on its native source when FROM names
+        one, else through the session."""
+        return self._native[src].query(raw) if src and src in self._native else self.sql(raw)
+
+    @_command("RETRAIN", _RETRAIN_MODEL_RE)
+    def _retrain(self, m, st):
+        name = _object_name(m.group(1))
+        if name not in self._model_recipes:
+            return None
+        src, raw, target, engine, params = self._model_recipes[name]
+        spec = self._ml_engines[engine.lower()](name, self._training_frame(src, raw), target, params)
+        return self._row("retrained string, version int", name, self._add_model_version(name, spec))
+
+    @_command("FINETUNE", _FINETUNE_RE)
+    def _finetune(self, m, st):
+        # incremental retrain: base training query ∪ the finetune slice,
+        # through the SAME engine/params → a new ACTIVE version (the
+        # engines are closed-form fits, so "more rows" IS the faithful
+        # finetune; reference answer_finetune_predictor extends the
+        # training data the same way)
+        name = _object_name(m.group(1))
+        if name not in self._model_recipes:
+            return None
+        src0, raw0, target, engine, params = self._model_recipes[name]
+        base = self._training_frame(src0, raw0)
+        new = self._training_frame((m.group(2) or "").lower().strip("`") or None, m.group(3))
+        train_df = base.unionByName(new.select(*base.columns))
+        params = {**params, **self._using(m.group(4))}
+        spec = self._ml_engines[engine.lower()](name, train_df, target, params)
+        return self._row("finetuned string, version int", name, self._add_model_version(name, spec))
+
+    @_command("DROP", _DROP_MODEL_RE)
+    def _drop_model(self, m, st):
+        parts = m.group(1).lower().strip("`").split(".")
+        if len(parts) >= 2 and parts[-1].isdigit() and parts[-2] in self._model_versions:
+            # DROP MODEL name.v removes one version (reference
+            # answer_drop_model); the active version is protected
+            name, v = parts[-2], int(parts[-1])
+            if v == self._model_active.get(name):
+                raise ValueError(f"cannot drop active version {v} of {name!r}")
+            specs = self._model_versions[name]
+            if 1 <= v <= len(specs):
+                specs[v - 1] = None  # version numbers stay stable
+            return self._row("model string, version int", name, v)
+        name = parts[-1]
+        for registry in (self._models, self._model_recipes, self._model_versions, self._model_active):
+            registry.pop(name, None)
+        return self._row("model string", name)
+
+    # -- system views ---------------------------------------------------------------
+    # information_schema.* / mindsdb.<catalog table> / log.* are session
+    # views (the reference computes them in-engine: system_tables.py:48-782,
+    # mindsdb_tables.py:42-459, interfaces/database/log.py). Each is built
+    # from current session state only when a statement names it.
+    def _system_sql(self, text: str) -> DataFrame:
+        """``spark.sql(text)`` after building the system views it names."""
+        for name in dict.fromkeys(n.lower() for n in _SYSTEM_VIEW_RE.findall(text)):
+            if name in _SYSTEM_VIEWS:
+                self._build_view(name)
+        return self.spark.sql(text)
+
+    def _build_view(self, name: str) -> DataFrame:
+        build, schema = _SYSTEM_VIEWS[name]
+        df = build(self) if schema is None else self.spark.createDataFrame(build(self), schema)
+        df.createOrReplaceTempView(name)
+        return df
+
+    def _source_tables(self) -> list[tuple[str, str]]:
         # every attached source is a database, whatever door attached it —
         # catalog parquet, native SQL engines, writable workspaces
         # (reference: system_tables.py:48-782 SCHEMATA over the registry)
-        tables = [(src, t, "BASE TABLE") for src, t in self.catalog.tables()]
-        tables += [(src, t, "BASE TABLE") for src, ns in self._native.items()
-                   for t in ns.tables()]
-        tables += [(src, t, "BASE TABLE") for src, ps in self._writable.items()
-                   for t in ps.tables()]
-        sources = sorted({src for src, _t, _k in tables}
-                         | set(self._native) | set(self._writable))
-        self.spark.createDataFrame(
-            [(s, "utf8mb4", "utf8mb4_general_ci") for s in sources]
-            + [("information_schema", "utf8mb4", "utf8mb4_general_ci")],
-            "schema_name string, default_character_set_name string, "
-            "default_collation_name string",
-        ).createOrReplaceTempView("information_schema_databases")
-        self.spark.createDataFrame(
-            tables or [("", "", "")],
-            "table_schema string, table_name string, table_type string",
-        ).filter("table_schema != ''").createOrReplaceTempView("information_schema_tables")
-        cols = []
-        for src, t in self.catalog.tables():
-            for i, f in enumerate(self.catalog.table(f"{src}.{t}").schema.fields):
-                cols.append((src, t, f.name, i + 1, f.dataType.simpleString()))
-        for src, ps in self._writable.items():
-            for t in ps.tables():
-                for i, f in enumerate(ps.read(t).schema.fields):
-                    cols.append((src, t, f.name, i + 1, f.dataType.simpleString()))
-        self.spark.createDataFrame(
-            cols or [("", "", "", 0, "")],
-            "table_schema string, table_name string, column_name string, "
-            "ordinal_position int, data_type string",
-        ).filter("table_schema != ''").createOrReplaceTempView("information_schema_columns")
-        # session objects (reference: mindsdb_tables.py:42-459 JOBS/VIEWS/AGENTS)
-        self.spark.createDataFrame(
-            [(n, sql) for n, sql in self._views.items()] or [("", "")],
-            "name string, definition string",
-        ).filter("name != ''").createOrReplaceTempView("information_schema_views")
-        self.spark.createDataFrame(
-            [(j.name, float(j.every_seconds), j.runs) for j in self.jobs.jobs.values()]
-            or [("", 0.0, 0)],
-            "name string, every_seconds double, runs int",
-        ).filter("name != ''").createOrReplaceTempView("information_schema_jobs")
-        self.spark.createDataFrame(
-            [(name, getattr(a, "model_name", ""),
-              ", ".join(getattr(a, "knowledge_bases", ()) or ()))
-             for name, a in self._agents.items()]
-            or [("", "", "")],
-            "name string, model string, knowledge_bases string",
-        ).filter("name != ''").createOrReplaceTempView("information_schema_agents")
-        self.spark.createDataFrame(
-            [(name, mm.output_schema, "ts" if mm.order_by else "row",
-              self._model_active.get(name, 1),
-              sum(s is not None for s in self._model_versions.get(name, [mm])))
-             for name, mm in self._models.items()] or [("", "", "", 0, 0)],
-            "name string, predict_columns string, kind string, "
-            "active_version int, versions int",
-        ).filter("name != ''").createOrReplaceTempView("information_schema_models")
-        self.spark.createDataFrame(
-            [(name, kb["dim"], kb.get("embedder") or "default",
-              kb.get("index") is not None,
-              # round-7: surface the index layout — 'partitioned' when the
-              # cell-partitioned store is live, 'inplan' for centroid-only,
-              # '' for unindexed (a stale snapshot invalidated by a
-              # mutation reports 'inplan', matching what a search will use)
-              ("partitioned" if kb.get("index_path")
-               else "inplan" if kb.get("index") is not None else ""))
-             for name, kb in self._kbs.items()] or [("", 0, "", False, "")],
-            "name string, dim int, embedder string, has_index boolean, "
-            "index_layout string",
-        ).filter("name != ''").createOrReplaceTempView("information_schema_knowledge_bases")
-        self.spark.createDataFrame(
-            [(name, tr.column) for name, tr in self._triggers.items()] or [("", "")],
-            "name string, watch_column string",
-        ).filter("name != ''").createOrReplaceTempView("information_schema_triggers")
-        # reference high-traffic system tables (system_tables.py:48-782,
-        # mindsdb_tables.py:42-459): ML_ENGINES, HANDLERS, QUERIES,
-        # STATISTICS, CHARACTER_SETS
-        self.spark.createDataFrame(
-            [(name, getattr(f, "__name__", str(f))) for name, f in self._ml_engines.items()]
-            or [("", "")],
-            "name string, handler string",
-        ).filter("name != ''").createOrReplaceTempView("information_schema_ml_engines")
-        self.spark.createDataFrame(
-            [("parquet", "data"), ("parquet_writable", "data"), ("duckdb", "data"),
-             ("jdbc", "data"), ("files", "data"), ("api", "data"),
-             ("spark_ml_linreg", "ml"), ("spark_ml_kmeans", "ml"),
-             ("spark_ml_logreg", "ml"), ("spark_ml_gbt", "ml")],
-            "name string, type string",
-        ).createOrReplaceTempView("information_schema_handlers")
-        self.spark.createDataFrame(
-            [(i, q, st) for i, (q, st) in enumerate(self._query_log[-100:])]
-            or [(0, "", "")],
-            "id int, query string, status string",
-        ).filter("query != ''").createOrReplaceTempView("information_schema_queries")
-        self.spark.createDataFrame(
-            [(src, t, "") for src, t, _k in tables] or [("", "", "")],
-            "table_schema string, table_name string, index_name string",
-        ).filter("table_schema != ''").createOrReplaceTempView("information_schema_statistics")
-        self.spark.createDataFrame(
-            [("utf8mb4", "utf8mb4_general_ci", "UTF-8 Unicode", 4),
-             ("binary", "binary", "Binary pseudo charset", 1)],
-            "character_set_name string, default_collate_name string, "
-            "description string, maxlen int",
-        ).createOrReplaceTempView("information_schema_character_sets")
-        # breadth tables (round-3: system_tables.py:315-512 EVENTS/ROUTINES/
-        # PLUGINS/ENGINES/COLLATIONS/KEY_COLUMN_USAGE + REFERENTIAL_CONSTRAINTS)
-        self.spark.createDataFrame(
-            [("def", "mindsdb", j.name, "RECURRING", "ENABLED",
-              float(j.every_seconds), "SECOND", j.runs)
-             for j in self.jobs.jobs.values()] or [("", "", "", "", "", 0.0, "", 0)],
-            "event_catalog string, event_schema string, event_name string, "
-            "event_type string, status string, interval_value double, "
-            "interval_field string, runs int",
-        ).filter("event_name != ''").createOrReplaceTempView("information_schema_events")
-        routine_rows = [
-            ("mindsdb", n, "FUNCTION", "user", "YES")
-            for n in sorted(self._user_functions)
+        return (
+            list(self.catalog.tables())
+            + [(src, t) for src, ns in self._native.items() for t in ns.tables()]
+            + [(src, t) for src, ps in self._writable.items() for t in ps.tables()]
+        )
+
+    def _schema_names(self) -> list[str]:
+        return sorted(
+            {src for src, _t in self._source_tables()} | set(self._native) | set(self._writable)
+        ) + ["information_schema"]
+
+    @_system_view(
+        "information_schema_databases",
+        "schema_name string, default_character_set_name string, default_collation_name string",
+    )
+    def _databases_view(self):
+        return [(s, "utf8mb4", "utf8mb4_general_ci") for s in self._schema_names()]
+
+    # the MySQL-canonical name for the database list (system_tables.py:48-76
+    # SchemataTable; DATABASES is the MindsDB-extension alias)
+    @_system_view(
+        "information_schema_schemata",
+        "catalog_name string, schema_name string, default_character_set_name string, "
+        "default_collation_name string, sql_path string",
+    )
+    def _schemata_view(self):
+        return [("def", s, "utf8mb4", "utf8mb4_general_ci", None) for s in self._schema_names()]
+
+    @_system_view(
+        "information_schema_tables", "table_schema string, table_name string, table_type string"
+    )
+    def _tables_view(self):
+        return [(src, t, "BASE TABLE") for src, t in self._source_tables()]
+
+    @_system_view(
+        "information_schema_statistics",
+        "table_schema string, table_name string, index_name string",
+    )
+    def _statistics_view(self):
+        return [(src, t, "") for src, t in self._source_tables()]
+
+    @_system_view(
+        "information_schema_columns",
+        "table_schema string, table_name string, column_name string, "
+        "ordinal_position int, data_type string",
+    )
+    def _columns_view(self):
+        frames = [(src, t, self.catalog.table(f"{src}.{t}")) for src, t in self.catalog.tables()]
+        frames += [(src, t, ps.read(t)) for src, ps in self._writable.items() for t in ps.tables()]
+        return [
+            (src, t, f.name, i + 1, f.dataType.simpleString())
+            for src, t, df in frames
+            for i, f in enumerate(df.schema.fields)
+        ]
+
+    # session objects (reference: mindsdb_tables.py:42-459 JOBS/VIEWS/AGENTS)
+    @_system_view("information_schema_views", "name string, definition string")
+    def _views_view(self):
+        return list(self._views.items())
+
+    @_system_view("information_schema_jobs", "name string, every_seconds double, runs int")
+    def _jobs_view(self):
+        return [(j.name, float(j.every_seconds), j.runs) for j in self.jobs.jobs.values()]
+
+    @_system_view(
+        "information_schema_agents", "name string, model string, knowledge_bases string"
+    )
+    def _agents_view(self):
+        return [
+            (name, getattr(a, "model_name", ""), ", ".join(getattr(a, "knowledge_bases", ()) or ()))
+            for name, a in self._agents.items()
+        ]
+
+    @_system_view(
+        "information_schema_models",
+        "name string, predict_columns string, kind string, active_version int, versions int",
+    )
+    def _models_view(self):
+        return [
+            (name, mm.output_schema, "ts" if mm.order_by else "row",
+             self._model_active.get(name, 1),
+             sum(s is not None for s in self._model_versions.get(name, [mm])))
+            for name, mm in self._models.items()
+        ]
+
+    # index_layout: 'partitioned' when the cell-partitioned store is live,
+    # 'inplan' for centroid-only, '' for unindexed (a stale snapshot
+    # invalidated by a mutation reports 'inplan', matching what a search
+    # will use)
+    @_system_view(
+        "information_schema_knowledge_bases",
+        "name string, dim int, embedder string, has_index boolean, index_layout string",
+    )
+    def _knowledge_bases_view(self):
+        return [
+            (name, kb["dim"], kb.get("embedder") or "default",
+             kb.get("index") is not None, _index_layout(kb))
+            for name, kb in self._kbs.items()
+        ]
+
+    @_system_view("information_schema_triggers", "name string, watch_column string")
+    def _triggers_view(self):
+        return [(name, tr.column) for name, tr in self._triggers.items()]
+
+    @_system_view("information_schema_ml_engines", "name string, handler string")
+    def _ml_engines_view(self):
+        return [(name, getattr(f, "__name__", str(f))) for name, f in self._ml_engines.items()]
+
+    @_system_view("information_schema_queries", "id int, query string, status string")
+    def _queries_view(self):
+        return [(i, q, state) for i, (q, state) in enumerate(self._query_log[-100:])]
+
+    @_system_view(
+        "information_schema_events",
+        "event_catalog string, event_schema string, event_name string, "
+        "event_type string, status string, interval_value double, "
+        "interval_field string, runs int",
+    )
+    def _events_view(self):
+        return [
+            ("def", "mindsdb", j.name, "RECURRING", "ENABLED",
+             float(j.every_seconds), "SECOND", j.runs)
+            for j in self.jobs.jobs.values()
+        ]
+
+    @_system_view(
+        "information_schema_routines",
+        "routine_schema string, routine_name string, routine_type string, "
+        "routine_body string, is_deterministic string",
+    )
+    def _routines_view(self):
+        return [
+            ("mindsdb", n, "FUNCTION", "user", "YES") for n in sorted(self._user_functions)
         ] + [
             ("mindsdb", "llm", "FUNCTION", "builtin", "NO"),
             ("mindsdb", "to_markdown", "FUNCTION", "builtin", "NO"),
             ("mindsdb", "hash", "FUNCTION", "builtin", "YES"),
         ]
-        self.spark.createDataFrame(
-            routine_rows,
-            "routine_schema string, routine_name string, routine_type string, "
-            "routine_body string, is_deterministic string",
-        ).createOrReplaceTempView("information_schema_routines")
-        self.spark.createDataFrame(
-            [(name, "1.0", "ACTIVE", kind.upper(), "mindsdb_spark")
-             for name, kind in
-             [("parquet", "data"), ("parquet_writable", "data"), ("duckdb", "data"),
-              ("jdbc", "data"), ("files", "data"), ("api", "data"),
-              ("spark_ml_linreg", "ml"), ("spark_ml_kmeans", "ml"),
-              ("spark_ml_logreg", "ml"), ("spark_ml_gbt", "ml")]],
-            "plugin_name string, plugin_version string, plugin_status string, "
-            "plugin_type string, plugin_library string",
-        ).createOrReplaceTempView("information_schema_plugins")
-        self.spark.createDataFrame(
-            [("InnoDB", "DEFAULT",
-              "Supports transactions, row-level locking, and foreign keys",
-              "YES", "YES", "YES")],
-            "engine string, support string, comment string, "
-            "transactions string, xa string, savepoints string",
-        ).createOrReplaceTempView("information_schema_engines")
-        self.spark.createDataFrame(
-            [("utf8_general_ci", "utf8", 33, "Yes", "Yes", 1, "PAD SPACE"),
-             ("utf8mb4_general_ci", "utf8mb4", 45, "Yes", "Yes", 1, "PAD SPACE"),
-             ("latin1_swedish_ci", "latin1", 8, "Yes", "Yes", 1, "PAD SPACE")],
-            "collation_name string, character_set_name string, id int, "
-            "is_default string, is_compiled string, sortlen int, "
-            "pad_attribute string",
-        ).createOrReplaceTempView("information_schema_collations")
-        # constraint stubs: schema-complete, rows empty — federated parquet /
-        # API sources carry no key metadata (same emptiness the reference
-        # serves for non-catalog sources)
-        self.spark.createDataFrame(
-            [],
-            "constraint_catalog string, constraint_schema string, "
-            "constraint_name string, table_catalog string, table_schema string, "
-            "table_name string, column_name string, ordinal_position int, "
-            "position_in_unique_constraint int, referenced_table_schema string, "
-            "referenced_table_name string, referenced_column_name string",
-        ).createOrReplaceTempView("information_schema_key_column_usage")
-        self.spark.createDataFrame(
-            [],
-            "constraint_catalog string, constraint_schema string, "
-            "constraint_name string, unique_constraint_catalog string, "
-            "unique_constraint_schema string, unique_constraint_name string, "
-            "match_option string, update_rule string, delete_rule string, "
-            "table_name string, referenced_table_name string",
-        ).createOrReplaceTempView("information_schema_referential_constraints")
-        # META_* data-catalog tables (system_tables.py:515-782): driver-side
-        # plan statistics only — no scan jobs
-        meta_tables, meta_cols = [], []
+
+    # META_* data-catalog tables (system_tables.py:515-782): plan
+    # statistics and parquet footers only — no scan jobs
+    @_system_view(
+        "information_schema_meta_tables",
+        "table_catalog string, table_schema string, table_name string, "
+        "table_type string, table_description string, row_count bigint",
+    )
+    def _meta_tables_view(self):
+        rows = []
         for src, t in self.catalog.tables():
-            df = self.catalog.table(f"{src}.{t}")
-            rc = df._jdf.queryExecution().optimizedPlan().stats().rowCount()
-            n = int(str(rc.get())) if rc.isDefined() else None
-            meta_tables.append(("def", src, t, "BASE TABLE", None, n))
-            for f in df.schema.fields:
-                meta_cols.append(
-                    ("def", src, t, f.name, f.dataType.simpleString(), None,
-                     None, "YES" if f.nullable else "NO")
-                )
-        from pyspark.sql.types import (
-            LongType, StringType as _Str, StructField, StructType,
-        )
-        _mt_schema = StructType([
-            StructField("table_catalog", _Str()), StructField("table_schema", _Str()),
-            StructField("table_name", _Str()), StructField("table_type", _Str()),
-            StructField("table_description", _Str()),
-            StructField("row_count", LongType()),
-        ])
-        self.spark.createDataFrame(meta_tables, _mt_schema).createOrReplaceTempView(
-            "information_schema_meta_tables"
-        )
-        _mc_schema = StructType([
-            StructField("table_catalog", _Str()), StructField("table_schema", _Str()),
-            StructField("table_name", _Str()), StructField("column_name", _Str()),
-            StructField("data_type", _Str()), StructField("column_description", _Str()),
-            StructField("column_default", _Str()), StructField("is_nullable", _Str()),
-        ])
-        self.spark.createDataFrame(meta_cols, _mc_schema).createOrReplaceTempView(
-            "information_schema_meta_columns"
-        )
-        # column statistics from parquet FOOTER metadata (min/max/null_count
-        # per row group) — the data-catalog numbers the reference serves from
-        # its catalog DB, here derived with zero scan jobs
-        stat_rows = []
+            rc = self.catalog.table(f"{src}.{t}")._jdf.queryExecution().optimizedPlan().stats().rowCount()
+            rows.append(("def", src, t, "BASE TABLE", None, int(str(rc.get())) if rc.isDefined() else None))
+        return rows
+
+    @_system_view(
+        "information_schema_meta_columns",
+        "table_catalog string, table_schema string, table_name string, "
+        "column_name string, data_type string, column_description string, "
+        "column_default string, is_nullable string",
+    )
+    def _meta_columns_view(self):
+        return [
+            ("def", src, t, f.name, f.dataType.simpleString(), None, None,
+             "YES" if f.nullable else "NO")
+            for src, t in self.catalog.tables()
+            for f in self.catalog.table(f"{src}.{t}").schema.fields
+        ]
+
+    # min/max/null_count per row group from parquet FOOTER metadata — the
+    # data-catalog numbers the reference serves from its catalog DB
+    @_system_view(
+        "information_schema_meta_column_statistics",
+        "table_schema string, table_name string, column_name string, "
+        "most_common_vals string, most_common_freqs string, null_frac double, "
+        "n_distinct bigint, min_value string, max_value string",
+    )
+    def _meta_column_statistics_view(self):
+        rows = []
         for src, t, path in self.catalog.table_paths():
             try:
-                stat_rows.extend(
+                rows.extend(
                     (src, t, cname, None, None, nf, None, mn, mx)
                     for cname, nf, mn, mx in _parquet_column_stats(path)
                 )
             except Exception:
                 continue  # unreadable footer → no stats row, never an error
-        from pyspark.sql.types import DoubleType
-        _st_schema = StructType([
-            StructField("table_schema", _Str()), StructField("table_name", _Str()),
-            StructField("column_name", _Str()),
-            StructField("most_common_vals", _Str()),
-            StructField("most_common_freqs", _Str()),
-            StructField("null_frac", DoubleType()),
-            StructField("n_distinct", LongType()),
-            StructField("min_value", _Str()), StructField("max_value", _Str()),
-        ])
-        self.spark.createDataFrame(stat_rows, _st_schema).createOrReplaceTempView(
-            "information_schema_meta_column_statistics"
-        )
-        self.spark.createDataFrame(
-            [],
-            "constraint_catalog string, constraint_schema string, "
-            "constraint_name string, table_schema string, table_name string, "
-            "constraint_type string, enforced string",
-        ).createOrReplaceTempView("information_schema_meta_table_constraints")
-        self.spark.createDataFrame(
-            [(f"parquet dir source ({len(list(ps.tables()))} tables)", src)
-             for src, ps in self._writable.items()]
-            + [("catalog parquet source", src)
-               for src in sorted({s for s, _t in self.catalog.tables()})]
-            or [("", "")],
-            "handler_info string, table_schema string",
-        ).filter("table_schema != ''").createOrReplaceTempView(
-            "information_schema_meta_handler_info"
-        )
-        # SCHEMATA — the MySQL-canonical name for the database list
-        # (system_tables.py:48-76 SchemataTable; DATABASES above is the
-        # MindsDB-extension alias)
-        self.spark.createDataFrame(
-            [("def", s, "utf8mb4", "utf8mb4_general_ci", None)
-             for s in sources + ["information_schema"]],
-            "catalog_name string, schema_name string, "
-            "default_character_set_name string, default_collation_name string, "
-            "sql_path string",
-        ).createOrReplaceTempView("information_schema_schemata")
-        # CHATBOTS (mindsdb_tables.py:275-290 ChatbotsTable) — real catalog
-        # rows; the chat-app polling runtime is replaced by the watermark
-        # respond tick (SELECT CHATBOT_RESPOND('name'))
-        self.spark.createDataFrame(
-            [
-                (
-                    b.name,
-                    "mindsdb",
-                    b.messages_table,
-                    self._agents[b.agent].model_name if b.agent in self._agents else b.agent,
-                    json.dumps({"agent": b.agent, "memory_k": b.memory_k}),
-                    bool(b.is_running),
-                    None,
-                    None,
-                )
-                for b in self._chatbots.values()
-            ]
-            + [("", "", "", "", "", False, None, None)],
-            "name string, project string, database string, model_name string, "
-            "params string, is_running boolean, last_error string, "
-            "webhook_token string",
-        ).filter("name != ''").createOrReplaceTempView("information_schema_chatbots")
-        # META_KEY_COLUMN_USAGE (system_tables.py:691-717) — empty like the
-        # other constraint stubs: parquet/API sources carry no key metadata
-        self.spark.createDataFrame(
-            [],
-            "constraint_catalog string, constraint_schema string, "
-            "constraint_name string, table_catalog string, table_schema string, "
-            "table_name string, column_name string, ordinal_position int, "
-            "position_in_unique_constraint int, referenced_table_schema string, "
-            "referenced_table_name string, referenced_column_name string",
-        ).createOrReplaceTempView("information_schema_meta_key_column_usage")
-        # project virtual tables: `SELECT * FROM mindsdb.models|jobs|agents|
-        # mdb_triggers|chatbots|skills` — the reference routes these to the
-        # information_schema tables filtered to the project
-        # (project_datanode.py:144-152); with a single default project the
-        # filter is the identity
-        for proj_t, is_t in (
-            ("models", "models"),
-            ("jobs", "jobs"),
-            ("agents", "agents"),
-            ("mdb_triggers", "triggers"),
-            ("chatbots", "chatbots"),
-        ):
-            self.spark.sql(
-                f"SELECT * FROM information_schema_{is_t}"
-            ).createOrReplaceTempView(f"mindsdb_{proj_t}")
-        # skills: schema-complete empty stub (agent skills are LLM-runtime
-        # surface; the catalog listing stays queryable)
-        self.spark.createDataFrame(
-            [], "name string, project string, type string, params string"
-        ).createOrReplaceTempView("mindsdb_skills")
-        # `log` system database (reference: interfaces/database/log.py):
-        # jobs_history from the scheduler's per-run records, llm_log from
-        # the transport-wrapper accumulator (round-8: every agent/chatbot
-        # completion — driver-side or pandas-UDF — records model, truncated
-        # input/output, timings and whitespace token counts)
-        hist_rows = [
+        return rows
+
+    @_system_view(
+        "information_schema_meta_handler_info", "handler_info string, table_schema string"
+    )
+    def _meta_handler_info_view(self):
+        return [
+            (f"parquet dir source ({len(list(ps.tables()))} tables)", src)
+            for src, ps in self._writable.items()
+        ] + [
+            ("catalog parquet source", src)
+            for src in sorted({s for s, _t in self.catalog.tables()})
+        ]
+
+    # CHATBOTS (mindsdb_tables.py:275-290 ChatbotsTable) — real catalog rows;
+    # the chat-app polling runtime is replaced by the watermark respond tick
+    # (SELECT CHATBOT_RESPOND('name'))
+    @_system_view(
+        "information_schema_chatbots",
+        "name string, project string, database string, model_name string, "
+        "params string, is_running boolean, last_error string, webhook_token string",
+    )
+    def _chatbots_view(self):
+        return [
             (
-                j.name,
+                b.name,
                 "mindsdb",
-                float(ts),
-                float(ts),
-                result if status == "error" else None,
-                j.sql,
+                b.messages_table,
+                self._agents[b.agent].model_name if b.agent in self._agents else b.agent,
+                json.dumps({"agent": b.agent, "memory_k": b.memory_k}),
+                bool(b.is_running),
+                None,
+                None,
             )
+            for b in self._chatbots.values()
+        ]
+
+    # `log` system database (reference: interfaces/database/log.py):
+    # jobs_history from the scheduler's per-run records, llm_log from the
+    # transport-wrapper accumulator (round-8: every agent/chatbot
+    # completion — in-process or in a pandas-UDF worker — records model,
+    # truncated input/output, timings and whitespace token counts)
+    @_system_view(
+        "log_jobs_history",
+        "name string, project string, run_start double, run_end double, "
+        "error string, query string",
+    )
+    def _jobs_history_view(self):
+        return [
+            (j.name, "mindsdb", float(ts), float(ts),
+             result if status == "error" else None, j.sql)
             for j in self.jobs.jobs.values()
             for status, ts, result in j.history
         ]
-        self.spark.createDataFrame(
-            hist_rows or [("", "", 0.0, 0.0, None, "")],
-            "name string, project string, run_start double, run_end double, "
-            "error string, query string",
-        ).filter("name != ''").createOrReplaceTempView("log_jobs_history")
+
+    @_system_view("log_llm_log")
+    def _llm_log_view(self):
         # dedupe on the transport wrapper's replay-stable record id: stage
         # retries / speculative tasks / recomputation of an uncached agent
         # DataFrame re-add identical records (accumulators are exactly-once
         # for actions only). A user re-running the byte-identical query on
         # the same agent still collapses — documented at-least-once edge.
         seen: set[str] = set()
-        llm_rows = []
+        rows = []
         for (rid, m, i, o, t0, t1, pt, ct, tt, ok) in (self._llm_log_accum.value or []):
-            if rid in seen:
-                continue
-            seen.add(rid)
-            llm_rows.append(
-                ("", m, i, o, float(t0), float(t1), int(pt), int(ct), int(tt), bool(ok))
-            )
+            if rid not in seen:
+                seen.add(rid)
+                rows.append(("", m, i, o, float(t0), float(t1), int(pt), int(ct), int(tt), bool(ok)))
         # start/end as TIMESTAMP to match the reference LLMLogTable schema
         # (interfaces/database/log.py: sa.DateTime columns) — epoch seconds
         # cast via timestamp_seconds, session TZ is UTC
-        self.spark.createDataFrame(
-            llm_rows or [("", "", "", None, 0.0, 0.0, 0, 0, 0, True)],
+        return self.spark.createDataFrame(
+            rows,
             "api_key string, model_name string, input string, output string, "
             "start_ts double, end_ts double, prompt_tokens int, "
             "completion_tokens int, total_tokens int, success boolean",
-        ).filter("model_name != ''").withColumn(
-            "start_time", F.timestamp_seconds(F.col("start_ts"))
-        ).withColumn(
-            "end_time", F.timestamp_seconds(F.col("end_ts"))
         ).select(
-            "api_key", "model_name", "input", "output", "start_time",
-            "end_time", "prompt_tokens", "completion_tokens", "total_tokens",
-            "success",
-        ).createOrReplaceTempView("log_llm_log")
+            "api_key", "model_name", "input", "output",
+            F.timestamp_seconds("start_ts").alias("start_time"),
+            F.timestamp_seconds("end_ts").alias("end_time"),
+            "prompt_tokens", "completion_tokens", "total_tokens", "success",
+        )
 
     # -- engine functions ------------------------------------------------------
     def _register_builtin_functions(self) -> None:
@@ -5273,3 +4940,80 @@ class EngineSession:
                 raise TypeError(f"unsupported type {t!r}; allowed: {list(_TYPE_MAP)}")
         self._user_functions.add(name.lower())
         self.spark.udf.register(name, fn, _TYPE_MAP[output_type])
+
+
+_HANDLER_KINDS = [
+    ("parquet", "data"), ("parquet_writable", "data"), ("duckdb", "data"),
+    ("jdbc", "data"), ("files", "data"), ("api", "data"),
+    ("spark_ml_linreg", "ml"), ("spark_ml_kmeans", "ml"),
+    ("spark_ml_logreg", "ml"), ("spark_ml_gbt", "ml"),
+]
+_KEY_COLUMN_USAGE_SCHEMA = (
+    "constraint_catalog string, constraint_schema string, "
+    "constraint_name string, table_catalog string, table_schema string, "
+    "table_name string, column_name string, ordinal_position int, "
+    "position_in_unique_constraint int, referenced_table_schema string, "
+    "referenced_table_name string, referenced_column_name string"
+)
+# system views with constant contents: name → (rows, schema). The
+# constraint tables are schema-complete and empty — federated parquet / API
+# sources carry no key metadata (the same emptiness the reference serves for
+# non-catalog sources); breadth tables per system_tables.py:315-512,691-717.
+_CONSTANT_VIEWS = {
+    "information_schema_handlers": (_HANDLER_KINDS, "name string, type string"),
+    "information_schema_character_sets": (
+        [("utf8mb4", "utf8mb4_general_ci", "UTF-8 Unicode", 4),
+         ("binary", "binary", "Binary pseudo charset", 1)],
+        "character_set_name string, default_collate_name string, "
+        "description string, maxlen int",
+    ),
+    "information_schema_plugins": (
+        [(name, "1.0", "ACTIVE", kind.upper(), "mindsdb_spark") for name, kind in _HANDLER_KINDS],
+        "plugin_name string, plugin_version string, plugin_status string, "
+        "plugin_type string, plugin_library string",
+    ),
+    "information_schema_engines": (
+        [("InnoDB", "DEFAULT", "Supports transactions, row-level locking, and foreign keys",
+          "YES", "YES", "YES")],
+        "engine string, support string, comment string, "
+        "transactions string, xa string, savepoints string",
+    ),
+    "information_schema_collations": (
+        [("utf8_general_ci", "utf8", 33, "Yes", "Yes", 1, "PAD SPACE"),
+         ("utf8mb4_general_ci", "utf8mb4", 45, "Yes", "Yes", 1, "PAD SPACE"),
+         ("latin1_swedish_ci", "latin1", 8, "Yes", "Yes", 1, "PAD SPACE")],
+        "collation_name string, character_set_name string, id int, "
+        "is_default string, is_compiled string, sortlen int, pad_attribute string",
+    ),
+    "information_schema_key_column_usage": ([], _KEY_COLUMN_USAGE_SCHEMA),
+    "information_schema_meta_key_column_usage": ([], _KEY_COLUMN_USAGE_SCHEMA),
+    "information_schema_referential_constraints": (
+        [],
+        "constraint_catalog string, constraint_schema string, "
+        "constraint_name string, unique_constraint_catalog string, "
+        "unique_constraint_schema string, unique_constraint_name string, "
+        "match_option string, update_rule string, delete_rule string, "
+        "table_name string, referenced_table_name string",
+    ),
+    "information_schema_meta_table_constraints": (
+        [],
+        "constraint_catalog string, constraint_schema string, "
+        "constraint_name string, table_schema string, table_name string, "
+        "constraint_type string, enforced string",
+    ),
+    # agent skills are LLM-runtime surface; the catalog listing stays queryable
+    "mindsdb_skills": ([], "name string, project string, type string, params string"),
+}
+_SYSTEM_VIEWS.update(
+    (name, (lambda sess, r=rows: r, schema)) for name, (rows, schema) in _CONSTANT_VIEWS.items()
+)
+# project virtual tables: `SELECT * FROM mindsdb.models|jobs|agents|
+# mdb_triggers|chatbots` — the reference routes these to the
+# information_schema tables filtered to the project
+# (project_datanode.py:144-152); with a single default project the filter
+# is the identity, so each builds (and reads) its information_schema view
+_SYSTEM_VIEWS.update(
+    (f"mindsdb_{proj}", (lambda sess, v=f"information_schema_{kind}": sess._build_view(v), None))
+    for proj, kind in (("models", "models"), ("jobs", "jobs"), ("agents", "agents"),
+                       ("mdb_triggers", "triggers"), ("chatbots", "chatbots"))
+)

@@ -77,7 +77,7 @@ def shingles(df: DataFrame, text_col: str = "text", id_col: str = "doc_id", n: i
     keeps both projections separate (the arrays are referenced repeatedly
     and are non-cheap), and explode of a plain column is codegen-able.
     Measured on the full signature pass, interleaved, bit-identical rows
-    (scripts/opt_r11_shingle_ab.py): sf10-docs 6.66→5.00 s, sf100-docs
+    (OPTIMIZATION_r11.md §2): sf10-docs 6.66→5.00 s, sf100-docs
     53.7→37.0 s (1.45x) with non-overlapping bands.
     """
     df = parallelize_input(df)
@@ -493,40 +493,42 @@ def jaccard_topk_pairs(
             # is deterministic across runs/partitionings (round-10 ADVICE).
             bd = lsh_bands(minhash_signatures(kept, id_col, 16), id_col, 4, 4)
             bkts = _collision_buckets(bd, id_col).persist()
-            cand = (
-                _pairs_from_buckets(bkts)
-                .distinct()  # duplicate pairs would inflate intersections
-                .orderBy("doc_a", "doc_b")
-                .limit(50_000)
-            )
-            ka = kept.select(col(id_col).alias("doc_a"), "sh")
-            kb = kept.select(col(id_col).alias("doc_b"), "sh")
-            inter = (
-                cand.join(ka, "doc_a")
-                .join(kb, ["doc_b", "sh"], "leftsemi")
-                .groupBy("doc_a", "doc_b")
-                .agg(F.count(F.lit(1)).alias("i"))
-            )
-            qv = (
-                inter.join(na, "doc_a")
-                .join(nb, "doc_b")
-                .select(
-                    F.floor(
-                        col("i") / (col("na") + col("nb") - col("i")) * 1e6
-                        + F.lit(0.5)
-                    )
-                    .cast("long")
-                    .alias("qv")
+            try:
+                cand = (
+                    _pairs_from_buckets(bkts)
+                    .distinct()  # duplicate pairs would inflate intersections
+                    .orderBy("doc_a", "doc_b")
+                    .limit(50_000)
                 )
-                .orderBy(col("qv").desc())
-                .limit(k)
-                .collect()
-            )
-            q = int(qv[-1][0]) if len(qv) >= k else 0
-            # the bound is collected — the probe's bucket index is dead;
-            # release it so repeated server-path calls don't pin storage
-            # (round-10 verdict item 7)
-            bkts.unpersist()
+                ka = kept.select(col(id_col).alias("doc_a"), "sh")
+                kb = kept.select(col(id_col).alias("doc_b"), "sh")
+                inter = (
+                    cand.join(ka, "doc_a")
+                    .join(kb, ["doc_b", "sh"], "leftsemi")
+                    .groupBy("doc_a", "doc_b")
+                    .agg(F.count(F.lit(1)).alias("i"))
+                )
+                qv = (
+                    inter.join(na, "doc_a")
+                    .join(nb, "doc_b")
+                    .select(
+                        F.floor(
+                            col("i") / (col("na") + col("nb") - col("i")) * 1e6
+                            + F.lit(0.5)
+                        )
+                        .cast("long")
+                        .alias("qv")
+                    )
+                    .orderBy(col("qv").desc())
+                    .limit(k)
+                    .collect()
+                )
+                q = int(qv[-1][0]) if len(qv) >= k else 0
+            finally:
+                # the bound is collected (or the probe failed) — the bucket
+                # index is dead; release it so repeated server-path calls
+                # don't pin storage
+                bkts.unpersist()
 
     two32 = F.lit(1 << 32)
     shared = None

@@ -215,7 +215,7 @@ def _knn_votes_hof(
     the GEMM path and kept for the A/B record: at sf100 (2M labeled
     vectors x 64 dims, 100 queries) the per-element HOF lambdas ran 249 s
     vs DuckDB's native list kernel at 37 s (6.7x) — the round-10 study
-    (scripts/bench_sf100_r10_knn.py) is what motivated the GEMM default.
+    (BENCH_sf100_relational.json:knn_classify_study_r10) is what motivated the GEMM default.
 
     Zero-norm guard: a zero-norm vector (failed-embedding rows are a fact
     of real corpora) makes cosine 0/0 — under ANSI mode a plain division

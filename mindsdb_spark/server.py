@@ -406,13 +406,7 @@ class SQLServer:
         return out
 
     def _tables_of(self, name: str):
-        sess = self.session
-        tables = [t for s, t in sess.catalog.tables() if s == name]
-        if name in sess._native:
-            tables += list(sess._native[name].tables())
-        if name in sess._writable:
-            tables += list(sess._writable[name].tables())
-        return tables or None
+        return [t for s, t in self.session._source_tables() if s == name] or None
 
     def start(self) -> "SQLServer":
         self._thread = threading.Thread(target=self._httpd.serve_forever, daemon=True)

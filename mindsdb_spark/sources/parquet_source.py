@@ -38,6 +38,9 @@ class ParquetSource:
         os.makedirs(root, exist_ok=True)
 
     def _path(self, table: str) -> str:
+        # a table is one directory directly under the root, never a path
+        if os.path.basename(table) != table or table.strip(".") == "":
+            raise ValueError(f"invalid table name {table!r}")
         return os.path.join(self.root, table.lower())
 
     def tables(self) -> list[str]:

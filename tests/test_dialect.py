@@ -294,6 +294,14 @@ def test_mysql_client_show_commands(spark, sf_dir):
     cols = [r["Field"] for r in sess.sql("SHOW COLUMNS FROM region").collect()]
     assert cols == ["r_regionkey", "r_name"]
     assert sess.sql("SHOW FULL COLUMNS IN nation FROM tpch").count() == 3
+    # every spelling answers MySQL's 6-column shape and honours the db
+    mysql_shape = ["Field", "Type", "Null", "Key", "Default", "Extra"]
+    for stmt in ("SHOW COLUMNS IN region", "SHOW COLUMNS FROM region FROM tpch",
+                 "SHOW FIELDS IN tpch.region", "DESCRIBE region", "EXPLAIN region"):
+        df = sess.sql(stmt)
+        assert df.columns == mysql_shape, stmt
+        assert [r["Field"] for r in df.collect()] == cols, stmt
+    assert sess.sql("SHOW COLUMNS FROM region FROM no_such_db").count() == 0
     st = sess.sql("SHOW TABLE STATUS FROM tpch").collect()
     assert {r["Name"] for r in st} >= {"region", "nation"} and st[0]["Engine"] == "InnoDB"
     assert sess.sql("SHOW INDEX FROM tpch_region").count() == 0
@@ -306,6 +314,56 @@ def test_show_processlist(spark, sf_dir):
     rows = sess.sql("SHOW PROCESSLIST").collect()
     assert any("tpch_region" in (r["Info"] or "") for r in rows)
     assert rows[0]["Command"] == "Query"
+
+
+def test_show_processlist_reports_failed_statement(spark, sf_dir):
+    sess = EngineSession(spark)
+    sess.register_parquet_source("tpch", sf_dir)
+    sess.sql("SELECT count(*) AS n FROM tpch_region").collect()
+    with pytest.raises(Exception):
+        sess.sql("SELECT * FROM no_such_table")
+    states = {r["Info"]: r["State"] for r in sess.sql("SHOW PROCESSLIST").collect()}
+    assert states["SELECT * FROM no_such_table"] == "failed"
+    assert states["SELECT count(*) AS n FROM tpch_region"] == "complete"
+    # the listing statement is itself still running while it answers
+    assert states["SHOW PROCESSLIST"] == "running"
+
+
+def test_show_tables_builds_only_its_system_view(spark, sf_dir):
+    # a fresh Spark session: temp views are per session, so only the views
+    # this EngineSession built are visible
+    sess = EngineSession(spark.newSession())
+    sess.register_parquet_source("tpch", sf_dir)
+
+    def system_views():
+        return {
+            t.name for t in sess.spark.catalog.listTables()
+            if t.name.startswith(("information_schema_", "mindsdb_", "log_"))
+        }
+
+    assert system_views() == set()
+    tables = [r[0] for r in sess.sql("SHOW TABLES FROM tpch").collect()]
+    assert "region" in tables
+    assert system_views() == {"information_schema_tables"}
+    # the rest of the system surface still answers, each building its own
+    sess.sql("CREATE MODEL sv_m (SELECT c_acctbal AS y, c_custkey FROM tpch_customer) "
+             "PREDICT y USING engine = 'spark_ml_linreg'")
+    assert [r["name"] for r in sess.sql("SELECT * FROM mindsdb.models").collect()] == ["sv_m"]
+    joined = sess.sql(
+        "SELECT t.table_name, count(*) AS n FROM information_schema.tables t "
+        "JOIN information_schema.columns c ON t.table_schema = c.table_schema "
+        "AND t.table_name = c.table_name WHERE t.table_name = 'region' "
+        "GROUP BY t.table_name"
+    ).collect()
+    assert [(r["table_name"], r["n"]) for r in joined] == [("region", 2)]
+    assert any("mindsdb.models" in (r["Info"] or "")
+               for r in sess.sql("SHOW PROCESSLIST").collect())
+    assert {r["Name"] for r in sess.sql("SHOW TABLE STATUS FROM tpch").collect()} >= {"region"}
+    assert "information_schema_meta_column_statistics" not in system_views()
+    # a view over a system table no statement has named yet builds it first
+    assert "information_schema_ml_engines" not in system_views()
+    sess.sql("CREATE VIEW sv_engines AS SELECT name FROM information_schema.ml_engines")
+    assert sess.sql("SELECT * FROM sv_engines").count() > 0
 
 
 def test_show_create_columns_index_status(spark, sf_dir):

@@ -325,3 +325,48 @@ def test_delete_string_literal_containing_select_untouched(wsess):
     assert n == 1
     left = wsess.sql("SELECT note FROM wh_lit").collect()
     assert [r["note"] for r in left] == ["plain"]
+
+
+def test_write_verbs_never_reach_paths_outside_the_source(wsess, tmp_path):
+    # a backticked name carrying a path must not become a table of the
+    # writable source: every verb leaves the outside directory untouched
+    outside = tmp_path / "outside"
+    outside.mkdir()
+    (outside / "keep.txt").write_text("keep")
+    name = f"`wh.{outside}`"
+    for stmt in (
+        f"DROP TABLE {name}",
+        f"DROP TABLE IF EXISTS {name}",
+        f"CREATE TABLE {name} (a int)",
+        f"CREATE OR REPLACE TABLE {name} AS SELECT 1 AS a",
+        f"TRUNCATE TABLE {name}",
+        f"INSERT INTO {name} VALUES (1)",
+        f"DELETE FROM {name} WHERE a = 1",
+        "DROP TABLE ..",
+        "TRUNCATE TABLE wh_..",
+    ):
+        try:
+            wsess.sql(stmt).collect()
+        except Exception:
+            pass
+        assert (outside / "keep.txt").read_text() == "keep", stmt
+        assert sorted(p.name for p in outside.iterdir()) == ["keep.txt"], stmt
+    assert (tmp_path / "wh").is_dir()
+
+
+def test_system_commands_reject_quoted_names(wsess):
+    # a backticked name cannot smuggle a quote into the SQL the SHOW /
+    # USE commands build from it
+    for stmt in ("SHOW TABLES FROM `x' OR '1'='1`",
+                 "SHOW TABLE STATUS FROM `x' OR '1'='1`",
+                 "SHOW COLUMNS FROM `x' OR '1'='1`"):
+        try:
+            rows = wsess.sql(stmt).collect()
+        except Exception:
+            continue
+        assert rows == [], stmt
+    try:
+        wsess.sql("USE `x' OR '1'='1`")
+    except Exception:
+        pass
+    assert "'" not in str(wsess.session_vars.get("database"))

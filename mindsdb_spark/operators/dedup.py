@@ -3,26 +3,44 @@ surface the reference lacks (its KB insert dedups only by content-hash id:
 reference: mindsdb/interfaces/knowledge_base/controller.py:647-983, upsert by
 content hash in vectordatabase_handler.py:295-400).
 
-All operators are expressed as distributed DataFrame plans:
+Every near-duplicate consumer composes one small shingle → minhash → band →
+pair-key core instead of spelling its own plan pieces:
 
-* exact:     hash-groupBy (map-side partial agg → tiny shuffle)
-* minhash:   explode shingles → one groupBy with k min-aggregates
-             (partial aggregation makes the shuffle k hex-strings per doc)
-* LSH:       band-signature self-equi-join — shuffles on the band key only,
-             never all-pairs
-* jaccard:   shingle-inverted-index self-join (pairs share a shingle) —
-             the classic n-gram near-dup join; cost is Σ freq(shingle)²,
-             bounded by dropping ultra-hot shingles (stopword shingles)
-* simhash:   per-row 32-bit signature via JVM higher-order functions only
+* ``_gram_arrays``: tokenize once per document and PROJECT the word n-gram
+  array before any explode or per-row fold (``shingles``,
+  ``rowwise_lsh_bands``);
+* ``shingle_hash_expr`` + ``_lane``: the 60-bit md5 shingle hash and the
+  affine minhash lane, shared by the batch signature
+  (``minhash_signatures``, one groupBy with k min-aggregates) and the
+  per-row one (``rowwise_lsh_bands``);
+* ``_band_fold``: the polynomial band fold of k lanes into band keys — batch
+  and per-row band values are equal by construction. It rejects band
+  settings that do not divide the lanes;
+* ``_band_table`` (signature → bands) and ``_collision_buckets`` (bands →
+  sorted id arrays per (band_id, band_sig), optionally id-chunked): the LSH
+  index behind ``lsh_candidate_pairs``, d06's bound probe and
+  ``incremental_dedup``;
+* ``_pair_keys`` / ``_pair_cols``: i<j pair keys over a sorted id array
+  (packed long or struct, optionally size-pruned) and their decoder;
+* ``_pinned_smj_intersection`` / ``_semi_intersection``: |A∩B| per
+  candidate pair, in the two join shapes the confirm passes need;
+* ``_plan_size_estimate``: Catalyst's driver-side size estimate — a missing
+  statistic picks the safe branch at every gate.
 
-Nothing here collects to the driver; every stage is shuffle-bounded and
-scales horizontally. Python/pandas never touches the hot path.
+On that core: exact (content-hash groupBy), minhash/LSH candidate pairs,
+exact top-k Jaccard (grouped shingle inverted index; cost Σ freq(shingle)²,
+bounded by the ``max_df`` stopword-shingle cap), containment, incremental
+and streaming dedup; plus simhash, SemDeDup-style embedding dedup, connected
+components, pagerank and edit-distance confirmation. Every corpus-sized
+stage is a shuffle-bounded DataFrame plan; Python/pandas never touches the
+hot path, and only size-gated graphs and probe scalars reach the driver.
 """
 
 from __future__ import annotations
 
 from functools import reduce
 
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -63,33 +81,36 @@ def grams_expr(ws, n: int):
     return grams
 
 
-def shingles(df: DataFrame, text_col: str = "text", id_col: str = "doc_id", n: int = 3) -> DataFrame:
-    """Distinct word n-gram shingles, exploded to (id, shingle) rows
-    (zip_with chain — see grams_expr).
+def _gram_arrays(df: DataFrame, text_col: str, id_col: str, n: int) -> DataFrame:
+    """(id, __g): each document's distinct word n-gram array, for documents
+    of at least n tokens.
 
-    Round-11 (guide §1.2 per-task work; the sf100 signature-pass floor):
-    the token array and the distinct-grams array are PROJECTED as columns
-    before the explode instead of inlined into the generator. zip_with is
-    CodegenFallback, so an inlined generator ran interpreted and
-    re-evaluated split(lower(trim(text))) once per textual occurrence —
-    7 `split(` sites in the old plan vs 2 now (the optimizer's filter
-    pushdown keeps one copy in the pre-explode size filter). CollapseProject
-    keeps both projections separate (the arrays are referenced repeatedly
-    and are non-cheap), and explode of a plain column is codegen-able.
-    Measured on the full signature pass, interleaved, bit-identical rows
-    (OPTIMIZATION_r11.md §2): sf10-docs 6.66→5.00 s, sf100-docs
-    53.7→37.0 s (1.45x) with non-overlapping bands.
+    The token array and the gram array are PROJECTED as columns, so the
+    explode or per-row fold that follows reads a plain column. zip_with is
+    CodegenFallback: a gram chain inlined into a generator runs interpreted
+    and re-evaluates split(lower(trim(text))) once per textual occurrence
+    (6-7 `split(` sites in such a plan, 2 here — the optimizer's filter
+    pushdown keeps one copy in the size filter). CollapseProject keeps both
+    projections separate (the arrays are referenced repeatedly and are
+    non-cheap). Measured on the full signature pass, interleaved,
+    bit-identical rows (OPTIMIZATION_r11.md §2): sf10-docs 6.66→5.00 s,
+    sf100-docs 53.7→37.0 s (1.45x).
     """
-    df = parallelize_input(df)
-    w = words_expr(col(text_col))
-    toks = df.select(col(id_col), w.alias("__ws")).filter(F.size("__ws") >= n)
-    grams = toks.select(
-        col(id_col), F.array_distinct(grams_expr(col("__ws"), n)).alias("__g")
+    toks = df.select(col(id_col), words_expr(col(text_col)).alias("__ws")).filter(
+        F.size("__ws") >= n
     )
+    return toks.select(col(id_col), F.array_distinct(grams_expr(col("__ws"), n)).alias("__g"))
+
+
+def shingles(df: DataFrame, text_col: str = "text", id_col: str = "doc_id", n: int = 3) -> DataFrame:
+    """Distinct word n-gram shingles, exploded to (id, shingle) rows; the
+    explode of the projected gram array is codegen-able (see _gram_arrays)."""
+    grams = _gram_arrays(parallelize_input(df), text_col, id_col, n)
     return grams.select(col(id_col), F.explode("__g").alias("shingle"))
 
 
 MINHASH_PRIME = 4294967311  # smallest prime > 2^32
+_TWO32 = 1 << 32
 _LANE_SEED = 42
 # jaccard_topk_pairs small-input gate (bytes of Catalyst's driver-side
 # estimate for the shingle input; sf0.1 ≈ 0.47 MB, sf1 ≈ 4.9 MB — the
@@ -109,15 +130,25 @@ _PREFIX_MIN_Q = 900_000
 # (sf1, 0.92-1.08x both ways), prefix 2.4x at 133 (sf3), 6.8x at 444
 # (sf10) — BENCH_r10_jaccard_scale.json
 _PREFIX_COST_RATIO = 64
-# lsh_candidate_pairs bucket chunking (round-11, VERDICT item 4): above
-# the stats gate, collision buckets are built in id-sorted chunks of at
-# most _LSH_CHUNK_CAP ids, bounding every collect_list aggregation buffer
-# at ~512 KB (an adversarial mass-dup bucket previously materialized the
-# whole bucket — O(corpus) — in ONE buffer). Below the gate the round-10
-# single-array plan runs unchanged (the bench scales sit far below it;
-# sf0.1 ≈ 0.5 MB, sf1 ≈ 5 MB of Catalyst-estimated shingle input).
+# lsh_candidate_pairs bucket chunking (round-11, VERDICT item 4): at or
+# above the stats gate, or when the statistic is missing, collision buckets
+# are built in id-sorted chunks of at most _LSH_CHUNK_CAP ids, bounding
+# every collect_list aggregation buffer at ~512 KB (an adversarial
+# mass-dup bucket previously materialized the whole bucket — O(corpus) —
+# in ONE buffer). Below the gate the round-10 single-array plan runs
+# unchanged (the bench scales sit far below it; sf0.1 ≈ 0.5 MB, sf1 ≈ 5 MB
+# of Catalyst-estimated shingle input).
 _LSH_CHUNK_CAP = 65536
 _LSH_CHUNK_STATS_GATE = 64 * 1024 * 1024
+
+
+def _plan_size_estimate(df: DataFrame) -> int | None:
+    """Catalyst's driver-side size estimate of ``df`` in bytes (no job), or
+    None when the statistic is unavailable (no JVM plan, or stats fail)."""
+    try:
+        return int(str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()))
+    except (AttributeError, ValueError, Py4JError):
+        return None
 
 
 def minhash_lane_params(n_hashes: int) -> list[tuple[int, int]]:
@@ -138,6 +169,41 @@ def shingle_hash_expr(shingle_col):
     return F.conv(F.substring(F.md5(shingle_col), 1, 15), 16, 10).cast("long")
 
 
+def _lane(a: int, b: int):
+    """Minhash lane (a·s32 + b) mod P over s32 = sh mod 2^32, as a one-arg
+    function — usable on a column and as a higher-order-function lambda
+    (pyspark binds HOF variables from the SIGNATURE, so the lane constants
+    are closed over here rather than passed as default args)."""
+    return lambda s32: (F.lit(a) * s32 + F.lit(b)) % F.lit(MINHASH_PRIME)
+
+
+def _band_fold(lanes: list, bands: int):
+    """Array of (band_id, band_sig) structs from k lane values: band b folds
+    lanes [b·r, (b+1)·r) polynomially mod MINHASH_PRIME, r = k / bands —
+    integer arithmetic both engines evaluate identically (each partial stays
+    under 2^52), and band joins move 8-byte keys. Raises ValueError unless
+    bands >= 1 and k is a positive multiple of bands: otherwise lanes would
+    be dropped silently, or every band would key on one lane."""
+    n_hashes = len(lanes)
+    if bands < 1 or n_hashes < 1 or n_hashes % bands:
+        raise ValueError(
+            f"n_hashes ({n_hashes}) must be a positive multiple of bands ({bands})"
+        )
+    rows = n_hashes // bands
+    fold = lambda acc, h: (acc * F.lit(1000003) + h) % F.lit(MINHASH_PRIME)
+    sigs = [reduce(fold, lanes[b * rows + 1 : (b + 1) * rows], lanes[b * rows]) for b in range(bands)]
+    return F.array(
+        *[F.struct(F.lit(b).alias("band_id"), s.alias("band_sig")) for b, s in enumerate(sigs)]
+    )
+
+
+def _explode_bands(df: DataFrame, id_col: str, band_arr) -> DataFrame:
+    """(id, band_id, band_sig) rows from a ``_band_fold`` array column."""
+    return df.select(col(id_col), F.explode(band_arr).alias("bd")).select(
+        id_col, col("bd.band_id"), col("bd.band_sig")
+    )
+
+
 def shingle_hashes(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id", n: int = 3
 ) -> DataFrame:
@@ -149,37 +215,35 @@ def shingle_hashes(
 def minhash_signatures(
     sh: DataFrame, id_col: str = "doc_id", n_hashes: int = 16
 ) -> DataFrame:
-    """MinHash signature per document from hashed shingles (id, sh).
+    """MinHash signature per document from hashed shingles (id, sh):
+    signature_i = min over shingles of lane_i (see _lane).
 
-    lane_i(s) = (a_i·s32 + b_i) mod P over s32 = sh mod 2^32; signature_i =
-    min over shingles. min() is algebraic, so Spark computes it map-side and
-    shuffles only n_hashes longs per document regardless of document size;
-    the affine family costs two multiply-adds per lane instead of an md5.
+    min() is algebraic, so Spark computes it map-side and shuffles only
+    n_hashes longs per document regardless of document size; the affine
+    family costs two multiply-adds per lane instead of an md5.
     """
-    s32 = col("sh") % F.lit(4294967296)
+    s32 = col("sh") % F.lit(_TWO32)
     aggs = [
-        F.min((F.lit(a) * s32 + F.lit(b)) % F.lit(MINHASH_PRIME)).alias(f"h{i}")
+        F.min(_lane(a, b)(s32)).alias(f"h{i}")
         for i, (a, b) in enumerate(minhash_lane_params(n_hashes))
     ]
     return sh.groupBy(id_col).agg(*aggs)
 
 
 def lsh_bands(sig: DataFrame, id_col: str = "doc_id", bands: int = 4, rows: int = 4) -> DataFrame:
-    """Fold a minhash signature into band signatures: (id, band_id, band_sig).
+    """Fold a minhash signature (lanes h0..h{bands·rows-1}) into band
+    signatures: (id, band_id, band_sig) — see _band_fold."""
+    arr = _band_fold([col(f"h{i}") for i in range(bands * rows)], bands)
+    return _explode_bands(sig, id_col, arr)
 
-    band_sig is a polynomial fold of the lane values mod MINHASH_PRIME —
-    integer arithmetic both engines evaluate identically (each partial stays
-    under 2^52), and the LSH self-join below shuffles 8-byte keys.
-    """
-    entries = []
-    for b in range(bands):
-        acc = col(f"h{b * rows}")
-        for r in range(1, rows):
-            acc = (acc * F.lit(1000003) + col(f"h{b * rows + r}")) % F.lit(MINHASH_PRIME)
-        entries.append(F.struct(F.lit(b).alias("band_id"), acc.alias("band_sig")))
-    return sig.select(
-        col(id_col), F.explode(F.array(*entries)).alias("bd")
-    ).select(id_col, col("bd.band_id"), col("bd.band_sig"))
+
+def _band_table(
+    sh: DataFrame, id_col: str = "doc_id", n_hashes: int = 16, bands: int = 4
+) -> DataFrame:
+    """Band table (id, band_id, band_sig) of hashed shingles (id, sh):
+    minhash signature → band fold."""
+    arr = _band_fold([col(f"h{i}") for i in range(n_hashes)], bands)
+    return _explode_bands(minhash_signatures(sh, id_col, n_hashes), id_col, arr)
 
 
 def lsh_candidate_pairs(
@@ -212,9 +276,9 @@ def lsh_candidate_pairs(
     Memory bound (round-11, VERDICT item 4): the grouped form holds one
     collision bucket per aggregation buffer, which an adversarial mass-dup
     corpus makes O(corpus) in a single buffer (~80 MB per 10⁷-id bucket).
-    Above a Catalyst-stats gate — or when ``chunk_cap`` forces it — the
-    index is built as id-sorted CHUNKS of at most ``chunk_cap`` ids per
-    row: a window (count + row_number over the bucket key; spillable
+    At or above a Catalyst-stats gate, when the statistic is unavailable,
+    or when ``chunk_cap`` forces it, the index is built as id-sorted
+    CHUNKS of at most ``chunk_cap`` ids per row: a window (count + row_number over the bucket key; spillable
     sort-based buffering, unlike an aggregation buffer) sizes and splits
     each bucket, the groupBy reuses the window's exchange (same key
     prefix), and every collect_list buffer is bounded at ~512 KB. Pair
@@ -226,18 +290,14 @@ def lsh_candidate_pairs(
     before any pair work (window count >= 2 — now BEFORE the aggregate,
     where the old plan aggregated them first and filtered after).
     ``chunk_cap``: None = auto (stats gate), 0 = never chunk, int = force
-    that cap.
+    that cap. ``n_hashes`` must be a positive multiple of ``bands``.
     """
-    rows = n_hashes // bands
-    bd = lsh_bands(minhash_signatures(sh, id_col, n_hashes), id_col, bands, rows)
+    bd = _band_table(sh, id_col, n_hashes, bands)
     cap = chunk_cap
     if cap is None:
-        est = None
-        try:
-            est = int(str(sh._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()))
-        except Exception:
-            est = None  # stat unavailable: keep the proven single-array plan
-        cap = _LSH_CHUNK_CAP if (est is not None and est >= _LSH_CHUNK_STATS_GATE) else 0
+        est = _plan_size_estimate(sh)
+        # fail closed: without a statistic the bounded chunked index runs
+        cap = _LSH_CHUNK_CAP if est is None or est >= _LSH_CHUNK_STATS_GATE else 0
     buckets = _collision_buckets(bd, id_col, cap).persist()
     pairs = _pairs_from_buckets(buckets)
     if cap:
@@ -315,13 +375,119 @@ def _cross_chunk_pairs(buckets: DataFrame) -> DataFrame:
     )
 
 
+def _pair_keys(arr, packable: bool, prune_q: int | None = None):
+    """Exploded i<j pair keys ``pk`` over each row's sorted array ``arr``:
+    a packed long a·2³² + b when ``packable``, else a struct (a, b).
+
+    With ``prune_q``, elements are (a, n) structs (see _sorted_idn) and the
+    size filter runs INSIDE pair generation, before anything is
+    materialized or shuffled: exact jac <= min(na, nb)/max(na, nb), so
+    1e6·min < (q-1)·max proves rounded jac < q and the pair is dropped.
+    """
+
+    def key(x, y):
+        a, b = (x, y) if prune_q is None else (x["a"], y["a"])
+        k = a * F.lit(_TWO32) + b if packable else F.struct(a.alias("a"), b.alias("b"))
+        if prune_q is None:
+            return k
+        keep = (F.least(x["n"], y["n"]) * F.lit(1_000_000)) >= (
+            F.lit(prune_q - 1) * F.greatest(x["n"], y["n"])
+        )
+        return F.when(keep, k)
+
+    pairs = F.flatten(
+        F.transform(
+            arr,
+            lambda x, i: F.transform(
+                F.slice(arr, i + F.lit(2), F.size(arr)), lambda y: key(x, y)
+            ),
+        )
+    )
+    return F.explode(pairs if prune_q is None else F.array_compact(pairs)).alias("pk")
+
+
+def _pair_cols(packable: bool) -> list:
+    """(doc_a, doc_b) columns decoding the pair key ``pk``."""
+    if packable:
+        return [
+            F.shiftright(col("pk"), 32).alias("doc_a"),
+            col("pk").bitwiseAND(F.lit(_TWO32 - 1)).alias("doc_b"),
+        ]
+    return [col("pk.a").alias("doc_a"), col("pk.b").alias("doc_b")]
+
+
+def _sorted_idn(id_col: str):
+    """Aggregate: the group's sorted (a = id, n = set size) structs, ``idn``."""
+    return F.sort_array(
+        F.collect_list(F.struct(col(id_col).alias("a"), col("n").alias("n")))
+    ).alias("idn")
+
+
+def _pinned_smj_intersection(
+    cand: DataFrame, sh_a: DataFrame, sh_b: DataFrame, a: str, b: str, id_col: str, out: str
+) -> DataFrame:
+    """(a, b, out = |A∩B|) for candidate pairs (a, b) over shingle tables
+    (id, sh), with both confirm joins pinned to sort-merge and each side
+    first cut to the candidate ids.
+
+    The confirm joins carry UNBOUNDED key skew: under mass duplication one
+    hot document can pair with thousands of others, so a single join
+    partition can hold most of the candidate set. AQE's SMJ→hash
+    conversion gates on the AVERAGE map-output size and skew splitting
+    cannot shrink a skewed BUILD side (the whole partition must fit one
+    in-task hash map) — measured at sf100 under an 8 GB heap: "Can't
+    acquire 134217728 bytes to build hash relation". The merge hint on
+    both inputs sorts and SPILLS gracefully at any skew.
+
+    Semi-join prefilter (round-10, guide §3): the SMJ used to sort the FULL
+    shingle sets to serve the candidate pairs — at sf1 a 2.6M-row sort
+    against 13 pairs (0.88 s of d31's 2.3 s). Each side is first cut by a
+    semi-join on the DISTINCT candidate ids. Exactness: the inner joins
+    restrict to those very ids, so the aggregate input is row-identical.
+    Skew-safety: the semi-join build side is a set of UNIQUE ids, and under
+    mass duplication (every doc a candidate) the filter keeps everything
+    and the plan degrades to exactly the un-cut pinned SMJ. ``cand`` is
+    read three times — callers persist it.
+    """
+    la = sh_a.select(col(id_col).alias(a), "sh").join(cand.select(a).distinct(), a, "leftsemi")
+    lb = sh_b.select(col(id_col).alias(b), "sh").join(cand.select(b).distinct(), b, "leftsemi")
+    return (
+        cand.hint("merge")
+        .join(la.hint("merge"), a)
+        .hint("merge")
+        .join(lb.hint("merge"), [b, "sh"])
+        .groupBy(a, b)
+        .agg(F.count(F.lit(1)).alias(out))
+    )
+
+
+def _semi_intersection(pairs: DataFrame, sh: DataFrame, id_col: str, out: str) -> DataFrame:
+    """(doc_a, doc_b, out = |A∩B|) for candidate pairs over one shingle
+    table (id, sh): doc_a's shingles join on doc_a, then a semi-join keeps
+    the ones doc_b also holds — one keyed aggregate, never the corpus cross
+    product."""
+    return (
+        pairs.join(sh.select(col(id_col).alias("doc_a"), "sh"), "doc_a")
+        .join(sh.select(col(id_col).alias("doc_b"), "sh"), ["doc_b", "sh"], "leftsemi")
+        .groupBy("doc_a", "doc_b")
+        .agg(F.count(F.lit(1)).alias(out))
+    )
+
+
+def _join_sizes(pairs: DataFrame, sizes: DataFrame, id_col: str) -> DataFrame:
+    """Pairs (doc_a, doc_b, ...) with both docs' set sizes ``na``, ``nb``
+    from ``sizes`` (id, n)."""
+    na = sizes.select(col(id_col).alias("doc_a"), col("n").alias("na"))
+    nb = sizes.select(col(id_col).alias("doc_b"), col("n").alias("nb"))
+    return pairs.join(na, "doc_a").join(nb, "doc_b")
+
+
 def jaccard_topk_pairs(
     sh: DataFrame,
     id_col: str = "doc_id",
     k: int = 20,
     max_df: int = 1000,
     prune_threshold: int = 1_500_000,
-    hot_predrop: bool = False,
 ) -> DataFrame:
     """Top-k most-similar document pairs by exact shingle Jaccard.
 
@@ -389,42 +555,11 @@ def jaccard_topk_pairs(
     # here; it is dropped by unpersist()/ContextCleaner when the caller
     # drops the plan. Probe-only intermediates (the A2 bucket index) ARE
     # released before return (round-10 verdict item 7).
-    # Catalyst's driver-side size estimate of the shingle input (no job) —
-    # gates the hot-shingle pre-drop just below AND the probe job further
-    # down. ~linear in corpus size here.
-    est = None
-    try:
-        est = int(str(sh._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()))
-    except Exception:
-        est = None
-    # Hot-shingle pre-drop (round-11, ADVICE item — OPT-IN memory safety,
-    # default off): the grouped build materializes each shingle's full id
-    # array in ONE aggregation buffer BEFORE the max_df filter discards it,
-    # so a stopword shingle over an f-doc corpus holds O(f) longs in a
-    # single unspillable buffer (observed in vivo: 268 MB GCLocker-stalled
-    # allocations on the saturated 5M-doc fixture — survivable there, an
-    # OOM risk at 10^9 docs). ``hot_predrop=True`` finds the <=max_df
-    # shingles with a count pass first (8-byte buffers) and leftsemi-cuts
-    # the index rows, bounding every collect_list buffer at max_df ids
-    # (~8 KB); the semi-join partitions by `sh`, so the groupBy reuses its
-    # exchange. Exact: identical kept set (the size filter below stays as
-    # a no-op guard; parity test forces this path). MEASURED COSTS — why
-    # it is not the default: the extra pass is ~1.15x on a fully-saturated
-    # corpus (55->64 s, sf100-docs) since `sh` is recomputed, and a
-    # window-count formulation (single pass, spillable buffering) measured
-    # worse still on normal corpora (6.4->8.5 s at sf10-docs — the
-    # per-partition sort). Callers running stopword-heavy corpora at
-    # billion-doc scale trade that ~15% for not dying.
-    src = sh
-    if hot_predrop:
-        ok_sh = (
-            sh.groupBy("sh")
-            .agg(F.count(F.lit(1)).alias("__df"))
-            .where(col("__df") <= max_df)
-        )
-        src = sh.join(ok_sh.select("sh"), "sh", "leftsemi")
+    # Catalyst's driver-side size estimate of the shingle input (no job)
+    # gates the probe job below. ~linear in corpus size here.
+    est = _plan_size_estimate(sh)
     grouped = (
-        src.groupBy("sh")
+        sh.groupBy("sh")
         .agg(F.collect_list(id_col).alias("ids"))
         .where(F.size("ids") <= max_df)
         .select("sh", F.array_sort("ids").alias("ids"))
@@ -462,8 +597,6 @@ def jaccard_topk_pairs(
     pairs_enum = (probe["pairs"] or 0) if probe is not None else 0
     kept = grouped.select("sh", F.explode("ids").alias(id_col))
     sizes = kept.groupBy(id_col).agg(F.count(F.lit(1)).alias("n"))
-    na = sizes.select(col(id_col).alias("doc_a"), col("n").alias("na"))
-    nb = sizes.select(col(id_col).alias("doc_b"), col("n").alias("nb"))
 
     q = 0
     if total >= prune_threshold and k >= 1:
@@ -491,8 +624,7 @@ def jaccard_topk_pairs(
             # sample is ORDERED (TakeOrderedAndProject — bounded heap per
             # partition) so the derived bound, hence the chosen plan path,
             # is deterministic across runs/partitionings (round-10 ADVICE).
-            bd = lsh_bands(minhash_signatures(kept, id_col, 16), id_col, 4, 4)
-            bkts = _collision_buckets(bd, id_col).persist()
+            bkts = _collision_buckets(_band_table(kept, id_col), id_col).persist()
             try:
                 cand = (
                     _pairs_from_buckets(bkts)
@@ -500,17 +632,8 @@ def jaccard_topk_pairs(
                     .orderBy("doc_a", "doc_b")
                     .limit(50_000)
                 )
-                ka = kept.select(col(id_col).alias("doc_a"), "sh")
-                kb = kept.select(col(id_col).alias("doc_b"), "sh")
-                inter = (
-                    cand.join(ka, "doc_a")
-                    .join(kb, ["doc_b", "sh"], "leftsemi")
-                    .groupBy("doc_a", "doc_b")
-                    .agg(F.count(F.lit(1)).alias("i"))
-                )
                 qv = (
-                    inter.join(na, "doc_a")
-                    .join(nb, "doc_b")
+                    _join_sizes(_semi_intersection(cand, kept, id_col, "i"), sizes, id_col)
                     .select(
                         F.floor(
                             col("i") / (col("na") + col("nb") - col("i")) * 1e6
@@ -530,8 +653,6 @@ def jaccard_topk_pairs(
                 # don't pin storage
                 bkts.unpersist()
 
-    two32 = F.lit(1 << 32)
-    shared = None
     if (
         q >= _PREFIX_MIN_Q
         and k >= 1
@@ -576,153 +697,41 @@ def jaccard_topk_pairs(
         )
         alpha = F.expr(f"(({2 * q - 1} * n) + 1999999) div 2000000")
         prefix_rows = pre.where(col("__pos") <= col("n") - alpha + F.lit(1))
-        qm1p = F.lit(q - 1)
-
-        def prp(x, y):
-            keep_pair = (F.least(x["n"], y["n"]) * F.lit(1_000_000)) >= (
-                qm1p * F.greatest(x["n"], y["n"])
-            )
-            if packable:
-                return F.when(keep_pair, x["a"] * two32 + y["a"])
-            return F.when(
-                keep_pair, F.struct(x["a"].alias("a"), y["a"].alias("b"))
-            )
-
-        pidn = col("idn")
-        ppair = F.flatten(
-            F.transform(
-                pidn,
-                lambda x, i: F.transform(
-                    F.slice(pidn, i + F.lit(2), F.size(pidn)),
-                    lambda y: prp(x, y),
-                ),
-            )
-        )
-        psrc = (
+        cand = (
             prefix_rows.groupBy("sh")
-            .agg(
-                F.sort_array(
-                    F.collect_list(
-                        F.struct(col(id_col).alias("a"), col("n").alias("n"))
-                    )
-                ).alias("idn")
-            )
+            .agg(_sorted_idn(id_col))
             .where(F.size("idn") >= 2)
-            .select(F.explode(F.array_compact(ppair)).alias("pk"))
+            .select(_pair_keys(col("idn"), packable, q))
+            .select(*_pair_cols(packable))
+            # three consumers (two id sets + the pair join); no cross-branch CSE
+            .distinct()
+            .persist()
         )
-        if packable:
-            cand = psrc.select(
-                F.shiftright(col("pk"), 32).alias("doc_a"),
-                col("pk").bitwiseAND(F.lit((1 << 32) - 1)).alias("doc_b"),
-            )
-        else:
-            cand = psrc.select(
-                col("pk.a").alias("doc_a"), col("pk.b").alias("doc_b")
-            )
-        # three consumers (two id sets + the pair join); no cross-branch CSE
-        cand = cand.distinct().persist()
-        ka = kept.select(col(id_col).alias("doc_a"), "sh").join(
-            cand.select("doc_a").distinct(), "doc_a", "leftsemi"
-        )
-        kb = kept.select(col(id_col).alias("doc_b"), "sh").join(
-            cand.select("doc_b").distinct(), "doc_b", "leftsemi"
-        )
-        shared = (
-            cand.hint("merge")
-            .join(ka.hint("merge"), "doc_a")
-            .hint("merge")
-            .join(kb.hint("merge"), ["doc_b", "sh"])
-            .groupBy("doc_a", "doc_b")
-            .agg(F.count(F.lit(1)).alias("shared"))
-        )
-    elif q > 1:
-        # sizes ride the arrays so the prune happens INSIDE pair
-        # generation, before anything is materialized or shuffled
-        garr = (
-            kept.join(sizes, id_col)
-            .groupBy("sh")
-            .agg(
-                F.sort_array(
-                    F.collect_list(
-                        F.struct(col(id_col).alias("a"), col("n").alias("n"))
-                    )
-                ).alias("idn")
-            )
-        )
-        arr = col("idn")
-        qm1 = F.lit(q - 1)
-
-        def pr(x, y):
-            # exact jac <= min/max; 1e6·min < (q-1)·max ⟹ rounded jac < q
-            keep_pair = (F.least(x["n"], y["n"]) * F.lit(1_000_000)) >= (
-                qm1 * F.greatest(x["n"], y["n"])
-            )
-            if packable:
-                return F.when(keep_pair, x["a"] * two32 + y["a"])
-            return F.when(
-                keep_pair, F.struct(x["a"].alias("a"), y["a"].alias("b"))
-            )
-
-        pair_arr = F.flatten(
-            F.transform(
-                arr,
-                lambda x, i: F.transform(
-                    F.slice(arr, i + F.lit(2), F.size(arr)), lambda y: pr(x, y)
-                ),
-            )
-        )
-        src = garr.where(F.size("idn") >= 2).select(
-            F.explode(F.array_compact(pair_arr)).alias("pk")
-        )
+        shared = _pinned_smj_intersection(cand, kept, kept, "doc_a", "doc_b", id_col, "shared")
     else:
-        a2 = col("ids")
-        if packable:
-            pair_arr = F.flatten(
-                F.transform(
-                    a2,
-                    lambda x, i: F.transform(
-                        F.slice(a2, i + F.lit(2), F.size(a2)),
-                        lambda y: x * two32 + y,
-                    ),
-                )
+        if q > 1:
+            # sizes ride the arrays so the prune happens INSIDE pair generation
+            src = (
+                kept.join(sizes, id_col)
+                .groupBy("sh")
+                .agg(_sorted_idn(id_col))
+                .where(F.size("idn") >= 2)
+                .select(_pair_keys(col("idn"), packable, q))
             )
         else:
-            pair_arr = F.flatten(
-                F.transform(
-                    a2,
-                    lambda x, i: F.transform(
-                        F.slice(a2, i + F.lit(2), F.size(a2)),
-                        lambda y: F.struct(x.alias("a"), y.alias("b")),
-                    ),
-                )
-            )
-        src = grouped.where(F.size("ids") >= 2).select(
-            F.explode(pair_arr).alias("pk")
-        )
-    if shared is None and packable:
-        shared = (
-            src.groupBy("pk")
-            .agg(F.count(F.lit(1)).alias("shared"))
-            .select(
-                F.shiftright(col("pk"), 32).alias("doc_a"),
-                col("pk").bitwiseAND(F.lit((1 << 32) - 1)).alias("doc_b"),
-                "shared",
-            )
-        )
-    elif shared is None:
-        shared = src.groupBy(
-            col("pk.a").alias("doc_a"), col("pk.b").alias("doc_b")
-        ).agg(F.count(F.lit(1)).alias("shared"))
+            src = grouped.where(F.size("ids") >= 2).select(_pair_keys(col("ids"), packable))
+        count = F.count(F.lit(1)).alias("shared")
+        if packable:
+            shared = src.groupBy("pk").agg(count).select(*_pair_cols(True), "shared")
+        else:
+            shared = src.groupBy(*_pair_cols(False)).agg(count)
     jac = col("shared") / (col("na") + col("nb") - col("shared"))
     return (
-        shared.join(na, "doc_a")
-        .join(nb, "doc_b")
+        _join_sizes(shared, sizes, id_col)
         .select("doc_a", "doc_b", (F.floor(jac * 1e6 + F.lit(0.5)) / 1e6).alias("jac"))
         .orderBy(col("jac").desc(), "doc_a", "doc_b")
         .limit(k)
     )
-
-
 
 
 def containment_pairs(
@@ -763,18 +772,9 @@ def containment_pairs(
     )
     kept = sh.join(ids, id_col, "leftsemi").persist()
     sizes = kept.groupBy(id_col).agg(F.count("*").alias("n"))
-    inter = (
-        pairs.join(kept.select(col(id_col).alias("doc_a"), "sh"), "doc_a")
-        .join(kept.select(col(id_col).alias("doc_b"), "sh"), ["doc_b", "sh"], "left_semi")
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count("*").alias("shared"))
-    )
-    na = sizes.select(col(id_col).alias("doc_a"), col("n").alias("na"))
-    nb = sizes.select(col(id_col).alias("doc_b"), col("n").alias("nb"))
     r6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
     return (
-        inter.join(na, "doc_a")
-        .join(nb, "doc_b")
+        _join_sizes(_semi_intersection(pairs, kept, id_col, "shared"), sizes, id_col)
         .select(
             "doc_a",
             "doc_b",
@@ -1086,14 +1086,13 @@ def incremental_dedup(
     with per-row signatures (rowwise_lsh_bands probing a static band index)
     and hands them here for the exact-Jaccard confirm.
     """
-    rows = n_hashes // bands
     sh_b = shingle_hashes(batch, text_col, id_col).persist()
     sh_c = shingle_hashes(corpus, text_col, id_col).persist()
     if candidates is not None:
         cand = candidates.select("__bid", "__cid").distinct()
     else:
-        bd_b = lsh_bands(minhash_signatures(sh_b, id_col, n_hashes), id_col, bands, rows)
-        bd_c = lsh_bands(minhash_signatures(sh_c, id_col, n_hashes), id_col, bands, rows)
+        bd_b = _band_table(sh_b, id_col, n_hashes, bands)
+        bd_c = _band_table(sh_c, id_col, n_hashes, bands)
         cand = (
             bd_b.select(col(id_col).alias("__bid"), "band_id", "band_sig")
             .join(
@@ -1112,58 +1111,19 @@ def incremental_dedup(
     # cut by the same distinct-id semi-join as the confirm legs below —
     # the corpus-side groupBy then counts candidate docs' shingles, never
     # the corpus's (exact: per-doc counts are untouched by dropping docs)
-    nb = (
-        sh_b.join(cand.select("__bid").distinct(), col(id_col) == col("__bid"), "leftsemi")
-        .groupBy(id_col)
-        .agg(F.count("*").alias("__nb"))
-        .withColumnRenamed(id_col, "__bid")
-    )
-    nc = (
-        sh_c.join(cand.select("__cid").distinct(), col(id_col) == col("__cid"), "leftsemi")
-        .groupBy(id_col)
-        .agg(F.count("*").alias("__nc"))
-        .withColumnRenamed(id_col, "__cid")
-    )
-    # The candidate-confirm joins carry UNBOUNDED key skew: under mass
-    # duplication one hot document can pair with thousands of others, so a
-    # single join partition can hold most of the candidate set. AQE's
-    # SMJ→hash conversion gates on the AVERAGE map-output size and skew
-    # splitting cannot shrink a skewed BUILD side (the whole partition
-    # must fit one in-task hash map) — measured at sf100 under an 8 GB
-    # heap: "Can't acquire 134217728 bytes to build hash relation". Pin
-    # these two joins to sort-merge (hint on both inputs), which sorts and
-    # SPILLS gracefully at any skew; the evenly-keyed band/count joins
-    # above and below stay hash-convertible.
-    #
-    # Round-10 (guide §3 semi-join prefilter): the pinned SMJ used to sort
-    # the FULL shingle sets to serve the candidate pairs — at sf1 that is
-    # a 2.6M-row sort against 13 pairs (0.88 s of d31's 2.3 s). The
-    # confirm only ever reads shingles of docs that appear in `cand`, so
-    # each side is first cut by a semi-join on the DISTINCT candidate ids.
-    # Exactness: the subsequent inner joins restrict to those very ids, so
-    # the aggregate input is row-identical. Skew-safety: the semi-join
-    # build side is a set of UNIQUE ids (uniform keys — pair-multiplicity
-    # skew cannot occur on a distinct-id set), and under mass duplication
-    # (every doc a candidate) the filter keeps everything and the plan
-    # degrades to exactly the old pinned-SMJ behavior.
-    inter = (
-        cand.hint("merge")
-        .join(
-            sh_b.select(col(id_col).alias("__bid"), "sh")
-            .join(cand.select("__bid").distinct(), "__bid", "leftsemi")
-            .hint("merge"),
-            "__bid",
+    def cut_sizes(sh, key, out):
+        return (
+            sh.join(cand.select(key).distinct(), col(id_col) == col(key), "leftsemi")
+            .groupBy(id_col)
+            .agg(F.count("*").alias(out))
+            .withColumnRenamed(id_col, key)
         )
-        .hint("merge")
-        .join(
-            sh_c.select(col(id_col).alias("__cid"), "sh")
-            .join(cand.select("__cid").distinct(), "__cid", "leftsemi")
-            .hint("merge"),
-            ["__cid", "sh"],
-        )
-        .groupBy("__bid", "__cid")
-        .agg(F.count("*").alias("__i"))
-    )
+
+    nb, nc = cut_sizes(sh_b, "__bid", "__nb"), cut_sizes(sh_c, "__cid", "__nc")
+    # the confirm joins are pinned to sort-merge (unbounded key skew under
+    # mass duplication — see _pinned_smj_intersection); the evenly-keyed
+    # band/count joins above and below stay hash-convertible
+    inter = _pinned_smj_intersection(cand, sh_b, sh_c, "__bid", "__cid", id_col, "__i")
     confirmed = (
         inter.join(nb, "__bid")
         .join(nc, "__cid")
@@ -1298,63 +1258,33 @@ def rowwise_lsh_bands(
     runs as higher-order functions over each document's own token array, so
     the expression contains NO aggregation and is legal on a STREAMING
     DataFrame (Structured Streaming forbids aggregate-then-join plans; the
-    batch minhash path groups exploded shingles). Values are IDENTICAL to
-    shingle_hashes → minhash_signatures → lsh_bands — same shingle md5,
-    same (a,b) lane family, same polynomial band fold — so a stream probing
-    a batch-built band index joins on equal keys.
+    batch minhash path groups exploded shingles). Values equal
+    shingle_hashes → minhash_signatures → lsh_bands by construction — the
+    same _gram_arrays, shingle_hash_expr, _lane and _band_fold — so a stream
+    probing a batch-built band index joins on equal keys.
 
     Scale: state-free map stage; each row costs n_hashes array scans of its
     own distinct-shingle array. The batch path stays preferable for batch
     jobs (shuffle-level min() beats 16 per-row array passes when documents
     are huge); this exists for stream-side sketching.
 
-    Round-11 (the shingles() finding applied to the streaming path): HOFs
+    Round-11 (the _gram_arrays finding applied to the streaming path): HOFs
     are CodegenFallback AND interpreted evaluation has no subexpression
-    elimination, so the old single inlined generator re-tokenized each row
-    once per textual `split(` occurrence and re-reduced `sh % 2^32` once
-    per lane per shingle. The token array, the 32-bit-reduced shingle-hash
-    array (one md5 + one mod per shingle), and the band-entry array are
-    now PROJECTED stepwise, and the explode runs over a plain column.
-    Values bit-identical: lane_i = min((a_i·(sh mod 2^32) + b_i) mod P)
-    with the identical md5-derived sh — the mod is applied once per
-    shingle instead of once per lane per shingle.
+    elimination, so an inlined generator re-tokenizes each row once per
+    textual `split(` occurrence and re-reduces `sh % 2^32` once per lane per
+    shingle. The gram array, the 32-bit-reduced shingle-hash array (one md5
+    + one mod per shingle) and the band-entry array are PROJECTED stepwise,
+    and the explode runs over a plain column. The mod applied once per
+    shingle gives the same lane_i = min((a_i·(sh mod 2^32) + b_i) mod P).
     """
-    rows = n_hashes // bands
-    w = words_expr(col(text_col))
-    toks = df.select(col(id_col), w.alias("__ws")).filter(F.size("__ws") >= n)
-    wsc = col("__ws")
-    ln = F.size(wsc) - (n - 1)
-    grams = F.slice(wsc, 1, ln)
-    for j in range(1, n):
-        grams = F.zip_with(
-            grams, F.slice(wsc, j + 1, ln), lambda a, b: F.concat(a, F.lit(" "), b)
-        )
-    s32_arr = F.transform(
-        F.array_distinct(grams),
-        lambda g: F.conv(F.substring(F.md5(g), 1, 15), 16, 10).cast("long")
-        % F.lit(4294967296),
-    )
-    hashed = toks.select(col(id_col), s32_arr.alias("__s32"))
-
-    def _lane(a, b):
-        # separate factory: pyspark reads the lambda's SIGNATURE to bind HOF
-        # variables, so default-arg closure capture would read as a 3-arg HOF
-        return lambda s32: (F.lit(a) * s32 + F.lit(b)) % F.lit(MINHASH_PRIME)
-
+    s32_arr = F.transform("__g", lambda g: shingle_hash_expr(g) % F.lit(_TWO32))
+    hashed = _gram_arrays(df, text_col, id_col, n).select(col(id_col), s32_arr.alias("__s32"))
     lanes = [
         F.array_min(F.transform(col("__s32"), _lane(a, b)))
         for a, b in minhash_lane_params(n_hashes)
     ]
-    entries = []
-    for bnd in range(bands):
-        acc = lanes[bnd * rows]
-        for r in range(1, rows):
-            acc = (acc * F.lit(1000003) + lanes[bnd * rows + r]) % F.lit(MINHASH_PRIME)
-        entries.append(F.struct(F.lit(bnd).alias("band_id"), acc.alias("band_sig")))
-    banded = hashed.select(col(id_col), F.array(*entries).alias("__bands"))
-    return banded.select(col(id_col), F.explode("__bands").alias("bd")).select(
-        id_col, col("bd.band_id"), col("bd.band_sig")
-    )
+    banded = hashed.select(col(id_col), _band_fold(lanes, bands).alias("__bands"))
+    return _explode_bands(banded, id_col, col("__bands"))
 
 
 def editdist_confirm(

@@ -532,6 +532,15 @@ def test_pipeline_operators_as_sql_table_functions(spark, sf_dir):
         sess.sql("SELECT * FROM not_an_op(tpch_documents)").collect()
 
 
+def test_lsh_pairs_door_rejects_bands_not_dividing_lanes(spark, sf_dir):
+    # band settings arrive from outside through the door: a band count that
+    # does not divide the lanes is an error, not a silently different index
+    sess = EngineSession(spark)
+    sess.register_parquet_source("tpch", sf_dir, tables=["documents"])
+    with pytest.raises(ValueError, match="multiple of bands"):
+        sess.sql("SELECT * FROM lsh_pairs(tpch_documents, n_hashes = 16, bands = 32)")
+
+
 def test_new_pipeline_table_functions_sql_door(spark, sf_dir):
     sess = EngineSession(spark)
     sess.register_parquet_source("tpch", sf_dir, tables=["documents", "embeddings"])

@@ -366,26 +366,6 @@ def test_jaccard_size_prune_branch(spark):
     assert [tuple(r) for r in got_b.collect()] == want_b
 
 
-def test_jaccard_hot_shingle_predrop_matches_default(spark):
-    """Round-11 (ADVICE item): the opt-in hot-shingle pre-drop (count pass
-    + leftsemi before collect_list, bounding every aggregation buffer at
-    max_df ids) must be output-identical to the default plan, including on
-    a corpus with a corpus-wide hot shingle — the exact adversarial memory
-    case the option exists for."""
-    from mindsdb_spark.operators.dedup import jaccard_topk_pairs, shingle_hashes
-
-    rows = [(i, f"common phrase here u{i}a u{i}b u{i}c") for i in range(300)]
-    rows += [(300, "alpha beta gamma delta epsilon"),
-             (301, "alpha beta gamma delta epsilon")]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    sh = shingle_hashes(docs)
-    want = [tuple(r) for r in jaccard_topk_pairs(sh, k=50, max_df=100).collect()]
-    got_df = jaccard_topk_pairs(sh, k=50, max_df=100, hot_predrop=True)
-    plan = got_df._jdf.queryExecution().optimizedPlan().toString()
-    assert "LeftSemi" in plan, "pre-drop path did not fire"
-    assert [tuple(r) for r in got_df.collect()] == want
-
-
 def test_jaccard_prefix_path_matches_unpruned(spark, monkeypatch):
     # round-10: a dup-class-certified bound (ndup >= k -> q = 1e6 >=
     # _PREFIX_MIN_Q) routes pair generation through the PPJoin prefix
@@ -1378,3 +1358,51 @@ def test_lsh_chunked_buckets_match_unchunked(spark):
     got_eq = {(r.doc_a, r.doc_b)
               for r in lsh_candidate_pairs(sh, chunk_cap=64).collect()}
     assert got_eq == ref
+
+
+def test_lsh_missing_size_estimate_builds_chunked_index(spark, monkeypatch):
+    """The chunk gate fails closed: when Catalyst's size estimate is
+    unavailable, lsh_candidate_pairs builds the bounded chunked index, with
+    the same candidate set as the single-array plan."""
+    from mindsdb_spark.operators import dedup
+    from mindsdb_spark.operators.dedup import lsh_candidate_pairs, shingle_hashes
+
+    base = "the quick brown fox jumps over the lazy dog again and again today"
+    rows = [(i, base) for i in range(12)]
+    rows += [(100, "spark shuffles sort merge join partitions memory spill"),
+             (101, "spark shuffles sort merge join partitions memory spilled"),
+             (200, "an entirely unrelated document about png scanline filters")]
+    sh = shingle_hashes(spark.createDataFrame(rows, "doc_id long, text string"))
+    ref = {(r.doc_a, r.doc_b) for r in lsh_candidate_pairs(sh, chunk_cap=0).collect()}
+
+    monkeypatch.setattr(dedup, "_plan_size_estimate", lambda df: None)
+    got_df = lsh_candidate_pairs(sh)
+    assert "__chunk" in got_df._jdf.queryExecution().optimizedPlan().toString()
+    assert {(r.doc_a, r.doc_b) for r in got_df.collect()} == ref
+
+
+def test_lsh_band_settings_must_divide_lanes(spark):
+    """n_hashes must be a positive multiple of bands: 16 lanes in 32 bands
+    would key every band on lane h0 (389 pairs instead of 3 on a 1k-doc
+    corpus), and 10 lanes in 4 bands would silently drop two lanes."""
+    from mindsdb_spark.operators.dedup import (
+        incremental_dedup,
+        lsh_candidate_pairs,
+        rowwise_lsh_bands,
+        shingle_hashes,
+    )
+
+    docs = spark.createDataFrame(
+        [(1, "one two three four"), (2, "one two three five"), (3, "one two three four")],
+        "doc_id long, text string",
+    )
+    sh = shingle_hashes(docs)
+    for n_hashes, bands in ((16, 32), (10, 4), (16, 0), (0, 4)):
+        with pytest.raises(ValueError, match="multiple of bands"):
+            lsh_candidate_pairs(sh, n_hashes=n_hashes, bands=bands)
+    with pytest.raises(ValueError, match="multiple of bands"):
+        rowwise_lsh_bands(docs, n_hashes=10, bands=4)
+    with pytest.raises(ValueError, match="multiple of bands"):
+        incremental_dedup(docs, docs, n_hashes=16, bands=32)
+    got = {(r.doc_a, r.doc_b) for r in lsh_candidate_pairs(sh, n_hashes=8, bands=8).collect()}
+    assert (1, 3) in got  # one-lane bands are valid

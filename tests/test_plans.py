@@ -373,6 +373,18 @@ def test_generate_over_computed_array_no_expression_duplication(spark, sf_dir):
     assert optimized.count("md5(") == 1
 
 
+@pytest.mark.parametrize("op", ["shingle_hashes", "rowwise_lsh_bands"])
+def test_gram_operators_tokenize_once(spark, sf_dir, op):
+    # both read the token array projected once by dedup._gram_arrays:
+    # `split(` appears only in that projection and in the size filter pushed
+    # below it, not once per occurrence in the interpreted gram chain
+    from mindsdb_spark.catalog import load_table
+    from mindsdb_spark.operators import dedup
+
+    out = getattr(dedup, op)(load_table(spark, sf_dir, "documents"))
+    assert out._jdf.queryExecution().optimizedPlan().toString().count("split(") <= 2
+
+
 def test_p23_large_shape_matches_native_rollup(spark, sf_dir, monkeypatch):
     # p23 is size-keyed (round-7): above the lineitem-bytes threshold the
     # ROLLUP is computed as finest-level agg + re-aggregation of its ~6

@@ -258,58 +258,3 @@ class SourceCatalog:
 
     def tables(self) -> list[tuple[str, str]]:
         return [(src, t) for src, tbls in self._sources.items() for t in tbls]
-
-
-def write_bucketed(
-    df: DataFrame,
-    name: str,
-    key: str | list[str],
-    buckets: int = 16,
-    sort_by: "list[str] | None" = None,
-) -> None:
-    """Persist ``df`` as a bucketed, bucket-sorted parquet table in the
-    session catalog.
-
-    Bucketing pre-shuffles the data ONCE at write time: every later join
-    or aggregation keyed on ``key`` between tables with the same bucket
-    count reads co-located buckets and plans with NO Exchange — the
-    standard way to amortize the dominant shuffle of a repeated big-table
-    join at 100 TB (asserted in tests/test_plans.py). The reference has no
-    layout control at all; its federated frames always re-hash in memory.
-    """
-    keys = [key] if isinstance(key, str) else list(key)
-    # sort_by: None sorts by the bucket keys (the co-located-join default);
-    # [] skips the sort; an explicit list sorts by those columns
-    scols = keys if sort_by is None else list(sort_by)
-    _clear_stale_table_location(df.sparkSession, name)
-    # pre-repartition on the bucket keys so each task holds exactly one
-    # bucket's rows (Spark's bucket id and repartition both hash with
-    # Murmur3 mod n): without this, every input task writes up to
-    # `buckets` files — nTasks x nBuckets small files, and nTasks
-    # concurrent sorter+writer sets, which exhausts execution memory on
-    # wide inputs (observed at the 600M-row sf100 lineitem write)
-    w = (
-        df.repartition(buckets, *keys)
-        .write.format("parquet")
-        .mode("overwrite")
-        .bucketBy(buckets, *keys)
-    )
-    if scols:
-        w = w.sortBy(*scols)
-    w.saveAsTable(name)
-
-
-def _clear_stale_table_location(spark: SparkSession, name: str) -> None:
-    """saveAsTable refuses a managed-table name whose warehouse directory
-    survives from a DIFFERENT session (LOCATION_ALREADY_EXISTS — the
-    metastore is per-session Derby, the directory is not). Drop any
-    current-session table, then remove an orphaned location."""
-    import shutil
-
-    spark.sql(f"DROP TABLE IF EXISTS {name}")
-    warehouse = spark.conf.get(
-        "spark.sql.warehouse.dir", os.path.join(os.getcwd(), "spark-warehouse")
-    ).removeprefix("file:")
-    stale = os.path.join(warehouse, name.lower())
-    if os.path.isdir(stale):
-        shutil.rmtree(stale, ignore_errors=True)

@@ -175,21 +175,27 @@ _ALTER_RE = re.compile(
     re.IGNORECASE | re.DOTALL,
 )
 
+# MySQL type name → Spark SQL type (reference MYSQL_DATA_TYPE,
+# mysql_proxy/libs/constants/mysql.py:159-189). Every name not listed —
+# the CHAR/TEXT families, JSON, ENUM, SET, TIME (Spark has no TIME type) —
+# is carried as string, as the reference's TEXT fallback does
 _SQL_TYPE_MAP = {
-    "int": "int", "integer": "int", "mediumint": "int",
+    "int": "int", "integer": "int", "mediumint": "int", "year": "int",
     "bigint": "long", "smallint": "short", "tinyint": "byte",
     "float": "float", "real": "float", "double": "double",
-    "text": "string", "varchar": "string", "char": "string", "string": "string",
-    "json": "string", "enum": "string",
     "date": "date", "datetime": "timestamp", "timestamp": "timestamp",
     "boolean": "boolean", "bool": "boolean",
-    "blob": "binary", "binary": "binary", "varbinary": "binary",
+    "binary": "binary", "varbinary": "binary", "blob": "binary",
+    "tinyblob": "binary", "mediumblob": "binary", "longblob": "binary",
+    # VECTOR → array<float> (vectordatabase_handler.py embeddings column)
+    "vector": "array<float>",
 }
 
 
 def _sql_type_to_spark(t: str) -> str:
-    """MySQL column type → Spark SQL type (reference type map shape:
-    integrations/libs/handler_helpers + integration_datanode DDL render)."""
+    """MySQL column type → Spark SQL type, for CREATE TABLE and ALTER TABLE
+    ADD COLUMN (reference type map shape: integrations/libs/handler_helpers
+    + integration_datanode DDL render)."""
     t = t.strip().lower()
     # strip trailing column attributes (NOT NULL, DEFAULT ..., PRIMARY KEY)
     head = t.split("(")[0].split()[0] if t else "string"
@@ -2512,12 +2518,6 @@ class EngineSession:
         self._model_versions[n] = [model]
         self._model_active[n] = 1
 
-    def register_ml_engine(self, name: str, factory) -> None:
-        """Register a training engine for CREATE MODEL: ``factory(name,
-        train_df, target, params) -> ModelSpec`` (the reference's
-        CREATE ML_ENGINE surface, command_executor.py:1171-1258)."""
-        self._ml_engines[name.lower()] = factory
-
     def _model_of(self, name: str):
         """Resolve a model reference, honoring a numeric version suffix —
         ``model.2`` selects version 2 the way the reference resolves
@@ -2861,7 +2861,7 @@ class EngineSession:
 
     def _apply_last(self, s: str) -> str:
         """Rewrite `<col> > LAST` into a watermark comparison and advance
-        the stored watermark — the SQL door for LastState.filter_last.
+        the watermark stored in ``LastState``.
 
         State is keyed by (normalized query text, column), mirroring the
         reference's per-query context (context_controller.py:293-345). The

@@ -13,16 +13,14 @@ Reference semantics re-expressed Spark-first:
   dcg at 417-425).
 
 Scale posture: chunking is a generator-free `sequence`+`explode` (pure
-whole-stage codegen — no Python in the loop); embedding is expressed as
-JVM-side hash arithmetic for the deterministic test embedder and as an
-Arrow-batched pandas UDF hook for a real model; upsert is one left-anti
-join + append (MERGE shape, shuffle keyed on the id); metrics are plain
-aggregations. Nothing collects to the driver.
+whole-stage codegen — no Python in the loop); embedding is JVM-side hash
+arithmetic (the deterministic embedders and hashed TF-IDF); upsert is one
+left-anti join + append (MERGE shape, shuffle keyed on the id); metrics are
+plain aggregations. Nothing collects to the driver.
 """
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -89,7 +87,7 @@ def fake_embed(df: DataFrame, text_col: str = "chunk_text", dim: int = 16) -> Da
     test_knowledge_base.py); this is the distributed analog — xxhash64 per
     (text, lane) stays entirely inside whole-stage codegen, so the
     "embedding" stage has the same plan shape as a real pandas-UDF model
-    without leaving the JVM. Swap in `embed_with` for a real model.
+    without leaving the JVM.
     """
     lanes = [
         (F.pmod(F.xxhash64(col(text_col), F.lit(i)), F.lit(1000)) / 500.0 - 1.0).cast("float")
@@ -330,23 +328,6 @@ def resolve_embedder(name):
     return {"md5": md5_embed, "hash": hash_embed}.get(name, fake_embed)
 
 
-def embed_with(df: DataFrame, embed_fn, text_col: str = "chunk_text") -> DataFrame:
-    """Embed with a user model via an Arrow-batched pandas iterator UDF.
-
-    ``embed_fn: list[str] -> list[list[float]]`` is called once per Arrow
-    batch (the reference embeds in client-side batches,
-    controller.py:647-983 — here batching is per-partition-batch and
-    parallel across executors).
-    """
-    from pyspark.sql.types import ArrayType, FloatType
-
-    @F.pandas_udf(ArrayType(FloatType()))
-    def _embed(texts: pd.Series) -> pd.Series:
-        return pd.Series(embed_fn(texts.tolist()))
-
-    return df.withColumn("embedding", _embed(col(text_col)))
-
-
 def kb_upsert(existing: DataFrame, incoming: DataFrame, id_col: str = "chunk_id") -> DataFrame:
     """MERGE by content-hash id: incoming rows replace same-id rows.
 
@@ -407,42 +388,3 @@ def retrieval_metrics(
         F.coalesce(1.0 / col("first_rel"), F.lit(0.0)).alias("mrr"),
         F.when(col("n_rel") > 0, col("dcg") / idcg).otherwise(F.lit(0.0)).alias("ndcg"),
     )
-
-
-def kb_stream_insert(
-    kb: dict,
-    stream_df: DataFrame,
-    checkpoint_dir: str,
-) -> DataFrame:
-    """Continuous KB ingestion: documents arriving on a STREAM chunk →
-    embed → content-hash upsert per micro-batch via ``foreachBatch``, with
-    Spark's streaming checkpoint providing exactly-once batch tracking —
-    the Structured-Streaming form of the reference's partitioned+resumable
-    KB insert (controller.py:647-983; the engine's `INSERT INTO <kb>`
-    batched_insert covers the batch door, this covers live feeds — a
-    capability beyond the reference's polling jobs).
-
-    Re-running against the same checkpoint reprocesses nothing; new files
-    in the source directory become new micro-batches. Returns the updated
-    chunk store."""
-    embed = resolve_embedder(kb.get("embedder"))
-    chunk_kw = {}
-    if "chunk_size" in kb:
-        chunk_kw["chunk_size"] = kb["chunk_size"]
-    if "chunk_overlap" in kb:
-        chunk_kw["overlap"] = kb["chunk_overlap"]
-
-    def _batch(df: DataFrame, _batch_id: int) -> None:
-        incoming = embed(
-            chunk_documents(df, **chunk_kw), dim=kb["dim"]
-        ).localCheckpoint(eager=True)
-        kb["store"] = kb_upsert(kb["store"], incoming)
-
-    q = (
-        stream_df.writeStream.foreachBatch(_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return kb["store"]

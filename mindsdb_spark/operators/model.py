@@ -47,30 +47,6 @@ class ModelSpec:
     features: list = field(default_factory=list)
 
 
-def split_model_conditions(
-    conditions: list[tuple[str, str, object]], model_cols: set[str]
-) -> tuple[list[tuple[str, str, object]], dict[str, object]]:
-    """Split an ANDed condition list between the data table and the model.
-
-    Reference behavior (query_planner.py:569-648): equality conditions on
-    predictor output columns become model parameters (the ``row_dict``);
-    everything else is pushed into the table fetch. Non-equality conditions
-    on model columns stay as post-apply filters — returned in the table
-    list with a marker-free contract: the caller applies them AFTER
-    apply_model since the columns don't exist before it. The reference
-    skips the split entirely when OR is present; callers with OR trees
-    simply don't call this.
-    """
-    table_conds: list[tuple[str, str, object]] = []
-    params: dict[str, object] = {}
-    for col_name, op, value in conditions:
-        if col_name in model_cols and op == "=":
-            params[col_name] = value
-        else:
-            table_conds.append((col_name, op, value))
-    return table_conds, params
-
-
 def apply_model(
     df: DataFrame,
     model: ModelSpec,

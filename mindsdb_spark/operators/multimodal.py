@@ -181,41 +181,6 @@ def resize_images(media: DataFrame, width: int, height: int, fake: bool = True) 
     return media.mapInPandas(run, schema=MEDIA_SCHEMA)
 
 
-FRAME_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType()),
-        StructField("frame_idx", LongType()),
-        StructField("frame", BinaryType()),
-    ]
-)
-
-
-def sample_frames(media: DataFrame, every_n_bytes: int = 64, max_frames: int = 8) -> DataFrame:
-    """Frame sampling: one media row fans out to ≤ max_frames frame rows.
-
-    The row-to-many-rows shape of video frame extraction, expressed as
-    mapInPandas so the fan-out happens executor-side (never through the
-    driver) and downstream per-frame stages parallelize on the exploded
-    rows. STUB: without ffmpeg, a "frame" is a deterministic byte slice of
-    the payload — the fan-out contract (schema, ordering, bounded frames
-    per row) is the real plumbing.
-    """
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, idxs, frames = [], [], []
-            for _, r in pdf.iterrows():
-                content = r["content"] or b""
-                n = min(max_frames, max(len(content) // every_n_bytes, 1))
-                for i in range(n):
-                    ids.append(r["media_id"])
-                    idxs.append(i)
-                    frames.append(bytes(content[i * every_n_bytes : (i + 1) * every_n_bytes]))
-            yield pd.DataFrame({"media_id": ids, "frame_idx": idxs, "frame": frames})
-
-    return media.mapInPandas(run, schema=FRAME_SCHEMA)
-
-
 # --- audio: synthetic PCM + REAL windowed DSP features -----------------------
 # The container has no audio files or codec libraries, so the SIGNAL is
 # synthesized deterministically — but unlike decode_media's stub, the
@@ -267,31 +232,12 @@ def synth_pcm(
     )
 
 
-# --- WAV (RIFF/PCM) container: stdlib encode/decode --------------------------
+# --- WAV (RIFF/PCM) container: stdlib decode ---------------------------------
 # The audio twin of the PNG/JPEG story (round-8): WAV is an uncompressed
 # RIFF container, fully parseable on the standard library, so real .wav
 # payloads decode in any environment; compressed codecs (MP3/AAC — real
 # entropy coders) stay honestly env-gated.
 
-def encode_wav(pcm: bytes, sample_rate: int = 16000, channels: int = 1,
-               bits: int = 16) -> bytes:
-    """Wrap raw little-endian PCM in a RIFF/WAVE container (format 1)."""
-    import struct
-
-    if bits not in (8, 16, 24, 32):
-        raise ValueError(f"wav: unsupported bit depth {bits}")
-    block = channels * (bits // 8)
-    if len(pcm) % block:
-        raise ValueError(
-            f"wav: pcm length {len(pcm)} is not a whole number of "
-            f"{block}-byte frames ({channels} ch x {bits} bits)"
-        )
-    fmt = struct.pack(
-        "<HHIIHH", 1, channels, sample_rate, sample_rate * block, block, bits
-    )
-    body = b"WAVE" + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-    body += b"data" + struct.pack("<I", len(pcm)) + pcm
-    return b"RIFF" + struct.pack("<I", len(body)) + body
 
 
 def decode_wav(content: bytes) -> tuple:
@@ -328,63 +274,6 @@ def decode_wav(content: bytes) -> tuple:
     if fmt is None or pcm is None:
         raise ValueError("wav: missing fmt/data chunk")
     return fmt[0], fmt[1], fmt[2], pcm
-
-
-def synth_wav(df: DataFrame, id_col: str = "doc_id", n_samples: int = 2000,
-              sample_rate: int = 16000) -> DataFrame:
-    """synth_pcm's closed-form samples wrapped as REAL .wav payloads — the
-    d52 pixel-formula pattern for audio: the container round-trips through
-    a genuine RIFF file any player opens, while the samples stay
-    oracle-recomputable."""
-    pcm = synth_pcm(df, id_col=id_col, n_samples=n_samples)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = pdf.copy()
-            out["content"] = out["content"].map(
-                lambda c: encode_wav(bytes(c), sample_rate=sample_rate)
-            )
-            out["mime"] = "audio/wav"
-            yield out
-
-    return pcm.mapInPandas(run, schema=MEDIA_SCHEMA)
-
-
-def decode_wav_media(media: DataFrame) -> DataFrame:
-    """WAV payloads → raw pcm16le payloads with the rate in the mime, so
-    `audio_features` chains directly on real .wav files. Corrupt payloads
-    drop their row (the 100 TB contract shared by the image decoders)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, blobs, mimes, ws, hs = [], [], [], [], []
-            for media_id, content in zip(pdf["media_id"], pdf["content"]):
-                try:
-                    rate, channels, bits, pcm = decode_wav(bytes(content))
-                except Exception:
-                    continue
-                if bits != 16 or channels != 1:
-                    # audio_features consumes mono pcm16; other layouts
-                    # would need a mixdown stage — skip, don't garble
-                    continue
-                ids.append(media_id)
-                blobs.append(pcm)
-                mimes.append(f"audio/pcm;rate={rate};bits=16")
-                ws.append(None)
-                hs.append(None)
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "content": blobs,
-                    "mime": mimes,
-                    "meta_width": pd.Series(ws, dtype="object"),
-                    "meta_height": pd.Series(hs, dtype="object"),
-                }
-            )
-
-    return media.select(
-        "media_id", "content", "mime", "meta_width", "meta_height"
-    ).mapInPandas(run, schema=MEDIA_SCHEMA)
 
 
 AUDIO_FEATURE_SCHEMA = StructType(

@@ -1,6 +1,6 @@
 """Knowledge-base search operators: BM25 keyword search, exact vector
 search, hybrid blending, boolean content algebra, metadata filtering, and
-the rerank stage shape.
+the rerank over-fetch size.
 
 Reference semantics re-expressed Spark-first:
 
@@ -23,8 +23,6 @@ filter.
 """
 
 from __future__ import annotations
-
-import math
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -103,19 +101,6 @@ def bm25_scores(
         )
     )
     return contrib.groupBy(id_col).agg(F.sum("c").alias("bm25"))
-
-
-def bm25_topk(
-    df: DataFrame,
-    query_terms: list[str],
-    k: int = KB_DEFAULT_LIMIT,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Keyword search top-k: (id, bm25) ordered, deterministic tie-break."""
-    k = min(k, KB_MAX_LIMIT)
-    scores = bm25_scores(df, query_terms, text_col, id_col)
-    return scores.orderBy(col("bm25").desc(), col(id_col)).limit(k)
 
 
 def boolean_search(
@@ -197,22 +182,6 @@ def hybrid_topk(
 def rerank_candidates(k: int) -> int:
     """Over-fetch size before reranking: min(2k, k+30) (controller.py:362-367)."""
     return min(2 * k, k + 30)
-
-
-def rerank_topk(
-    candidates: DataFrame,
-    scorer,
-    k: int = KB_DEFAULT_LIMIT,
-    id_col: str = "doc_id",
-    threshold: float | None = None,
-) -> DataFrame:
-    """Rerank stage shape: score candidates with a (mockable) model, filter
-    by relevance threshold, keep top-k. `scorer(df) -> df + relevance` is a
-    pandas-UDF stage in production; tests inject a deterministic stub."""
-    scored = scorer(candidates)
-    if threshold is not None:
-        scored = scored.filter(col("relevance") >= threshold)
-    return scored.orderBy(col("relevance").desc(), col(id_col)).limit(k)
 
 
 def rrf_fusion(

@@ -14,10 +14,12 @@ Spark-first re-expression:
   (per-partition top-k, k-row driver merge — no global sort, no collect).
   This is the deterministic oracle-checked baseline and scales linearly with
   executors.
-* ``lsh_bucket_topk`` — the approximate scale path: random-hyperplane LSH
-  (SimHash family) buckets vectors so each query probes only its bucket,
-  turning the all-pairs scan into a bucket-equi-join that shuffles on the
-  bucket key.
+* ``ivf_topk`` / ``ivf_search`` / ``ivf_read_probe`` — the approximate
+  scale path: k-means cells (IVF) assign each vector to a centroid, and a
+  query scans only the rows of its ``n_probes`` nearest cells.
+* ``pq_topk`` — product-quantization ADC top-k over a deterministic
+  codebook; ``allpairs_topk`` and ``knn_classify`` are the blocked
+  all-pairs and labeled-neighbor joins.
 
 All arithmetic is double precision (embeddings are array<float> on disk).
 """
@@ -78,25 +80,6 @@ def cosine_topk(
     controller.py:356-360). Deterministic: ties broken by id_col."""
     sim = cosine_similarity(col(vec_col), query).alias(sim_col)
     return df.select("*", sim).orderBy(col(sim_col).desc(), col(id_col)).limit(k)
-
-
-def random_hyperplanes(dim: int, n_planes: int, seed: int = 42) -> list[list[float]]:
-    """Deterministic Gaussian hyperplanes for sign-LSH (driver-side, tiny)."""
-    import random
-
-    rng = random.Random(seed)
-    return [[rng.gauss(0.0, 1.0) for _ in range(dim)] for _ in range(n_planes)]
-
-
-def lsh_bucket(vec_col: Column, planes: list[list[float]]) -> Column:
-    """Sign-LSH bucket id: bit i = sign(v · plane_i). Pure JVM expression."""
-    v = vec_col.cast("array<double>")
-    bucket = F.lit(0)
-    for i, plane in enumerate(planes):
-        p = _lit_vec(plane)
-        bit = F.when(_dot(v, p) >= 0, F.lit(1 << i)).otherwise(F.lit(0))
-        bucket = bucket + bit
-    return bucket
 
 
 def _estimate_rows(df: DataFrame, vec_col: str) -> int:
@@ -202,60 +185,6 @@ def allpairs_topk(
     return local.orderBy(col("sim").desc(), "id_a", "id_b").limit(k)
 
 
-def _knn_votes_hof(
-    labeled: DataFrame,
-    queries: DataFrame,
-    k: int,
-    vec_col: str,
-    id_col: str,
-    label_col: str,
-) -> DataFrame:
-    """Pure-JVM formulation of ``_knn_votes`` (broadcast query join +
-    zip_with/aggregate cosine + rank window). Semantically identical to
-    the GEMM path and kept for the A/B record: at sf100 (2M labeled
-    vectors x 64 dims, 100 queries) the per-element HOF lambdas ran 249 s
-    vs DuckDB's native list kernel at 37 s (6.7x) — the round-10 study
-    (BENCH_sf100_relational.json:knn_classify_study_r10) is what motivated the GEMM default.
-
-    Zero-norm guard: a zero-norm vector (failed-embedding rows are a fact
-    of real corpora) makes cosine 0/0 — under ANSI mode a plain division
-    KILLS the whole query (DIVIDE_BY_ZERO), and with ANSI off the NaN
-    ranks ABOVE +Inf in a descending sort, making one zero vector every
-    query's top neighbor. ``try_divide`` → NULL → ``coalesce(-2)`` ranks
-    such pairs below every legitimate cosine (≥ -1) instead."""
-    from pyspark.sql.window import Window
-
-    q = queries.select(
-        col(id_col).alias("__qid"),
-        col(vec_col).cast("array<double>").alias("__qv"),
-    )
-    data = labeled.select(
-        col(id_col).alias("__nid"),
-        col(label_col).alias("__lbl"),
-        col(vec_col).cast("array<double>").alias("__dv"),
-    )
-    sim = F.coalesce(
-        F.nanvl(
-            F.try_divide(
-                _dot(col("__dv"), col("__qv")),
-                _norm(col("__dv")) * _norm(col("__qv")),
-            ),
-            F.lit(-2.0),
-        ),
-        F.lit(-2.0),
-    )
-    w = Window.partitionBy("__qid").orderBy(col("__sim").desc(), col("__nid"))
-    neighbors = (
-        data.join(F.broadcast(q), col("__nid") != col("__qid"))
-        .withColumn("__sim", sim)
-        .withColumn("__rnk", F.row_number().over(w))
-        .filter(col("__rnk") <= k)
-    )
-    return neighbors.groupBy("__qid", "__lbl").agg(
-        F.count("*").alias("__n"), F.sum("__sim").alias("__s")
-    )
-
-
 def _knn_votes(
     labeled: DataFrame,
     queries: DataFrame,
@@ -278,15 +207,17 @@ def _knn_votes(
     candidate set (≤ k·|Q| rows per Arrow batch) finishes the exact global
     top-k; per-batch top-k is lossless because every global top-k member
     is also top-k within its own batch. The per-element JVM-HOF
-    formulation this replaces (``_knn_votes_hof``) measured 6.7x slower
-    than DuckDB at sf100; the GEMM path moves the 200M-similarity pass
-    into BLAS while keeping everything after the kernel in Catalyst.
+    formulation this replaced (broadcast query join + zip_with/aggregate
+    cosine + rank window) measured 6.7x slower than DuckDB at sf100
+    (BENCH_sf100_relational.json:knn_classify_study_r10); the GEMM path
+    moves the 200M-similarity pass into BLAS while keeping everything
+    after the kernel in Catalyst.
 
     Semantics preserved from the HOF path: self-pairs (same id) are
     excluded, zero-norm/NULL vectors score -2.0 (below any real cosine,
     still rankable), neighbor ties break by id ascending. For corpus-scale
-    query sides, pre-bucket with ``lsh_bucket``/IVF cells and apply per
-    bucket — same discipline as the dedup family."""
+    query sides, pre-bucket with IVF cells (``ivf_assign``) and apply per
+    cell — same discipline as the dedup family."""
     import numpy as np
     import pandas as pd
     from pyspark.sql import types as T
@@ -400,14 +331,14 @@ def knn_classify(
     Training-data extension; no reference analog (the reference delegates
     classification to its ML handlers).
 
-    Scale shape: the QUERY batch broadcasts (it is the small side — a
-    labeling pass classifies a batch against the full labeled corpus),
-    the labeled corpus streams through ONE scan, a rank window partitioned
-    by query id bounds per-query state to k rows, and the vote is a
-    (query, label) count argmax — all JVM higher-order functions inside
-    whole-stage codegen, no Python on the data path. For corpus-scale
-    query sides, pre-bucket with ``lsh_bucket``/IVF cells and apply per
-    bucket (the same candidate-bounding discipline as the dedup family).
+    Scale shape: the QUERY batch is the small side (a labeling pass
+    classifies a batch against the full labeled corpus) and rides into
+    ``_knn_votes``' GEMM kernel; the labeled corpus streams through ONE
+    scan, a rank window partitioned by query id bounds per-query state to
+    k rows, and the vote is a (query, label) count argmax. For
+    corpus-scale query sides, pre-bucket with IVF cells (``ivf_assign``)
+    and apply per cell (the same candidate-bounding discipline as the
+    dedup family).
 
     Deterministic: neighbor ties break by neighbor id; vote ties break by
     (count desc, summed similarity desc, label asc). ``weighted=True``
@@ -608,138 +539,6 @@ def _l2sq(a: Column, b: Column) -> Column:
     )
 
 
-def _pq_side_row(
-    df: DataFrame, vec_col: str, id_col: str, m: int, n_codes: int, query_id: int | None
-):
-    """One broadcast row carrying the PQ codebook (and optionally the query),
-    pre-sliced per subspace: ``__cb`` is array[m] of array[n_codes] of
-    struct<k,sv>; codewords are the subvectors of the ``n_codes`` smallest-id
-    vectors (deterministic, oracle-checkable — swap in ``pq_train`` codebooks
-    for recall-tuned production; the plan shape is identical).
-
-    No driver collect: the side is a tiny filtered two-stage aggregate, and
-    everything downstream is a map stage over ``crossJoin(broadcast(side))``.
-    """
-    sid, v = col(id_col), col(vec_col).cast("array<double>")
-    side_filter = sid < n_codes
-    aggs = [
-        F.sort_array(
-            F.collect_list(
-                F.when(
-                    col("__sid") < n_codes,
-                    F.struct(col("__sid").cast("int").alias("k"), col("__sv").alias("cv")),
-                )
-            )
-        ).alias("__cb_raw")
-    ]
-    if query_id is not None:
-        side_filter = side_filter | (sid == query_id)
-        aggs.append(
-            F.first(F.when(col("__sid") == query_id, col("__sv")), ignorenulls=True).alias("__q")
-        )
-    side = (
-        df.filter(side_filter)
-        .select(sid.alias("__sid"), v.alias("__sv"))
-        .groupBy()
-        .agg(*aggs)
-    )
-    return side
-
-
-def pq_encode(
-    df: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    m: int = 4,
-    n_codes: int = 16,
-    dim: int = 64,
-    codebooks: list[list[list[float]]] | None = None,
-    out_col: str = "pq_codes",
-) -> DataFrame:
-    """Product-quantization encode: split each D-dim vector into ``m``
-    subvectors, assign each to its nearest (squared-L2) of ``n_codes``
-    codewords, emit ``array<int>`` of m codes — D floats (4·D bytes)
-    compress to m small ints, the property that makes a 100 TB embedding
-    table scannable: 64-dim float32 = 256 B/row becomes 4 B/row at m=4.
-
-    Zero shuffle: with explicit ``codebooks`` (from ``pq_train``) the whole
-    codebook is literal arrays inside one JVM expression and encoding is a
-    pure map stage; with ``codebooks=None`` the deterministic smallest-id
-    codebook rides in on one broadcast row (same map stage after a broadcast
-    nested-loop join of a 1-row side). Ties break toward the smaller code.
-
-    Reference analog: the KB vector store keeps raw float arrays
-    (mindsdb/integrations/libs/vectordatabase_handler.py:295-400 upserts
-    full embeddings); PQ is the scale path the reference lacks.
-    """
-    sub = dim // m
-    v = col(vec_col).cast("array<double>")
-    vsub = F.transform(
-        F.sequence(F.lit(0), F.lit(m - 1)), lambda mi: F.slice(v, mi * sub + 1, sub)
-    )
-    if codebooks is not None:
-        cb = F.expr(
-            "array("
-            + ",".join(
-                "array("
-                + ",".join(
-                    f"named_struct('k',{k},'sv',array("
-                    + ",".join(f"{float(x)!r}D" for x in cw)
-                    + "))"
-                    for k, cw in enumerate(books)
-                )
-                + ")"
-                for books in codebooks
-            )
-            + ")"
-        )
-        base = df.withColumn("__cb", cb)
-    else:
-        side = _pq_side_row(df, vec_col, id_col, m, n_codes, None)
-        side = side.withColumn(
-            "__cb",
-            F.transform(
-                F.sequence(F.lit(0), F.lit(m - 1)),
-                lambda mi: F.transform(
-                    col("__cb_raw"),
-                    lambda c: F.struct(
-                        c["k"].alias("k"), F.slice(c["cv"], mi * sub + 1, sub).alias("sv")
-                    ),
-                ),
-            ),
-        ).select("__cb")
-        base = df.crossJoin(F.broadcast(side))
-    codes = F.zip_with(
-        vsub,
-        col("__cb"),
-        lambda vs, cws: F.array_min(
-            F.transform(cws, lambda c: F.struct(_l2sq(vs, c["sv"]).alias("d"), c["k"].alias("k")))
-        )["k"],
-    )
-    return base.withColumn(out_col, codes).drop("__cb")
-
-
-def pq_train(
-    df: DataFrame, vec_col: str = "embedding", m: int = 4, n_codes: int = 16,
-    dim: int = 64, seed: int = 42,
-) -> list[list[list[float]]]:
-    """Per-subspace MLlib KMeans codebooks (the recall-tuned production
-    quantizer). m distributed fits over sliced subvectors; only
-    m × n_codes × dim/m floats return to the driver — constant in data size.
-    """
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    sub = dim // m
-    v = col(vec_col).cast("array<double>")
-    books = []
-    for mi in range(m):
-        data = df.select(array_to_vector(F.slice(v, mi * sub + 1, sub)).alias("features"))
-        model = KMeans(k=n_codes, seed=seed + mi, maxIter=10).fit(data)
-        books.append([[float(x) for x in c] for c in model.clusterCenters()])
-    return books
-
-
 def pq_topk(
     df: DataFrame,
     vec_col: str = "embedding",
@@ -755,9 +554,7 @@ def pq_topk(
     row), and each encoded row's approximate distance is m table gathers +
     m-1 adds — no per-row vector math at all. This is the classic
     Jégou-style PQ search shape: scan cost per row is O(m), independent of
-    the original dimension, and the scan reads only the m-byte code column
-    at scale (column pruning drops the raw embedding entirely when the
-    codes are pre-materialized via ``pq_encode``).
+    the original dimension.
 
     Deterministic smallest-id codebook → oracle-checkable; the LUT distance
     fold and the encode argmin both use sequential left-folds so DuckDB
@@ -766,9 +563,26 @@ def pq_topk(
     sub = dim // m
     sid = col(id_col)
     v = col(vec_col).cast("array<double>")
-    side = _pq_side_row(df, vec_col, id_col, m, n_codes, query_id)
+    # one broadcast row carrying the codebook and the query, pre-sliced per
+    # subspace; no driver collect: the side is a tiny filtered two-stage
+    # aggregate, and everything downstream is a map stage over
+    # crossJoin(broadcast(side))
     side = (
-        side.withColumn(
+        df.filter((sid < n_codes) | (sid == query_id))
+        .select(sid.alias("__sid"), v.alias("__sv"))
+        .groupBy()
+        .agg(
+            F.sort_array(
+                F.collect_list(
+                    F.when(
+                        col("__sid") < n_codes,
+                        F.struct(col("__sid").cast("int").alias("k"), col("__sv").alias("cv")),
+                    )
+                )
+            ).alias("__cb_raw"),
+            F.first(F.when(col("__sid") == query_id, col("__sv")), ignorenulls=True).alias("__q"),
+        )
+        .withColumn(
             "__cb",
             F.transform(
                 F.sequence(F.lit(0), F.lit(m - 1)),
@@ -942,102 +756,6 @@ def ivf_read_probe(
     if where is not None:
         cand = cand.filter(F.expr(where) if isinstance(where, str) else where)
     return cosine_topk(cand, vec_col, q, k, id_col)
-
-
-def pq_search(
-    df_encoded: DataFrame,
-    codebooks: list[list[list[float]]],
-    query: list[float],
-    k: int = 10,
-    id_col: str = "vec_id",
-    code_col: str = "pq_codes",
-    vec_col: str | None = None,
-    rerank_factor: int = 4,
-) -> DataFrame:
-    """Production PQ search over a pre-encoded table: the m × n_codes ADC
-    lookup table is computed driver-side from the trained codebooks (tiny,
-    data-independent) and inlined as a literal, so the scan reads ONLY the
-    m-int code column — at 100 TB the raw embedding column is never touched
-    for candidate generation. When ``vec_col`` is given, the
-    ``rerank_factor × k`` ADC candidates are exactly re-ranked (the classic
-    ADC+rerank recipe: the second pass reads full vectors for only ~4k rows).
-    """
-    sub = len(codebooks[0][0])
-    q = [float(x) for x in query]
-    lut = [
-        [
-            sum((q[mi * sub + i] - cw[i]) * (q[mi * sub + i] - cw[i]) for i in range(sub))
-            for cw in books
-        ]
-        for mi, books in enumerate(codebooks)
-    ]
-    lut_lit = F.expr(
-        "array("
-        + ",".join(
-            "array(" + ",".join(f"{x!r}D" for x in row) + ")" for row in lut
-        )
-        + ")"
-    )
-    dist = F.aggregate(
-        F.zip_with(col(code_col), lut_lit, lambda c, lt: F.element_at(lt, (c + 1).cast("int"))),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    cand = (
-        df_encoded.select("*", dist.alias("__adc"))
-        .orderBy(col("__adc").asc(), col(id_col).asc())
-        .limit(rerank_factor * k if vec_col else k)
-    )
-    if vec_col is None:
-        return cand.select(id_col, col("__adc").alias("dist"))
-    exact = _l2sq(col(vec_col).cast("array<double>"), _lit_vec(q))
-    return (
-        cand.select(col(id_col), exact.alias("dist"))
-        .orderBy(col("dist").asc(), col(id_col).asc())
-        .limit(k)
-    )
-
-
-def lsh_topk_join(
-    data: DataFrame,
-    queries: DataFrame,
-    vec_col: str,
-    k: int,
-    data_id: str,
-    query_id: str,
-    n_planes: int = 8,
-    dim: int | None = None,
-    seed: int = 42,
-) -> DataFrame:
-    """Approximate kNN join: bucket both sides with the same hyperplanes,
-    equi-join on bucket, cosine-rank within each (query, bucket) group.
-
-    Scale path: the join shuffles on the bucket key only; each query touches
-    ~|data| / 2^n_planes candidates instead of |data|. Recall is traded via
-    n_planes. The exact variant (cosine_topk per query) is the oracle.
-    """
-    from pyspark.sql.window import Window
-
-    if dim is None:
-        dim = len(data.select(vec_col).head()[0])
-    planes = random_hyperplanes(dim, n_planes, seed)
-    d = data.select(
-        col(data_id), col(vec_col).alias("__dv"), lsh_bucket(col(vec_col), planes).alias("__bucket")
-    )
-    q = queries.select(
-        col(query_id), col(vec_col).alias("__qv"), lsh_bucket(col(vec_col), planes).alias("__bucket")
-    )
-    joined = d.join(q, "__bucket")
-    sim = _dot(col("__dv").cast("array<double>"), col("__qv").cast("array<double>")) / (
-        _norm(col("__dv").cast("array<double>")) * _norm(col("__qv").cast("array<double>"))
-    )
-    w = Window.partitionBy(query_id).orderBy(F.col("__sim").desc(), col(data_id))
-    return (
-        joined.withColumn("__sim", sim)
-        .withColumn("__rn", F.row_number().over(w))
-        .filter(col("__rn") <= k)
-        .select(query_id, data_id, F.round(col("__sim"), 6).alias("sim"))
-    )
 
 
 def rp_signs(in_dim: int, out_dim: int, seed: int = 0) -> list[list[int]]:

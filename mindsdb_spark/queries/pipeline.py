@@ -879,9 +879,8 @@ ORDER BY doc_id
 def d37_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PQ compress-then-search: encode 64-dim float vectors to 4 codes
     (16 codewords/subspace = subvectors of the 16 smallest-id vectors, the
-    deterministic oracle quantizer — ``pq_train`` KMeans books are the
-    recall path), then rank by asymmetric distance: m LUT gathers per row,
-    dimension-independent, reading only the code column at scale."""
+    deterministic oracle quantizer), then rank by asymmetric distance: m
+    LUT gathers per row, dimension-independent."""
     from mindsdb_spark.operators.vector import pq_topk
 
     return pq_topk(
@@ -2069,8 +2068,7 @@ FROM feat ORDER BY media_id, win
 # Companion to d52: real raster math (np.frombuffer uint8 -> reshape ->
 # exact int64 tile sums -> one double division) over pixels both engines
 # recompute from the same closed form (pixel(x,y) = (md5-seed * (y*W+x+1))
-# % 256). Completes the computable multimodal trio: image (this), audio
-# (d52), video frame fan-out (d13/sample_frames).
+# % 256). The image twin of d52's audio.
 def d53_image_blockmean(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _media_slice(spark, sf_dir)
     img = M.synth_image(docs, width=32, height=32)

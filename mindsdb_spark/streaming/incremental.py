@@ -50,28 +50,6 @@ class LastState:
             json.dump(state, f)
         os.replace(tmp, self.path)
 
-    def filter_last(self, df: DataFrame, column: str, query_key: str) -> DataFrame:
-        """Apply `column > LAST` semantics and advance the watermark.
-
-        First call: initialize to current max, return empty result —
-        matching the reference's init behavior (last_query.py:21-120).
-        """
-        key = f"{query_key}:{column}"
-        state = self._load()
-        current_max_row = df.agg(F.max(column).alias("m")).head()
-        current_max = current_max_row.m if current_max_row else None
-        if key not in state:
-            if current_max is not None:
-                state[key] = _to_json_value(current_max)
-                self._save(state)
-            return df.filter(F.lit(False))
-        last = state[key]
-        out = df.filter(col(column) > F.lit(last).cast(dict(df.dtypes)[column]))
-        if current_max is not None and _to_json_value(current_max) > last:
-            state[key] = _to_json_value(current_max)
-            self._save(state)
-        return out
-
 
 def _to_json_value(v):
     if hasattr(v, "isoformat"):

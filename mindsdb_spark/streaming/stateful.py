@@ -19,82 +19,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 
-def running_totals(
-    events: DataFrame,
-    key_col: str = "user_id",
-    value_col: str = "value",
-    ts_col: str = "ts",
-) -> DataFrame:
-    """Per-key lifetime (count, sum) maintained as engine state.
-
-    Emits one row per key per micro-batch with the updated running totals —
-    the streaming analog of an ever-growing groupBy that never rescans
-    history. State per key is two numbers, so a billion keys is ~GBs of
-    state store, distributed.
-    """
-    out_schema = f"{key_col} long, n bigint, total double"
-    state_schema = "n bigint, total double"
-
-    def update(
-        key: Tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            n, total = state.get
-        else:
-            n, total = 0, 0.0
-        for pdf in pdfs:
-            n += len(pdf)
-            total += float(pdf[value_col].sum())
-        state.update((n, total))
-        yield pd.DataFrame({key_col: [key[0]], "n": [n], "total": [total]})
-
-    return (
-        events.select(key_col, value_col, ts_col)
-        .groupBy(key_col)
-        .applyInPandasWithState(
-            update, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout
-        )
-    )
-
-
-def threshold_alerts(
-    events: DataFrame,
-    key_col: str = "user_id",
-    value_col: str = "value",
-    ts_col: str = "ts",
-    threshold: float = 100.0,
-) -> DataFrame:
-    """Emit a key the first micro-batch its running sum crosses `threshold`.
-
-    The state machine the reference's table-change triggers approximate by
-    polling (triggers_controller.py:16-88), done natively: per-key state
-    carries (running_sum, fired); a key emits exactly once.
-    """
-    out_schema = f"{key_col} long, total double"
-    state_schema = "total double, fired boolean"
-
-    def update(
-        key: Tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        total, fired = state.get if state.exists else (0.0, False)
-        for pdf in pdfs:
-            total += float(pdf[value_col].sum())
-        newly_fired = not fired and total >= threshold
-        state.update((total, bool(fired or newly_fired)))
-        if newly_fired:
-            yield pd.DataFrame({key_col: [key[0]], "total": [total]})
-        else:
-            yield pd.DataFrame({key_col: [], "total": []})
-
-    return (
-        events.select(key_col, value_col, ts_col)
-        .groupBy(key_col)
-        .applyInPandasWithState(
-            update, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout
-        )
-    )
-
-
 def rolling_zscore_alerts(
     events: DataFrame,
     key_col: str = "user_id",

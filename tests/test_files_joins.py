@@ -1,10 +1,9 @@
-"""File-format sniffing extensions + cross-join guard parity."""
+"""File-format sniffing extensions."""
 
 import os
 
 import pytest
 
-from mindsdb_spark.operators.joins import guarded_cross_join
 from mindsdb_spark.sources.files import read_file, sniff_format
 
 
@@ -177,47 +176,6 @@ def test_xlsx_and_pdf_through_sql_door(spark, tmp_path):
     sess.register_file("doc", str(pp))
     got = sess.sql("SELECT page, text FROM files_doc").collect()
     assert [(r["page"], r["text"]) for r in got] == [(1, "hello from pdf")]
-
-
-def test_cross_join_guard_allows_small(spark):
-    a = spark.range(100)
-    b = spark.range(50).withColumnRenamed("id", "id2")
-    assert guarded_cross_join(a, b).count() == 5000
-
-
-def test_cross_join_guard_refuses_blowup(spark):
-    a = spark.range(10_000)
-    b = spark.range(10_000).withColumnRenamed("id", "id2")
-    with pytest.raises(ValueError, match="without condition"):
-        guarded_cross_join(a, b)
-
-
-def test_salted_join_matches_plain_join(spark):
-    from pyspark.sql import functions as F
-
-    from mindsdb_spark.operators.joins import salted_join
-
-    # skewed left: 90% of rows share key 7
-    left = spark.range(2000).select(
-        F.when(F.col("id") % 10 < 9, F.lit(7)).otherwise(F.col("id") % 100).alias("k"),
-        F.col("id").alias("lid"),
-    )
-    right = spark.range(100).select(F.col("id").alias("k"), (F.col("id") * 10).alias("rv"))
-    exp = sorted(tuple(r) for r in left.join(right, "k").collect())
-    got = sorted(tuple(r) for r in salted_join(left, right, "k").collect())
-    assert got == exp
-
-
-def test_salted_left_join_keeps_unmatched(spark):
-    from pyspark.sql import functions as F
-
-    from mindsdb_spark.operators.joins import salted_join
-
-    left = spark.range(50).select((F.col("id") % 5).alias("k"), F.col("id").alias("lid"))
-    right = spark.range(2).select(F.col("id").alias("k"), F.lit("x").alias("v"))
-    exp = sorted((r["lid"], r["v"]) for r in left.join(right, "k", "left").collect())
-    got = sorted((r["lid"], r["v"]) for r in salted_join(left, right, "k", how="left").collect())
-    assert got == exp
 
 
 def test_register_file_queryable(spark, tmp_path):

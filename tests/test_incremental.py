@@ -4,25 +4,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from mindsdb_spark.catalog import load_table
-from mindsdb_spark.streaming.incremental import LastState, TableChangeTrigger, batched_insert
+from mindsdb_spark.streaming.incremental import TableChangeTrigger, batched_insert
 from mindsdb_spark.streaming.jobs import JobScheduler
-
-
-def test_last_keyword_semantics(spark, sf_dir, tmp_path):
-    e = load_table(spark, sf_dir, "events")
-    st = LastState(str(tmp_path))
-    # first run initializes the watermark and returns nothing (reference
-    # last_query.py behavior)
-    assert st.filter_last(e, "ts", "q1").count() == 0
-    # nothing new → still nothing
-    assert st.filter_last(e, "ts", "q1").count() == 0
-    # simulate new data arriving: shift a slice forward in time
-    newer = e.limit(10).withColumn("ts", F.col("ts") + F.expr("INTERVAL 100 DAYS"))
-    grown = e.union(newer)
-    got = st.filter_last(grown, "ts", "q1")
-    assert got.count() == 10
-    # watermark advanced → re-run returns nothing
-    assert st.filter_last(grown, "ts", "q1").count() == 0
 
 
 def test_batched_insert_resume(spark, sf_dir, tmp_path):
@@ -111,6 +94,26 @@ def test_last_keyword_sql_door(spark, sf_dir, tmp_path):
     assert sess.sql(q2).count() == 0  # separate key: its own init
     sess.sql("CREATE OR REPLACE VIEW lw AS SELECT event_id FROM tpch_events WHERE event_id < 160")
     assert sess.sql(q2).count() == 10
+
+
+def test_last_keyword_semantics(spark, sf_dir, tmp_path):
+    # timestamp watermark: stored as text, compared back as a timestamp;
+    # first run initializes the watermark and returns nothing (reference
+    # last_query.py behavior)
+    from mindsdb_spark.engine import EngineSession
+
+    sess = EngineSession(spark, state_dir=str(tmp_path))
+    sess.register_parquet_source("tpch", sf_dir)
+    sess.sql("CREATE OR REPLACE VIEW lt AS SELECT event_id, ts FROM tpch_events")
+    qt = "SELECT event_id FROM lt WHERE ts > LAST"
+    assert sess.sql(qt).count() == 0  # init
+    assert sess.sql(qt).count() == 0  # nothing new
+    sess.sql(
+        "CREATE OR REPLACE VIEW lt AS SELECT event_id, ts FROM tpch_events UNION ALL "
+        "SELECT event_id, ts + INTERVAL 100 DAYS FROM (SELECT * FROM tpch_events LIMIT 10)"
+    )
+    assert sess.sql(qt).count() == 10
+    assert sess.sql(qt).count() == 0  # watermark advanced
 
 
 def test_last_coalesce_init_value(spark, sf_dir, tmp_path):

@@ -6,7 +6,6 @@ import pytest
 from mindsdb_spark.compare import compare
 from mindsdb_spark.operators.kb import (
     chunk_documents,
-    embed_with,
     fake_embed,
     kb_upsert,
     retrieval_metrics,
@@ -61,12 +60,6 @@ def test_fake_embed_deterministic(spark):
     assert all(len(r["embedding"]) == 8 for r in e1)
     assert [r["embedding"] for r in e1] == [r["embedding"] for r in e2]
     assert all(-1.0 <= v <= 1.0 for r in e1 for v in r["embedding"])
-
-
-def test_embed_with_pandas_udf(spark):
-    chunks = chunk_documents(_docs(spark))
-    out = embed_with(chunks, lambda texts: [[float(len(t)), 0.5] for t in texts]).collect()
-    assert all(r["embedding"][0] == float(len(r["chunk_text"])) for r in out)
 
 
 def test_kb_upsert_replaces_matching_ids(spark):

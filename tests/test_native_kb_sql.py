@@ -319,56 +319,6 @@ def test_evaluate_knowledge_base(sess, spark):
     sess.sql("DROP KNOWLEDGE_BASE evkb")
 
 
-def test_kb_stream_insert(spark, sf_dir, tmp_path):
-    """Streaming KB ingestion: a file-source stream of documents feeds the
-    chunk->embed->upsert pipeline per micro-batch; the checkpoint makes a
-    re-run a no-op and new files incremental."""
-    import shutil
-
-    from mindsdb_spark.engine import EngineSession
-    from mindsdb_spark.operators.kb import kb_stream_insert
-    from mindsdb_spark.streaming.windows import stream_from_parquet
-
-    sess = EngineSession(spark)
-    sess.register_parquet_source("tpch", sf_dir, tables=["documents"])
-    sess.sql("CREATE KNOWLEDGE_BASE skb USING dim = 8, embedder = 'md5', "
-             "chunk_size = 4000, chunk_overlap = 0")
-    kb = sess._kbs["skb"]
-    src = tmp_path / "docs_in"
-    src.mkdir()
-    docs = sess.sql("SELECT doc_id, text FROM tpch_documents WHERE doc_id < 30")
-
-    def land(df, name):
-        # the file-stream source reads flat files under basePath: write to a
-        # scratch dir, move the part file in as <name>.parquet
-        scratch = tmp_path / f"scratch_{name}"
-        df.coalesce(1).write.mode("overwrite").parquet(str(scratch))
-        part = next(scratch.glob("part-*.parquet"))
-        part.rename(src / f"{name}.parquet")
-
-    land(docs.where("doc_id < 15"), "b1")
-    schema = docs.schema
-    ckpt = str(tmp_path / "ckpt")
-
-    stream = stream_from_parquet(spark, str(src), schema, path_glob="*.parquet")
-    store = kb_stream_insert(kb, stream, ckpt)
-    assert store.count() == 15
-    # same checkpoint, no new files -> nothing reprocessed
-    stream = stream_from_parquet(spark, str(src), schema, path_glob="*.parquet")
-    store = kb_stream_insert(kb, stream, ckpt)
-    assert store.count() == 15
-    # new files arrive -> only the delta embeds, upsert dedups by content id
-    land(docs.where("doc_id >= 15"), "b2")
-    stream = stream_from_parquet(spark, str(src), schema, path_glob="*.parquet")
-    store = kb_stream_insert(kb, stream, ckpt)
-    assert store.count() == 30
-    # the KB keeps working through the SQL door
-    hits = sess.sql("SELECT * FROM skb WHERE content = 'spark table' LIMIT 5")
-    assert hits.count() == 5
-    sess.sql("DROP KNOWLEDGE_BASE skb")
-    shutil.rmtree(ckpt, ignore_errors=True)
-
-
 def test_query_resume_and_cancel_service_functions(spark, sf_dir, tmp_path, monkeypatch):
     """`SELECT query_resume('<id>')` re-runs an interrupted resumable
     statement from its persisted cursor; `query_cancel` forgets it

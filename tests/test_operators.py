@@ -5,7 +5,7 @@ from pyspark.sql import functions as F
 
 from mindsdb_spark.catalog import SourceCatalog, load_table
 from mindsdb_spark.operators import multimodal as M
-from mindsdb_spark.operators.vector import cosine_topk, lsh_topk_join
+from mindsdb_spark.operators.vector import cosine_topk
 
 
 def test_catalog_resolution(spark, sf_dir):
@@ -44,19 +44,6 @@ def test_cosine_topk_self_is_top1(spark, sf_dir):
     assert sims == sorted(sims, reverse=True)
 
 
-def test_lsh_topk_join_recall(spark, sf_dir):
-    """LSH kNN must at least find each query vector itself (sim=1 bucket)."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    q = emb.filter(F.col("vec_id") < 5).select(F.col("vec_id").alias("query_id"), "embedding")
-    res = lsh_topk_join(emb, q, "embedding", k=3, data_id="vec_id", query_id="query_id")
-    rows = res.collect()
-    by_q = {}
-    for r in rows:
-        by_q.setdefault(r.query_id, []).append(r.vec_id)
-    for qid, ids in by_q.items():
-        assert qid in ids, f"query {qid} did not retrieve itself"
-
-
 def test_multimodal_stub_raises():
     with pytest.raises(NotImplementedError):
         M.decode_media(b"abc", "image/png", fake=False)
@@ -88,22 +75,6 @@ def test_resize_images_updates_metadata(spark, sf_dir):
     assert all(r["meta_width"] == 224 and r["meta_height"] == 224 for r in rows)
     # payload passthrough in the stub
     assert all(r["content"] is not None for r in rows)
-
-
-def test_sample_frames_fanout_bounded(spark, sf_dir):
-    from pyspark.sql import functions as F
-
-    from mindsdb_spark.catalog import load_table
-    from mindsdb_spark.operators.multimodal import sample_frames, to_media_table
-
-    media = to_media_table(load_table(spark, sf_dir, "documents").limit(20))
-    frames = sample_frames(media, every_n_bytes=64, max_frames=4)
-    per = frames.groupBy("media_id").agg(F.count("*").alias("n")).collect()
-    assert len(per) == 20
-    assert all(1 <= r["n"] <= 4 for r in per)
-    # frame ordering is deterministic and 0-based per media row
-    idx = frames.filter(F.col("media_id") == per[0]["media_id"]).orderBy("frame_idx").collect()
-    assert [r["frame_idx"] for r in idx] == list(range(len(idx)))
 
 
 def test_kmeans_ivf_probe_all_equals_exact(spark, sf_dir):
@@ -160,55 +131,6 @@ def test_ivf_partitioned_layout_prunes_and_matches(spark, sf_dir, tmp_path):
     want = [r["vec_id"] for r in ivf_search(emb, "embedding", q, cents, k=10, n_probes=3).collect()]
     got = [r["vec_id"] for r in probed.collect()]
     assert got == want
-
-
-def test_pq_encode_codewords_encode_to_themselves(spark, sf_dir):
-    # vectors that ARE codewords must quantize losslessly to their own code
-    from mindsdb_spark.operators.vector import pq_encode
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    enc = pq_encode(emb, m=4, n_codes=16, dim=64)
-    own = enc.filter(F.col("vec_id") < 16).orderBy("vec_id").collect()
-    for r in own:
-        assert r["pq_codes"] == [r["vec_id"]] * 4
-    # every code in range, every vector coded
-    stats = enc.select(
-        F.size("pq_codes").alias("m"),
-        F.array_min("pq_codes").alias("lo"),
-        F.array_max("pq_codes").alias("hi"),
-    ).agg(F.min("m"), F.max("m"), F.min("lo"), F.max("hi")).collect()[0]
-    assert list(stats) == [4, 4, 0, 15]
-
-
-def test_pq_encode_is_shuffle_free_with_literal_codebooks(spark, sf_dir):
-    # with trained codebooks the encode plan must be a pure map stage:
-    # no Exchange anywhere — the property that matters at 100 TB
-    from mindsdb_spark.operators.vector import pq_encode, pq_train
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    books = pq_train(emb, m=4, n_codes=8, dim=64)
-    plan = pq_encode(emb, m=4, n_codes=8, dim=64, codebooks=books)._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan
-
-
-def test_pq_search_rerank_recall(spark, sf_dir):
-    from mindsdb_spark.operators.vector import (
-        _l2sq, _lit_vec, pq_encode, pq_search, pq_train,
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    books = pq_train(emb, m=16, n_codes=16, dim=64)
-    enc = pq_encode(emb, m=16, n_codes=16, dim=64, codebooks=books)
-    q = [float(x) for x in emb.filter("vec_id = 42").select("embedding").head()[0]]
-    got = [r["vec_id"] for r in pq_search(enc, books, q, k=10, vec_col="embedding").collect()]
-    v = F.col("embedding").cast("array<double>")
-    exact = [
-        r["vec_id"]
-        for r in emb.select("vec_id", _l2sq(v, _lit_vec(q)).alias("d"))
-        .orderBy("d", "vec_id").limit(10).collect()
-    ]
-    assert got[0] == 42  # the query's own vector survives quantization + rerank
-    assert len(set(got) & set(exact)) >= 6  # measured 8/10 at this config
 
 
 def test_zipf_slope_near_minus_one_on_zipfian_corpus(spark):
@@ -580,19 +502,6 @@ def test_connected_components_local_path_matches_distributed(spark):
     assert s_local["path"] == "local" and s_dist["path"] == "distributed"
     assert local == dist
     assert local[3] == 0 and local[12] == 10 and local[29] == 20 and local[5] == 5
-
-
-def test_salted_join_equals_plain_join(spark, sf_dir):
-    from mindsdb_spark.catalog import load_table
-    from mindsdb_spark.operators.joins import salted_join
-
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_quantity")
-    o = load_table(spark, sf_dir, "orders").select(
-        F.col("o_orderkey").alias("l_orderkey"), "o_totalprice"
-    )
-    plain = li.join(o, "l_orderkey").groupBy("l_orderkey").count()
-    salted = salted_join(li, o, "l_orderkey", n_salts=4).groupBy("l_orderkey").count()
-    assert sorted(plain.collect()) == sorted(salted.collect())
 
 
 def test_dsir_weights_match_counter_reference(spark):

@@ -83,37 +83,6 @@ def test_whole_stage_codegen_active(spark, sf_dir):
     assert "[codegen id :" in plan  # expressions stay inside whole-stage codegen
 
 
-def test_bucketed_join_has_no_exchange(spark, sf_dir):
-    """Tables bucketed on the join key join with ZERO shuffles — the
-    co-located large-to-large join layout for repeated joins at scale."""
-    from mindsdb_spark.catalog import load_table
-    from mindsdb_spark.operators.joins import write_bucketed
-
-    write_bucketed(
-        load_table(spark, sf_dir, "orders"), "b_orders", "o_custkey", 8, "o_custkey"
-    )
-    write_bucketed(
-        load_table(spark, sf_dir, "customer"), "b_customer", "c_custkey", 8, "c_custkey"
-    )
-    try:
-        joined = (
-            spark.table("b_orders")
-            .hint("merge")  # force SMJ so the exchange-free shape is provable
-            .join(
-                spark.table("b_customer"),
-                spark.table("b_orders")["o_custkey"] == spark.table("b_customer")["c_custkey"],
-            )
-            .select("o_orderkey", "c_name")
-        )
-        plan = _plan(joined)
-        assert "SortMergeJoin" in plan
-        assert "Exchange" not in plan
-        assert joined.count() > 0
-    finally:
-        spark.sql("DROP TABLE IF EXISTS b_orders")
-        spark.sql("DROP TABLE IF EXISTS b_customer")
-
-
 def test_q7_volume_broadcasts_dims_no_cartesian(spark, sf_dir):
     from mindsdb_spark.queries.probes_ext import PROBES_EXT
 
@@ -141,37 +110,6 @@ def test_q19_disjunction_keeps_equi_join(spark, sf_dir):
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
     assert "BroadcastHashJoin" in plan or "SortMergeJoin" in plan
-
-
-def test_bucketed_join_agg_no_exchange_broadcast_disabled(spark, sf_dir):
-    # bucketed co-located join: the shuffle is paid once at write time,
-    # joins on the bucket key then plan with zero Exchange nodes
-    # (renamed from test_bucketed_join_has_no_exchange — it shadowed the
-    # merge-hint custkey variant above and neither ran; see the duplicate
-    # name guard at the bottom of this file)
-    from mindsdb_spark.catalog import load_table, write_bucketed
-
-    o = load_table(spark, sf_dir, "orders")
-    li = load_table(spark, sf_dir, "lineitem")
-    write_bucketed(o.select("o_orderkey", "o_totalprice"), "b_orders", "o_orderkey", 8)
-    write_bucketed(
-        li.select("l_orderkey", "l_quantity"), "b_lineitem", "l_orderkey", 8
-    )
-    thr = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        j = spark.sql(
-            "SELECT o.o_orderkey, sum(l.l_quantity) AS sq "
-            "FROM b_orders o JOIN b_lineitem l ON l.l_orderkey = o.o_orderkey "
-            "GROUP BY o.o_orderkey"
-        )
-        plan = _plan(j)
-        assert "SortMergeJoin" in plan
-        assert "Exchange" not in plan  # co-located: no shuffle for join OR agg
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thr)
-        spark.sql("DROP TABLE IF EXISTS b_orders")
-        spark.sql("DROP TABLE IF EXISTS b_lineitem")
 
 
 def test_partitioned_ctas_prunes(spark, sf_dir, tmp_path):
@@ -331,8 +269,8 @@ def test_dml_subselect_plans_as_semi_join(spark, sf_dir, tmp_path):
 
 def test_no_shadowed_test_definitions():
     """F811 guard: a duplicate `def test_x` in the same module silently
-    shadows the earlier one and pytest collects only the last — exactly what
-    hid test_bucketed_join_has_no_exchange for two rounds. AST-scan every
+    shadows the earlier one and pytest collects only the last — a bucketed-
+    join plan test was once hidden this way for two rounds. AST-scan every
     test module and fail on any repeated top-level function name."""
     import ast
     import glob

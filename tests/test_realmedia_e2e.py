@@ -9,7 +9,7 @@ block-mean in single plans with every payload staying executor-side
 Operators exercised: encode_png / decode_png_media (lossless round-trip
 on arbitrary bytes), resize_images(fake=False) (real nearest-neighbor),
 downsample_block_mean, encode_jpeg / decode_jpeg_media (lossy, dims from
-SOF0), encode_wav / decode_wav_media / audio_features."""
+SOF0), audio_features on real-prose PCM."""
 
 import hashlib
 import os
@@ -26,10 +26,8 @@ from mindsdb_spark.operators.multimodal import (
     audio_features,
     decode_jpeg_media,
     decode_png_media,
-    decode_wav_media,
     downsample_block_mean,
     encode_png,
-    encode_wav,
     resize_images,
 )
 
@@ -181,10 +179,10 @@ def test_jpeg_decode_blockmean_on_real_text(spark, realmedia_docs):
     assert (d7["meta_width"], d7["meta_height"]) == (W, H)
 
 
-def test_wav_decode_audio_features_on_real_text(spark, realmedia_docs):
-    """Real-prose PCM (centered int16 from utf-8 bytes) → RIFF/WAV encode
-    → decode_wav_media → audio_features, one plan. RMS checked exactly
-    against local numpy (the int64-sum formula is deterministic)."""
+def test_audio_features_on_real_text(spark, realmedia_docs):
+    """Real-prose PCM (centered int16 from utf-8 bytes) → audio_features.
+    RMS checked exactly against local numpy (the int64-sum formula is
+    deterministic)."""
     n = realmedia_docs.count()
 
     def _pcm(text: str) -> bytes:
@@ -195,24 +193,8 @@ def test_wav_decode_audio_features_on_real_text(spark, realmedia_docs):
         (r["doc_id"], _pcm(r["text"]))
         for r in realmedia_docs.select("doc_id", "text").collect()
     ]
-
-    def run(batches):
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "content": [encode_wav(bytes(c)) for c in pdf["content"]],
-                }
-            )
-
-    wav = spark.createDataFrame(rows, _RAW_SCHEMA).mapInPandas(
-        run, schema=_RAW_SCHEMA
-    ).select(
-        "media_id", "content", F.lit("audio/wav").alias("mime"),
-        F.lit(None).cast("long").alias("meta_width"),
-        F.lit(None).cast("long").alias("meta_height"),
-    )
-    feats = audio_features(decode_wav_media(wav), window=250).collect()
+    pcm = spark.createDataFrame(rows, _RAW_SCHEMA)
+    feats = audio_features(pcm, window=250).collect()
     assert len(feats) == n * (N_SAMPLES // 250)
     assert all(r["rms"] >= 0.0 and 0.0 <= r["zcr"] <= 1.0 for r in feats)
 

@@ -1,67 +1,4 @@
-"""applyInPandasWithState operators: streaming state equals batch truth."""
-
-import os
-
-import pytest
-from pyspark.sql import functions as F
-
-from mindsdb_spark.catalog import load_table
-from mindsdb_spark.streaming.stateful import running_totals, threshold_alerts
-from mindsdb_spark.streaming.windows import stream_from_parquet
-
-
-@pytest.fixture(scope="module")
-def stream_setup(spark, sf_dir, tmp_path_factory):
-    out = str(tmp_path_factory.mktemp("stateful_stream"))
-    e = load_table(spark, sf_dir, "events")
-    e.write.mode("overwrite").parquet(out)
-    return out, e.schema
-
-
-def _drain(stream_df, mode="update"):
-    q = (
-        stream_df.writeStream.format("memory")
-        .queryName("stateful_sink")
-        .outputMode(mode)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    return stream_df.sparkSession.sql("SELECT * FROM stateful_sink")
-
-
-def test_running_totals_match_batch(spark, sf_dir, stream_setup):
-    path, schema = stream_setup
-    got = _drain(running_totals(stream_from_parquet(spark, path, schema)))
-    # last emitted row per key must equal the batch group-by
-    final = got.groupBy("user_id").agg(F.max("n").alias("n"), F.max("total").alias("total"))
-    batch = (
-        load_table(spark, sf_dir, "events")
-        .groupBy("user_id")
-        .agg(F.count("*").alias("n"), F.sum("value").alias("total"))
-    )
-    g = {r["user_id"]: (r["n"], round(r["total"], 6)) for r in final.collect()}
-    b = {r["user_id"]: (r["n"], round(r["total"], 6)) for r in batch.collect()}
-    assert g == b
-    assert len(b) > 0
-
-
-def test_threshold_alerts_fire_once(spark, sf_dir, stream_setup):
-    path, schema = stream_setup
-    got = _drain(threshold_alerts(stream_from_parquet(spark, path, schema), threshold=100.0))
-    rows = got.collect()
-    # each key fires at most once
-    keys = [r["user_id"] for r in rows]
-    assert len(keys) == len(set(keys))
-    # fired keys are exactly the batch keys whose lifetime sum crosses the bar
-    batch = (
-        load_table(spark, sf_dir, "events")
-        .groupBy("user_id")
-        .agg(F.sum("value").alias("total"))
-        .filter(F.col("total") >= 100.0)
-    )
-    assert set(keys) == {r["user_id"] for r in batch.collect()}
-    assert all(r["total"] >= 100.0 for r in rows)
+"""applyInPandasWithState operators: streaming state carries across micro-batches."""
 
 
 def test_rolling_zscore_state_carries_across_batches(spark, tmp_path):

@@ -123,6 +123,28 @@ def test_create_empty_table_then_insert(wsess):
     assert t.count() == 0 and dict(t.dtypes)["amount"] == "decimal(10,2)"
 
 
+def test_create_table_maps_mysql_blob_year_vector_types(wsess):
+    # BLOB families are binary, so bytes round-trip (as string, 0xFF was lost)
+    wsess.sql(
+        "CREATE TABLE wh.typed (a INT, b LONGBLOB, c YEAR, d MEDIUMBLOB, "
+        "e DECIMAL(12,2), f DECIMAL, g INTEGER, h REAL, i DOUBLE PRECISION, "
+        "k TINYTEXT)"
+    )
+    assert dict(wsess.sql("SELECT * FROM wh_typed").dtypes) == {
+        "a": "int", "b": "binary", "c": "int", "d": "binary",
+        "e": "decimal(12,2)", "f": "decimal(10,0)", "g": "int", "h": "float",
+        "i": "double", "k": "string",
+    }
+    wsess.sql(
+        "INSERT INTO wh.typed VALUES "
+        "(1, X'00FF', 2024, X'7F80', 1.25, 3, 4, 0.5, 0.25, 't')"
+    )
+    row = wsess.sql("SELECT b, c, d FROM wh_typed").collect()[0]
+    assert (bytes(row["b"]), row["c"], bytes(row["d"])) == (b"\x00\xff", 2024, b"\x7f\x80")
+    wsess.sql("ALTER TABLE wh.typed ADD COLUMN v VECTOR")
+    assert dict(wsess.sql("SELECT * FROM wh_typed").dtypes)["v"] == "array<float>"
+
+
 def test_alter_table_add_drop_rename(wsess):
     wsess.sql("CREATE TABLE wh.alt AS SELECT r_regionkey, r_name FROM tpch_region")
     wsess.sql("ALTER TABLE wh.alt ADD COLUMN score DOUBLE")

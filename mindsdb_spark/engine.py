@@ -47,7 +47,7 @@ from mindsdb_spark.dialect.rewriter import (
     split_top_level,
     sub_outside_strings,
 )
-from mindsdb_spark.session import get_spark
+from mindsdb_spark.session import get_spark, local_frame
 
 # BYOM scalar-UDF type map (reference:
 # mindsdb/interfaces/functions/controller.py:37-111 — int/float/str/bool/
@@ -148,10 +148,11 @@ _CTAS_RE = re.compile(
     re.IGNORECASE | re.DOTALL,
 )
 # CREATE TABLE with an explicit column list (empty table for later INSERTs;
-# reference: integration_datanode.py:162-244 renders the same DDL remotely)
+# reference: integration_datanode.py:162-244 renders the same DDL remotely).
+# Quoted literals are admitted: ENUM('x','y'), DEFAULT 'x', COMMENT '...'
 _CREATE_EMPTY_RE = re.compile(
     r"CREATE\s+(OR\s+REPLACE\s+)?TABLE\s+(?:IF\s+NOT\s+EXISTS\s+)?([\w.`]+)\s*"
-    r"\(\s*([\w`\s,()]+)\)$",
+    r"\(\s*((?:[\w`\s,()]|'(?:[^'\\]|\\.)*'|\"(?:[^\"\\]|\\.)*\")+)\)$",
     re.IGNORECASE | re.DOTALL,
 )
 _TRUNCATE_RE = re.compile(r"TRUNCATE\s+(?:TABLE\s+)?([\w.`]+)$", re.IGNORECASE)
@@ -1682,7 +1683,7 @@ class EngineSession:
 
     def _kb_embed_query(self, kb: dict, query_text: str) -> list[float]:
         qrow = self._kb_embed_fn(kb)(
-            self.spark.createDataFrame([(query_text,)], "chunk_text string"), dim=kb["dim"]
+            local_frame(self.spark, [(query_text,)], "chunk_text string"), dim=kb["dim"]
         ).head()
         return [float(x) for x in qrow["embedding"]]
 
@@ -1981,9 +1982,7 @@ class EngineSession:
         def _embed(df):
             return embedder(df, dim=dim)
 
-        questions = self.spark.createDataFrame(
-            [(0, question)], "qid long, question string"
-        )
+        questions = local_frame(self.spark, [(0, question)], "qid long, question string")
         prompts = rag_prompts(questions, store, _embed, k=agent.retrieval_k)
         return agent_apply(prompts, agent, question_col="prompt").select(
             "question", agent.output_col
@@ -2221,7 +2220,7 @@ class EngineSession:
         persisted test frame — EVALUATE is terminal, so trading laziness for
         a bounded collect keeps executor memory flat across repeated calls."""
         rows = scores.collect()
-        out = self.spark.createDataFrame(rows, schema=scores.schema)
+        out = local_frame(self.spark, rows, schema=scores.schema)
         persisted.unpersist()
         return out
 
@@ -2964,7 +2963,7 @@ class EngineSession:
 
     def _row(self, schema: str, *values) -> DataFrame:
         """The one-row status frame a command answers with."""
-        return self.spark.createDataFrame([values], schema)
+        return local_frame(self.spark, [values], schema)
 
     def _using(self, text: str | None) -> dict:
         """`k = v, ...` (a USING or SET parameter list) → {key: value}, each
@@ -3003,7 +3002,7 @@ class EngineSession:
         answer = _SHOW_DATA[" ".join(m.group(1).upper().split())]
         if isinstance(answer, str):
             return self._system_sql(answer)
-        return self.spark.createDataFrame(*answer)
+        return local_frame(self.spark, *answer)
 
     @_command("SHOW", r"SHOW\s+PROJECTS$")
     def _show_projects(self, m, st):
@@ -3013,7 +3012,7 @@ class EngineSession:
         projects = sorted(
             {"mindsdb"} | {n for n, (eng, _p) in self._db_params.items() if eng is None}
         )
-        return self.spark.createDataFrame([(p,) for p in projects], "project string")
+        return local_frame(self.spark, [(p,) for p in projects], "project string")
 
     @_command("SHOW", r"SHOW\s+(?:SESSION\s+|GLOBAL\s+)?VARIABLES(?:\s+LIKE\s+'([^']*)')?$")
     def _show_variables(self, m, st):
@@ -3027,7 +3026,7 @@ class EngineSession:
             pat = re.compile(m.group(1).replace("%", ".*").replace("_", ".") + "$",
                              re.IGNORECASE)
             rows = [r for r in rows if pat.match(r[0])]
-        return self.spark.createDataFrame(rows, "Variable_name string, Value string")
+        return local_frame(self.spark, rows, "Variable_name string, Value string")
 
     @_command(
         "SHOW",
@@ -3056,7 +3055,8 @@ class EngineSession:
     def _show_index(self, m, st):
         # federated parquet/API tables carry no indexes; answer the shape
         # (reference rewrites to information_schema.STATISTICS, :445-448)
-        return self.spark.createDataFrame(
+        return local_frame(
+            self.spark,
             [],
             "Table string, Non_unique int, Key_name string, "
             "Seq_in_index int, Column_name string",
@@ -3091,9 +3091,11 @@ class EngineSession:
     @_command("SHOW", _SHOW_TABLES_RE)
     def _show_tables(self, m, st):
         db = (m.group(1) or self.session_vars["database"]).lower()
+        # the view's rows come sorted, so no ORDER BY: a filter and projection
+        # over a LocalRelation are folded on the driver and run no job
         return self._system_sql(
             f"SELECT table_name AS `Tables_in_{db}` FROM information_schema_tables "
-            f"WHERE table_schema = '{db}' ORDER BY 1"
+            f"WHERE table_schema = '{db}'"
         )
 
     @_command("DESCRIBE DESC", r"(?:DESCRIBE|DESC)\s+KNOWLEDGE_BASE\s+([\w.`]+)$")
@@ -3136,17 +3138,17 @@ class EngineSession:
         attr = m.group(2).lower()
         if attr == "features":
             rows = [(c,) for c in (spec.features or [])] or [("(not recorded)",)]
-            return self.spark.createDataFrame(rows, "feature string")
+            return local_frame(self.spark, rows, "feature string")
         if attr == "args":
             # the USING arguments the model was created with
             recipe = self._model_recipes.get(_object_name(m.group(1)))
             params = dict(recipe[4]) if recipe else {}
             if recipe:
                 params.setdefault("engine", recipe[3])
-            return self.spark.createDataFrame(_json_pairs(params), "key string, value string")
+            return local_frame(self.spark, _json_pairs(params), "key string, value string")
         info = dict(spec.info or {})
         if attr in ("model", "metadata"):
-            return self.spark.createDataFrame(_json_pairs(info), "attribute string, value string")
+            return local_frame(self.spark, _json_pairs(info), "attribute string, value string")
         return self._row(
             "name string, engine string, outputs string, kind string",
             spec.name, info.get("engine", "registered"), spec.output_schema,
@@ -3181,7 +3183,8 @@ class EngineSession:
             for v, spec in enumerate(self._model_versions.get(name, []))
             if spec is not None
         ]
-        return self.spark.createDataFrame(
+        return local_frame(
+            self.spark,
             rows,
             "name string, version int, active boolean, predict_columns string, "
             "kind string, engine string, training_query string",
@@ -3399,7 +3402,7 @@ class EngineSession:
     # -- tables in writable sources ------------------------------------------------
     @_command("CREATE", _CREATE_EMPTY_RE)
     def _create_empty_table(self, m, st):
-        if " AS " in st.text.upper():
+        if " AS " in st.masked.upper():
             return None
         srcname, table = self._resolve_writable(m.group(2))
         if srcname is None:
@@ -3411,7 +3414,7 @@ class EngineSession:
                 continue  # table-level constraints: no-op on parquet
             typ = toks[1] if len(toks) > 1 else "string"
             fields.append(f"{toks[0].strip('`')} {_sql_type_to_spark(typ)}")
-        df = self.spark.createDataFrame([], ", ".join(fields))
+        df = local_frame(self.spark, [], ", ".join(fields))
         self._writable[srcname].create_table(table, df, replace=bool(m.group(1)))
         self._refresh_writable_views(srcname)
         return self._row("created string", table)
@@ -3690,8 +3693,8 @@ class EngineSession:
             raise KeyError(f"chatbot {name!r} does not exist")
         bot = self._chatbots[name]
         if not bot.is_running:
-            return self.spark.createDataFrame(
-                [], "chat_id long, ts timestamp, question string, answer string"
+            return local_frame(
+                self.spark, [], "chat_id long, ts timestamp, question string, answer string"
             )
         msgs = self.sql(f"SELECT * FROM {bot.messages_table}")
         replies = chatbot_respond(msgs, self._agents[bot.agent], bot).persist()
@@ -3962,12 +3965,12 @@ class EngineSession:
         mname = _object_name(m.group(2))
         ckey = (mname, self._model_active.get(mname), tuple(sorted(row.items())))
         if ckey not in self._predict_cache:
-            inp = self.spark.createDataFrame([tuple(row.values())], list(row))
+            inp = local_frame(self.spark, [tuple(row.values())], list(row))
             res = apply_model(inp, spec)
             self._predict_cache[ckey] = (res.collect(), res.schema)
             if len(self._predict_cache) > 128:
                 self._predict_cache.pop(next(iter(self._predict_cache)))
-        res = self.spark.createDataFrame(*self._predict_cache[ckey])
+        res = local_frame(self.spark, *self._predict_cache[ckey])
         cols = [c.strip(" `") for c in m.group(1).split(",")]
         # documented `<target>_explain` JSON column
         # (get-single-prediction.mdx:17,57): predicted_value +
@@ -4238,8 +4241,10 @@ class EngineSession:
             return v
 
         kb = self._kbs[name] = {
-            "store": self.spark.createDataFrame(
-                [], "chunk_id string, doc_id long, chunk_text string, embedding array<float>"
+            "store": local_frame(
+                self.spark,
+                [],
+                "chunk_id string, doc_id long, chunk_text string, embedding array<float>",
             ),
             "dim": int(using.get("dim", 16)),
             # flat `embedder = 'md5'` names a registry embedder; the
@@ -4649,7 +4654,7 @@ class EngineSession:
 
     def _build_view(self, name: str) -> DataFrame:
         build, schema = _SYSTEM_VIEWS[name]
-        df = build(self) if schema is None else self.spark.createDataFrame(build(self), schema)
+        df = build(self) if schema is None else local_frame(self.spark, build(self), schema)
         df.createOrReplaceTempView(name)
         return df
 
@@ -4689,7 +4694,7 @@ class EngineSession:
         "information_schema_tables", "table_schema string, table_name string, table_type string"
     )
     def _tables_view(self):
-        return [(src, t, "BASE TABLE") for src, t in self._source_tables()]
+        return [(src, t, "BASE TABLE") for src, t in sorted(self._source_tables())]
 
     @_system_view(
         "information_schema_statistics",
@@ -4913,7 +4918,8 @@ class EngineSession:
         # start/end as TIMESTAMP to match the reference LLMLogTable schema
         # (interfaces/database/log.py: sa.DateTime columns) — epoch seconds
         # cast via timestamp_seconds, session TZ is UTC
-        return self.spark.createDataFrame(
+        return local_frame(
+            self.spark,
             rows,
             "api_key string, model_name string, input string, output string, "
             "start_ts double, end_ts double, prompt_tokens int, "

@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mindsdb_spark.catalog import invalidate_table
+from mindsdb_spark.session import local_frame
 
 _P = 1_000_000_007
 
@@ -94,14 +95,15 @@ def generate_sf(
         invalidate_table(out_dir, name)
 
     _write(
-        spark.createDataFrame(
-            [(i, n) for i, n in enumerate(_REGIONS)], "r_regionkey int, r_name string"
+        local_frame(
+            spark, [(i, n) for i, n in enumerate(_REGIONS)], "r_regionkey int, r_name string"
         ),
         "region",
         parts=1,
     )
     _write(
-        spark.createDataFrame(
+        local_frame(
+            spark,
             [(i, f"NATION_{i}", i % 5) for i in range(25)],
             "n_nationkey int, n_name string, n_regionkey int",
         ),

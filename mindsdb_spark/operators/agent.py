@@ -24,6 +24,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType
 
+from mindsdb_spark.session import local_frame
+
 
 @dataclass
 class AgentSpec:
@@ -45,7 +47,7 @@ class AgentSpec:
 
 def agent_ask(spark: SparkSession, agent: AgentSpec, question: str) -> DataFrame:
     """``SELECT answer FROM agent WHERE question = '...'`` — one-row plan."""
-    df = spark.createDataFrame([(question,)], "question string")
+    df = local_frame(spark, [(question,)], "question string")
     return agent_apply(df, agent, question_col="question")
 
 

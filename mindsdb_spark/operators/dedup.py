@@ -45,6 +45,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from mindsdb_spark.catalog import parallelize_input
+from mindsdb_spark.session import local_frame
 
 col = F.col
 
@@ -945,9 +946,7 @@ def connected_components(
             [StructField("node", utype), StructField("label", utype)]
         )
         spark = nodes.sparkSession
-        labels = spark.createDataFrame(
-            [(n, _find(n)) for n in parent], schema
-        )
+        labels = local_frame(spark, [(n, _find(n)) for n in parent], schema)
         base = nodes.select(col(id_col).alias("node"))
         return base.join(F.broadcast(labels), "node", "left").select(
             col("node").alias(id_col),
@@ -1204,9 +1203,7 @@ def pagerank(
         schema = StructType(
             [StructField("node", utype), StructField("rank", DoubleType())]
         )
-        labels = nodes.sparkSession.createDataFrame(
-            list(rank_l.items()), schema
-        )
+        labels = local_frame(nodes.sparkSession, list(rank_l.items()), schema)
         # after >=1 iterations every node outside the edge set sits at the
         # isolated-node fixed point (1-d)/N; iterations=0 means untouched
         # initial ranks

@@ -15,6 +15,7 @@ from pyspark.sql.window import Window
 
 from mindsdb_spark.catalog import parallelize_input
 from mindsdb_spark.operators.dedup import grams_expr, words_expr
+from mindsdb_spark.session import local_frame
 
 col = F.col
 
@@ -583,8 +584,8 @@ def bpe_train_merges(
             t = tuple(out)
             new_hist[t] = new_hist.get(t, 0) + c
         hist = new_hist
-    return df.sparkSession.createDataFrame(
-        merges, "rank int, lhs string, rhs string, merged string, cnt long"
+    return local_frame(
+        df.sparkSession, merges, "rank int, lhs string, rhs string, merged string, cnt long"
     )
 
 

@@ -29,6 +29,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from mindsdb_spark.session import local_frame
+
 col = F.col
 
 # name of the ownership sentinel file ivf_write_partitioned drops in every
@@ -234,7 +236,7 @@ def _knn_votes(
     )
     spark = labeled.sparkSession
     if not q_rows:
-        cand = spark.createDataFrame([], schema)
+        cand = local_frame(spark, [], schema)
     else:
         qids = np.asarray([r[0] for r in q_rows])
         qvecs = [r[1] for r in q_rows]

@@ -11,6 +11,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from mindsdb_spark.session import local_frame
+
 _SESSIONS: dict = {}
 
 
@@ -425,7 +427,7 @@ def e04_create_database(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows = out.collect()
     sess.sql("DROP DATABASE lakehouse")
     assert "lakehouse" not in {r[0] for r in sess.sql("SHOW DATABASES").collect()}
-    return spark.createDataFrame(rows, out.schema)
+    return local_frame(spark, rows, out.schema)
 
 
 E04_SQL = """

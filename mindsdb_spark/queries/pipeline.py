@@ -28,6 +28,7 @@ from mindsdb_spark.operators import multimodal as M
 from mindsdb_spark.operators import text as T
 from mindsdb_spark.operators.text import LANG_MARKERS
 from mindsdb_spark.operators.vector import _dot, _norm
+from mindsdb_spark.session import local_frame
 
 col = F.col
 
@@ -2372,7 +2373,7 @@ def d60_mojibake(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oracle reruns the identical chr()-built patterns through DuckDB's
     RE2 (parity already unit-pinned in tests/test_mojibake.py)."""
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text").unionAll(
-        spark.createDataFrame(_D60_DAMAGED, "doc_id long, text string")
+        local_frame(spark, _D60_DAMAGED, "doc_id long, text string")
     )
     return (
         T.mojibake_score(docs)
@@ -2474,7 +2475,7 @@ def d62_nfc_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     strip + whitespace collapse). Oracle replays DuckDB's nfc_normalize
     through the byte-identical regex chain."""
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text").unionAll(
-        spark.createDataFrame(_D62_SEEDED, "doc_id long, text string")
+        local_frame(spark, _D62_SEEDED, "doc_id long, text string")
     )
     return (
         T.nfc_scrub(docs)

@@ -157,6 +157,7 @@ class SQLServer:
                         import pandas as pd
 
                         from mindsdb_spark.operators.model import apply_model
+                        from mindsdb_spark.session import local_frame
 
                         pdf = pd.DataFrame(body.get("data") or [])
                         for c in pdf.columns:
@@ -165,7 +166,7 @@ class SQLServer:
                             except (ValueError, TypeError):
                                 pass
                         with outer._exec_lock:
-                            sdf = outer.session.spark.createDataFrame(pdf)
+                            sdf = local_frame(outer.session.spark, pdf)
                             rows = apply_model(sdf, spec).collect()
                         self._reply(200, [
                             {c: _json_value(v) for c, v in row.asDict().items()}

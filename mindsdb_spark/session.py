@@ -9,17 +9,28 @@ execution engine is Spark; the session defaults below are chosen for the
   broadcast-join demotion are the scale levers Catalyst controls at runtime.
 * shuffle.partitions sized to the local core count; on a real cluster this is
   overridden (AQE coalesces downward from a high initial number).
-* Arrow enabled — every pandas interchange (createDataFrame/toPandas/pandas
+* Arrow enabled — every pandas interchange (frame construction/toPandas/pandas
   UDF) is Arrow-batched, never row-at-a-time pickling.
 * Session timezone pinned to UTC so date/time functions agree with the
   DuckDB oracle, which treats parquet timestamps as naive UTC.
+
+Rows the driver already holds (command answers, status rows, system views,
+a knowledge-base query, label frames of driver-side graph passes) become
+frames through ``local_frame``, never through a pickled Python RDD. A
+Python list handed to Spark's frame constructor is parallelized as an RDD,
+so every read of the frame runs a job and starts a Python worker (a 3-row
+frame's collect: ~300 ms and one job). As an Arrow table the same rows are
+a ``LocalRelation``: Catalyst folds a projection or filter over it on the
+driver (``ConvertToLocalRelation``) and prunes an empty one from joins and
+unions (``PropagateEmptyRelation``), so the read runs no job (~20 ms).
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructField, StructType
 
 DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
@@ -226,3 +237,33 @@ def tune_file_partitioning(spark: SparkSession, data_dir: str, cpus: int | None 
             )),
         )
     return target
+
+
+def local_frame(spark: SparkSession, rows, schema=None) -> DataFrame:
+    """Frame over rows the driver holds, as a ``LocalRelation``.
+
+    ``schema`` is a DDL string, a ``StructType`` or a list of column names
+    (types then inferred from the rows, as Spark infers them). A list or
+    tuple of rows (tuples, ``Row``s or dicts) is converted to one Arrow
+    table on the driver; pandas, Arrow and RDD inputs go to Spark as they
+    are. This is the package's one call of Spark's frame constructor."""
+    if isinstance(rows, (list, tuple)):
+        from pyspark.sql.conversion import LocalDataToArrowConversion
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        rows = list(rows)
+        if isinstance(schema, str):
+            schema = spark._parse_ddl(schema)
+        elif rows and (schema is None or isinstance(schema, (list, tuple))):
+            inferred = spark._inferSchemaFromList(rows, names=schema)
+            names = schema or inferred.names
+            schema = StructType(
+                [StructField(n, f.dataType, f.nullable) for n, f in zip(names, inferred)]
+            )
+        if isinstance(schema, StructType):
+            rows = (
+                LocalDataToArrowConversion.convert(rows, schema, False)
+                if rows
+                else to_arrow_schema(schema).empty_table()
+            )
+    return spark.createDataFrame(rows, schema)

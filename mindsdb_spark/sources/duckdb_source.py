@@ -29,6 +29,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 
 from mindsdb_spark.catalog import TPCH_TABLES
+from mindsdb_spark.session import local_frame
 
 
 class DuckDBSource:
@@ -69,9 +70,9 @@ class DuckDBSource:
         return [r[0] for r in rows]
 
     def read(self, table: str) -> DataFrame:
-        return self.spark.createDataFrame(self.con.execute(f"SELECT * FROM {table}").arrow())
+        return local_frame(self.spark, self.con.execute(f"SELECT * FROM {table}").arrow())
 
     def query(self, sql: str) -> DataFrame:
-        out = self.spark.createDataFrame(self.con.execute(sql).arrow())
+        out = local_frame(self.spark, self.con.execute(sql).arrow())
         self.pushdowns += 1  # counts served queries, not attempts
         return out

@@ -6,7 +6,7 @@ mindsdb/integrations/handlers/file_handler/file_handler.py:80-196; format
 detection integrations/utilities/files/file_reader.py:27-214). Here the
 sniffed format dispatches to the matching distributed Spark reader —
 spark.read.{csv,json,parquet,text} — so file size is unbounded. XLSX goes
-through pandas read_excel → createDataFrame when openpyxl is present and
+through pandas read_excel → a Spark frame when openpyxl is present and
 otherwise through a standard-library zip+XML reader (an .xlsx IS a zip of
 XML parts), so the format works in any environment; PDF prefers
 pypdf/pymupdf and falls back to a stdlib extractor for plain/Flate text
@@ -18,6 +18,8 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+
+from mindsdb_spark.session import local_frame
 
 PARQUET_MAGIC = b"PAR1"
 XLSX_MAGIC = b"PK\x03\x04"  # zip container
@@ -343,14 +345,15 @@ def _read_pdf_stdlib(path: str) -> list[tuple[int, str]]:
 
 def _pandas_to_spark(spark: SparkSession, pdf, path: str) -> DataFrame:
     """Worksheet frame → Spark, with the header-only edge handled (pandas
-    object dtype can't be inferred by createDataFrame)."""
+    object dtype can't be inferred by Spark)."""
     if len(pdf.columns) == 0:
         raise ValueError(f"{path}: worksheet has no data")
     if len(pdf) == 0:
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [], ", ".join(f"`{c}` string" for c in pdf.columns)
         )
-    return spark.createDataFrame(pdf)
+    return local_frame(spark, pdf)
 
 
 def read_file(spark: SparkSession, path: str, **options) -> DataFrame:
@@ -399,7 +402,7 @@ def read_file(spark: SparkSession, path: str, **options) -> DataFrame:
                     pages = [(i + 1, page.get_text()) for i, page in enumerate(doc)]
             except ImportError:
                 pages = _read_pdf_stdlib(path)
-        return spark.createDataFrame(pages, "page int, text string")
+        return local_frame(spark, pages, "page int, text string")
     sep = "\t" if path.endswith(".tsv") else options.pop("sep", ",")
     return (
         spark.read.options(header=True, inferSchema=True, sep=sep, **options).csv(path)

@@ -128,21 +128,37 @@ def test_create_table_maps_mysql_blob_year_vector_types(wsess):
     wsess.sql(
         "CREATE TABLE wh.typed (a INT, b LONGBLOB, c YEAR, d MEDIUMBLOB, "
         "e DECIMAL(12,2), f DECIMAL, g INTEGER, h REAL, i DOUBLE PRECISION, "
-        "k TINYTEXT)"
+        "j ENUM('x','y'), k TINYTEXT)"
     )
     assert dict(wsess.sql("SELECT * FROM wh_typed").dtypes) == {
         "a": "int", "b": "binary", "c": "int", "d": "binary",
         "e": "decimal(12,2)", "f": "decimal(10,0)", "g": "int", "h": "float",
-        "i": "double", "k": "string",
+        "i": "double", "j": "string", "k": "string",
     }
     wsess.sql(
         "INSERT INTO wh.typed VALUES "
-        "(1, X'00FF', 2024, X'7F80', 1.25, 3, 4, 0.5, 0.25, 't')"
+        "(1, X'00FF', 2024, X'7F80', 1.25, 3, 4, 0.5, 0.25, 'y', 't')"
     )
     row = wsess.sql("SELECT b, c, d FROM wh_typed").collect()[0]
     assert (bytes(row["b"]), row["c"], bytes(row["d"])) == (b"\x00\xff", 2024, b"\x7f\x80")
     wsess.sql("ALTER TABLE wh.typed ADD COLUMN v VECTOR")
     assert dict(wsess.sql("SELECT * FROM wh_typed").dtypes)["v"] == "array<float>"
+
+
+def test_create_table_column_defaults_and_comments(wsess):
+    # quoted literals in column attributes reach the door's CREATE TABLE, and
+    # an " AS " inside a literal does not make the statement a CTAS
+    wsess.sql(
+        "CREATE TABLE wh.attrs (a INT NOT NULL DEFAULT 0 COMMENT 'key, not AS (a) name', "
+        "k VARCHAR(8) DEFAULT 'x' COMMENT 'c', s SET('a','b') DEFAULT \"a\")"
+    )
+    assert wsess.sql("SELECT * FROM wh_attrs").dtypes == [
+        ("a", "int"), ("k", "string"), ("s", "string")
+    ]
+    wsess.sql("INSERT INTO wh.attrs VALUES (1, 'it''s', 'b')")
+    assert [tuple(r) for r in wsess.sql("SELECT * FROM wh_attrs").collect()] == [
+        (1, "it's", "b")
+    ]
 
 
 def test_alter_table_add_drop_rename(wsess):

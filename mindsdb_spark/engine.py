@@ -765,14 +765,6 @@ def _json_pairs(d: dict) -> list[tuple[str, str]]:
     ] or [("engine", "registered")]
 
 
-def _index_layout(kb: dict) -> str:
-    """'partitioned' with a live cell-partitioned snapshot, 'inplan' for a
-    centroid-only index, '' when unindexed."""
-    if kb.get("index_path"):
-        return "partitioned"
-    return "inplan" if kb.get("index") is not None else ""
-
-
 def _period_seconds(unit: str) -> int:
     unit = unit.lower()
     if unit not in _PERIODS:
@@ -802,25 +794,27 @@ _MULTI_MODEL_RE = re.compile(
 
 # SHOW commands answered from one system view (the reference rewrites them
 # into information_schema SELECTs, command_executor.py:283-570) or with a
-# constant (rows, schema)
+# constant (rows, schema). Every view builds its rows already sorted: an
+# ORDER BY over the view's LocalRelation would run three Spark jobs
+# (sample, shuffle, sort), while a projection over it runs none.
 _SHOW_DATA: dict = {
     **{
         kind.upper(): f"SELECT name AS `{kind.capitalize()}` "
-        f"FROM information_schema_{kind} ORDER BY 1"
+        f"FROM information_schema_{kind}"
         for kind in ("ml_engines", "handlers", "jobs", "views", "agents", "models",
                      "knowledge_bases", "triggers", "chatbots")
     },
     # reference alias (command_executor.py:532)
-    "PREDICTORS": "SELECT name AS `Models` FROM information_schema_models ORDER BY 1",
-    "SKILLS": "SELECT name AS `Skills` FROM mindsdb_skills ORDER BY 1",
+    "PREDICTORS": "SELECT name AS `Models` FROM information_schema_models",
+    "SKILLS": "SELECT name AS `Skills` FROM mindsdb_skills",
     "PLUGINS": "SELECT * FROM information_schema_plugins",
-    "DATABASES": "SELECT schema_name AS `Database` FROM information_schema_databases ORDER BY 1",
+    "DATABASES": "SELECT schema_name AS `Database` FROM information_schema_databases",
     "CHARSET": "SELECT character_set_name AS `Charset`, description AS `Description`, "
     "default_collate_name AS `Default collation`, maxlen AS `Maxlen` "
-    "FROM information_schema_character_sets ORDER BY 1",
+    "FROM information_schema_character_sets",
     "PROCESSLIST": "SELECT id AS Id, 'mindsdb' AS User, 'localhost' AS Host, "
     "NULL AS db, 'Query' AS Command, 0 AS Time, status AS State, "
-    "query AS Info FROM information_schema_queries ORDER BY id",
+    "query AS Info FROM information_schema_queries",
     **{
         f"{scope}STATUS": ([], "Variable_name string, Value string")
         for scope in ("", "SESSION ", "GLOBAL ", "FUNCTION ", "PROCEDURE ")
@@ -1692,48 +1686,60 @@ class EngineSession:
     # controller.py:657-664 recursive batching loop)
     KB_INSERT_BATCH_SIZE = 50_000
 
-    def _drop_kb_index_snapshot(self, kb: dict) -> None:
-        """Invalidate a KB's partitioned index snapshot AND reclaim its
-        directory when the engine owns it (placed under state_dir). Called
-        from every mutation, from reindex, and from DROP — popping the path
-        without deleting would leak a corpus-sized parquet copy per
-        insert-after-index (review finding). A user-supplied `path` outside
-        state_dir is the user's to manage and is only forgotten."""
-        idx = kb.pop("index_path", None)
-        if idx:
-            # remember the fallback so EXPLAIN / DESCRIBE can say "the
-            # partitioned snapshot was invalidated by a mutation; searches
-            # use the in-plan path until reindexed" instead of the
-            # degradation being invisible until a query runs slow
-            kb["index_stale"] = True
-        if (
-            idx
-            and self._state_dir
-            and idx.startswith(self._state_dir.rstrip(os.sep) + os.sep)
-        ):
+    def _drop_kb_index(self, kb: dict) -> None:
+        """Unindex a KB and reclaim its snapshot directory when the engine
+        owns it (placed under state_dir). Called from every mutation, from
+        reindex, and from DROP — forgetting the path without deleting would
+        leak a corpus-sized parquet copy per insert-after-index. A
+        user-supplied `path` outside state_dir is the user's to manage and
+        is only forgotten. A dropped index leaves ``index_stale`` set, so
+        EXPLAIN says why searches scan exactly until CREATE INDEX reruns."""
+        index = kb.pop("index", None)
+        if index is None:
+            return
+        kb["index_stale"] = True
+        if self._state_dir and index["path"].startswith(self._state_dir.rstrip(os.sep) + os.sep):
             import shutil
 
-            shutil.rmtree(idx, ignore_errors=True)
+            shutil.rmtree(index["path"], ignore_errors=True)
 
-    def _kb_snapshot_valid(self, kb: dict) -> bool:
-        """Cheap (directory-listing) validity check of a partitioned index
-        snapshot before a probe reads it: the layout must still exist and
-        contain cell directories. Catches external deletion/rewrite of
-        user-supplied paths the engine only 'forgets' on mutation."""
-        path = kb.get("index_path")
-        if not path or not os.path.isdir(path):
-            return False
-        try:
-            return any(d.startswith("__cell=") for d in os.listdir(path))
-        except OSError:
-            return False
+    def _dir_children(self, path: str) -> list[str]:
+        """Child names of a local directory or a Hadoop URI ([] if absent)."""
+        if _URI_RE.match(path):
+            from mindsdb_spark.operators.vector import hadoop_children
+
+            return hadoop_children(self.spark, path)
+        return os.listdir(path) if os.path.isdir(path) else []
+
+    def _kb_route(self, kb: dict) -> tuple[dict | None, str | None]:
+        """The one decision of how a search over ``kb`` runs, shared by the
+        search, EXPLAIN, DESCRIBE and information_schema.knowledge_bases:
+        (index, None) probes the cell-partitioned snapshot while it is live;
+        (None, note) ranks with the exact cosine scan, the note saying why a
+        built index is not used. Reads change no KB state: a snapshot
+        removed or gutted outside the engine is re-checked (one directory
+        listing) on every call."""
+        index = kb.get("index")
+        if index is not None:
+            if any(d.startswith("__cell=") for d in self._dir_children(index["path"])):
+                return index, None
+            return None, (
+                f"the index snapshot at {index['path']} is missing; rerun "
+                "CREATE INDEX to restore the partitioned probe"
+            )
+        if kb.get("index_stale"):
+            return None, (
+                "the index was invalidated by a mutation; rerun CREATE "
+                "INDEX to restore the partitioned probe"
+            )
+        return None, None
 
     def _kb_explain_header(self, inner_sql: str) -> str | None:
-        """For ``EXPLAIN <kb select>``, a human-readable route header naming
-        the index layout and staleness, so the partitioned-vs-in-plan
-        decision (and the silent fallback after a mutation invalidated the
-        snapshot) is visible BEFORE running the query. Reference analog:
-        DESCRIBE KNOWLEDGE_BASE index status (round-7 verdict item 5)."""
+        """For ``EXPLAIN <kb select>``, a human-readable header naming the
+        route the search takes, so an index left unused (a mutation
+        invalidated it, or its snapshot vanished) is visible BEFORE the
+        query runs. Reference analog: DESCRIBE KNOWLEDGE_BASE index
+        status."""
         s = _collapse_ws(inner_sql)
         name = None
         st = _Stmt(s)
@@ -1746,38 +1752,19 @@ class EngineSession:
                     break
         if name is None:
             return None
-        kb = self._kbs[name]
-        # EXPLAIN is read-only: report what a search WILL do (an externally
-        # removed snapshot falls back to the in-plan path) WITHOUT mutating
-        # kb state — the pop/stale-flag is left to the actual search path,
-        # which performs the same revalidation (_kb_search).
-        snapshot_live = bool(kb.get("index_path")) and self._kb_snapshot_valid(kb)
-        stale = kb.get("index_stale") or (
-            bool(kb.get("index_path")) and not snapshot_live
-        )
-        lines = [
-            "== Knowledge Base Search ==",
-            f"knowledge_base: {name}",
-        ]
-        if kb.get("index") is None:
-            lines.append("index: none")
-            lines.append("route: exact cosine top-k scan over the chunk store")
-        elif snapshot_live:
-            lines.append(f"index: ivf ({len(kb['index'])} centroids), layout: partitioned")
-            lines.append(f"snapshot: {kb['index_path']}")
-            lines.append(
+        index, note = self._kb_route(self._kbs[name])
+        lines = ["== Knowledge Base Search ==", f"knowledge_base: {name}"]
+        if index is not None:
+            lines += [
+                f"index: ivf ({len(index['centroids'])} centroids), layout: partitioned",
+                f"snapshot: {index['path']}",
                 "route: partitioned probe (partition-pruned directory scan "
-                "of the probed cells)"
-            )
+                "of the probed cells)",
+            ]
         else:
-            lines.append(f"index: ivf ({len(kb['index'])} centroids), layout: inplan")
-            lines.append("route: in-plan IVF assignment over the chunk store")
-            if stale:
-                lines.append(
-                    "note: the partitioned snapshot was invalidated by a "
-                    "mutation; rerun CREATE INDEX ... USING layout = "
-                    "'partitioned' to restore the pruned-probe path"
-                )
+            lines += ["index: none", "route: exact cosine top-k scan over the chunk store"]
+            if note:
+                lines.append(f"note: {note}")
         return "\n".join(lines)
 
     def _kb_insert(
@@ -1874,13 +1861,12 @@ class EngineSession:
                 kb["store"] = kb["store"].localCheckpoint(eager=True)
             inserted[0] += incoming.count()
 
-        # any mutation staleness-invalidates the partitioned index layout —
-        # a directory snapshot cannot see rows written after CREATE INDEX;
-        # searches fall back to in-plan ivf_search until the index is
-        # rebuilt. Invalidate only NOW, after input validation and idf
-        # fitting succeeded, so a rejected INSERT leaves the index intact
-        # (round-7 ADVICE)
-        self._drop_kb_index_snapshot(kb)
+        # any mutation unindexes the KB — a directory snapshot cannot see
+        # rows written after CREATE INDEX; searches scan exactly until the
+        # index is rebuilt. Invalidate only NOW, after input validation and
+        # idf fitting succeeded, so a rejected INSERT leaves the index
+        # intact (round-7 ADVICE)
+        self._drop_kb_index(kb)
         batched_insert(
             prepared,
             _write_batch,
@@ -1911,7 +1897,7 @@ class EngineSession:
         # invalidate only after the mutation materialized — a DELETE whose
         # condition fails analysis leaves the index intact (round-7 ADVICE
         # ordering, applied to every KB mutation)
-        self._drop_kb_index_snapshot(kb)
+        self._drop_kb_index(kb)
         return self._row("deleted long", int(obs.get["n"] or 0))
 
     def _kb_update(self, name: str, set_map: dict, condition) -> DataFrame:
@@ -1942,7 +1928,7 @@ class EngineSession:
         store = store.observe(obs, F.sum(F.col("__hit").cast("long")).alias("n"))
         kb["store"] = store.select(*cols).localCheckpoint(eager=True)
         # as in _kb_delete: snapshot goes stale only once the update lands
-        self._drop_kb_index_snapshot(kb)
+        self._drop_kb_index(kb)
         return self._row("updated long", int(obs.get["n"] or 0))
 
     def _agent_rag_ask(self, agent, question: str) -> DataFrame:
@@ -2439,39 +2425,25 @@ class EngineSession:
                 "distance", *meta_cols,
             )
         else:
-            if kb.get("index") is not None:
-                # CREATE INDEX ON KNOWLEDGE_BASE built IVF centroids
-                # (reference: command_executor.py answer_create_kb_index →
-                # vector store index build). Probing every cell is exact;
-                # USING n_probes narrows for speed at recall cost.
-                from mindsdb_spark.operators.vector import ivf_read_probe, ivf_search
+            index, _note = self._kb_route(kb)
+            if index is not None:
+                # CREATE INDEX ON KNOWLEDGE_BASE wrote the store partitioned
+                # by IVF cell (reference: command_executor.py
+                # answer_create_kb_index → vector store index build), so the
+                # probe reads only the probed directories (PartitionFilters
+                # — at 100 TB a 4-of-64-cell probe lists ~6% of the files);
+                # the metadata prefilter pushes into the pruned scan.
+                # Probing every cell is exact; USING n_probes narrows for
+                # speed at recall cost.
+                from mindsdb_spark.operators.vector import ivf_read_probe
 
-                n_probes = int(using.get("n_probes", len(kb["index"])))
-                if kb.get("index_path") and not self._kb_snapshot_valid(kb):
-                    # a user-path snapshot can vanish or be rewritten
-                    # OUTSIDE the engine (round-7 ADVICE second clause):
-                    # revalidate cheaply before every probe — a missing /
-                    # gutted layout degrades to the in-plan path instead of
-                    # failing the query, and EXPLAIN surfaces the fallback
-                    kb.pop("index_path", None)
-                    kb["index_stale"] = True
-                if kb.get("index_path"):
-                    # layout='partitioned': the store is materialized
-                    # partitioned by cell id, so the probe reads only the
-                    # probed directories (PartitionFilters — at 100 TB a
-                    # 4-of-64-cell probe lists ~6% of the files); the
-                    # metadata prefilter pushes into the pruned scan
-                    ranked = ivf_read_probe(
-                        self.spark, kb["index_path"], qvec, kb["index"],
-                        k=fetch, vec_col="embedding", id_col="chunk_id",
-                        n_probes=n_probes, cell_col="__cell",
-                        where=self.rewrite(prefilter) if prefilter else None,
-                    ).drop("__cell")
-                else:
-                    ranked = ivf_search(
-                        store, "embedding", qvec, kb["index"], k=fetch,
-                        id_col="chunk_id", n_probes=n_probes,
-                    )
+                ranked = ivf_read_probe(
+                    self.spark, index["path"], qvec, index["centroids"],
+                    k=fetch, vec_col="embedding", id_col="chunk_id",
+                    n_probes=int(using.get("n_probes", len(index["centroids"]))),
+                    cell_col="__cell",
+                    where=self.rewrite(prefilter) if prefilter else None,
+                ).drop("__cell")
             else:
                 ranked = cosine_topk(store, "embedding", qvec, k=fetch, id_col="chunk_id")
             hits = ranked.select(
@@ -3112,6 +3084,7 @@ class EngineSession:
             c for c in kb["store"].columns
             if c not in ("chunk_id", "doc_id", "chunk_text", "embedding")
         ]
+        index, _note = self._kb_route(kb)
         return self._row(
             "name string, dim int, embedder string, chunks_estimate long, "
             "has_index boolean, index_layout string, metadata_columns string",
@@ -3119,8 +3092,8 @@ class EngineSession:
             kb["dim"],
             kb.get("embedder") or "default",
             _estimate_rows(kb["store"], "embedding"),
-            kb.get("index") is not None,
-            _index_layout(kb),
+            index is not None,
+            "partitioned" if index is not None else "",
             ", ".join(meta),
         )
 
@@ -3248,24 +3221,7 @@ class EngineSession:
 
     @_command("EXPLAIN", _EXPLAIN_RE)
     def _explain(self, m, st):
-        # EXPLAIN is read-only (round-8 ADVICE): planning the inner
-        # query routes through _kb_search, whose snapshot revalidation
-        # pops index_path / sets index_stale on an externally removed
-        # layout. Snapshot the routing keys and restore them after —
-        # the next REAL search re-detects and mutates as before.
-        keys = ("index_path", "index_stale")
-        routing = {
-            n: {k: kb[k] for k in keys if kb.get(k) is not None} for n, kb in self._kbs.items()
-        }
-        try:
-            plan = self._explain_string(self.sql(m.group(1)), "formatted")
-        finally:
-            for n, saved in routing.items():
-                kb = self._kbs.get(n)
-                if kb is not None:
-                    for k in keys:
-                        kb.pop(k, None)
-                    kb.update(saved)
+        plan = self._explain_string(self.sql(m.group(1)), "formatted")
         header = self._kb_explain_header(m.group(1))
         if header:
             plan = header + "\n\n" + plan
@@ -4279,7 +4235,7 @@ class EngineSession:
             # reclaim a session-owned partitioned index layout (only
             # paths under state_dir — os.sep-anchored so a sibling dir
             # that merely string-prefixes state_dir is never touched)
-            self._drop_kb_index_snapshot(kb)
+            self._drop_kb_index(kb)
         return self._row("knowledge_base string", name)
 
     @_command("ALTER", _ALTER_KB_RE)
@@ -4304,8 +4260,11 @@ class EngineSession:
         # reference: CREATE INDEX ON KNOWLEDGE_BASE kb delegates the
         # index build to the vector store (command_executor.py
         # answer_create_kb_index, controller.py:985-992). Spark analog:
-        # fit IVF coarse-quantizer centroids over the chunk store; KB
-        # selects then probe cells instead of scanning the corpus.
+        # fit IVF coarse-quantizer centroids over the chunk store and
+        # write the store PARTITIONED BY nearest-cell id, so a search
+        # probe is directory-level partition pruning (vector.py:
+        # ivf_write_partitioned — the variant that won the sf100 ANN
+        # decade, BENCH_sf100_ann.json 0.51 s probe over 2M×64-dim)
         from mindsdb_spark.operators.vector import (
             _estimate_rows,
             ivf_write_partitioned,
@@ -4317,6 +4276,13 @@ class EngineSession:
             raise KeyError(f"knowledge base {name!r} does not exist")
         kb = self._kbs[name]
         using = self._using(m.group(2))
+        # every check runs BEFORE any state changes, so a rejected
+        # statement leaves the old index and its snapshot serving
+        layout = str(using.get("layout", "partitioned")).lower()
+        if layout != "partitioned":
+            raise ValueError(
+                f"unknown KB index layout {layout!r}; the index is always 'partitioned'"
+            )
         # plan-stats estimate, not a full count() scan — centroid count
         # only needs order-of-magnitude accuracy (vector.py:_estimate_rows)
         n_rows = _estimate_rows(kb["store"], "embedding")
@@ -4328,49 +4294,28 @@ class EngineSession:
                 "before CREATE INDEX"
             )
         n_centroids = int(using.get("n_centroids", max(1, min(16, n_rows))))
-        # validate the layout BEFORE any mutation: refitting centroids
-        # first and then raising on a bad layout would pair NEW
-        # centroids with a stale partitioned snapshot — probe cells
-        # picked from one assignment, directories written by another
-        # (silently wrong recall)
-        layout = str(using.get("layout", "")).lower()
-        if layout and layout not in ("partitioned", "inplan"):
-            raise ValueError(
-                f"unknown KB index layout {layout!r}; "
-                "use 'partitioned' or 'inplan'"
-            )
-        # any reindex invalidates (and reclaims) the previous snapshot
-        # up front, so a failure mid-build leaves a consistent
-        # centroid-only state, never a mismatched layout. Remember the
-        # path first: the clobber-guard below accepts the kb's OWN
-        # previous snapshot even if its sentinel write never landed
-        # (crash between parquet write and marker).
-        prev_index_path = kb.get("index_path")
-        self._drop_kb_index_snapshot(kb)
-        kb["index"] = kmeans_centroids(
-            kb["store"], vec_col="embedding", n_centroids=n_centroids
+        self.last_state  # materializes self._state_dir
+        user_path = using.get("path")
+        path = str(user_path or os.path.join(self._state_dir, f"kb_index_{name}"))
+        if user_path:
+            # the clobber-guard accepts the kb's OWN previous snapshot even
+            # if its sentinel write never landed (crash between parquet
+            # write and marker)
+            self._check_index_path(name, path, (kb.get("index") or {}).get("path"))
+        # a reindex drops (and reclaims) the previous snapshot first, and
+        # the new index is recorded only once its snapshot is written: a
+        # build that fails leaves the KB unindexed (with no mutation note),
+        # never centroids paired with another fit's cells
+        self._drop_kb_index(kb)
+        kb.pop("index_stale", None)
+        centroids = kmeans_centroids(kb["store"], vec_col="embedding", n_centroids=n_centroids)
+        ivf_write_partitioned(
+            kb["store"], path, "embedding", centroids, cell_col="__cell", owner=name,
         )
-        kb.pop("index_stale", None)  # a fresh index clears the flag
-        if layout == "partitioned":
-            # the 100 TB layout: persist the
-            # chunk store PARTITIONED BY nearest-cell id so a search
-            # probe is directory-level partition PRUNING, not an in-plan
-            # assignment pass over the corpus (vector.py:
-            # ivf_write_partitioned — the variant that won the sf100 ANN
-            # decade, BENCH_sf100_ann.json 0.51 s probe over 2M×64-dim)
-            self.last_state  # materializes self._state_dir
-            user_path = using.get("path")
-            path = str(user_path or os.path.join(self._state_dir, f"kb_index_{name}"))
-            if user_path:
-                self._check_index_path(name, path, prev_index_path)
-            ivf_write_partitioned(
-                kb["store"], path, "embedding", kb["index"],
-                cell_col="__cell", owner=name,
-            )
-            kb["index_path"] = path
+        kb["index"] = {"centroids": centroids, "path": path}
         return self._row(
             "knowledge_base string, n_centroids int, layout string",
-            name, n_centroids, layout or "inplan",
+            name, n_centroids, "partitioned",
         )
 
     def _check_index_path(self, name: str, path: str, prev_index_path) -> None:
@@ -4382,27 +4327,20 @@ class EngineSession:
         engine-written sentinel ivf_write_partitioned drops in every
         snapshot — NOT by _SUCCESS, which every Spark-written dataset
         contains."""
-        from mindsdb_spark.operators.vector import (
-            hadoop_dir_nonempty,
-            read_index_sentinel_owner,
-        )
+        from mindsdb_spark.operators.vector import read_index_sentinel_owner
 
-        # trailing-slash-normalized so the index_path comparisons below
+        # trailing-slash-normalized so the index path comparisons below
         # can't miss a same-path respelling
         p = _norm_path(path)
-        if _URI_RE.match(path):
-            # non-local URI (hdfs://, s3a://): no local abspath semantics,
-            # and the local state dir can't contain it; existence/sentinel
-            # checks go through the Hadoop FS API instead of os.*
-            inside_state = False
-            listing = hadoop_dir_nonempty(self.spark, path)
-        else:
-            state = os.path.abspath(self._state_dir)
-            inside_state = p == state or p.startswith(state + os.sep)
-            listing = os.listdir(p) if os.path.isdir(p) else []
+        # a non-local URI (hdfs://, s3a://) has no local abspath semantics,
+        # and the local state dir can't contain it; its listing and the
+        # sentinel go through the Hadoop FS API instead of os.*
+        state = os.path.abspath(self._state_dir)
+        inside_state = not _URI_RE.match(path) and (p == state or p.startswith(state + os.sep))
+        listing = self._dir_children(p)
         # cross-KB guard (round-9 ADVICE): a path that is ANOTHER live kb's
         # index snapshot must never be overwritten — the other kb's
-        # index_path would keep pointing there and its probes would
+        # index would keep pointing there and its probes would
         # silently read THIS kb's chunks. Checked before the
         # ours/inside_state logic: being engine-written (sentinel) or
         # engine-managed (state dir) is exactly the dangerous case here,
@@ -4411,14 +4349,14 @@ class EngineSession:
         other = next(
             (
                 n2 for n2, kb2 in self._kbs.items()
-                if n2 != name and kb2.get("index_path")
-                and _norm_path(kb2["index_path"]) == p
+                if n2 != name and kb2.get("index")
+                and _norm_path(kb2["index"]["path"]) == p
             ),
             None,
         )
         if other is None and sowner and sowner != name and sowner in self._kbs:
             # the sentinel records its owner: a LIVE other kb named there
-            # is refused even if its index_path was recorded under a
+            # is refused even if its index path was recorded under a
             # differently-normalized spelling
             other = sowner
         if other is not None:
@@ -4671,7 +4609,8 @@ class EngineSession:
     def _schema_names(self) -> list[str]:
         return sorted(
             {src for src, _t in self._source_tables()} | set(self._native) | set(self._writable)
-        ) + ["information_schema"]
+            | {"information_schema"}
+        )
 
     @_system_view(
         "information_schema_databases",
@@ -4720,11 +4659,14 @@ class EngineSession:
     # session objects (reference: mindsdb_tables.py:42-459 JOBS/VIEWS/AGENTS)
     @_system_view("information_schema_views", "name string, definition string")
     def _views_view(self):
-        return list(self._views.items())
+        return sorted(self._views.items())
 
     @_system_view("information_schema_jobs", "name string, every_seconds double, runs int")
     def _jobs_view(self):
-        return [(j.name, float(j.every_seconds), j.runs) for j in self.jobs.jobs.values()]
+        return [
+            (j.name, float(j.every_seconds), j.runs)
+            for j in sorted(self.jobs.jobs.values(), key=lambda j: j.name)
+        ]
 
     @_system_view(
         "information_schema_agents", "name string, model string, knowledge_bases string"
@@ -4732,7 +4674,7 @@ class EngineSession:
     def _agents_view(self):
         return [
             (name, getattr(a, "model_name", ""), ", ".join(getattr(a, "knowledge_bases", ()) or ()))
-            for name, a in self._agents.items()
+            for name, a in sorted(self._agents.items())
         ]
 
     @_system_view(
@@ -4744,31 +4686,33 @@ class EngineSession:
             (name, mm.output_schema, "ts" if mm.order_by else "row",
              self._model_active.get(name, 1),
              sum(s is not None for s in self._model_versions.get(name, [mm])))
-            for name, mm in self._models.items()
+            for name, mm in sorted(self._models.items())
         ]
 
-    # index_layout: 'partitioned' when the cell-partitioned store is live,
-    # 'inplan' for centroid-only, '' for unindexed (a stale snapshot
-    # invalidated by a mutation reports 'inplan', matching what a search
-    # will use)
+    # has_index / index_layout report the route a search takes
+    # (_kb_route): 'partitioned' while the cell-partitioned snapshot is
+    # live, '' when the search scans exactly
     @_system_view(
         "information_schema_knowledge_bases",
         "name string, dim int, embedder string, has_index boolean, index_layout string",
     )
     def _knowledge_bases_view(self):
-        return [
-            (name, kb["dim"], kb.get("embedder") or "default",
-             kb.get("index") is not None, _index_layout(kb))
-            for name, kb in self._kbs.items()
-        ]
+        rows = []
+        for name, kb in sorted(self._kbs.items()):
+            index, _note = self._kb_route(kb)
+            rows.append((name, kb["dim"], kb.get("embedder") or "default",
+                         index is not None, "partitioned" if index is not None else ""))
+        return rows
 
     @_system_view("information_schema_triggers", "name string, watch_column string")
     def _triggers_view(self):
-        return [(name, tr.column) for name, tr in self._triggers.items()]
+        return [(name, tr.column) for name, tr in sorted(self._triggers.items())]
 
     @_system_view("information_schema_ml_engines", "name string, handler string")
     def _ml_engines_view(self):
-        return [(name, getattr(f, "__name__", str(f))) for name, f in self._ml_engines.items()]
+        return [
+            (name, getattr(f, "__name__", str(f))) for name, f in sorted(self._ml_engines.items())
+        ]
 
     @_system_view("information_schema_queries", "id int, query string, status string")
     def _queries_view(self):
@@ -4881,7 +4825,7 @@ class EngineSession:
                 None,
                 None,
             )
-            for b in self._chatbots.values()
+            for b in sorted(self._chatbots.values(), key=lambda b: b.name)
         ]
 
     # `log` system database (reference: interfaces/database/log.py):
@@ -4966,10 +4910,10 @@ _KEY_COLUMN_USAGE_SCHEMA = (
 # sources carry no key metadata (the same emptiness the reference serves for
 # non-catalog sources); breadth tables per system_tables.py:315-512,691-717.
 _CONSTANT_VIEWS = {
-    "information_schema_handlers": (_HANDLER_KINDS, "name string, type string"),
+    "information_schema_handlers": (sorted(_HANDLER_KINDS), "name string, type string"),
     "information_schema_character_sets": (
-        [("utf8mb4", "utf8mb4_general_ci", "UTF-8 Unicode", 4),
-         ("binary", "binary", "Binary pseudo charset", 1)],
+        [("binary", "binary", "Binary pseudo charset", 1),
+         ("utf8mb4", "utf8mb4_general_ci", "UTF-8 Unicode", 4)],
         "character_set_name string, default_collate_name string, "
         "description string, maxlen int",
     ),

@@ -14,9 +14,11 @@ Spark-first re-expression:
   (per-partition top-k, k-row driver merge — no global sort, no collect).
   This is the deterministic oracle-checked baseline and scales linearly with
   executors.
-* ``ivf_topk`` / ``ivf_search`` / ``ivf_read_probe`` — the approximate
-  scale path: k-means cells (IVF) assign each vector to a centroid, and a
-  query scans only the rows of its ``n_probes`` nearest cells.
+* ``ivf_topk`` / ``ivf_read_probe`` — the approximate scale path: k-means
+  cells (IVF) assign each vector to a centroid, and a query scans only the
+  rows of its ``n_probes`` nearest cells. ``ivf_read_probe`` reads the
+  cell-partitioned snapshot ``ivf_write_partitioned`` writes, so the probe
+  is directory-level partition pruning; it is the knowledge base's index.
 * ``pq_topk`` — product-quantization ADC top-k over a deterministic
   codebook; ``allpairs_topk`` and ``knn_classify`` are the blocked
   all-pairs and labeled-neighbor joins.
@@ -489,7 +491,8 @@ def kmeans_centroids(
 ) -> list[tuple[int, list[float]]]:
     """Learn IVF coarse-quantizer centroids with MLlib KMeans.
 
-    The production path for `ivf_search`: trained centroids give real
+    The knowledge-base index's quantizer (`ivf_write_partitioned` cells,
+    `ivf_read_probe` probes): trained centroids give real
     cluster structure (the smallest-id quantizer in `ivf_topk` exists for
     oracle determinism, not recall). Distributed fit; only k centers come
     back to the driver.
@@ -500,37 +503,6 @@ def kmeans_centroids(
     data = df.select(array_to_vector(col(vec_col).cast("array<double>")).alias("features"))
     model = KMeans(k=n_centroids, seed=seed, maxIter=10).fit(data)
     return [(i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())]
-
-
-def ivf_search(
-    df: DataFrame,
-    vec_col: str,
-    query: list[float],
-    centroids: list[tuple[int, list[float]]],
-    k: int = 10,
-    id_col: str = "vec_id",
-    n_probes: int = 4,
-) -> DataFrame:
-    """IVF top-k against a prepared centroid list (e.g. kmeans_centroids).
-
-    Probe selection is driver-side numpy over the k centroid vectors;
-    candidate filtering and exact ranking stay distributed. At scale,
-    persist the assignment as a partition column so probing prunes
-    partitions instead of filtering rows.
-    """
-    import math
-
-    def cos(a, b):
-        dot = sum(x * y for x, y in zip(a, b))
-        na = math.sqrt(sum(x * x for x in a))
-        nb = math.sqrt(sum(x * x for x in b))
-        return dot / (na * nb) if na and nb else -1.0
-
-    q = [float(x) for x in query]
-    ranked = sorted(centroids, key=lambda c: (-cos(c[1], q), -c[0]))
-    probes = [cid for cid, _v in ranked[:n_probes]]
-    cand = ivf_assign(df, vec_col, centroids).filter(col("__cid").isin(probes)).drop("__cid")
-    return cosine_topk(cand, vec_col, q, k, id_col)
 
 
 def _l2sq(a: Column, b: Column) -> Column:
@@ -688,16 +660,16 @@ def write_index_sentinel(spark, path: str, owner: str = "") -> None:
         out.close()
 
 
-def hadoop_dir_nonempty(spark, path: str) -> bool:
-    """True when ``path`` exists and has at least one child, via the
-    Hadoop FS API — the existence check the clobber-guard needs for
-    non-local URIs where os.listdir can't look."""
+def hadoop_children(spark, path: str) -> list[str]:
+    """Names of the children of ``path`` ([] when it does not exist), via
+    the Hadoop FS API — the listing the SQL door needs for non-local URIs
+    where os.listdir can't look."""
     fs, _, jvm = _sentinel_fs(spark, path)
     jdir = jvm.org.apache.hadoop.fs.Path(str(path))
     try:
-        return bool(fs.exists(jdir)) and len(fs.listStatus(jdir)) > 0
+        return [st.getPath().getName() for st in fs.listStatus(jdir)]
     except Exception:
-        return False
+        return []
 
 
 def read_index_sentinel_owner(spark, path: str):

@@ -686,14 +686,15 @@ S09_SQL = _s09_sql()
 
 
 # --- K11 partition-pruned IVF index through the KB SQL door -------------------
-# CREATE INDEX ON KNOWLEDGE_BASE ... USING layout = 'partitioned' persists the
-# chunk store PARTITIONED BY nearest-centroid cell (vector.py:
-# ivf_write_partitioned — the layout that won the sf100 ANN decade) and the
-# KB select routes through ivf_read_probe: probe cells are picked driver-side
-# from the tiny centroid list and the scan reads ONLY those partition
-# directories (PartitionFilters — asserted in tests/test_kb_sql.py). Probing
-# every cell (the default) is EXACT, so the brute-force top-k oracle must
-# hash-match; narrowed n_probes trades recall for scan fraction at 100 TB.
+# CREATE INDEX ON KNOWLEDGE_BASE persists the chunk store PARTITIONED BY
+# nearest-centroid cell (vector.py:ivf_write_partitioned — the layout that
+# won the sf100 ANN decade, and the KB's only index: `layout =
+# 'partitioned'` below just names it) and the KB select routes through
+# ivf_read_probe: probe cells are picked driver-side from the tiny centroid
+# list and the scan reads ONLY those partition directories (PartitionFilters
+# — asserted in tests/test_kb_sql.py). Probing every cell (the default) is
+# EXACT, so the brute-force top-k oracle must hash-match; narrowed n_probes
+# trades recall for scan fraction at 100 TB.
 def k11_kb_indexed_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mindsdb_spark.engine import EngineSession
 

@@ -2410,106 +2410,6 @@ FROM corpus ORDER BY doc_id
 D60_SQL = _d60_sql()
 
 
-# --- D61/D62: ROUND-11 CANDIDATES (implemented + compare()-tested in round
-# 10; NOT in the PIPELINE dict — the round-10 window budget went to d59/d60,
-# and each registered key rides the driver's ~50-slot correctness window.
-# Round 11: add the two dict lines.) -------------------------------------------
-
-
-def d61_readability(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Flesch reading-ease / FK grade over the corpus (operators/text.py:
-    readability — one map stage, per-word vowel-group syllables via JVM
-    higher-order functions, zero shuffle)."""
-    return (
-        T.readability(_t(spark, sf_dir, "documents"))
-        .repartition(1)
-        .sortWithinPartitions("doc_id")
-    )
-
-
-D61_SQL = r"""
-WITH t AS (
-  SELECT doc_id, text,
-         list_filter(string_split_regex(lower(trim(text)), '\s+'),
-                     x -> x != '') AS w
-  FROM documents
-),
-s AS (
-  SELECT doc_id,
-         CAST(len(w) AS INTEGER) AS n_words,
-         CAST(greatest(len(regexp_extract_all(text, '[.!?]+')), 1) AS INTEGER)
-           AS n_sentences,
-         CAST(coalesce(list_sum(list_transform(w,
-             x -> greatest(len(regexp_extract_all(x, '[aeiouy]+')), 1))), 0)
-           AS INTEGER) AS n_syllables
-  FROM t
-)
-SELECT doc_id, n_words, n_sentences, n_syllables,
-       floor((CAST(206.835 AS DOUBLE)
-              - CAST(1.015 AS DOUBLE) * (n_words / n_sentences)
-              - CAST(84.6 AS DOUBLE) * (n_syllables / nullif(n_words, 0)))
-             * 1000000 + 0.5) / 1000000 AS flesch,
-       floor((CAST(0.39 AS DOUBLE) * (n_words / n_sentences)
-              + CAST(11.8 AS DOUBLE) * (n_syllables / nullif(n_words, 0))
-              - CAST(15.59 AS DOUBLE))
-             * 1000000 + 0.5) / 1000000 AS fk_grade
-FROM s ORDER BY doc_id
-"""
-
-
-# Seed rows for d62: the fixture corpus is ASCII-clean (NFC is identity
-# there — that pins the zero-false-rewrite contract), so rows built by the
-# real damage mechanisms pin the normalization itself. Shared verbatim by
-# the Spark callable and the oracle SQL.
-_D62_SEEDED = [
-    (910001, "cafe\u0301  du  monde"),  # decomposed e+combining acute; ws runs
-    (910002, "tab\tand\x0bvtab\x07bell"),  # kept-ws vs stripped controls
-    (910003, "  already clean  "),
-    (910004, None),
-]
-
-
-def d62_nfc_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Unicode-normalization scrub over corpus + mechanism-seeded rows
-    (operators/text.py:nfc_scrub — Arrow-batched NFC, then JVM control
-    strip + whitespace collapse). Oracle replays DuckDB's nfc_normalize
-    through the byte-identical regex chain."""
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "text").unionAll(
-        local_frame(spark, _D62_SEEDED, "doc_id long, text string")
-    )
-    return (
-        T.nfc_scrub(docs)
-        .repartition(1)
-        .sortWithinPartitions("doc_id")
-    )
-
-
-def _d62_sql() -> str:
-    damaged = ", ".join(
-        f"({i}, {_sql_str(t) if t is not None else 'NULL'})"
-        for i, t in _D62_SEEDED
-    )
-    ctrl, ws = _sql_str(T.CONTROL_STRIP), _sql_str(T.WS_RUN)
-    return f"""
-WITH corpus AS (
-  SELECT doc_id, text FROM documents
-  UNION ALL SELECT * FROM (VALUES {damaged}) AS d(doc_id, text)
-),
-c AS (
-  SELECT doc_id, text,
-         trim(regexp_replace(regexp_replace(nfc_normalize(text),
-              {ctrl}, '', 'g'), {ws}, ' ', 'g')) AS clean_text
-  FROM corpus
-)
-SELECT doc_id, clean_text,
-       NOT (clean_text IS NOT DISTINCT FROM text) AS changed
-FROM c ORDER BY doc_id
-"""
-
-
-D62_SQL = _d62_sql()
-
-
 # --- registry ----------------------------------------------------------------
 PIPELINE = {
     "d01_dedup_exact": (d01_dedup_exact, D01_SQL),

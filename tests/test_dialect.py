@@ -612,14 +612,27 @@ def test_round3_late_table_functions_sql_door(spark, sf_dir):
 
 def test_clear_cache_reclaims_operator_persists(spark, sf_dir):
     # operators persist() shared subtrees; a long-running session reclaims
-    # them with Spark's native CLEAR CACHE, which the SQL door passes through
+    # them with Spark's native CLEAR CACHE, which the SQL door passes through.
+    # KB stores are localCheckpoints that cannot be recomputed, so they
+    # survive it (whatever earlier tests left stored is not counted)
     sess = EngineSession(spark)
     sess.register_parquet_source("tpch", sf_dir, tables=["documents"])
-    sess.sql("SELECT * FROM unigram_nll(tpch_documents) ORDER BY doc_id LIMIT 3").collect()
+    sess.sql("CREATE KNOWLEDGE_BASE cc_kb USING dim = 8")
+    sess.sql("INSERT INTO cc_kb SELECT doc_id, text FROM tpch_documents WHERE doc_id < 20")
     sc = spark.sparkContext._jsc.sc()
-    assert len(sc.getRDDStorageInfo()) > 0
+
+    def stored():
+        return {info.id() for info in sc.getRDDStorageInfo()}
+
+    before = stored()
+    sess.sql("SELECT * FROM unigram_nll(tpch_documents) ORDER BY doc_id LIMIT 3").collect()
+    persisted = stored() - before
+    assert persisted
     sess.sql("CLEAR CACHE")
-    assert len(sc.getRDDStorageInfo()) == 0
+    assert not stored() & persisted
+    hits = sess.sql("SELECT doc_id FROM cc_kb WHERE content = 'spark join' LIMIT 3").collect()
+    assert len(hits) == 3
+    sess.sql("DROP KNOWLEDGE_BASE cc_kb")
 
 
 def test_qualify_rewrite_forms(spark, sf_dir):

@@ -1,6 +1,8 @@
 """KB semantic search through the SQL door."""
 
 import os
+import re
+
 import pytest
 
 from mindsdb_spark.catalog import load_table
@@ -15,6 +17,25 @@ def kbsess(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents").limit(200)
     s.register_knowledge_base("docs_kb", docs)
     return s
+
+
+_Q = "SELECT * FROM {} WHERE content = 'spark join fast' LIMIT 5"
+
+
+def _hits(sess, kb):
+    """A KB's top-5 for the shared query, as comparable tuples."""
+    return [
+        (r["chunk_id"], r["doc_id"], r["content"], r["distance"])
+        for r in sess.sql(_Q.format(kb)).collect()
+    ]
+
+
+def _explain(sess, kb):
+    """EXPLAIN text of the shared query with attribute, lambda-variable and
+    exchange ids blanked: a new plan numbers those afresh, nothing else may
+    change."""
+    plan = sess.sql("EXPLAIN " + _Q.format(kb)).collect()[0]["plan"]
+    return re.sub(r"(_\d+)?#\d+|plan_id=\d+", "#", plan)
 
 
 def test_kb_select_default_limit(kbsess):
@@ -124,35 +145,33 @@ def test_kb_using_with_metadata_prefilter(kbsess):
     assert all(r["doc_id"] < 50 for r in rows)
 
 
-def test_create_index_on_knowledge_base(spark, sf_dir):
-    from mindsdb_spark.catalog import load_table
-    from mindsdb_spark.engine import EngineSession
-
-    sess = EngineSession(spark)
+def test_create_index_on_knowledge_base(spark, sf_dir, tmp_path):
+    """CREATE INDEX without USING writes the cell-partitioned snapshot: the
+    search plan prunes partitions, probing every cell equals the exact
+    scan, and the retired 'inplan' layout is refused without touching the
+    index it would have replaced."""
+    sess = EngineSession(spark, state_dir=str(tmp_path))
     sess.register_knowledge_base(
         "kbi", load_table(spark, sf_dir, "documents"), dim=8, embedder="md5", chunk=False
     )
-    exact = [
-        (r["chunk_id"], r["distance"])
-        for r in sess.sql(
-            "SELECT * FROM kbi WHERE content = 'spark join fast' LIMIT 5"
-        ).collect()
-    ]
+    exact = _hits(sess, "kbi")
     row = sess.sql("CREATE INDEX ON KNOWLEDGE_BASE kbi").collect()[0]
     assert row["knowledge_base"] == "kbi" and row["n_centroids"] >= 1
+    assert row["layout"] == "partitioned"
+    plan = sess.sql(_Q.format("kbi"))._jdf.queryExecution().executedPlan().toString()
+    assert "__cell" in plan.split("PartitionFilters")[1].splitlines()[0]
     # probing every cell is exhaustive: indexed search == exact search
-    indexed = [
-        (r["chunk_id"], r["distance"])
-        for r in sess.sql(
-            "SELECT * FROM kbi WHERE content = 'spark join fast' LIMIT 5"
-        ).collect()
-    ]
-    assert indexed == exact
+    assert _hits(sess, "kbi") == exact
     # narrowed probing still returns k rows (approximate path)
     few = sess.sql(
         "SELECT * FROM kbi WHERE content = 'spark join fast' LIMIT 5 USING n_probes = 2"
     )
     assert few.count() == 5
+    explained = _explain(sess, "kbi")
+    with pytest.raises(ValueError, match="layout"):
+        sess.sql("CREATE INDEX ON KNOWLEDGE_BASE kbi USING layout = 'inplan'")
+    assert _explain(sess, "kbi") == explained
+    assert any(d.startswith("__cell=") for d in os.listdir(tmp_path / "kb_index_kbi"))
 
 
 def test_kb_chunking_config(spark, sf_dir):
@@ -379,7 +398,7 @@ def test_kb_partitioned_index_layout(spark, sf_dir, tmp_path):
         "USING layout = 'partitioned', n_centroids = 4"
     ).collect()[0]
     assert row["layout"] == "partitioned" and row["n_centroids"] == 4
-    idx_path = sess._kbs["kbp"]["index_path"]
+    idx_path = str(tmp_path / "kb_index_kbp")  # engine-managed default
     assert os.path.isdir(idx_path)
     # cell directories exist (partitionBy layout)
     assert any(d.startswith("__cell=") for d in os.listdir(idx_path))
@@ -409,13 +428,13 @@ def test_kb_partitioned_index_layout(spark, sf_dir, tmp_path):
     ).collect()
     assert len(filtered) == 5 and all(r["doc_id"] < 10 for r in filtered)
 
-    # mutations invalidate the snapshot layout (stale directories must not
-    # serve reads); centroids stay for the in-plan fallback
+    # mutations unindex the KB (stale directories must not serve reads)
+    # and reclaim the engine-owned snapshot
     sess.register_parquet_source("tp", sf_dir, tables=["documents"])
     sess.sql("INSERT INTO kbp SELECT doc_id + 100000 AS doc_id, text "
              "FROM tp_documents WHERE doc_id < 3")
-    assert "index_path" not in sess._kbs["kbp"]
-    assert sess._kbs["kbp"]["index"] is not None
+    assert not os.path.exists(idx_path)
+    assert sess.sql("DESCRIBE KNOWLEDGE_BASE kbp").collect()[0]["has_index"] is False
     after = sess.sql(
         "SELECT * FROM kbp WHERE content = 'spark join fast' LIMIT 5"
     )
@@ -423,9 +442,9 @@ def test_kb_partitioned_index_layout(spark, sf_dir, tmp_path):
 
     # DROP reclaims the session-owned layout directory
     sess.sql("CREATE INDEX ON KNOWLEDGE_BASE kbp USING layout = 'partitioned', n_centroids = 2")
-    idx_path2 = sess._kbs["kbp"]["index_path"]
+    assert os.path.isdir(idx_path)
     sess.sql("DROP KNOWLEDGE_BASE kbp")
-    assert not os.path.exists(idx_path2)
+    assert not os.path.exists(idx_path)
 
 
 def test_create_index_on_empty_kb_clean_error(spark):
@@ -456,17 +475,15 @@ def test_create_index_bad_layout_leaves_state_consistent(spark, sf_dir, tmp_path
     )
     sess.sql("CREATE INDEX ON KNOWLEDGE_BASE kbv "
              "USING layout = 'partitioned', n_centroids = 4")
-    old_index = sess._kbs["kbv"]["index"]
+    plan, hits = _explain(sess, "kbv"), _hits(sess, "kbv")
     with pytest.raises(ValueError, match="layout"):
         sess.sql("CREATE INDEX ON KNOWLEDGE_BASE kbv "
                  "USING n_centroids = 8, layout = 'partitionedd'")
-    # nothing mutated: the OLD centroids and OLD snapshot stay correctly
-    # paired (all-or-nothing reindex), and search still serves from them
-    assert sess._kbs["kbv"]["index"] is old_index
-    assert os.path.isdir(sess._kbs["kbv"]["index_path"])
-    assert sess.sql(
-        "SELECT * FROM kbv WHERE content = 'spark join fast' LIMIT 3"
-    ).count() == 3
+    # nothing changed: the OLD index and snapshot still serve the search
+    assert "4 centroids), layout: partitioned" in plan
+    assert os.path.isdir(tmp_path / "kb_index_kbv")
+    assert _explain(sess, "kbv") == plan
+    assert _hits(sess, "kbv") == hits
 
 
 def test_kb_snapshot_dir_reclaimed_on_mutation(spark, sf_dir, tmp_path):
@@ -486,7 +503,7 @@ def test_kb_snapshot_dir_reclaimed_on_mutation(spark, sf_dir, tmp_path):
     sess.register_parquet_source("tp2", sf_dir, tables=["documents"])
     sess.sql("CREATE INDEX ON KNOWLEDGE_BASE kbr "
              "USING layout = 'partitioned', n_centroids = 2")
-    idx = sess._kbs["kbr"]["index_path"]
+    idx = str(tmp_path / "state" / "kb_index_kbr")
     assert os.path.isdir(idx)
     sess.sql("INSERT INTO kbr SELECT doc_id + 500000 AS doc_id, text "
              "FROM tp2_documents WHERE doc_id < 2")
@@ -502,44 +519,47 @@ def test_kb_snapshot_dir_reclaimed_on_mutation(spark, sf_dir, tmp_path):
 
 
 def test_kb_explain_route_and_staleness(spark, sf_dir, tmp_path):
-    """EXPLAIN on a KB select names the index layout and the route that
-    WILL run — and after a mutation invalidates the partitioned snapshot,
-    says so explicitly (round-7 verdict item 5: the staleness fallback must
-    be visible before the query runs slow)."""
+    """EXPLAIN on a KB select names the route that WILL run — and after a
+    mutation unindexes the KB, says so explicitly (round-7 verdict item 5:
+    the unused index must be visible before the query runs slow). The
+    search after the mutation is the exact scan: it equals an unindexed
+    twin KB holding the same rows, and it leaves EXPLAIN unchanged."""
+    docs = load_table(spark, sf_dir, "documents").filter("doc_id < 50")
     sess = EngineSession(spark, state_dir=str(tmp_path))
-    sess.register_knowledge_base(
-        "kbe", load_table(spark, sf_dir, "documents").limit(50), dim=8,
-        chunk=False,
-    )
-    q = "EXPLAIN SELECT * FROM kbe WHERE content = 'spark join fast' LIMIT 5"
+    sess.register_knowledge_base("kbe", docs, dim=8, chunk=False)
+    sess.register_knowledge_base("kbe_twin", docs, dim=8, chunk=False)
 
-    plan = sess.sql(q).collect()[0]["plan"]
+    plan = _explain(sess, "kbe")
     assert "== Knowledge Base Search ==" in plan
     assert "index: none" in plan and "exact cosine" in plan
+    assert "note:" not in plan
 
     sess.sql("CREATE INDEX ON KNOWLEDGE_BASE kbe "
              "USING layout = 'partitioned', n_centroids = 2")
-    plan = sess.sql(q).collect()[0]["plan"]
+    plan = _explain(sess, "kbe")
     assert "layout: partitioned" in plan and "snapshot: " in plan
     assert "partitioned probe" in plan
 
-    # a mutation drops the snapshot: EXPLAIN must surface the fallback
+    # a mutation drops the snapshot: EXPLAIN must surface the exact scan
     sess.register_parquet_source("te", sf_dir, tables=["documents"])
-    sess.sql("INSERT INTO kbe SELECT doc_id + 90000 AS doc_id, text "
-             "FROM te_documents WHERE doc_id < 2")
-    plan = sess.sql(q).collect()[0]["plan"]
-    assert "layout: inplan" in plan
-    assert "invalidated by a mutation" in plan
+    for kb in ("kbe", "kbe_twin"):
+        sess.sql(f"INSERT INTO {kb} SELECT doc_id + 90000 AS doc_id, text "
+                 "FROM te_documents WHERE doc_id < 2")
+    plan = _explain(sess, "kbe")
+    assert "index: none" in plan and "exact cosine" in plan
+    assert "note: the index was invalidated by a mutation" in plan
+    assert _hits(sess, "kbe") == _hits(sess, "kbe_twin")
+    assert _explain(sess, "kbe") == plan
 
     # reindex restores the pruned-probe route and clears the note
     sess.sql("CREATE INDEX ON KNOWLEDGE_BASE kbe "
              "USING layout = 'partitioned', n_centroids = 2")
-    plan = sess.sql(q).collect()[0]["plan"]
+    plan = _explain(sess, "kbe")
     assert "layout: partitioned" in plan
-    assert "invalidated" not in plan
+    assert "note:" not in plan
     # the Spark physical plan still follows the header
     assert "== Physical Plan ==" in plan
-    sess.sql("DROP KNOWLEDGE_BASE kbe")
+    sess.sql("DROP KNOWLEDGE_BASE kbe"); sess.sql("DROP KNOWLEDGE_BASE kbe_twin")
 
 
 def test_create_index_user_path_refuses_clobber(spark, sf_dir, tmp_path):
@@ -606,53 +626,39 @@ def test_kb_insert_validation_failure_keeps_index(spark, sf_dir, tmp_path):
     )
     sess.sql("CREATE INDEX ON KNOWLEDGE_BASE kbf "
              "USING layout = 'partitioned', n_centroids = 2")
-    idx_path = sess._kbs["kbf"]["index_path"]
-    assert os.path.isdir(idx_path)
+    plan = _explain(sess, "kbf")
     with pytest.raises(ValueError, match="content column"):
         sess.sql("INSERT INTO kbf SELECT 1 AS a, 2 AS b, 3 AS c")
-    # the snapshot survived the failed insert
-    assert sess._kbs["kbf"].get("index_path") == idx_path
-    assert os.path.isdir(idx_path)
+    # the snapshot survived the failed insert and still serves the search
+    assert os.path.isdir(tmp_path / "kb_index_kbf")
+    assert "layout: partitioned" in plan and _explain(sess, "kbf") == plan
     sess.sql("DROP KNOWLEDGE_BASE kbf")
 
 
 def test_kb_snapshot_external_removal_falls_back(spark, sf_dir, tmp_path):
     """A snapshot directory deleted OUTSIDE the engine (round-7 ADVICE
-    second clause) must degrade to the in-plan path — correct results, a
-    staleness note in EXPLAIN — never a failed query over a dangling
-    path."""
+    second clause) must degrade to the exact scan — correct results, a
+    note in EXPLAIN — never a failed query over a dangling path. Reads
+    change no KB state, so EXPLAIN reads the same before and after the
+    search."""
     import shutil
 
+    docs = load_table(spark, sf_dir, "documents").filter("doc_id < 40")
     sess = EngineSession(spark, state_dir=str(tmp_path / "state"))
-    sess.register_knowledge_base(
-        "kbx", load_table(spark, sf_dir, "documents").limit(40), dim=8,
-        chunk=False,
-    )
+    sess.register_knowledge_base("kbx", docs, dim=8, chunk=False)
+    sess.register_knowledge_base("kbx_twin", docs, dim=8, chunk=False)
     target = tmp_path / "ext_idx"
     sess.sql("CREATE INDEX ON KNOWLEDGE_BASE kbx "
              f"USING layout = 'partitioned', n_centroids = 2, path = '{target}'")
     assert (target / "_SUCCESS").exists()
     shutil.rmtree(target)  # external actor removes the layout
 
-    # EXPLAIN is read-only (round-8 ADVICE): it reports the in-plan
-    # fallback the search WILL take without mutating kb routing state
-    plan = sess.sql(
-        "EXPLAIN SELECT * FROM kbx WHERE content = 'x' LIMIT 1"
-    ).collect()[0]["plan"]
-    assert "layout: inplan" in plan and "invalidated" in plan
-    assert sess._kbs["kbx"].get("index_path") == str(target)
-    assert not sess._kbs["kbx"].get("index_stale")
-
-    hits = sess.sql(
-        "SELECT * FROM kbx WHERE content = 'spark join fast' LIMIT 5"
-    ).collect()
-    assert len(hits) == 5  # served by the in-plan fallback
-    assert "index_path" not in sess._kbs["kbx"]
-    plan = sess.sql(
-        "EXPLAIN SELECT * FROM kbx WHERE content = 'x' LIMIT 1"
-    ).collect()[0]["plan"]
-    assert "layout: inplan" in plan and "invalidated" in plan
-    sess.sql("DROP KNOWLEDGE_BASE kbx")
+    plan = _explain(sess, "kbx")
+    assert "index: none" in plan and "exact cosine" in plan
+    assert f"note: the index snapshot at {target} is missing" in plan
+    assert _hits(sess, "kbx") == _hits(sess, "kbx_twin")
+    assert _explain(sess, "kbx") == plan
+    sess.sql("DROP KNOWLEDGE_BASE kbx"); sess.sql("DROP KNOWLEDGE_BASE kbx_twin")
 
 
 def test_create_index_refuses_users_own_cell_partitioned_data(spark, sf_dir, tmp_path):
@@ -705,12 +711,13 @@ def test_create_index_refuses_other_kbs_live_snapshot(spark, sf_dir, tmp_path):
         sess.sql("CREATE INDEX ON KNOWLEDGE_BASE kb_a "
                  f"USING layout = 'partitioned', n_centroids = 2, path = '{target}'")
     # kb_b's snapshot is intact and still routes its searches
-    assert sess._kbs["kb_b"]["index_path"] == str(target)
+    assert f"snapshot: {target}\n" in _explain(sess, "kb_b")
     assert sess.sql("SELECT * FROM kb_b WHERE content = 'x' LIMIT 3").count() == 3
     # the engine-managed default path of kb_b is refused for kb_a too
     sess.sql("CREATE INDEX ON KNOWLEDGE_BASE kb_b "
              "USING layout = 'partitioned', n_centroids = 2")
-    managed = sess._kbs["kb_b"]["index_path"]
+    managed = str(tmp_path / "state" / "kb_index_kb_b")
+    assert f"snapshot: {managed}\n" in _explain(sess, "kb_b")
     with pytest.raises(ValueError, match="live index snapshot"):
         sess.sql("CREATE INDEX ON KNOWLEDGE_BASE kb_a "
                  f"USING layout = 'partitioned', n_centroids = 2, path = '{managed}'")
@@ -734,6 +741,8 @@ def test_create_index_scheme_uri_respelling_still_refused(spark, sf_dir, tmp_pat
     uri = f"file://{tmp_path}/kb_b_idx"
     sess.sql("CREATE INDEX ON KNOWLEDGE_BASE kb_b "
              f"USING layout = 'partitioned', n_centroids = 2, path = '{uri}'")
+    # a URI snapshot is listed through the Hadoop FS API and serves searches
+    assert sess.sql("DESCRIBE KNOWLEDGE_BASE kb_b").collect()[0]["index_layout"] == "partitioned"
     with pytest.raises(ValueError, match="live index snapshot of knowledge base 'kb_b'"):
         sess.sql("CREATE INDEX ON KNOWLEDGE_BASE kb_a "
                  f"USING layout = 'partitioned', n_centroids = 2, path = '{uri}/'")

@@ -68,9 +68,15 @@ def jsess(spark, sf_dir):
 @pytest.mark.parametrize(
     "stmt, n_rows",
     [("SHOW TABLES", 0), ("SHOW TABLES FROM tpch", None), ("SHOW VARIABLES", None),
-     ("BEGIN", 1)],
+     ("BEGIN", 1), ("SHOW DATABASES", None), ("SHOW KNOWLEDGE_BASES", None),
+     ("SHOW ML_ENGINES", None), ("SHOW HANDLERS", None), ("SHOW CHARSET", 2),
+     ("SHOW PROCESSLIST", None)],
 )
 def test_door_answers_run_no_job(spark, jsess, stmt, n_rows):
+    if stmt == "SHOW KNOWLEDGE_BASES":
+        # created in reverse name order: the answer must still come sorted
+        for name in ("lf_show_z", "lf_show_a"):
+            jsess.sql(f"CREATE KNOWLEDGE_BASE IF NOT EXISTS {name} USING dim = 8")
     rows = []
     assert _jobs(spark, lambda: rows.extend(jsess.sql(stmt).collect()), f"door-{stmt}") == 0
     assert len(rows) == n_rows if n_rows is not None else len(rows) > 1

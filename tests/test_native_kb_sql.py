@@ -220,11 +220,11 @@ def test_describe_knowledge_base(spark, sf_dir):
         "SELECT index_layout FROM information_schema.knowledge_bases WHERE name = 'kbd'"
     ).collect()[0]
     assert info["index_layout"] == "partitioned"
-    # a mutation invalidates the snapshot: layout degrades to inplan
+    # a mutation unindexes the KB: searches scan exactly until a reindex
     sess.sql("INSERT INTO kbd SELECT doc_id, text, lang FROM tpch_documents "
              "WHERE doc_id >= 10 AND doc_id < 12")
     row3 = sess.sql("DESCRIBE KNOWLEDGE_BASE kbd").collect()[0]
-    assert row3["index_layout"] == "inplan" and row3["has_index"] is True
+    assert row3["has_index"] is False and row3["index_layout"] == ""
     with pytest.raises(KeyError):
         sess.sql("DESCRIBE KNOWLEDGE_BASE nope")
     sess.sql("DROP KNOWLEDGE_BASE kbd")

@@ -77,34 +77,36 @@ def test_resize_images_updates_metadata(spark, sf_dir):
     assert all(r["content"] is not None for r in rows)
 
 
-def test_kmeans_ivf_probe_all_equals_exact(spark, sf_dir):
-    from mindsdb_spark.catalog import load_table
-    from mindsdb_spark.operators.vector import cosine_topk, ivf_search, kmeans_centroids
+@pytest.fixture(scope="module")
+def ivf_layout(spark, sf_dir, tmp_path_factory):
+    """The embeddings written as a cell-partitioned layout over 8 k-means
+    cells, and vec 3's vector as the query."""
+    from mindsdb_spark.operators.vector import ivf_write_partitioned, kmeans_centroids
 
     emb = load_table(spark, sf_dir, "embeddings")
-    q = [float(x) for x in emb.filter("vec_id = 3").select("embedding").head()[0]]
     cents = kmeans_centroids(emb, n_centroids=8)
+    path = str(tmp_path_factory.mktemp("ivf") / "store")
+    ivf_write_partitioned(emb, path, "embedding", cents)
+    q = [float(x) for x in emb.filter("vec_id = 3").select("embedding").head()[0]]
+    return emb, cents, path, q
+
+
+def test_kmeans_ivf_probe_all_equals_exact(spark, ivf_layout):
+    from mindsdb_spark.operators.vector import ivf_read_probe
+
+    emb, cents, path, q = ivf_layout
     # probing every cell must reproduce the exact scan
-    exact = [r["vec_id"] for r in cosine_topk(emb, "embedding", q, k=10).collect()]
-    ivf_all = [
-        r["vec_id"]
-        for r in ivf_search(emb, "embedding", q, cents, k=10, n_probes=8).collect()
-    ]
-    assert ivf_all == exact
+    exact = [(r["vec_id"], r["sim"]) for r in cosine_topk(emb, "embedding", q, k=10).collect()]
+    probed = ivf_read_probe(spark, path, q, cents, k=10, n_probes=8)
+    assert [(r["vec_id"], r["sim"]) for r in probed.collect()] == exact
 
 
-def test_kmeans_ivf_partial_probe_recall(spark, sf_dir):
-    from mindsdb_spark.catalog import load_table
-    from mindsdb_spark.operators.vector import cosine_topk, ivf_search, kmeans_centroids
+def test_kmeans_ivf_partial_probe_recall(spark, ivf_layout):
+    from mindsdb_spark.operators.vector import ivf_read_probe
 
-    emb = load_table(spark, sf_dir, "embeddings")
-    q = [float(x) for x in emb.filter("vec_id = 3").select("embedding").head()[0]]
-    cents = kmeans_centroids(emb, n_centroids=8)
+    emb, cents, path, q = ivf_layout
     exact = {r["vec_id"] for r in cosine_topk(emb, "embedding", q, k=10).collect()}
-    got = {
-        r["vec_id"]
-        for r in ivf_search(emb, "embedding", q, cents, k=10, n_probes=3).collect()
-    }
+    got = {r["vec_id"] for r in ivf_read_probe(spark, path, q, cents, k=10, n_probes=3).collect()}
     # approximate: must return k results with meaningful overlap, and the
     # query's own vector (similarity 1.0) must be found
     assert len(got) == 10
@@ -112,25 +114,29 @@ def test_kmeans_ivf_partial_probe_recall(spark, sf_dir):
     assert len(got & exact) >= 3
 
 
-def test_ivf_partitioned_layout_prunes_and_matches(spark, sf_dir, tmp_path):
-    # the partition-pruned probe must (a) return exactly what the filter
-    # formulation returns and (b) prove the pruning in the plan
-    from mindsdb_spark.operators.vector import (
-        ivf_read_probe, ivf_search, ivf_write_partitioned, kmeans_centroids,
-    )
+def test_ivf_partitioned_layout_prunes_and_matches(spark, ivf_layout):
+    # the partition-pruned probe must (a) prove the pruning in the plan and
+    # (b) return exactly the exact rank of the probed cells' rows
+    import math
 
-    emb = load_table(spark, sf_dir, "embeddings")
-    cents = kmeans_centroids(emb, n_centroids=8)
-    path = str(tmp_path / "ivf_store")
-    ivf_write_partitioned(emb, path, "embedding", cents)
-    q = [float(x) for x in emb.filter("vec_id = 3").select("embedding").head()[0]]
+    from mindsdb_spark.operators.vector import ivf_assign, ivf_read_probe
+
+    emb, cents, path, q = ivf_layout
     probed = ivf_read_probe(spark, path, q, cents, k=10, n_probes=3)
     plan = probed._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters" in plan
     assert "cell" in plan.split("PartitionFilters")[1].splitlines()[0]
-    want = [r["vec_id"] for r in ivf_search(emb, "embedding", q, cents, k=10, n_probes=3).collect()]
-    got = [r["vec_id"] for r in probed.collect()]
-    assert got == want
+
+    def cos(c):
+        return sum(x * y for x, y in zip(c, q)) / (
+            math.sqrt(sum(x * x for x in c)) * math.sqrt(sum(x * x for x in q))
+        )
+
+    # the probed cells: the 3 centroids nearest the query (ties → larger id)
+    probes = [cid for cid, _v in sorted(cents, key=lambda c: (-cos(c[1]), -c[0]))[:3]]
+    cells = ivf_assign(emb, "embedding", cents, "cell").filter(F.col("cell").isin(probes))
+    want = [r["vec_id"] for r in cosine_topk(cells, "embedding", q, k=10).collect()]
+    assert [r["vec_id"] for r in probed.collect()] == want
 
 
 def test_zipf_slope_near_minus_one_on_zipfian_corpus(spark):

@@ -5,9 +5,7 @@ program itself, not only by tests.
 the package, the driver entry, the bench harnesses or the scripts. A
 definition's references to itself do not count, and neither do references
 from inside another unreached definition: the scan repeats until no more
-definitions drop out. The query registry (``mindsdb_spark/queries/``) is
-left out of the definitions checked, because its oracle references are kept
-on purpose; its references still count.
+definitions drop out.
 """
 
 import ast
@@ -44,8 +42,6 @@ def _unreached() -> list[str]:
     defs: dict[str, list[tuple[str, int]]] = {}
     for path in _py_files(PACKAGE):
         rel = path.relative_to(ROOT)
-        if rel.parts[1] == "queries":
-            continue
         for node in ast.parse(path.read_text()).body:
             if isinstance(node, _DEFS):
                 defs.setdefault(node.name, []).append((str(rel), node.lineno))

@@ -750,7 +750,9 @@ def _sql_value(raw: str):
 
 def _output_columns(spec) -> list[str]:
     """A model's declared output column names, lowercased."""
-    return [p.strip().split()[0].strip("`").lower() for p in spec.output_schema.split(",") if p.strip()]
+    from mindsdb_spark.operators.model import output_fields
+
+    return [n.lower() for n, _t in output_fields(spec.output_schema)]
 
 
 def _order_limit(order: str | None, limit: str | None, fmt: Callable = str) -> str:
@@ -2483,7 +2485,8 @@ class EngineSession:
         """Register a ModelSpec as a joinable predictor — the engine analog
         of a trained model living in a project (reference: models are
         virtual tables resolved by the planner, plan_join.py:760-818).
-        Anything that yields a pandas-in/pandas-out callable plugs in here."""
+        A spec predicts with Column expressions or with a pandas-in/
+        pandas-out callable (the BYOM surface)."""
         n = model.name.lower()
         self._models[n] = model
         self._model_versions[n] = [model]
@@ -2604,8 +2607,10 @@ class EngineSession:
         Mirrors the reference's plan (plan_join.py:760-818 +
         apply_predictor_step.py:103-233): fetch the table side through the
         federated catalog with the table's share of the WHERE, apply the
-        predictor in-plan (mapInPandas — no row-id re-join), then evaluate
-        the outer projection/filter/sort over the joined columns. WHERE
+        predictor in-plan (apply_model: a projection of the model's Column
+        expressions, or one Arrow-batched pandas stage for a model that
+        needs Python — no row-id re-join), then evaluate the outer
+        projection/filter/sort over the joined columns. WHERE
         equalities on predictor columns become model params (row_dict,
         query_planner.py:569-648); other predictor-column conditions filter
         after the apply."""
@@ -2820,13 +2825,21 @@ class EngineSession:
 
     @property
     def last_state(self):
+        """The LAST watermarks; reading it materializes the state dir. A dir
+        the engine made itself is removed when the session is collected or
+        the interpreter exits, KB insert cursors and index snapshots with it,
+        so a frame that reads a KB index snapshot must not outlive its
+        session. A ``state_dir`` the caller passed is left alone."""
         from mindsdb_spark.streaming.incremental import LastState
 
         if self._last_state is None:
             if self._state_dir is None:
+                import shutil
                 import tempfile
+                import weakref
 
                 self._state_dir = tempfile.mkdtemp(prefix="mindsdb_spark_state_")
+                weakref.finalize(self, shutil.rmtree, self._state_dir, True)
             self._last_state = LastState(self._state_dir)
         return self._last_state
 
@@ -3690,7 +3703,8 @@ class EngineSession:
         # schema (a column-set diff would silently skip an output
         # that shadows an input column — round-3 advice), and the
         # WHERE's pure-input conditions push into the table fetch
-        # before any model runs. One Arrow stage per model, no join.
+        # before any model runs. One projection (or, for a pandas
+        # model, one Arrow stage) per model, no join.
         from mindsdb_spark.operators.model import apply_model
 
         df = self.sql(f"SELECT * FROM {mm.group('table')}")

@@ -4,18 +4,22 @@ resolves the engine named in USING and hands it the training query;
 handlers implement create/predict, e.g. the lightwood/statsforecast
 integrations).
 
-An engine here is `factory(name, train_df, target, params) -> ModelSpec`:
-training consumes a *distributed* DataFrame (MLlib — fit runs on the
-cluster, only the fitted parameters come back to the driver), and the
-returned ModelSpec predicts in Arrow-batched pandas with no JVM
-dependency at inference, so the model joins compose with everything in
-`operators/model.py`.
+An engine here is `factory(name, train_df, target, params) -> ModelSpec`.
+The MLlib engines train on a *distributed* DataFrame (fit runs on the
+cluster, only the fitted parameters come back to the driver) and return
+those parameters as Column expressions: the model join is then one
+projection in the same Catalyst plan, with no Python worker. The `llm`
+and `ts_naive_drift` engines need Python at inference and return a pandas
+``predict`` (see `operators/model.py`).
 """
 
 from __future__ import annotations
 
+from functools import reduce
+
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
+from pyspark.sql import functions as F
 
 from mindsdb_spark.operators.model import ModelSpec
 
@@ -31,9 +35,18 @@ def _numeric_features(df: DataFrame, target: str) -> list[str]:
     return feats
 
 
+def _affine(x: list[Column], weights, intercept: float) -> Column:
+    """``intercept + x_0 * w_0 + x_1 * w_1 + …``, folded left in
+    coefficient order."""
+    return reduce(
+        Column.__add__, [xi * F.lit(w) for xi, w in zip(x, weights)], F.lit(intercept)
+    )
+
+
 def spark_ml_linreg(name: str, train_df: DataFrame, target: str, params: dict) -> ModelSpec:
-    """Distributed least-squares via MLlib LinearRegression; inference is a
-    closed-form affine map in pandas (coefficients only cross the driver)."""
+    """Distributed least-squares via MLlib LinearRegression; inference is
+    the affine map ``intercept + Σ x_i * w_i`` as a Column expression
+    (coefficients only cross the driver)."""
     from pyspark.ml.feature import VectorAssembler
     from pyspark.ml.regression import LinearRegression
 
@@ -52,14 +65,9 @@ def spark_ml_linreg(name: str, train_df: DataFrame, target: str, params: dict) -
     coefs = dict(zip(feats, [float(w) for w in model.coefficients]))
     intercept = float(model.intercept)
 
-    def predict(pdf: pd.DataFrame) -> pd.DataFrame:
-        s = pd.Series(intercept, index=pdf.index, dtype="float64")
-        for c, w in coefs.items():
-            s = s + pdf[c].astype("float64") * w
-        return pd.DataFrame({target: s})
-
     return ModelSpec(
-        name=name, predict=predict, output_schema=f"{target} double",
+        name=name, columns=lambda x: [_affine(x, coefs.values(), intercept)],
+        output_schema=f"{target} double",
         features=feats,
         info={"engine": "spark_ml_linreg", "coefficients": coefs,
               "intercept": intercept},
@@ -67,10 +75,10 @@ def spark_ml_linreg(name: str, train_df: DataFrame, target: str, params: dict) -
 
 
 def spark_ml_kmeans_label(name: str, train_df: DataFrame, target: str, params: dict) -> ModelSpec:
-    """Cluster-id 'prediction': MLlib KMeans fit, nearest-centroid label at
-    inference (numpy). `target` names the output column."""
-    import numpy as np
-
+    """Cluster-id 'prediction': MLlib KMeans fit; inference is the position
+    of the smallest squared distance to the centroids, as a Column
+    expression (first centroid on ties and on NULL features). `target`
+    names the output column."""
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.feature import VectorAssembler
 
@@ -84,30 +92,39 @@ def spark_ml_kmeans_label(name: str, train_df: DataFrame, target: str, params: d
     km = KMeans(
         k=int(params.get("k", 4)), seed=int(params.get("seed", 42)), featuresCol="__features"
     )
-    centers = np.stack(km.fit(va.transform(casted.dropna(subset=feats))).clusterCenters())
+    centers = [
+        [float(v) for v in c]
+        for c in km.fit(va.transform(casted.dropna(subset=feats))).clusterCenters()
+    ]
 
-    def predict(pdf: pd.DataFrame) -> pd.DataFrame:
-        x = pdf[feats].to_numpy(dtype="float64")
-        d = ((x[:, None, :] - centers[None, :, :]) ** 2).sum(axis=2)
-        return pd.DataFrame({target: d.argmin(axis=1).astype("int64")}, index=pdf.index)
+    def columns(x: list[Column]) -> list[Column]:
+        d = [
+            reduce(Column.__add__, [(xi - F.lit(ci)) * (xi - F.lit(ci)) for xi, ci in zip(x, c)])
+            for c in centers
+        ]
+        if len(d) == 1:
+            return [F.lit(0)]
+        # CASE picks the first centroid at the minimum; a NULL distance
+        # matches no branch and falls to centroid 0
+        nearest = F.least(*d)
+        label = F.when(d[0] == nearest, 0)
+        for j in range(1, len(d)):
+            label = label.when(d[j] == nearest, j)
+        return [label.otherwise(0)]
 
     return ModelSpec(
-        name=name, predict=predict, output_schema=f"{target} long",
+        name=name, columns=columns, output_schema=f"{target} long",
         features=feats,
         info={"engine": "spark_ml_kmeans", "n_centroids": len(centers)},
     )
 
 
-
-
-
 def spark_ml_logreg(name: str, train_df: DataFrame, target: str, params: dict) -> ModelSpec:
     """Binary classifier via MLlib LogisticRegression: distributed fit, the
-    fitted (coefficients, intercept) predict in pandas as a sigmoid affine
-    map. Target may be any two-valued column; label mapping is returned in
-    sorted order so training is deterministic."""
-    import numpy as np
-
+    fitted (coefficients, intercept) predict as the sigmoid of the affine
+    map, a Column expression; the label is the positive one where the
+    probability is at least 0.5. Target may be any two-valued column; label
+    mapping is returned in sorted order so training is deterministic."""
     from pyspark.ml.classification import LogisticRegression
     from pyspark.ml.feature import VectorAssembler
 
@@ -133,35 +150,33 @@ def spark_ml_logreg(name: str, train_df: DataFrame, target: str, params: dict) -
         maxIter=int(params.get("max_iter", 50)),
     )
     model = lr.fit(va.transform(casted.dropna(subset=[*feats])))
-    coefs = np.array([float(w) for w in model.coefficients])
+    coefs = [float(w) for w in model.coefficients]
     intercept = float(model.intercept)
     neg, pos = labels
 
-    def predict(pdf: pd.DataFrame) -> pd.DataFrame:
-        x = pdf[feats].to_numpy(dtype="float64")
-        p = 1.0 / (1.0 + np.exp(-(x @ coefs + intercept)))
-        out = np.where(p >= 0.5, pos, neg)
-        return pd.DataFrame(
-            {target: out, f"{target}_probability": p}, index=pdf.index
-        )
+    def columns(x: list[Column]) -> list[Column]:
+        p = F.lit(1.0) / (F.lit(1.0) + F.exp(-_affine(x, coefs, intercept)))
+        # a NULL probability is not >= 0.5: NULL features give the negative label
+        return [F.when(p >= 0.5, F.lit(pos)).otherwise(F.lit(neg)), p]
 
     out_type = "string" if isinstance(pos, str) else "double"
     return ModelSpec(
         name=name,
-        predict=predict,
+        columns=columns,
         output_schema=f"{target} {out_type}, {target}_probability double",
         features=feats,
         info={"engine": "spark_ml_logreg", "labels": [neg, pos],
-              "coefficients": dict(zip(feats, coefs.tolist())),
+              "coefficients": dict(zip(feats, coefs)),
               "intercept": intercept},
     )
 
 
 def spark_ml_gbt(name: str, train_df: DataFrame, target: str, params: dict) -> ModelSpec:
     """Gradient-boosted trees regressor (MLlib GBTRegressor): distributed
-    fit; inference broadcasts the fitted trees back through a pandas
-    closure over the saved MLlib model's toDebugString-free predict —
-    trees are applied via the exported (feature, threshold) arrays."""
+    fit; each fitted tree is exported as (feature, threshold) nodes and
+    predicts as one nested ``CASE WHEN x_f <= thr`` Column expression, the
+    trees summed with their weights. A NULL feature takes the right
+    branch."""
     from pyspark.ml.feature import VectorAssembler
     from pyspark.ml.regression import GBTRegressor
 
@@ -178,32 +193,25 @@ def spark_ml_gbt(name: str, train_df: DataFrame, target: str, params: dict) -> M
         seed=int(params.get("seed", 42)),
     )
     model = gbt.fit(va.transform(casted.dropna(subset=[*feats, target])))
-    # export each tree as parallel arrays the pandas closure can evaluate
-    # without any JVM dependency at inference
-    trees = []
-    for t, w in zip(model.trees, model.treeWeights):
-        nodes = _export_tree(t._call_java("rootNode"))
-        trees.append((nodes, float(w)))
+    trees = [
+        (_export_tree(t._call_java("rootNode")), float(w))
+        for t, w in zip(model.trees, model.treeWeights)
+    ]
 
-    def _eval_tree(nodes, row):
-        i = 0
-        while True:
-            feat, thr, left, right, pred = nodes[i]
-            if feat < 0:
-                return pred
-            i = left if row[feat] <= thr else right
+    def tree(x: list[Column], nodes, w: float, i: int = 0) -> Column:
+        feat, thr, left, right, pred = nodes[i]
+        if feat < 0:
+            return F.lit(w * pred)
+        return F.when(x[feat] <= F.lit(thr), tree(x, nodes, w, left)).otherwise(
+            tree(x, nodes, w, right)
+        )
 
-    def predict(pdf: pd.DataFrame) -> pd.DataFrame:
-        x = pdf[feats].to_numpy(dtype="float64")
-        import numpy as np
-
-        out = np.zeros(len(pdf))
-        for nodes, w in trees:
-            out += w * np.array([_eval_tree(nodes, row) for row in x])
-        return pd.DataFrame({target: out}, index=pdf.index)
+    def columns(x: list[Column]) -> list[Column]:
+        # summed from 0.0 in tree order, as the ensemble accumulates
+        return [reduce(Column.__add__, [tree(x, n, w) for n, w in trees], F.lit(0.0))]
 
     return ModelSpec(
-        name=name, predict=predict, output_schema=f"{target} double",
+        name=name, columns=columns, output_schema=f"{target} double",
         features=feats,
         info={"engine": "spark_ml_gbt", "n_trees": len(trees),
               "max_depth": int(params.get("max_depth", 3))},

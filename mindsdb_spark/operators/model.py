@@ -4,8 +4,14 @@ Reference semantics: the left side is fetched, the model is applied row-wise
 out-of-process, and outputs are re-attached by a synthetic __mindsdb_row_id
 (reference: mindsdb/api/executor/sql_query/steps/apply_predictor_step.py:
 103-233; join planning plan_join.py:760-818). In Spark the model runs
-*inside* the plan as an Arrow-batched mapInPandas stage, so row identity is
-free and the re-join disappears.
+*inside* the plan, so row identity is free and the re-join disappears.
+
+A model predicts in one of two forms. The MLlib engines export their fitted
+parameters as Column expressions (an affine sum, a sigmoid, a nearest
+centroid, nested CASE trees), and apply_model projects them next to the
+input columns: no Arrow round trip and no Python worker. Models that need
+Python — prompt templates, registered pandas callables (the BYOM surface) —
+run as one Arrow-batched mapInPandas stage.
 
 Time-series models: the reference fetches per-group `ORDER BY time DESC
 LIMIT window` slices and emits `horizon` forecast rows per group
@@ -13,27 +19,32 @@ LIMIT window` slices and emits `horizon` forecast rows per group
 Here that is a groupBy(...).applyInPandas stage: each group's pandas frame
 is sorted locally, the last `window` rows feed the model, and the model
 fans out `horizon` rows — shuffle is by group key only.
-
-Models are plain Python callables over pandas (the BYOM surface); tests and
-oracle checks use deterministic stubs.
 """
 
 from __future__ import annotations
 
+import re
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
+from pyspark.sql import functions as F
 
 
 @dataclass
 class ModelSpec:
-    """A predictor: pandas-in → pandas-out, plus output schema DDL."""
+    """A predictor plus the DDL of the columns it adds. It carries exactly
+    one predict form:
+
+    - ``columns``: the model's ``features``, as double Columns in order, in
+      → one Column per ``output_schema`` field out (Catalyst form);
+    - ``predict``: pandas in → pandas out (Python form)."""
 
     name: str
-    predict: Callable[[pd.DataFrame], pd.DataFrame]
     output_schema: str  # DDL string for the *added* columns
+    predict: Callable[[pd.DataFrame], pd.DataFrame] | None = None
+    columns: Callable[[list[Column]], list[Column]] | None = None
     # time-series settings (reference: sql_query.py:181-205 model metadata);
     # order_by may list tie-breaker columns for deterministic windows
     order_by: str | list[str] | None = None
@@ -46,6 +57,26 @@ class ModelSpec:
     info: dict = field(default_factory=dict)
     features: list = field(default_factory=list)
 
+    def __post_init__(self):
+        if (self.predict is None) == (self.columns is None):
+            raise ValueError(f"model {self.name!r} needs exactly one of predict or columns")
+
+
+def output_fields(ddl: str) -> list[tuple[str, str]]:
+    """(name, type) of each field of a DDL string such as
+    ``a double, b decimal(10, 2)``."""
+    pairs = [p.split(None, 1) for p in re.split(r",(?![^(<]*[)>])", ddl) if p.strip()]
+    return [(n.strip("`"), t) for n, t in pairs]
+
+
+def _feature_value(name: str, v) -> Column:
+    """A model parameter that fixes a feature, as a double literal; a value
+    that is not a number fails the statement."""
+    try:
+        return F.lit(float(v))
+    except (TypeError, ValueError):
+        raise ValueError(f"model parameter {name} = {v!r} is not a number") from None
+
 
 def apply_model(
     df: DataFrame,
@@ -54,19 +85,41 @@ def apply_model(
     batch_rows: int | None = None,
 ) -> DataFrame:
     """Row-wise model application: input columns pass through, prediction
-    columns are appended. One Arrow-batched Python stage, no extra join.
+    columns are appended, with no extra join.
 
     ``params`` is the reference's row_dict (query_planner.py:569-648 —
-    WHERE equalities on predictor columns become fixed model inputs): the
-    values are visible to ``predict`` as constant columns on its input
-    frame, without joining the passthrough output.
+    WHERE equalities on predictor columns become fixed model inputs): a
+    Column model reads a parameter in place of the feature it names; a
+    pandas ``predict`` sees every parameter as a constant column on its
+    input frame, without joining the passthrough output.
 
     ``batch_rows`` is the reference's `USING partition_size = N` on a model
-    join (fetch_dataframe_partition.py): each Arrow batch is sliced so the
-    model never sees more than N rows per call — for models whose memory
-    scales with input size. Executor parallelism is unchanged (Spark
-    already partitions the stage)."""
+    join (fetch_dataframe_partition.py): each Arrow batch is sliced so a
+    pandas model never sees more than N rows per call — for models whose
+    memory scales with input size. A Column model reads one row at a time,
+    so the bound holds already. Executor parallelism is unchanged."""
     in_cols = df.columns
+    fields = output_fields(model.output_schema)
+    clash = {n.lower() for n, _t in fields} & {c.lower() for c in in_cols}
+    if clash:
+        raise ValueError(
+            f"model {model.name!r} output column(s) {sorted(clash)} collide with input columns"
+        )
+    if model.columns is not None:
+        fixed = {k.lower(): v for k, v in (params or {}).items()}
+        # a NaN feature reads as NULL, as it does for a pandas model (the
+        # Arrow hand-off turns NaN into NULL)
+        x = [
+            _feature_value(f, fixed[f.lower()]) if f.lower() in fixed
+            else F.nanvl(F.col(f).cast("double"), F.lit(None).cast("double"))
+            for f in model.features
+        ]
+        # nullif(c, NULL) is c, declared nullable like every column of a
+        # pandas model's DDL schema; the optimizer folds it away
+        return df.select("*", *[
+            F.nullif(c, F.lit(None)).cast(t).alias(n)
+            for c, (n, t) in zip(model.columns(x), fields)
+        ])
     schema = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields)
     full_schema = f"{schema}, {model.output_schema}"
 
@@ -98,8 +151,7 @@ def apply_model(
                     [c.reset_index(drop=True), preds.reset_index(drop=True)], axis=1
                 )
 
-    out = df.mapInPandas(run, schema=full_schema)
-    return out.select(*in_cols, *[c for c in out.columns if c not in in_cols])
+    return df.mapInPandas(run, schema=full_schema)
 
 
 def ts_apply_model(
@@ -128,7 +180,6 @@ def ts_apply_model(
     group_cols = model.group_by or []
 
     order = model.order_by if isinstance(model.order_by, list) else [model.order_by]
-    from pyspark.sql import functions as F
     from pyspark.sql.window import Window
 
     def run(pdf: pd.DataFrame) -> pd.DataFrame:

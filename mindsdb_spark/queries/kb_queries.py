@@ -708,11 +708,15 @@ def k11_kb_indexed_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         "CREATE INDEX ON KNOWLEDGE_BASE kbx "
         "USING layout = 'partitioned', n_centroids = 4"
     )
-    return sess.sql(
+    out = sess.sql(
         "SELECT doc_id, FLOOR(distance * 1000000 + 0.5) / 1000000 AS distance "
         "FROM kbx WHERE content = 'stream error rate' "
         "ORDER BY distance, doc_id LIMIT 10"
     )
+    # the frame scans the snapshot in the session's state dir, which is
+    # removed when the session is collected: the frame keeps it alive
+    out._engine_session = sess
+    return out
 
 
 def _k11_sql() -> str:

@@ -268,3 +268,195 @@ def test_describe_model_attributes(spark, sf_dir):
     row = sess.sql("DESCRIBE MODEL dma.info").collect()[0]
     assert row["engine"] == "spark_ml_linreg" and row["kind"] == "row"
     sess.sql("DROP MODEL dma")
+
+
+# -- Catalyst predict: parity with the pandas formulas it replaced --------------
+# The MLlib engines predict with Column expressions. `_reference` spells out, in
+# numpy, the pandas formulas those engines predicted with before, over the same
+# fitted parameters (recorded from the MLlib fit the engine runs). linreg and gbt
+# must agree bit for bit, the logreg probability to 1e-12 relative with equal
+# labels, kmeans label for label. The pandas stage read a NULL feature as NaN,
+# so the NULL answers below are the NaN answers of those formulas.
+_PARITY_SQL = {
+    "plin": "(SELECT x1, x2, y FROM ptrain) PREDICT y USING engine = 'spark_ml_linreg'",
+    "plog": "(SELECT x1, x2, lab FROM ptrain) PREDICT lab USING engine = 'spark_ml_logreg'",
+    "pkm": "(SELECT x1, x2 FROM ptrain) PREDICT cl USING engine = 'spark_ml_kmeans', k = 3",
+    "pgbt": "(SELECT x1, x2, y FROM ptrain) PREDICT y USING engine = 'spark_ml_gbt', n_trees = 4",
+}
+_PARITY_OUT = {
+    "plin": "y double", "plog": "lab string, lab_probability double",
+    "pkm": "cl bigint", "pgbt": "y double",
+}
+_PINF = [(1, 1.0, 2), (2, None, 2), (3, 4.0, None), (4, None, None), (5, 7.5, -3),
+         (6, -2.0, 1), (7, 3.25, 0), (8, 8.0, 3), (9, 0.0, -1), (10, 5.5, 2)]
+
+
+@pytest.fixture(scope="module")
+def parity(spark):
+    from pyspark.ml.clustering import KMeans
+    from pyspark.ml.regression import GBTRegressor
+
+    rows = []
+    for i in range(80):
+        x1, x2 = float(i % 9), float((i * 5) % 7) - 3.0
+        y = 1.5 * x1 - 0.75 * x2 + 0.3 + ((i * 37) % 11 - 5) * 0.05
+        lab = "hi" if 1.5 * x1 - 0.75 * x2 + ((i * 13) % 7 - 3) * 0.8 > 5 else "lo"
+        rows.append((x1, x2, y, lab))
+    spark.createDataFrame(rows, "x1 double, x2 double, y double, lab string") \
+        .createOrReplaceTempView("ptrain")
+    spark.createDataFrame(_PINF, "id int, x1 double, x2 int").createOrReplaceTempView("pinf")
+    fitted = {}
+    mp = pytest.MonkeyPatch()
+    for cls in (KMeans, GBTRegressor):
+        def fit(self, *a, _orig=cls.fit, _name=cls.__name__, **k):
+            fitted[_name] = _orig(self, *a, **k)
+            return fitted[_name]
+        mp.setattr(cls, "fit", fit)
+    s = EngineSession(spark)
+    try:
+        for name, sql in _PARITY_SQL.items():
+            s.sql(f"CREATE MODEL {name} {sql}")
+    finally:
+        mp.undo()
+    return s, fitted
+
+
+def _eval_tree(nodes, row):
+    i = 0
+    while True:
+        feat, thr, left, right, pred = nodes[i]
+        if feat < 0:
+            return pred
+        i = left if row[feat] <= thr else right
+
+
+def _reference(s, fitted, model, x):
+    """The former pandas predict formulas over the (n, 2) float64 input
+    ``x`` (NULL → NaN); one tuple of outputs per row, NaN → None."""
+    import numpy as np
+
+    from mindsdb_spark.operators.ml_engines import _export_tree
+
+    info = s._models[model].info
+    if model == "plin":
+        out = pd.Series(info["intercept"], index=range(len(x)), dtype="float64")
+        for j, w in enumerate(info["coefficients"].values()):
+            out = out + pd.Series(x[:, j]) * w
+        cols = [out.to_numpy()]
+    elif model == "plog":
+        neg, pos = info["labels"]
+        coefs = np.array(list(info["coefficients"].values()))
+        p = 1.0 / (1.0 + np.exp(-(x @ coefs + info["intercept"])))
+        cols = [np.where(p >= 0.5, pos, neg), p]
+    elif model == "pkm":
+        centers = np.stack(fitted["KMeans"].clusterCenters())
+        d = ((x[:, None, :] - centers[None, :, :]) ** 2).sum(axis=2)
+        cols = [d.argmin(axis=1)]
+    else:
+        gbt = fitted["GBTRegressor"]
+        out = np.zeros(len(x))
+        for t, w in zip(gbt.trees, gbt.treeWeights):
+            nodes = _export_tree(t._call_java("rootNode"))
+            out += w * np.array([_eval_tree(nodes, row) for row in x])
+        cols = [out]
+    return [
+        tuple(None if isinstance(v, float) and np.isnan(v) else v.item() for v in r)
+        for r in zip(*cols)
+    ]
+
+
+def _assert_parity(model, got, expected):
+    assert len(got) == len(expected)
+    for g, e in zip(got, expected):
+        if model == "plog":  # labels equal, probability to 1e-12 relative
+            assert g[0] == e[0]
+            assert (g[1] is None) == (e[1] is None)
+            if e[1] is not None:
+                assert g[1] == pytest.approx(e[1], rel=1e-12, abs=0)
+        else:  # linreg and gbt bit-identical, kmeans labels equal
+            assert g == e
+
+
+@pytest.mark.parametrize("model", list(_PARITY_SQL))
+@pytest.mark.parametrize("case", ["plain", "param", "partition_size"])
+def test_mllib_predict_parity(parity, model, case):
+    import numpy as np
+
+    from pyspark.sql import types as T
+
+    s, fitted = parity
+    x = np.array([[np.nan if v is None else float(v) for v in r[1:]] for r in _PINF])
+    tail = {"plain": "", "partition_size": " USING partition_size = 3",
+            # a WHERE equality on a feature is a model parameter: it
+            # overrides that feature on every row
+            "param": " WHERE m.x1 = 2.5"}[case]
+    if case == "param":
+        x[:, 0] = 2.5
+    df = s.sql(f"SELECT * FROM pinf t JOIN {model} m{tail} ORDER BY t.id")
+    # the pandas stage's schema: the input columns, then the declared
+    # outputs, every one nullable
+    out = T._parse_datatype_string(_PARITY_OUT[model])
+    assert df.schema == T.StructType(
+        [T.StructField(f.name, f.dataType, True) for f in
+         s.spark.table("pinf").schema.fields + out.fields]
+    )
+    rows = df.collect()
+    assert [tuple(r[:3]) for r in rows] == _PINF
+    _assert_parity(model, [tuple(r[3:]) for r in rows], _reference(s, fitted, model, x))
+
+
+@pytest.mark.parametrize("model", list(_PARITY_SQL))
+def test_mllib_one_shot_predict_parity(parity, model):
+    import numpy as np
+
+    s, fitted = parity
+    rows = s.sql(f"SELECT * FROM {model} WHERE x1 = 3.5 AND x2 = -2").collect()
+    assert [tuple(r[:2]) for r in rows] == [(3.5, -2)]
+    _assert_parity(model, [tuple(r[2:]) for r in rows],
+                   _reference(s, fitted, model, np.array([[3.5, -2.0]])))
+
+
+def test_mllib_null_features_follow_the_nan_path(parity):
+    import numpy as np
+
+    s, fitted = parity
+    null_ids = [r[0] for r in _PINF if None in r]
+    x = np.array([[np.nan if v is None else float(v) for v in r[1:]]
+                  for r in _PINF if None in r])
+    got = {}
+    for model in _PARITY_SQL:
+        rows = s.sql(f"SELECT * FROM pinf t JOIN {model} m "
+                     f"WHERE t.id IN ({', '.join(map(str, null_ids))}) ORDER BY t.id").collect()
+        got[model] = [tuple(r[3:]) for r in rows]
+        _assert_parity(model, got[model], _reference(s, fitted, model, x))
+    # linreg: the affine sum of a NULL is NULL
+    assert all(y is None for (y,) in got["plin"])
+    # logreg: a NULL probability is not >= 0.5, so the negative label
+    neg = s._models["plog"].info["labels"][0]
+    assert got["plog"] == [(neg, None)] * len(null_ids)
+    # gbt: NULL <= threshold is not true, so every split goes right
+    assert all(y is not None for (y,) in got["pgbt"])
+    # kmeans: no distance is smallest, so the first centroid
+    assert got["pkm"] == [(0,)] * len(null_ids)
+
+
+def test_mllib_predict_rejects_bad_inputs(parity):
+    s, _ = parity
+    # a parameter that is not a number fails the statement, as the pandas
+    # cast did
+    with pytest.raises(ValueError, match="not a number"):
+        s.sql("SELECT * FROM pinf t JOIN plin m WHERE m.x1 = 'abc'").collect()
+    # a predicted name that is also an input column fails the statement (the
+    # pandas stage failed it as an ambiguous reference)
+    with pytest.raises(ValueError, match="collide"):
+        s.sql("SELECT t.x1 FROM ptrain t JOIN plin m").collect()
+
+
+def test_model_spec_has_exactly_one_predict_form():
+    from mindsdb_spark.operators.model import ModelSpec
+
+    with pytest.raises(ValueError, match="exactly one"):
+        ModelSpec(name="both", output_schema="y double",
+                  predict=lambda p: p, columns=lambda x: x)
+    with pytest.raises(ValueError, match="exactly one"):
+        ModelSpec(name="neither", output_schema="y double")

@@ -518,6 +518,25 @@ def test_kb_snapshot_dir_reclaimed_on_mutation(spark, sf_dir, tmp_path):
     assert os.path.isdir(outside)  # user's to manage
 
 
+@pytest.mark.parametrize("own", [True, False], ids=["engine_dir", "caller_dir"])
+def test_state_dir_removed_with_its_session(spark, sf_dir, tmp_path, own):
+    """A state dir the engine made is removed, index snapshot and all, when
+    its session is collected (and at interpreter exit); a ``state_dir`` the
+    caller passed is left alone."""
+    import gc
+
+    sess = EngineSession(spark) if own else EngineSession(spark, state_dir=str(tmp_path))
+    sess.register_parquet_source("tsd", sf_dir, tables=["documents"])
+    sess.sql("CREATE KNOWLEDGE_BASE kbsd USING dim = 8, embedder = 'md5'")
+    sess.sql("INSERT INTO kbsd SELECT doc_id, text FROM tsd_documents WHERE doc_id < 20")
+    sess.sql("CREATE INDEX ON KNOWLEDGE_BASE kbsd USING n_centroids = 2")
+    state = sess._state_dir
+    assert os.path.isdir(os.path.join(state, "kb_index_kbsd"))
+    del sess
+    gc.collect()
+    assert os.path.isdir(os.path.join(state, "kb_index_kbsd")) is not own
+
+
 def test_kb_explain_route_and_staleness(spark, sf_dir, tmp_path):
     """EXPLAIN on a KB select names the route that WILL run — and after a
     mutation unindexes the KB, says so explicitly (round-7 verdict item 5:

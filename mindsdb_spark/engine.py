@@ -1500,9 +1500,7 @@ class EngineSession:
                 ),
             )
         elif eng == "project":
-            import tempfile
-
-            directory = params.get("directory") or tempfile.mkdtemp(prefix=f"mindsdb_{name}_")
+            directory = params.get("directory") or self._owned_tempdir(f"mindsdb_{name}_")
             # pin the resolved workspace dir so ALTER DATABASE re-attaches
             # the same data rather than a fresh temp dir
             self._db_params[name] = (engine, {**params, "directory": directory})
@@ -2740,12 +2738,10 @@ class EngineSession:
     # -- SQL entry point -------------------------------------------------------
     def _matview_store(self):
         if self._matview_src is None:
-            import tempfile
-
             from mindsdb_spark.sources.parquet_source import ParquetSource
 
             self._matview_src = ParquetSource(
-                self.spark, tempfile.mkdtemp(prefix="mindsdb_matview_")
+                self.spark, self._owned_tempdir("mindsdb_matview_")
             )
         return self._matview_src
 
@@ -2823,23 +2819,31 @@ class EngineSession:
             self._native[src].query(raw).createOrReplaceTempView(view)
             s = s[: hit.start()] + f"{hit.group(1)} {view}" + s[i + 1 :]
 
+    def _owned_tempdir(self, prefix: str) -> str:
+        """A temporary directory the engine makes for this session: it is
+        removed when the session is collected or the interpreter exits, so
+        a frame that reads from it must not outlive the session. Dropping
+        what lives in it (a DROP DATABASE) does not remove it, as ALTER
+        DATABASE re-attaches the same directory."""
+        import shutil
+        import tempfile
+        import weakref
+
+        path = tempfile.mkdtemp(prefix=prefix)
+        weakref.finalize(self, shutil.rmtree, path, True)
+        return path
+
     @property
     def last_state(self):
         """The LAST watermarks; reading it materializes the state dir. A dir
-        the engine made itself is removed when the session is collected or
-        the interpreter exits, KB insert cursors and index snapshots with it,
-        so a frame that reads a KB index snapshot must not outlive its
-        session. A ``state_dir`` the caller passed is left alone."""
+        the engine made itself (``_owned_tempdir``) goes with the session,
+        KB insert cursors and index snapshots with it. A ``state_dir`` the
+        caller passed is left alone."""
         from mindsdb_spark.streaming.incremental import LastState
 
         if self._last_state is None:
             if self._state_dir is None:
-                import shutil
-                import tempfile
-                import weakref
-
-                self._state_dir = tempfile.mkdtemp(prefix="mindsdb_spark_state_")
-                weakref.finalize(self, shutil.rmtree, self._state_dir, True)
+                self._state_dir = self._owned_tempdir("mindsdb_spark_state_")
             self._last_state = LastState(self._state_dir)
         return self._last_state
 

@@ -441,13 +441,11 @@ def i01_last_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     lifecycle in one query: call 1 over a view exposing only the "old" rows
     initializes the watermark (and returns nothing); the view then grows to
     the full table and the SAME query text returns exactly the new rows.
-    A fresh state dir per invocation keeps the driver's repeated runs
-    deterministic."""
-    import tempfile
-
+    A fresh state dir per invocation (the session's own, removed with it)
+    keeps the driver's repeated runs deterministic."""
     from mindsdb_spark.engine import EngineSession
 
-    sess = EngineSession(spark, state_dir=tempfile.mkdtemp(prefix="i01_last_"))
+    sess = EngineSession(spark)
     sess.register_parquet_source("tpch", sf_dir)
     sess.sql(
         "CREATE OR REPLACE VIEW ev_stream AS "

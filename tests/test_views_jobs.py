@@ -183,6 +183,35 @@ def test_materialized_view_lifecycle(spark, sf_dir):
     sess.sql("DROP DATABASE mv_ws")
 
 
+@pytest.mark.parametrize("own", [True, False], ids=["engine_dir", "caller_dir"])
+def test_workspace_and_matview_dirs_removed_with_their_session(spark, sf_dir, tmp_path, own):
+    """A project workspace and the materialized-view store the engine made
+    are removed when their session is collected (and at interpreter exit),
+    not on DROP DATABASE, which ALTER DATABASE goes through; a workspace
+    directory the caller passed is left alone."""
+    import gc
+    import os
+
+    sess = EngineSession(spark)
+    sess.register_parquet_source("tdir", sf_dir, tables=["nation"])
+    params = "" if own else f', PARAMETERS = {{"directory": "{tmp_path}"}}'
+    sess.sql(f"CREATE DATABASE td_ws{params}")
+    sess.sql("CREATE TABLE td_ws.base AS SELECT n_nationkey FROM tdir_nation")
+    sess.sql('ALTER DATABASE td_ws PARAMETERS = {"tables": ["base"]}')
+    ws = sess._db_params["td_ws"][1]["directory"]
+    assert (ws == str(tmp_path)) is not own
+    sess.sql("CREATE MATERIALIZED VIEW td_mv AS (SELECT count(*) AS n FROM td_ws_base)")
+    assert sess.sql("SELECT n FROM td_mv").collect()[0]["n"] == 25
+    mv = sess._matview_src.root
+    sess.sql("DROP MATERIALIZED VIEW td_mv")
+    sess.sql("DROP DATABASE td_ws")
+    assert os.path.isdir(ws) and os.path.isdir(mv)
+    del sess
+    gc.collect()
+    assert os.path.isdir(ws) is not own
+    assert not os.path.isdir(mv)
+
+
 def test_one_time_conditional_job(spark, sf_dir, tmp_path):
     # reference test_jobs.py:141-186: `CREATE JOB name (sql) IF (query)`
     # with no EVERY is a ONE-TIME job; the IF gate decides whether the

@@ -1,46 +1,115 @@
-"""SQL-text function rewriter.
+"""SQL-text lexer and function rewriter.
 
 The reference adapts MySQL-dialect functions for its DuckDB executor with a
 per-function rewrite table (reference:
 mindsdb/api/executor/utilities/mysql_to_duckdb_functions.py:678-712). We do
-the same MySQL → Spark SQL adaptation, but on the SQL text itself: a small
-scanner finds function calls outside string literals, splits their
+the same MySQL → Spark SQL adaptation, but on the SQL text itself: the
+rewriter finds function calls outside string literals, splits their
 top-level arguments, recursively rewrites them, and applies the rule.
 
 This is intentionally *not* a SQL parser — Spark's parser handles the
 grammar; the rewriter only needs to relocate function spellings, which is
-exactly the role the reference's SQLAlchemy-level adapter plays.
+exactly the role the reference's SQLAlchemy-level adapter plays. Every text
+pass of the engine (clause splits, masking, renames) reads the one token
+stream ``lex`` makes, so where a literal, a backtick name or a comment ends
+is decided in one place.
 """
 
 from __future__ import annotations
 
 import re
-from collections.abc import Callable
+from collections.abc import Callable, Iterator
 
 # rule: (args: list[str]) -> replacement SQL
 Rule = Callable[[list[str]], str]
 
+# The quoting rules. A '…' literal takes '' doubling and backslash escapes,
+# a "…" literal and a `…` name take doubling only; an unterminated literal
+# or name runs to the end of the text. `#` starts a MySQL comment that runs
+# to the end of the line.
+_TOKEN_RE = re.compile(
+    r"""(?P<word>[^\W\d]\w*)
+      |(?P<ws>\s+)
+      |(?P<str>'(?:[^'\\]+|\\[\s\S]?|'')*'?|"(?:[^"]+|"")*"?)
+      |(?P<name>`(?:[^`]+|``)*`?)
+      |(?P<var>@@[\w.]*)
+      |(?P<comment>\#[^\n]*)
+      |(?P<open>[(\[{])
+      |(?P<close>[)\]}])
+      |(?P<other>[\s\S])""",
+    re.VERBOSE,
+)
 
-def split_top_level(body: str) -> list[str]:
-    """Public alias of the top-level comma splitter (used by the engine's
-    UPDATE ... SET parser)."""
-    return _split_args(body)
+
+def lex(text: str) -> list[tuple[str, str, int]]:
+    """``(kind, token text, start)`` for every token of ``text``; the token
+    texts concatenate back to ``text``. Kinds: ``str`` (quoted literal),
+    ``name`` (backtick identifier), ``var`` (``@@name``), ``word``, ``ws``,
+    ``comment``, ``open``/``close`` (any bracket), ``other`` (one char)."""
+    return [(m.lastgroup, m.group(), m.start()) for m in _TOKEN_RE.finditer(text)]
 
 
-def _skip_string(sql: str, i: int, quote: str) -> int:
-    """Return index just past the literal starting at sql[i] == quote."""
-    i += 1
-    while i < len(sql):
-        if sql[i] == "\\" and quote == "'":
-            i += 2
-            continue
-        if sql[i] == quote:
-            if i + 1 < len(sql) and sql[i + 1] == quote:  # '' escape
-                i += 2
-                continue
-            return i + 1
-        i += 1
-    return i
+def _depths(text: str) -> Iterator[tuple[int, str, str, int]]:
+    """``(depth, kind, token, start)``: ``depth`` is the bracket depth around
+    the token, so a bracket carries the depth of what encloses it."""
+    depth = 0
+    for kind, tok, start in lex(text):
+        if kind == "close":
+            depth -= 1
+        yield depth, kind, tok, start
+        if kind == "open":
+            depth += 1
+
+
+def top_words(text: str) -> list[tuple[int, str]]:
+    """``(start, word)`` of every bare word at bracket depth 0, outside
+    string literals and backtick names. Clause splits use these instead of
+    lazy regex splits, so a literal like ``' WHERE x'`` can never provide a
+    clause boundary."""
+    return [(s, tok) for d, kind, tok, s in _depths(text) if d == 0 and kind == "word"]
+
+
+def split_top_level(body: str, sep: str = ",") -> list[str]:
+    """Split ``body`` on ``sep`` at bracket depth 0 (parens, braces and
+    brackets — JSON-object USING values), outside literals and names; the
+    parts are stripped, and a blank body has none."""
+    parts, start = [], 0
+    for d, _kind, tok, s in _depths(body):
+        if d == 0 and tok == sep:
+            parts.append(body[start:s].strip())
+            start = s + 1
+    tail = body[start:].strip()
+    if tail or parts:
+        parts.append(tail)
+    return parts
+
+
+def matching_close(text: str, i: int) -> int:
+    """Index of the bracket closing the one at ``text[i]`` (``len(text)``
+    when unclosed)."""
+    tokens = _depths(text[i:])
+    next(tokens)
+    return next((i + s for d, kind, _t, s in tokens if kind == "close" and d == 0), len(text))
+
+
+def sub_code(text: str, *subs: tuple) -> str:
+    """Apply each ``(pattern, repl)`` of ``subs`` in turn, as ``re.sub``
+    does, to the code between string literals only, so a literal like
+    ``'document id 5'`` is never edited. Backtick names are code and are
+    rewritten."""
+
+    def sub(code: str) -> str:
+        for pattern, repl in subs:
+            code = re.sub(pattern, repl, code)
+        return code
+
+    out, start = [], 0
+    for kind, tok, s in lex(text):
+        if kind == "str":
+            out += [sub(text[start:s]), tok]
+            start = s + len(tok)
+    out.append(sub(text[start:]))
+    return "".join(out)
 
 
 def strip_mysql_comments(sql: str) -> str:
@@ -50,162 +119,34 @@ def strip_mysql_comments(sql: str) -> str:
     String literals and backtick identifiers are preserved."""
     if "#" not in sql:
         return sql
-    out: list[str] = []
-    i, n = 0, len(sql)
-    while i < n:
-        c = sql[i]
-        if c in ("'", '"', "`"):
-            j = _skip_string(sql, i, c)
-            out.append(sql[i:j])
-            i = j
-            continue
-        if c == "#":
-            while i < n and sql[i] != "\n":
-                i += 1
-            continue
-        out.append(c)
-        i += 1
-    return "".join(out)
-
-
-def _split_args(body: str) -> list[str]:
-    """Split a parenthesized body on top-level commas, respecting nesting
-    (parens, braces, brackets — JSON-object USING values) and string
-    literals."""
-    args, depth, cur, i = [], 0, [], 0
-    while i < len(body):
-        c = body[i]
-        if c in ("'", '"'):
-            j = _skip_string(body, i, c)
-            cur.append(body[i:j])
-            i = j
-            continue
-        if c in "({[":
-            depth += 1
-        elif c in ")}]":
-            depth -= 1
-        elif c == "," and depth == 0:
-            args.append("".join(cur).strip())
-            cur = []
-            i += 1
-            continue
-        cur.append(c)
-        i += 1
-    tail = "".join(cur).strip()
-    if tail or args:
-        args.append(tail)
-    return args
+    return "".join(tok for kind, tok, _s in lex(sql) if kind != "comment")
 
 
 def rewrite_sql(sql: str, rules: dict[str, Rule], vars_: dict[str, str] | None = None) -> str:
     """Rewrite every FUNC(args...) whose upper-cased name is in `rules`.
 
-    `vars_` maps @@variable names (lowercase, without @@) to literal SQL.
+    `vars_` maps @@variable names (lowercase, without @@) to literal SQL;
+    an unknown variable reads NULL.
     """
-    out: list[str] = []
-    i, n = 0, len(sql)
-    while i < n:
-        c = sql[i]
-        if c in ("'", '"'):
-            j = _skip_string(sql, i, c)
-            out.append(sql[i:j])
-            i = j
-            continue
-        if c == "@" and i + 1 < n and sql[i + 1] == "@":
-            j = i + 2
-            while j < n and (sql[j].isalnum() or sql[j] in "._"):
-                j += 1
-            name = sql[i + 2 : j].lower().split(".")[-1]
-            if vars_ and name in vars_:
-                out.append(vars_[name])
-            else:
-                out.append("NULL")
-            i = j
-            continue
-        if c.isalpha() or c == "_":
-            j = i
-            while j < n and (sql[j].isalnum() or sql[j] == "_"):
-                j += 1
-            ident = sql[i:j]
-            # lookahead for '('
-            k = j
-            while k < n and sql[k] in " \t\r\n":
-                k += 1
-            if k < n and sql[k] == "(" and ident.upper() in rules:
-                # find matching close paren
-                depth, m = 0, k
-                while m < n:
-                    ch = sql[m]
-                    if ch in ("'", '"'):
-                        m = _skip_string(sql, m, ch)
-                        continue
-                    if ch == "(":
-                        depth += 1
-                    elif ch == ")":
-                        depth -= 1
-                        if depth == 0:
-                            break
-                    m += 1
-                body = sql[k + 1 : m]
-                args = [rewrite_sql(a, rules, vars_) for a in _split_args(body)]
-                out.append(rules[ident.upper()](args))
-                i = m + 1
-                continue
-            out.append(ident)
-            i = j
-            continue
-        out.append(c)
-        i += 1
+    tokens = lex(sql)
+    out, end = [], 0
+    for k, (kind, tok, s) in enumerate(tokens):
+        if s < end:
+            continue  # inside a call already rewritten
+        if kind == "var":
+            name = tok[2:].lower().split(".")[-1]
+            tok = vars_[name] if vars_ and name in vars_ else "NULL"
+        elif kind == "word" and tok.upper() in rules:
+            o = k + 1 + (k + 1 < len(tokens) and tokens[k + 1][0] == "ws")
+            if o < len(tokens) and tokens[o][1] == "(":
+                end = matching_close(sql, tokens[o][2]) + 1
+                args = split_top_level(sql[tokens[o][2] + 1 : end - 1])
+                tok = rules[tok.upper()]([rewrite_sql(a, rules, vars_) for a in args])
+        out.append(tok)
     return "".join(out)
 
 
 _QUALIFY_TERMINATORS = ("ORDER", "LIMIT", "OFFSET", "UNION", "INTERSECT", "EXCEPT")
-
-
-def sub_outside_strings(pattern: str, repl: str, text: str, flags: int = 0) -> str:
-    """``re.sub`` applied only to segments outside quoted string literals —
-    identifiers (including backticked ones) are still rewritten, but a
-    literal like ``'document id 5'`` is never mutated (round-3 advice:
-    _kb_alias and the star-EXCLUDE rewrite corrupted literals)."""
-    out, i, n, start = [], 0, len(text), 0
-    while i < n:
-        c = text[i]
-        if c in ("'", '"'):
-            out.append(re.sub(pattern, repl, text[start:i], flags=flags))
-            j = _skip_string(text, i, c)
-            out.append(text[i:j])
-            i = start = j
-        else:
-            i += 1
-    out.append(re.sub(pattern, repl, text[start:], flags=flags))
-    return "".join(out)
-
-
-def _scan_top_level_words(sql: str):
-    """Yield (index, upper_word) for every bare word at paren depth 0,
-    outside string literals and backtick identifiers."""
-    depth, i, n = 0, 0, len(sql)
-    while i < n:
-        c = sql[i]
-        if c in "'\"`":
-            i = _skip_string(sql, i, c)
-            continue
-        if c == "(":
-            depth += 1
-            i += 1
-            continue
-        if c == ")":
-            depth -= 1
-            i += 1
-            continue
-        if depth == 0 and (c.isalpha() or c == "_"):
-            j = i
-            while j < n and (sql[j].isalnum() or sql[j] == "_"):
-                j += 1
-            yield i, sql[i:j].upper()
-            i = j
-            continue
-        i += 1
 
 
 def rewrite_qualify(sql: str) -> str:
@@ -222,7 +163,7 @@ def rewrite_qualify(sql: str) -> str:
     operations around it and DISTINCT targets are refused with a clear
     error rather than silently changing semantics.
     """
-    words = list(_scan_top_level_words(sql))
+    words = [(i, w.upper()) for i, w in top_words(sql)]
     froms_all = [i for i, w in words if w == "FROM"]
     # a QUALIFY clause can only follow the FROM — a bare identifier named
     # `qualify` in the projection must not trigger the rewrite

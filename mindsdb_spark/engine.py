@@ -42,10 +42,14 @@ from mindsdb_spark.dialect.mysql_functions import (
     build_vars,
 )
 from mindsdb_spark.dialect.rewriter import (
-    _skip_string,
+    lex,
+    matching_close,
+    rewrite_qualify,
     rewrite_sql,
     split_top_level,
-    sub_outside_strings,
+    strip_mysql_comments,
+    sub_code,
+    top_words,
 )
 from mindsdb_spark.session import get_spark, local_frame
 
@@ -325,18 +329,10 @@ def _sql_literal_text(raw: str) -> str:
 def _mask_literals(text: str) -> str:
     """Same-length copy of ``text`` with the INTERIOR of every string
     literal / backtick identifier replaced by ``x``."""
-    out = list(text)
-    i, n = 0, len(text)
-    while i < n:
-        c = text[i]
-        if c in ("'", '"', "`"):
-            j = _skip_string(text, i, c)
-            for k in range(i + 1, j - 1):
-                out[k] = "x"
-            i = j
-        else:
-            i += 1
-    return "".join(out)
+    return "".join(
+        tok[0] + "x" * (len(tok) - 2) + tok[-1] if kind in ("str", "name") and len(tok) > 1 else tok
+        for kind, tok, _s in lex(text)
+    )
 
 
 class _SpanMatch:
@@ -437,7 +433,6 @@ _AGENT_RE = re.compile(
 _MODEL_SELECT_RE = re.compile(
     r"SELECT\s+(.+?)\s+FROM\s+([\w.`]+)\s+WHERE\s+(.+)$", re.IGNORECASE | re.DOTALL
 )
-_IDENT_RE = re.compile(r"[A-Za-z_`][\w.`]*")
 # `SELECT ... FROM <table> [t] JOIN <model> [m] [WHERE ...] [ORDER BY ...]
 # [LIMIT n]` — the reference's signature "table JOIN predictor" statement
 # (planning: plan_join.py:760-818; execution: apply_predictor_step.py:
@@ -465,38 +460,12 @@ _TRAILING_USING_RE = re.compile(
 )
 
 
-def _split_top(text: str, sep: str, opens: str = "(", closes: str = ")") -> list[str]:
-    """Split ``text`` on ``sep`` outside quotes and brackets."""
-    items, depth, quote, cur = [], 0, None, []
-    for ch in text:
-        if quote:
-            cur.append(ch)
-            if ch == quote:
-                quote = None
-            continue
-        if ch in "'\"":
-            quote = ch
-        elif ch in opens:
-            depth += 1
-        elif ch in closes:
-            depth -= 1
-        elif ch == sep and depth == 0:
-            items.append("".join(cur))
-            cur = []
-            continue
-        cur.append(ch)
-    items.append("".join(cur))
-    return items
-
-
 def _parse_using_params(text: str) -> dict:
     import ast
 
-    # top-level commas, respecting (), {}, [] and quotes —
-    # rewriter.split_top_level only tracks parens/quotes
     out = {}
-    for kv in _split_top(text, ",", "({[", ")}]"):
-        if not kv.strip():
+    for kv in split_top_level(text):
+        if not kv:
             continue
         k, _, v = kv.partition("=")
         v = v.strip()
@@ -941,131 +910,65 @@ _LAST_COALESCE_RE = re.compile(
 )
 
 
-def _top_words(text: str):
-    """(start, end) of every bare word at paren depth 0 outside string
-    literals and backtick identifiers. The statement dispatchers split
-    clauses on these instead of lazy regex splits, so a literal like
-    ``' WHERE x'`` can never provide a clause boundary (round-3 advice:
-    literal-robustness of the regex command layer)."""
-    depth, i, n = 0, 0, len(text)
-    while i < n:
-        c = text[i]
-        if c in ("'", '"', "`"):
-            i = _skip_string(text, i, c)
-            continue
-        if c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-        elif (c.isalpha() or c == "_") and depth == 0:
-            j = i
-            while j < n and (text[j].isalnum() or text[j] == "_"):
-                j += 1
-            yield i, j
-            i = j
-            continue
-        i += 1
-
-
 def _find_top_keyword(text: str, keyword: str) -> int:
     """Index of the first top-level bare ``keyword``; -1 if absent."""
     kw = keyword.upper()
-    return next((i for i, j in _top_words(text) if text[i:j].upper() == kw), -1)
-
-
-def _matching_paren(text: str, i: int) -> int:
-    """Index of the ``)`` closing the ``(`` at ``text[i]`` (``len(text)``
-    when unclosed); string literals are skipped."""
-    depth, n = 0, len(text)
-    while i < n:
-        c = text[i]
-        if c in ("'", '"'):
-            i = _skip_string(text, i, c)
-            continue
-        if c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-            if depth == 0:
-                return i
-        i += 1
-    return i
+    return next((i for i, w in top_words(text) if w.upper() == kw), -1)
 
 
 def _collapse_ws(text: str) -> str:
     """Collapse whitespace runs to single spaces OUTSIDE string literals and
     backtick identifiers — the command layer's normalization must not edit
     literal content (literal-fuzz finding: `'a  b'` became `'a b'`)."""
-    out, i, n = [], 0, len(text)
-    while i < n:
-        c = text[i]
-        if c in ("'", '"', "`"):
-            j = _skip_string(text, i, c)
-            out.append(text[i:j])
-            i = j
-            continue
-        if c.isspace():
-            while i < n and text[i].isspace():
-                i += 1
-            out.append(" ")
-            continue
-        out.append(c)
-        i += 1
-    return "".join(out).strip()
+    return "".join(" " if kind == "ws" else tok for kind, tok, _s in lex(text)).strip()
 
 
 def _split_and(text: str) -> list[str]:
     """Split a WHERE body on top-level ANDs."""
     parts, start = [], 0
-    for i, j in _top_words(text):
-        if text[i:j].upper() == "AND":
+    for i, w in top_words(text):
+        if w.upper() == "AND":
             parts.append(text[start:i])
-            start = j
+            start = i + 3
     parts.append(text[start:])
     return [p.strip() for p in parts if p.strip()]
 
 
-def _table_refs(sql: str) -> list[str]:
-    """Identifiers in table position: the token after each FROM/JOIN, plus
-    comma-continued FROM lists. String literals are skipped; subqueries need
-    no special casing (their own FROM/JOIN tokens are found by the same
-    scan). CTE names and typos surface as unknown refs — the pushdown gate
-    treats unknowns as 'let the source or Spark decide'."""
-    _enders = {"WHERE", "GROUP", "ORDER", "HAVING", "LIMIT", "ON", "SELECT",
+_REF_ENDERS = {"WHERE", "GROUP", "ORDER", "HAVING", "LIMIT", "ON", "SELECT",
                "JOIN", "INNER", "LEFT", "RIGHT", "FULL", "CROSS", "UNION",
                "INTERSECT", "EXCEPT", "WINDOW", "QUALIFY", "USING"}
-    refs, i, n = [], 0, len(sql)
+
+
+def _table_refs(sql: str) -> list[str]:
+    """Identifiers in table position: the dotted name after each FROM/JOIN,
+    plus comma-continued FROM lists. String literals are skipped; subqueries
+    need no special casing (their own FROM/JOIN tokens are found by the same
+    scan). CTE names and typos surface as unknown refs — the pushdown gate
+    treats unknowns as 'let the source or Spark decide'."""
+    refs, ident = [], []
     expect = False   # next identifier is a table name
     in_from = False  # inside a FROM list, where a comma re-arms `expect`
-    while i < n:
-        c = sql[i]
-        if c in ("'", '"'):
-            i = _skip_string(sql, i, c)
+    for kind, tok, _s in lex(sql) + [("ws", "", len(sql))]:
+        # a dotted name is adjacent word / backtick-name / `.` / digit tokens
+        if kind in ("word", "name") or (ident and (tok == "." or tok.isdigit())):
+            ident.append(tok)
             continue
-        if c == "," and in_from:
+        if ident:
+            word = "".join(ident)
+            up, ident = word.upper(), []
+            if up == "FROM":
+                expect, in_from = True, True
+            elif up == "JOIN":
+                expect, in_from = True, False
+            elif expect:
+                refs.append(word.strip("`").lower())
+                expect = False
+            elif up in _REF_ENDERS:
+                in_from = False
+        if tok == "," and in_from:
             expect = True
-            i += 1
-            continue
-        if c == "(":
-            expect = False  # subquery / function — its FROMs re-arm below
-            i += 1
-            continue
-        if not (c.isalpha() or c == "_" or c == "`"):
-            i += 1
-            continue
-        m = _IDENT_RE.match(sql, i)
-        word = m.group(0)
-        up = word.upper()
-        if up == "FROM":
-            expect, in_from = True, True
-        elif up == "JOIN":
-            expect, in_from = True, False
-        elif expect:
-            refs.append(word.strip("`").lower())
-            expect = False
-        elif up in _enders:
-            in_from = False
-        i = m.end()
+        elif kind == "open":
+            expect = False  # subquery / function — its FROMs re-arm above
     return refs
 
 
@@ -1395,13 +1298,18 @@ class EngineSession:
         if "mindsdb_" in low or any(f in low for f in self._user_functions):
             return None
         dialect_fns = {m.group(1).upper() for m in self._dialect_fn_re.finditer(s)}
+        refs = _table_refs(s)
+        if not refs:
+            return None
+        native_tables = {
+            srcname: {t.lower() for t in src.tables()} for srcname, src in self._native.items()
+        }
         hit_sources: set[str] = set()
         rewrites: list[tuple[str, str]] = []
-        for ref in _table_refs(s):
+        for ref in refs:
             parts = ref.split(".")
             resolved = False
-            for srcname, src in self._native.items():
-                tables = {t.lower() for t in src.tables()}
+            for srcname, tables in native_tables.items():
                 if len(parts) == 2 and parts[0] == srcname and parts[1] in tables:
                     hit_sources.add(srcname)
                     rewrites.append((ref, parts[1]))
@@ -1442,8 +1350,8 @@ class EngineSession:
             if target is None or not dialect_fns <= set(target):
                 return None
             text = rewrite_sql(text, target, self._vars)
-        for old, new in sorted(set(rewrites), key=lambda p: -len(p[0])):
-            text = re.sub(rf"\b{re.escape(old)}\b", new, text, flags=re.IGNORECASE)
+        renames = sorted(set(rewrites), key=lambda p: -len(p[0]))
+        text = sub_code(text, *[(rf"(?i)\b{re.escape(old)}\b", new) for old, new in renames])
         try:
             out = self._native[srcname].query(text)
         except Exception:
@@ -2485,10 +2393,7 @@ class EngineSession:
         virtual tables resolved by the planner, plan_join.py:760-818).
         A spec predicts with Column expressions or with a pandas-in/
         pandas-out callable (the BYOM surface)."""
-        n = model.name.lower()
-        self._models[n] = model
-        self._model_versions[n] = [model]
-        self._model_active[n] = 1
+        self._activate_model(model.name.lower(), [model], 1)
 
     def _model_of(self, name: str):
         """Resolve a model reference, honoring a numeric version suffix —
@@ -2506,15 +2411,19 @@ class EngineSession:
             return specs[v - 1] if 1 <= v <= len(specs) else None
         return self._models.get(parts[-1])
 
-    def _add_model_version(self, name: str, spec) -> int:
-        self._model_versions.setdefault(name, []).append(spec)
-        v = len(self._model_versions[name])
+    def _activate_model(self, name: str, specs: list, v: int) -> None:
+        """Make version ``v`` of ``specs`` the active model ``name``. Every
+        write of the active spec goes through here and clears the one-shot
+        prediction cache: a replaced model reuses (name, version) keys."""
+        self._model_versions[name] = specs
         self._model_active[name] = v
-        self._models[name] = spec
-        # any model mutation invalidates cached one-shot predictions — a
-        # replaced model may reuse (name, version) keys
+        self._models[name] = specs[v - 1]
         self._predict_cache.clear()
-        return v
+
+    def _add_model_version(self, name: str, spec) -> int:
+        specs = [*self._model_versions.get(name, []), spec]
+        self._activate_model(name, specs, len(specs))
+        return len(specs)
 
     def _create_model(self, m: re.Match) -> DataFrame:
         """CREATE [OR REPLACE] MODEL — train via the USING-named ML engine
@@ -2556,9 +2465,7 @@ class EngineSession:
         else:
             train_df = self.sql(raw)
         spec = self._ml_engines[engine.lower()](name, train_df, target, params)
-        self._models[name] = spec
-        self._model_versions[name] = [spec]
-        self._model_active[name] = 1
+        self._activate_model(name, [spec], 1)
         self._model_recipes[name] = (src, raw, target, engine, dict(params))
         return self._row("model string, engine string", name, engine)
 
@@ -2577,27 +2484,18 @@ class EngineSession:
         views can be dropped once the consuming statement has executed."""
         import uuid as _uuid
 
-        out, views, i, n = [], [], 0, len(cond)
-        while i < n:
-            c = cond[i]
-            if c in ("'", '"'):
-                j = _skip_string(cond, i, c)
-                out.append(cond[i:j])
-                i = j
+        out, views, end = [], [], 0
+        tokens = [t for t in lex(cond) if t[0] != "ws"]
+        for (kind, _t, i), (_k, nxt, _s) in zip(tokens, tokens[1:]):
+            if i < end or kind != "open" or cond[i] != "(" or nxt.upper() != "SELECT":
                 continue
-            m = re.match(r"\(\s*SELECT\b", cond[i:], re.IGNORECASE)
-            if not m:
-                out.append(c)
-                i += 1
-                continue
-            j = _matching_paren(cond, i)
-            inner = cond[i + 1 : j]
+            j = matching_close(cond, i)
             vname = f"__dml_sq_{_uuid.uuid4().hex[:8]}"
-            self.sql(inner).createOrReplaceTempView(vname)
+            self.sql(cond[i + 1 : j]).createOrReplaceTempView(vname)
             views.append(vname)
-            out.append(f"(SELECT * FROM {vname})")
-            i = j + 1
-        return "".join(out), views
+            out += [cond[end:i], f"(SELECT * FROM {vname})"]
+            end = j + 1
+        return "".join(out) + cond[end:], views
 
     def _model_join(self, m: re.Match, extra_params: dict | None = None) -> DataFrame:
         """Execute `SELECT ... FROM table [t] JOIN model [m] ...`.
@@ -2699,8 +2597,7 @@ class EngineSession:
                     f"model join ON needs the model alias on one side: {cond!r}"
                 )
             tgt_col = _object_name(tgt)
-            for a in tprefixes:
-                srcx = re.sub(rf"\b{re.escape(a)}\s*\.\s*", "", srcx, flags=re.IGNORECASE)
+            srcx = sub_code(srcx, *[(rf"(?i)\b{re.escape(a)}\s*\.\s*", "") for a in tprefixes])
             inner = inner.withColumn(tgt_col, F.expr(self.rewrite(srcx)))
         # `USING partition_size = N` (reference model-join partitioning,
         # fetch_dataframe_partition.py / test_models.py:153-187) bounds the
@@ -2721,11 +2618,13 @@ class EngineSession:
         )
 
         # outer projection over the flat joined schema: alias prefixes drop
-        strip = [a for a in (talias, malias, m.group("model").split(".")[-1]) if a]
+        strip = [
+            (rf"(?i)\b{re.escape(a)}\s*\.\s*", "")
+            for a in (talias, malias, m.group("model").split(".")[-1]) if a
+        ]
+
         def _flat(text: str) -> str:
-            for a in strip:
-                text = re.sub(rf"\b{re.escape(a)}\s*\.\s*", "", text, flags=re.IGNORECASE)
-            return self.rewrite(text)
+            return self.rewrite(sub_code(text, *strip))
 
         out.createOrReplaceTempView("__model_join")
         outer = f"SELECT {_flat(m.group('sel'))} FROM __model_join"
@@ -2783,22 +2682,21 @@ class EngineSession:
     def rewrite(self, sql: str) -> str:
         out = rewrite_sql(sql, self._rules, self._vars)
         if "qualify" in out.lower():
-            from mindsdb_spark.dialect.rewriter import rewrite_qualify
-
             out = rewrite_qualify(out)
-        # DuckDB star-EXCLUDE (native in the reference's internal executor)
-        # → Spark's star-EXCEPT; the `* EXCLUDE (` shape can't collide with
-        # the set operation. Literal-aware: a string containing the same
-        # text must not mutate.
-        out = sub_outside_strings(
-            r"(\*\s+)EXCLUDE(\s*\()", r"\1EXCEPT\2", out, re.IGNORECASE
+        # Code-only renames: a string containing the same text must not
+        # mutate. DuckDB star-EXCLUDE (native in the reference's internal
+        # executor) → Spark's star-EXCEPT; the `* EXCLUDE (` shape can't
+        # collide with the set operation. information_schema.* is emulated
+        # with session views (the reference computes ~30 virtual tables
+        # in-engine: datahub/datanodes/system_tables.py:48-782); dotted
+        # names become view names.
+        return sub_code(
+            out,
+            (r"(?i)(\*\s+)EXCLUDE(\s*\()", r"\1EXCEPT\2"),
+            (_IS_RE, "information_schema_"),
+            (_PROJ_DOT_RE, lambda m: f"mindsdb_{m.group(1).lower()}"),
+            (_LOG_DOT_RE, lambda m: f"log_{m.group(1).lower()}"),
         )
-        # information_schema.* is emulated with session views (the reference
-        # computes ~30 virtual tables in-engine: datahub/datanodes/
-        # system_tables.py:48-782); dotted names become view names.
-        out = _IS_RE.sub("information_schema_", out)
-        out = _PROJ_DOT_RE.sub(lambda m: f"mindsdb_{m.group(1).lower()}", out)
-        return _LOG_DOT_RE.sub(lambda m: f"log_{m.group(1).lower()}", out)
 
     def _resolve_native_queries(self, s: str) -> str:
         """Replace every ``FROM/JOIN <native_src> ( raw )`` with a temp view
@@ -2812,7 +2710,7 @@ class EngineSession:
             if hit is None:
                 return s
             src = hit.group(2).strip("`").lower()
-            i = _matching_paren(s, hit.end() - 1)
+            i = matching_close(s, hit.end() - 1)
             raw = s[hit.end() : i]
             self._native_seq += 1
             view = f"__native_{src}_{self._native_seq}"
@@ -2896,10 +2794,7 @@ class EngineSession:
         return s[: m.start()] + f"{m.group(1)} > {lit}" + s[m.end():]
 
     def sql(self, sql: str) -> DataFrame:
-        if "#" in sql:
-            from mindsdb_spark.dialect.rewriter import strip_mysql_comments
-
-            sql = strip_mysql_comments(sql)
+        sql = strip_mysql_comments(sql)
         # [text, state]: `running` until the statement returns or raises
         entry = [" ".join(sql.split())[:500], "running"]
         self._query_log.append(entry)
@@ -3604,11 +3499,11 @@ class EngineSession:
         left = self.sql(f"SELECT * FROM {ltab}")
         right = self.sql(f"SELECT * FROM {rtab}")
         out = asof_join(left, right, on=on_col, by=by or None, direction=direction)
-        strip = re.compile(rf"\b({lali}|{rali})\.", re.IGNORECASE)
+        strip = (rf"(?i)\b({lali}|{rali})\.", "")
         if sel.strip() != "*":
-            out = out.selectExpr(*[strip.sub("", c.strip()) for c in sel.split(",")])
+            out = out.selectExpr(*[sub_code(c, strip) for c in split_top_level(sel)])
         if order:
-            out = out.orderBy(*[strip.sub("", c.strip(" `")) for c in order.split(",")])
+            out = out.orderBy(*[sub_code(c.strip(" `"), strip) for c in split_top_level(order)])
         if limit:
             out = out.limit(int(limit))
         return out
@@ -3685,10 +3580,8 @@ class EngineSession:
             return None
         self._model_join(im).createOrReplaceTempView("__nested_model")
         alias = nm.group("qalias") or nm.group("alias")
-        outer, tail = nm.group("outer"), nm.group("tail") or ""
-        for ref in (f"`{alias}`.", f"{alias}."):
-            outer = outer.replace(ref, "")
-            tail = tail.replace(ref, "")
+        strip = (rf"`{re.escape(alias)}`\.|\b{re.escape(alias)}\.", "")
+        outer, tail = sub_code(nm.group("outer"), strip), sub_code(nm.group("tail") or "", strip)
         return self.spark.sql(
             f"SELECT {self.rewrite(outer)} FROM __nested_model{self.rewrite(tail)}"
         )
@@ -3736,9 +3629,7 @@ class EngineSession:
         if pre:
             stripped = " AND ".join(pre)
             if talias:
-                stripped = re.sub(
-                    rf"\b{re.escape(talias)}\s*\.\s*", "", stripped, flags=re.IGNORECASE
-                )
+                stripped = sub_code(stripped, (rf"(?i)\b{re.escape(talias)}\s*\.\s*", ""))
             df = df.filter(F.expr(self.rewrite(stripped)))
         col_map: dict[str, dict[str, str]] = {}
         for spec, alias in specs:
@@ -3748,17 +3639,13 @@ class EngineSession:
                 df = df.withColumnRenamed(old, newc)
             col_map[alias] = renames
 
+        requal = [
+            (rf"(?i)\b{re.escape(alias)}\.(\w+)", lambda g, r=renames: r.get(g.group(1), g.group(1)))
+            for alias, renames in col_map.items()
+        ] + ([(rf"(?i)\b{re.escape(talias)}\.(\w+)", r"\1")] if talias else [])
+
         def _requal(t: str) -> str:
-            for alias, renames in col_map.items():
-                t = re.sub(
-                    rf"\b{re.escape(alias)}\.(\w+)",
-                    lambda g: renames.get(g.group(1), g.group(1)),
-                    t,
-                    flags=re.IGNORECASE,
-                )
-            if talias:
-                t = re.sub(rf"\b{re.escape(talias)}\.(\w+)", r"\1", t, flags=re.IGNORECASE)
-            return self.rewrite(t)
+            return self.rewrite(sub_code(t, *requal))
 
         df.createOrReplaceTempView("__multi_model")
         outer = f"SELECT {_requal(mm.group('sel'))} FROM __multi_model"
@@ -3826,9 +3713,8 @@ class EngineSession:
             # projection the documented name stays on the output.
             # Literal-aware: WHERE content = 'document id 5' must
             # keep its literal intact (round-3 advice, medium).
-            t = sub_outside_strings(r"\bchunk_content\b", "content", t, re.IGNORECASE)
             repl = "chunk_id AS id" if projection else "chunk_id"
-            return sub_outside_strings(r"\bid\b", repl, t, re.IGNORECASE)
+            return sub_code(t, (r"(?i)\bchunk_content\b", "content"), (r"(?i)\bid\b", repl))
 
         def _order(t: str) -> str:
             return self.rewrite(_kb_alias(t))
@@ -4151,7 +4037,7 @@ class EngineSession:
 
         # reference job bodies are statement LISTS — `(sql; sql)`
         # (jobs/README.md:1-60); each statement runs in order
-        stmts = [t.strip() for t in _split_top(body, ";") if t.strip()]
+        stmts = [t for t in split_top_level(body, ";") if t]
 
         def _run(stmts=stmts, cond=cond):
             if cond is not None and not self.sql(cond).take(1):
@@ -4542,8 +4428,7 @@ class EngineSession:
         specs = self._model_versions.get(name)
         if not specs or not 1 <= v <= len(specs):
             raise ValueError(f"model {name!r} has no version {v}")
-        self._model_active[name] = v
-        self._models[name] = specs[v - 1]
+        self._activate_model(name, specs, v)
         return self._row("model string, active_version int", name, v)
 
     def _training_frame(self, src: str | None, raw: str) -> DataFrame:

@@ -44,6 +44,11 @@ _FRAGMENTS = [
     "back\\slash",
     '"dquote"',
     "evil`tick",
+    "information_schema.tables",
+    "mindsdb.models",
+    "log.llm_log",
+    "t.",
+    "m.",
 ]
 
 _literals = st.lists(
@@ -168,6 +173,25 @@ def test_model_join_output_literal_filter(doorsess, lit):
         f"WHERE t.o_orderkey <= 20 AND m.band = '{_esc(lit)}'"
     ).collect()
     assert rows == []
+
+
+@_settings
+@given(lit=_literals)
+def test_model_join_projection_literal_roundtrips(doorsess, lit):
+    # a literal in the model-join projection passes the alias strip
+    # (`t.`/`m.`) and the system-view renames byte-identical
+    rows = doorsess.sql(
+        f"SELECT t.o_orderkey, '{_esc(lit)}' AS lbl, m.band FROM tpch_orders t "
+        "JOIN fm m WHERE t.o_orderkey <= 3"
+    ).collect()
+    assert rows and all(r["lbl"] == lit for r in rows)
+
+
+@pytest.mark.parametrize(
+    "lit", ["information_schema.tables", "log.llm_log", "see mindsdb.models here"]
+)
+def test_system_view_name_literal_roundtrips(fsess, lit):
+    assert fsess.sql(f"SELECT '{lit}' AS s").collect()[0]["s"] == lit
 
 
 @_settings

@@ -149,6 +149,39 @@ def test_one_shot_prediction_cache(sess):
     assert len(sess._predict_cache) == 0
 
 
+_LINREG = (
+    "{name} (SELECT * FROM VALUES (1.0, {a}), (2.0, {b}), (4.0, {c}) AS d(x, y)) "
+    "PREDICT y USING engine = 'spark_ml_linreg'"
+)
+
+
+def _fit(sess, verb, name, k):
+    sess.sql(f"{verb} " + _LINREG.format(name=name, a=k, b=2 * k, c=4 * k))
+
+
+def _one_shot(sess, name):
+    return sess.sql(f"SELECT y FROM {name} WHERE x = 3").collect()[0]["y"]
+
+
+def test_one_shot_prediction_after_replace(spark):
+    # the replacement is version 1 again, so a cache keyed on (name,
+    # version, row) alone would answer with the replaced model
+    sess = EngineSession(spark)
+    _fit(sess, "CREATE MODEL", "m_rep", 2.0)
+    assert _one_shot(sess, "m_rep") == pytest.approx(6.0)
+    _fit(sess, "CREATE OR REPLACE MODEL", "m_rep", 5.0)
+    assert _one_shot(sess, "m_rep") == pytest.approx(15.0)
+
+
+def test_one_shot_prediction_after_drop_and_create(spark):
+    sess = EngineSession(spark)
+    _fit(sess, "CREATE MODEL", "m_dc", 2.0)
+    assert _one_shot(sess, "m_dc") == pytest.approx(6.0)
+    sess.sql("DROP MODEL m_dc")
+    _fit(sess, "CREATE MODEL", "m_dc", 5.0)
+    assert _one_shot(sess, "m_dc") == pytest.approx(15.0)
+
+
 def test_model_join_on_column_mapping(spark, sf_dir):
     # reference test_models.py:118-152: `JOIN model m ON m.input = t.col`
     # feeds the table column to the model under its input name

@@ -265,22 +265,40 @@ def test_semantic_dedup_identical_vectors_flagged(spark, vecs):
 def test_strip_mysql_comments_properties(parts):
     """Idempotent; never touches # inside string literals or backtick
     identifiers; output contains no bare # outside such regions."""
-    from mindsdb_spark.dialect.rewriter import _skip_string, strip_mysql_comments
+    from mindsdb_spark.dialect.rewriter import lex, strip_mysql_comments
 
     sql = "".join(parts)
     out = strip_mysql_comments(sql)
     assert strip_mysql_comments(out) == out  # idempotent
 
     def outside_strings(s):
-        res, i = [], 0
-        while i < len(s):
-            if s[i] in ("'", '"', "`"):
-                i = _skip_string(s, i, s[i])
-                continue
-            res.append(s[i]); i += 1
-        return "".join(res)
+        return "".join(tok for kind, tok, _ in lex(s) if kind not in ("str", "name"))
 
     assert "#" not in outside_strings(out)
+
+
+_sql_text = st.one_of(
+    st.text(),
+    st.text(alphabet="ab1 \\'\"`#@.\n({[]})", max_size=40),
+)
+
+
+@_settings
+@given(text=_sql_text)
+def test_lexer_tokens_cover_text_and_code_subs_keep_literals(text):
+    """The tokens concatenate back to the text, and a code-only substitution
+    never changes a string-literal token."""
+    from mindsdb_spark.dialect.rewriter import lex, sub_code
+
+    tokens = lex(text)
+    assert "".join(tok for _, tok, _ in tokens) == text
+    assert all(text.startswith(tok, s) for _, tok, s in tokens)
+
+    def literals(s):
+        return [tok for kind, tok, _ in lex(s) if kind == "str"]
+
+    out = sub_code(text, (r"[ab]+", "WORD"), (r"\.", ""), (r"[(){}\[\]]", "x"))
+    assert literals(out) == literals(text)
 
 
 _unit_words_st = st.lists(

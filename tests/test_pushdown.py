@@ -53,6 +53,17 @@ def test_pushdown_single_source(sess):
     assert rows == expected
 
 
+def test_pushdown_rename_keeps_literals(sess):
+    # `duck_nation` becomes the source's own table name in code only
+    before = sess._duck.pushdowns
+    rows = sess.sql(
+        "SELECT n_nationkey, 'from duck_nation' AS src FROM duck_nation "
+        "WHERE n_nationkey = 1"
+    ).collect()
+    assert sess._duck.pushdowns == before + 1
+    assert [tuple(r) for r in rows] == [(1, "from duck_nation")]
+
+
 def test_pushdown_dotted_and_join_within_source(sess):
     before = sess._duck.pushdowns
     df = sess.sql(
